@@ -79,10 +79,12 @@ def box_blur_stats(images: DataFrame, radius: int = 2) -> DataFrame:
 
 def _box_blur_plane(px: np.ndarray, radius: int) -> np.ndarray:
     h, w = px.shape
-    # int32 integral whenever the grand total cannot overflow it (any
-    # u8 image under ~8.4M px): every cumsum, band difference, and
-    # floor-divide then holds the identical integers 2x cheaper.
-    dt = np.int32 if px.size * 255 < 2 ** 31 else np.int64
+    # int32 integral whenever the grand total cannot overflow it (a u8
+    # image under ~8.4M px): every cumsum, band difference, and
+    # floor-divide then holds the identical integers 2x cheaper.  Wider
+    # rawz dtypes (u2..f4) always take int64.
+    fits = px.dtype == np.uint8 and px.size * 255 < 2 ** 31
+    dt = np.int32 if fits else np.int64
     ii = np.zeros((h + 1, w + 1), dtype=dt)
     np.cumsum(np.cumsum(px, axis=0, dtype=dt), axis=1, out=ii[1:, 1:])
     i = np.arange(h)

@@ -51,11 +51,13 @@ def pending_units(
     unit_col: str = "unit",
 ) -> DataFrame:
     """work list minus completed units: the P3 skip-existing filter as a
-    left_anti join (SURVEY.md section 2.2)."""
+    left_anti join (SURVEY.md section 2.2).  The manifest holds one
+    small row per unit, so it is broadcast: the work rows (payload
+    bytes included) are never shuffled just to be filtered."""
     done = read_manifest(spark, manifest_dir).filter(
         F.col("job_id") == job_id
     ).select(F.col("unit").alias(unit_col)).distinct()
-    return work.join(done, unit_col, "left_anti")
+    return work.join(F.broadcast(done), unit_col, "left_anti")
 
 
 def run_with_manifest(

@@ -1,5 +1,5 @@
 """Tile assignment: anchor every image on the grid and key it with
-quadtree cells at resolutions 7..11 plus a Hilbert order key.
+quadtree cells at resolutions 7..11.
 
 The retile-semantics core (SURVEY.md section 3.1): the reference
 re-anchors its geo transform per index feature
@@ -13,19 +13,14 @@ parent rollups -- are JVM-side expressions that stay inside
 whole-stage codegen; no Python hop remains on the image scan path.
 
 Scale notes: no shuffle here at all; this is a narrow map over the scan.
-``hilbert`` is the range-partitioning key that keeps spatially adjacent
-tiles in the same partition (SURVEY.md section 4, skew row).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..grid import TILE_SIZE, WORLD_TOP, _ANCHOR_MULT, cell_edge, RES_TILE
+from ..grid import TILE_SIZE, WORLD_TOP, _ANCHOR_MULT, cell_edge
 
 _M31 = (1 << 31) - 1
 _M62 = (1 << 62) - 1
@@ -106,7 +101,7 @@ def assign_cells(
     tiles_axis: int = 4096,
     res_levels=(7, 8, 9, 10, 11),
 ) -> DataFrame:
-    """images(+phash, w, h) -> + x0, y_top, cx, cy, qk_r7..qk_r11, hilbert.
+    """images(+phash, w, h) -> + x0, y_top, cx, cy, qk_r7..qk_r11.
 
     ``cx, cy`` is the tile center (the PIP-join point); ``qk_r{n}`` keys
     the center's cell at each resolution.  Assignment is a pure function
@@ -121,25 +116,7 @@ def assign_cells(
     )
     for res in res_levels:
         df = df.withColumn(f"qk_r{res}", cell_col(F.col("cx"), F.col("cy"), res))
-    # Hilbert distance of the canonical-tile cell: locality-preserving
-    # long key for repartitionByRange.  Computed in a vectorized pandas
-    # UDF -- an unrolled Catalyst expression for the 10-level bit
-    # twiddle grows exponentially in tree size, so the Arrow batch path
-    # is both the simpler and the faster plan here.
-    df = df.withColumn(
-        "hilbert", _hilbert_udf(F.col("cx"), F.col("cy"))
-    )
     return df
-
-
-@F.pandas_udf(T.LongType())
-def _hilbert_udf(cx: pd.Series, cy: pd.Series) -> pd.Series:
-    from ..grid import hilbert_xy2d
-
-    edge = float(cell_edge(RES_TILE))
-    ix = np.floor(cx.to_numpy() / edge).astype(np.int64)
-    iy = np.floor((WORLD_TOP - cy.to_numpy()) / edge).astype(np.int64)
-    return pd.Series(hilbert_xy2d(RES_TILE, ix, iy))
 
 
 def quad_rollup(

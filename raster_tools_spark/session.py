@@ -3,7 +3,9 @@
 Scale-minded defaults: AQE on (runtime re-plan + skew join), Arrow on
 (every UDF in this engine is vectorized), UTC session timezone (oracle
 comparison), shuffle partitions sized to cores for local mode (a real
-cluster overrides via spark-submit --conf).
+cluster overrides via spark-submit --conf).  Local masters run Python
+workers under ``_pydaemon``, which stops every task from re-reading
+pyspark.zip.
 """
 
 from __future__ import annotations
@@ -49,7 +51,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # image tables are CPU-heavy per byte (decode in Python UDFs):
@@ -58,6 +61,11 @@ def get_spark(
         # while staying far above the per-file overhead floor.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
     )
+    if master == "local" or master.startswith("local["):
+        # only local workers see the PYTHONPATH set above; a cluster
+        # that ships this package via --py-files keeps the stock daemon
+        builder = builder.config("spark.python.daemon.module",
+                                 "raster_tools_spark._pydaemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -74,3 +82,10 @@ def _threads_of(master: str, default: int) -> int:
             except ValueError:
                 pass
     return default
+
+
+def _default_driver_mem() -> str:
+    """24g, capped at half the host's memory (local mode runs every
+    executor inside the driver JVM)."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 21
+    return f"{min(24 * 1024, half_mb)}m"

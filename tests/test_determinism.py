@@ -19,8 +19,8 @@ images = synth.images_df(spark, 200, tiles_axis=64, with_pixels=False)
 cells = tile.assign_cells(images, tiles_axis=64)
 polys = synth.polygons_df(spark, 25, tiles_axis=64)
 assign = sorted(
-    (r.image_id, r.qk_r9, r.qk_r11, r.hilbert)
-    for r in cells.select("image_id", "qk_r9", "qk_r11", "hilbert").collect()
+    (r.image_id, r.qk_r9, r.qk_r11)
+    for r in cells.select("image_id", "qk_r9", "qk_r11").collect()
 )
 pairs = sorted(
     (r.image_id, r.feat_id)

@@ -45,6 +45,62 @@ def test_box_blur_constant_image_is_identity():
     assert (_box_blur_plane(px, 3) == 42).all()
 
 
+def _wide_box_mean(px, r):
+    """Clamped-window floor mean from separable 1-D window sums in a
+    wide accumulator: int64 for integer pixels, float64 for f4 (whose
+    test pixels are integer-valued, so every sum stays exact)."""
+    s = px.astype(np.float64 if px.dtype.kind == "f" else np.int64)
+    counts = []
+    for axis in (0, 1):
+        n = s.shape[axis]
+        c = np.cumsum(s, axis=axis)
+        c = np.concatenate([np.zeros_like(c.take([0], axis)), c], axis)
+        i = np.arange(n)
+        lo, hi = np.maximum(i - r, 0), np.minimum(i + r + 1, n)
+        s = c.take(hi, axis) - c.take(lo, axis)
+        counts.append(hi - lo)
+    return (s // np.outer(*counts)).astype(np.int64)
+
+
+# one 190 x 190 plane (36k px) per wide rawz dtype.  An int32 integral
+# breaks once a window sum passes 2^31: i4/f4 pixels near 2^30 at any
+# radius, u2 pixels when the window covers ~33k px.
+_WIDE = {
+    "u2": lambda rng: rng.integers(60000, 65536, (190, 190)),
+    "i4": lambda rng: rng.integers(-2 ** 30, 2 ** 30, (190, 190)),
+    "f4": lambda rng: rng.integers(2 ** 24, 2 ** 30, (190, 190)),
+}
+
+
+@pytest.mark.parametrize("radius", [2, 100])
+@pytest.mark.parametrize("code", sorted(_WIDE))
+def test_box_blur_wide_rawz_matches_wide_reference(code, radius):
+    px = _WIDE[code](np.random.default_rng(7)).astype(f"<{code}")
+    assert px.size > 33_000
+    px = codecs.decode(codecs.encode(px, "rawz"), "rawz")
+    np.testing.assert_array_equal(
+        _box_blur_plane(px, radius), _wide_box_mean(px, radius)
+    )
+
+
+def test_box_blur_stats_wide_rawz_payloads(spark):
+    planes = {code: gen(np.random.default_rng(11)).astype(f"<{code}")
+              for code, gen in _WIDE.items()}
+    images = spark.createDataFrame(
+        pd.DataFrame(
+            [(code, codecs.encode(p, "rawz"), "rawz")
+             for code, p in planes.items()],
+            columns=["image_id", "bytes", "fmt"],
+        )
+    )
+    got = {r["image_id"]: r for r in box_blur_stats(images, 2).collect()}
+    for code, p in planes.items():
+        ref = _wide_box_mean(p, 2)
+        assert got[code]["blur_sum"] == int(ref.sum()), code
+        assert got[code]["blur_min"] == int(ref.min()), code
+        assert got[code]["blur_max"] == int(ref.max()), code
+
+
 def test_equalize_golden_and_range():
     px = _plane(9)
     eq = _equalize_plane(px)

@@ -35,3 +35,39 @@ def test_empty_unit_gets_manifest_row(spark, tmp_path):
         spark, work, "unit", process, out_dir, man_dir, "job"
     )
     assert calls == [3]
+
+
+def _nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def test_pending_units_broadcasts_the_manifest(spark, tmp_path):
+    """The resume filter must not shuffle the work rows: the anti-join
+    broadcasts the completed-unit set, for a fresh manifest (an RDD
+    scan of unknown size) and for a committed one alike."""
+    man_dir = str(tmp_path / "man")
+    work = spark.createDataFrame(
+        pd.DataFrame({"unit": [1, 2, 3], "bytes": [b"a", b"bb", b"ccc"]}),
+        schema="unit long, bytes binary",
+    )
+    for committed in (False, True):
+        if committed:
+            spark.createDataFrame(
+                [("job", 2, 1, 1, 0.0, 0.0)], manifest.MANIFEST_SCHEMA
+            ).write.parquet(man_dir)
+        pending = manifest.pending_units(work, spark, man_dir, "job")
+        plan = pending._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the prepared, unexecuted plan
+        joins = [n for n in _nodes(plan)
+                 if n.nodeName() == "BroadcastHashJoin"
+                 and n.joinType().toString() == "LeftAnti"]
+        assert len(joins) == 1, plan.toString()
+        payload_side = [n.nodeName() for n in _nodes(joins[0].left())]
+        assert not [n for n in payload_side if "Exchange" in n], payload_side
+        assert sorted(r.unit for r in pending.collect()) == (
+            [1, 3] if committed else [1, 2, 3]
+        )
