@@ -48,7 +48,6 @@ INDICES = COURSES.nonzero()
 NUMBERS = np.array([b for b, _, _ in _D8], "u1")[np.newaxis, :]
 OFFSETS = np.array([(di, dj) for _, di, dj in _D8])[np.newaxis]
 WEIGHTS = 1 / np.sqrt(np.square(OFFSETS).sum(2))
-VECTORS = OFFSETS * WEIGHTS[..., np.newaxis]
 # bit of the opposite direction, aligned with the _D8 enumeration
 INVERSE = np.array(
     [COURSES[1 - di, 1 - dj] for _, di, dj in _D8], "u1"

@@ -4,11 +4,9 @@ columns with typed metadata, processed in Arrow-batched mapInPandas.
 The image path is REAL end-to-end in this repo (codecs.py decodes
 png/dctq), including the DCT perceptual hash + banded image near-dup.
 The audio path is REAL for raw PCM (numpy FFT spectral features +
-dominant-band fingerprint; no codec needed); only COMPRESSED audio
-decode and video frame-sampling are stubs -- the codec libraries are
-not in this container -- with the Spark-side plumbing (schemas,
-partitioning, UDF signatures, batch shapes) real and tested, which is
-the contract for this environment.
+dominant-band fingerprint; no codec needed).  COMPRESSED audio and
+video are not decoded: the codec libraries are not in this
+container.
 """
 
 from __future__ import annotations
@@ -18,7 +16,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import codecs
 
@@ -107,52 +104,6 @@ def resize(images: DataFrame, factor: int = 2) -> DataFrame:
 
     return images.select("image_id", "bytes", "fmt").mapInPandas(
         do, schema=RESIZE_SCHEMA
-    )
-
-
-AUDIO_FEATURES_SCHEMA = "clip_id string, rms double, zero_crossings long"
-
-
-def audio_features(clips: DataFrame) -> DataFrame:
-    """STUB AUDIO DECODE: real audio codecs are unavailable here; the
-    payload is interpreted as a deterministic fake PCM stream (int16
-    little-endian).  Plumbing (schema/batching) is the real contract."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                buf = bytes(t.bytes)
-                # malformed odd-length clip: drop the trailing byte
-                # instead of failing the whole Arrow batch
-                pcm = np.frombuffer(
-                    buf[: len(buf) & ~1], dtype="<i2"
-                ).astype(np.float64)
-                if pcm.size == 0:
-                    rows.append((t.clip_id, 0.0, 0))
-                    continue
-                rms = float(np.sqrt((pcm ** 2).mean()))
-                zc = int((np.diff(np.signbit(pcm)) != 0).sum())
-                rows.append((t.clip_id, rms, zc))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["clip_id", "rms", "zero_crossings"]
-                )
-
-    return clips.select("clip_id", "bytes").mapInPandas(
-        extract, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
-    """STUB: video container parsing is not available in this
-    environment.  The signature and output schema define the contract;
-    swap the body for a real demuxer on a cluster with pyav/ffmpeg."""
-    raise NotImplementedError(
-        "video frame sampling requires a demuxer library (pyav/ffmpeg) "
-        "not present in this container; the Spark plumbing contract is "
-        "mapInPandas(videos[video_id, bytes], schema='video_id string, "
-        "frame_no int, bytes binary')"
     )
 
 
@@ -269,8 +220,8 @@ def audio_spectral_features(
     """REAL spectral analysis over raw-PCM audio columns (int16 LE):
     framewise FFT magnitude -> spectral centroid, 85% rolloff,
     bandwidth, flatness, dominant-bin histogram fingerprint.  No codec
-    needed for raw PCM -- only COMPRESSED audio decode remains stubbed
-    in this container.  Returns (clip_id, centroid_hz, rolloff_hz,
+    needed for raw PCM (COMPRESSED audio is not decoded in this
+    container).  Returns (clip_id, centroid_hz, rolloff_hz,
     bandwidth_hz, flatness, fp64): ``fp64`` is a 64-bit
     dominant-frequency-band fingerprint (one bit per coarse band,
     set when the band dominates any frame) for banded near-dup

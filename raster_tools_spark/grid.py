@@ -27,7 +27,6 @@ Reference semantics ported bit-exactly:
 from __future__ import annotations
 
 import math
-from typing import Iterable, Tuple
 
 import numpy as np
 
@@ -259,16 +258,6 @@ def n_covering(envelope, res, pad=0.0):
     return nx * ny
 
 
-def adaptive_res(envelope, max_cells=64, res_lo=7, res_hi=11):
-    """Finest resolution in [res_lo, res_hi] covering envelope with at
-    most ``max_cells`` cells -- how large ("hot") polygons get coarser
-    join keys instead of exploding into thousands of fine cells."""
-    for res in range(res_hi, res_lo - 1, -1):
-        if n_covering(envelope, res) <= max_cells:
-            return res
-    return res_lo
-
-
 def ring_cells(cell_id, k=1):
     """Cells in the square ring at Chebyshev distance exactly ``k``
     around ``cell_id`` (the grid analog of ``h3.grid_ring`` used for
@@ -297,47 +286,6 @@ def disk_cells(cell_id, k=1):
 
 
 # ---------------------------------------------------------------------------
-# Hilbert curve ordering (locality-preserving shuffle/range partitioning,
-# SURVEY.md section 4 "repartitionByRange on Hilbert-ordered cell id").
-# ---------------------------------------------------------------------------
-
-def hilbert_xy2d(order: int, x, y):
-    """Map (x, y) grid indices to distance along a Hilbert curve of the
-    given order (side = 2**order).  Vectorized over numpy arrays.
-
-    Classic bit-twiddling formulation (public-domain algorithm, see
-    Hamilton, "Compact Hilbert Indices", 2006)."""
-    x = np.asarray(x, dtype=np.int64).copy()
-    y = np.asarray(y, dtype=np.int64).copy()
-    d = np.zeros_like(x)
-    s = np.int64(1) << (order - 1)
-    while s > 0:
-        rx = ((x & s) > 0).astype(np.int64)
-        ry = ((y & s) > 0).astype(np.int64)
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate quadrant
-        swap = ry == 0
-        flip = swap & (rx == 1)
-        x_f = np.where(flip, s - 1 - x, x)
-        y_f = np.where(flip, s - 1 - y, y)
-        x_new = np.where(swap, y_f, x_f)
-        y_new = np.where(swap, x_f, y_f)
-        x, y = x_new, y_new
-        s >>= 1
-    return d
-
-
-def hilbert_of_cell(cell_id):
-    """Hilbert distance of a packed cell id (order = res so the curve
-    exactly covers the res-level grid of the world square)."""
-    res, ix, iy = unpack_cell(cell_id)
-    res_arr = np.asarray(res)
-    order = int(res_arr.flat[0]) if res_arr.size else RES_TILE
-    order = max(order, 1)
-    return hilbert_xy2d(order, ix, iy)
-
-
-# ---------------------------------------------------------------------------
 # Image anchoring (FIXTURES.md section 1: phash drives the grid anchor).
 # ---------------------------------------------------------------------------
 
@@ -361,17 +309,3 @@ def anchor_of_phash(phash):
     x0 = tx.astype(np.float64) * TILE_SIZE
     y_top = WORLD_TOP - ty.astype(np.float64) * TILE_SIZE
     return x0, y_top
-
-
-def image_envelope(x0, y_top, w, h):
-    """Envelope (x1, x2, y1, y2) of an anchored ``w x h`` px image."""
-    x0 = np.asarray(x0, dtype=np.float64)
-    y_top = np.asarray(y_top, dtype=np.float64)
-    w = np.asarray(w, dtype=np.float64)
-    h = np.asarray(h, dtype=np.float64)
-    return x0, x0 + w * CELL_SIZE, y_top - h * CELL_SIZE, y_top
-
-
-def geo_transform_of_anchor(x0: float, y_top: float) -> GeoTransform:
-    """Per-image GDAL-style geo transform at the canonical cell size."""
-    return GeoTransform((float(x0), CELL_SIZE, 0.0, float(y_top), 0.0, -CELL_SIZE))

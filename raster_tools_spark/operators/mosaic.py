@@ -1,4 +1,4 @@
-"""Mosaic / stack-merge operators (SURVEY.md S1/S3/J5).
+"""Mosaic / stack-merge operators (SURVEY.md S1/J5).
 
 Reference semantics:
 
@@ -7,9 +7,7 @@ Reference semantics:
   their pixels are data);
 - ``merge.py:40-70`` merges two rasters with the same rule + offset;
 - ``rebase.py:55-66`` masks pixels equal to a base layer (keep only
-  changed pixels);
-- ``upstream.py:89-107`` stacks N groups and takes the elementwise
-  minimum treating nodata as +inf.
+  changed pixels).
 
 Spark-first: the stack is rows ``(cell_id, layer, value)`` (or tile
 rows with encoded pixels).  Merge = pick the highest-layer non-null
@@ -20,11 +18,9 @@ cell group.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs
@@ -75,18 +71,6 @@ def rebase(
     return joined.filter(
         ~F.col("_update").eqNullSafe(F.col("_base"))
     ).select(key, F.col("_update").alias("value"))
-
-
-def elementwise_min(
-    df: DataFrame, key: str = "cell_id", value: str = "value"
-) -> DataFrame:
-    """Minimum across stacked layers, nodata (null) as +inf
-    (upstream.py:89-107 MinimumGroup)."""
-    return (
-        df.filter(F.col(value).isNotNull())
-        .groupBy(key)
-        .agg(F.min(value).alias("value"))
-    )
 
 
 _TILE_MERGE_SCHEMA = "cell_id long, bytes binary, fmt string, n_layers int"

@@ -4,9 +4,10 @@ reference's ``upstream.py`` composite, raster_tools/upstream.py:89-267).
 Semantics, re-expressed Spark-first:
 
 - **MinimumGroup** (upstream.py:89-107, elementwise min of several
-  raster stores) composes UPSTREAM of this operator via the existing
-  mosaic min-merge -- this operator takes one already-merged tile table
-  (cell_id, bytes, fmt, x0, y_top), e.g. retile/mosaic output.
+  raster stores) composes UPSTREAM of this operator as a per-cell min
+  over the stacked stores -- this operator takes one already-merged
+  tile table (cell_id, bytes, fmt, x0, y_top), e.g. retile/mosaic
+  output.
 - **Directed samples** (upstream.py:121-138): points every
   ``separation`` meters along each line; the direction at a sample is
   the delta to the NEXT sample, the last sample reuses the previous
@@ -85,6 +86,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codecs, geom, wkb as _wkb
+from ..fillnodata import label
 from ..grid import (CELL_SIZE, JOIN_RES, RES_TILE, WORLD_TOP,
                     covering_cells)
 from .tile import cell_col
@@ -199,71 +201,25 @@ def _is_convex(rings) -> bool:
     return bool((cross >= 0).all() or (cross <= 0).all())
 
 
-def _flood8(mask: np.ndarray, seed) -> np.ndarray:
-    """Vectorized 8-connected flood fill from ``seed``: dilate-and-mask
-    until the frontier stops growing.  O(diameter) numpy passes over a
-    radius-bounded window -- no per-pixel Python.  8-connectivity, not
-    4: one connected GEOMETRIC piece (a thin diagonal arm) can
-    rasterize to a staircase of diagonally-adjacent pixels, and the
-    piece test must match the reference's vector-space connectivity,
-    never split it."""
-    reach = np.zeros_like(mask)
-    reach[seed] = True
-    while True:
-        grown = reach.copy()
-        grown[1:, :] |= reach[:-1, :]
-        grown[:-1, :] |= reach[1:, :]
-        grown[:, 1:] |= reach[:, :-1]
-        grown[:, :-1] |= reach[:, 1:]
-        grown[1:, 1:] |= reach[:-1, :-1]
-        grown[1:, :-1] |= reach[:-1, 1:]
-        grown[:-1, 1:] |= reach[1:, :-1]
-        grown[:-1, :-1] |= reach[1:, 1:]
-        grown &= mask
-        if (grown == reach).all():
-            return reach
-        reach = grown
-
-
-def _label8(mask: np.ndarray) -> tuple:
-    """8-connected component labels via repeated vectorized floods
-    (component counts are tiny -- 2 or 3 pieces at most in practice)."""
-    labels = np.zeros(mask.shape, dtype=np.int32)
-    rest = mask.copy()
-    nxt = 0
-    while rest.any():
-        seed = np.unravel_index(int(np.argmax(rest)), rest.shape)
-        comp = _flood8(rest, seed)
-        nxt += 1
-        labels[comp] = nxt
-        rest &= ~comp
-    return labels, nxt
-
-
 def _nearest_piece_bits(mask, dx, dy):
     """None when ``mask`` is one connected piece (the common case and
     the whole oracle corpus -- the refinement must not perturb it);
     otherwise the packed bitmask of the component nearest the sample
-    (min pixel-center distance), mirroring the reference's
-    MULTIPOLYGON nearest-piece rule (upstream.py:185-191) in raster
-    space."""
-    if not mask.any():
-        return None
-    # cheap connected check first: ONE vectorized flood from any seed;
-    # full labeling only for the rare disconnected case
-    seed = np.unravel_index(int(np.argmax(mask)), mask.shape)
-    reach = _flood8(mask, seed)
-    if (reach == mask).all():
-        return None
-    labels, n = _label8(mask)
+    (min pixel-center distance, ties to the lowest label), mirroring
+    the reference's MULTIPOLYGON nearest-piece rule
+    (upstream.py:185-191) in raster space.
+
+    8-connectivity, not 4: one connected GEOMETRIC piece (a thin
+    diagonal arm) can rasterize to a staircase of diagonally-adjacent
+    pixels, and the piece test must match the reference's vector-space
+    connectivity, never split it."""
+    labels, n = label(mask, 8)
     if n < 2:
         return None
     d2 = dx[None, :] * dx[None, :] + dy[:, None] * dy[:, None]
-    best_lab, best_d = 0, None
-    for lab in range(1, n + 1):
-        dmin = float(d2[labels == lab].min())
-        if best_d is None or dmin < best_d:
-            best_d, best_lab = dmin, lab
+    dmin = np.full(n, np.inf)
+    np.minimum.at(dmin, labels[mask] - 1, d2[mask])
+    best_lab = int(np.argmin(dmin)) + 1
     return np.packbits(
         (labels == best_lab).ravel()
     ).tobytes()

@@ -49,22 +49,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _fan(df: DataFrame, key: str) -> DataFrame:
-    """Scale-adaptive fan-out before compute-heavy per-row work: the
-    fixture tables are single-row-group parquet files, so their scans
-    are effectively ONE task no matter the split config (a split
-    without the row-group midpoint reads nothing).  When the scan has
-    fewer partitions than cores, hash-repartition by a deterministic
-    key so downstream expression work parallelizes; on a real
-    many-file corpus the scan already has enough splits and this is a
-    no-op (no shuffle added)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * 2
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, F.col(key))
-
-
 def _dsum(col) -> F.Column:
     """Decimal-backed double sum: exact and order-independent, so Spark
     and DuckDB agree bit-for-bit regardless of aggregation order."""
@@ -135,12 +119,6 @@ def _diamond_of(n: int) -> bytes:
 
 def _rect_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _nation_layer(spark, sf_dir, _box_of(_rect_params))
-
-
-_RECT_SQL_CASES_X1 = (
-    "CASE WHEN n_nationkey = 3 THEN ((n_nationkey*7919)%56)*8192.0 "
-    "ELSE ((n_nationkey*7919)%56)*8192.0 END"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1357,9 +1335,10 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         splits/casts, grid-binned with per-bin min/max dedup
         (txt2tif.py semantics).  Lines are synthesized from events so
         the oracle can rebuild the identical text."""
+        from .functions.dedup import _spread
         from .sources import xyz as src_xyz
 
-        lines = _fan(_t(spark, sf_dir, "events"), "event_id").selectExpr(
+        lines = _spread(_t(spark, sf_dir, "events"), "event_id").selectExpr(
             f"concat(cast({_PX} as string), ' ', "
             f"cast({_PY} as string), ' ', cast(value as string)) as value"
         )

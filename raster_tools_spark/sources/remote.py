@@ -41,7 +41,6 @@ from typing import Callable, Iterator, Optional
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..grid import CELL_SIZE, WORLD_TOP
 
@@ -65,12 +64,6 @@ def default_transport(params: dict):
         "network transport is environment-provided; use "
         "fake_raster_transport for tests/oracles"
     )
-
-
-def fake_value_expr(wi: str, wj: str) -> str:
-    """SQL fragment of the fake service's pixel function (shared with
-    the oracle)."""
-    return f"(7 * {wi} + 13 * {wj} + 3) % 251"
 
 
 def fake_raster_transport(fail_first_every: int = 0):

@@ -17,15 +17,8 @@ pre-aligned inputs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-NO_DATA_VALUE = 3.4028235e38  # dtype-max convention (txt2tif.py:23)
-
-
-def read_xyz(spark: SparkSession, path: str) -> DataFrame:
-    """Text file(s) of 'x y z' lines -> (x, y, z) doubles."""
-    return parse_xyz(spark.read.text(path), col="value")
 
 
 def parse_xyz(lines: DataFrame, col: str = "value") -> DataFrame:

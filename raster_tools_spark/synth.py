@@ -513,23 +513,3 @@ def polygons_df(spark, m: int, seed: int = DEFAULT_SEED,
     pdf = polygons_pdf(m, seed=seed, tiles_axis=tiles_axis,
                        hot_every=hot_every)
     return spark.createDataFrame(pdf, schema=POLYGONS_SCHEMA)
-
-
-def lines_pdf(
-    m: int, seed: int = DEFAULT_SEED, tiles_axis: int = DEFAULT_TILES_AXIS
-) -> pd.DataFrame:
-    """Polyline layer crossing multiple cells (line_up.py sampling
-    semantics target, FIXTURES.md section 3)."""
-    window = tiles_axis * TILE_SIZE
-    rows = []
-    for i in range(m):
-        rng = np.random.Generator(
-            np.random.Philox(key=np.uint64(seed * 7_000_003 + i))
-        )
-        n_v = int(rng.integers(3, 8))
-        xs = np.cumsum(rng.uniform(-2, 4, n_v)) * TILE_SIZE
-        ys = np.cumsum(rng.uniform(-3, 3, n_v)) * TILE_SIZE
-        xs = np.clip(xs + rng.uniform(0, window), 0, window)
-        ys = WORLD_TOP - np.clip(ys + rng.uniform(0, window), 0, window)
-        rows.append((i, wkb.linestring_wkb(np.column_stack([xs, ys]))))
-    return pd.DataFrame(rows, columns=["line_id", "geom_wkb"])

@@ -92,9 +92,9 @@ class TestMorphology:
 
 
 def test_label_serpentine_falls_back_to_unionfind():
-    """A boustrophedon 1-px corridor has diameter O(n); the Jacobi
-    round cap must hand off to the union-find fallback and still
-    produce correct scan-order labels quickly."""
+    """A boustrophedon 1-px corridor has diameter O(n); the run-based
+    union-find must still produce correct scan-order labels quickly at
+    both connectivities."""
     import time
 
     import numpy as np
@@ -110,8 +110,9 @@ def test_label_serpentine_falls_back_to_unionfind():
                 m[r + 1, w - 1] = True
             else:
                 m[r + 1, 0] = True
-    t0 = time.time()
-    labs, n = label(m)
-    assert time.time() - t0 < 5.0
-    assert n == 1  # one connected serpentine
-    assert (labs[m] == 1).all() and (labs[~m] == 0).all()
+    for connectivity in (4, 8):
+        t0 = time.time()
+        labs, n = label(m, connectivity)
+        assert time.time() - t0 < 5.0
+        assert n == 1  # one connected serpentine
+        assert (labs[m] == 1).all() and (labs[~m] == 0).all()

@@ -6,8 +6,6 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from raster_tools_spark import grid
 
@@ -92,28 +90,6 @@ class TestCells:
         assert len(grid.ring_cells(c, 1)) == 8
         assert len(grid.disk_cells(c, 2)) == 25
         assert grid.ring_cells(c, 0) == [int(c)]
-
-    @given(
-        st.integers(0, 2**13 - 1),
-        st.integers(0, 2**13 - 1),
-    )
-    @settings(max_examples=200, deadline=None)
-    def test_hilbert_bijective_sample(self, x, y):
-        d1 = int(grid.hilbert_xy2d(13, x, y))
-        # neighbors map to distinct distances
-        d2 = int(grid.hilbert_xy2d(13, x, (y + 1) % 2**13))
-        assert d1 != d2
-        assert 0 <= d1 < 4**13
-
-    def test_hilbert_locality(self):
-        # adjacent cells along the curve are adjacent in space
-        n = 64
-        xs, ys = np.meshgrid(np.arange(n), np.arange(n))
-        d = grid.hilbert_xy2d(6, xs.ravel(), ys.ravel())
-        order = np.argsort(d)
-        px, py = xs.ravel()[order], ys.ravel()[order]
-        steps = np.abs(np.diff(px)) + np.abs(np.diff(py))
-        assert steps.max() == 1  # Hilbert curve: unit steps only
 
 
 class TestAnchor:

@@ -180,24 +180,99 @@ def _label_jacobi_reference(mask):
     return labels, int(roots.size)
 
 
-def test_label_runbased_matches_jacobi_reference():
-    from raster_tools_spark.fillnodata import label
+def _flood8_reference(mask, seed):
+    """8-connected flood fill from ``seed``: dilate-and-mask until the
+    frontier stops growing (the former upstream nearest-piece test)."""
+    reach = np.zeros_like(mask)
+    reach[seed] = True
+    while True:
+        grown = reach.copy()
+        grown[1:, :] |= reach[:-1, :]
+        grown[:-1, :] |= reach[1:, :]
+        grown[:, 1:] |= reach[:, :-1]
+        grown[:, :-1] |= reach[:, 1:]
+        grown[1:, 1:] |= reach[:-1, :-1]
+        grown[1:, :-1] |= reach[:-1, 1:]
+        grown[:-1, 1:] |= reach[1:, :-1]
+        grown[:-1, :-1] |= reach[1:, 1:]
+        grown &= mask
+        if (grown == reach).all():
+            return reach
+        reach = grown
 
-    rng = np.random.default_rng(13)
+
+def _label8_reference(mask):
+    """8-connected labels by repeated floods from the first remaining
+    pixel, so numbering is row-major first appearance."""
+    labels = np.zeros(mask.shape, dtype=np.int32)
+    rest = mask.copy()
+    nxt = 0
+    while rest.any():
+        seed = np.unravel_index(int(np.argmax(rest)), rest.shape)
+        comp = _flood8_reference(rest, seed)
+        nxt += 1
+        labels[comp] = nxt
+        rest &= ~comp
+    return labels, nxt
+
+
+def _label_cases(seed):
+    """Random densities and shapes plus the degenerate and adversarial
+    masks: 1xN, Nx1, empty, all-True, diagonal staircase, checkerboard
+    and serpentine."""
+    rng = np.random.default_rng(seed)
     cases = [rng.random(shape) < p
              for p in (0.2, 0.5, 0.8)
              for shape in ((1, 1), (1, 17), (23, 1), (13, 17), (48, 48))
              for _ in range(4)]
+    stair = np.zeros((12, 12), bool)
+    for t in range(11):
+        stair[t, t] = True
+        stair[t, 11 - t] = True
+    checker = (np.add.outer(np.arange(9), np.arange(11)) % 2) == 0
     serp = np.zeros((40, 40), bool)
     serp[::2, :] = True
     serp[1::4, -1] = True
     serp[3::4, 0] = True
-    cases += [serp, np.zeros((8, 8), bool), np.ones((8, 8), bool)]
-    for m in cases:
+    cases += [stair, checker, serp,
+              np.zeros((8, 8), bool), np.ones((8, 8), bool),
+              np.zeros((1, 9), bool), np.ones((1, 9), bool),
+              np.ones((7, 1), bool), np.zeros((0, 5), bool)]
+    return cases
+
+
+def test_label_runbased_matches_jacobi_reference():
+    """label(m, 4) equals the Jacobi min-propagation fixpoint (labels
+    and count) over the whole mask domain."""
+    from raster_tools_spark.fillnodata import label
+
+    for m in _label_cases(13):
         a_lab, a_n = _label_jacobi_reference(m)
-        b_lab, b_n = label(m)
+        b_lab, b_n = label(m, 4)
         assert a_n == b_n
         assert np.array_equal(a_lab, b_lab)
+        assert b_lab.dtype == np.int32
+
+
+def test_label8_matches_flood_reference():
+    """label(m, 8) equals repeated 8-connected floods (labels and
+    count, both row-major first-appearance numbered)."""
+    from raster_tools_spark.fillnodata import label
+
+    for m in _label_cases(17):
+        a_lab, a_n = _label8_reference(m)
+        b_lab, b_n = label(m, 8)
+        assert a_n == b_n
+        assert np.array_equal(a_lab, b_lab)
+
+
+def test_label_checkerboard_connectivity():
+    """A checkerboard is all singletons at 4 and one piece at 8."""
+    from raster_tools_spark.fillnodata import label
+
+    checker = (np.add.outer(np.arange(9), np.arange(11)) % 2) == 0
+    assert label(checker, 4)[1] == int(checker.sum())
+    assert label(checker, 8)[1] == 1
 
 
 def _nearest_scan_reference(points, z, qx, qy, chunk=2048):
@@ -217,16 +292,16 @@ def _nearest_scan_reference(points, z, qx, qy, chunk=2048):
 
 
 def test_nearest_pruned_matches_full_scan():
-    """The tile-pruned nearest path must be bit-identical to the full
+    """The tile-pruned nearest scan must be bit-identical to the full
     scan, including the lowest-index rule on EXACT distance ties
-    (quantized coordinate clouds force many)."""
-    from raster_tools_spark.functions.triangulate import (
-        _nearest_pruned, nearest_values)
+    (quantized coordinate clouds force many).  Sizes run from one tile
+    to 16 x 16 tiles, on both sides of 4M point-query pairs."""
+    from raster_tools_spark.functions.triangulate import nearest_values
 
     rng = np.random.RandomState(11)
     for trial in range(45):
         kind = trial % 3
-        n = rng.randint(33, 400)
+        n = rng.randint(1, 400)
         if kind == 0:
             pts = rng.rand(n, 2) * 10
         elif kind == 1:
@@ -236,22 +311,83 @@ def test_nearest_pruned_matches_full_scan():
         else:
             pts = np.round(rng.rand(n, 2) * 8) * 0.25  # exact ties
         z = rng.rand(len(pts))
-        nq = rng.randint(200, 3000)
+        nq = rng.randint(0, 3000)
         q = rng.rand(nq, 2) * 30 - 10
         ref = _nearest_scan_reference(pts, z, q[:, 0], q[:, 1])
-        got = np.empty(nq)
-        _nearest_pruned(
-            np.asarray(pts, float), z, q[:, 0].copy(), q[:, 1].copy(),
-            got, tiles=int(rng.randint(2, 20)))
+        got = nearest_values(pts, z, q[:, 0], q[:, 1])
         assert np.array_equal(ref, got), f"trial {trial}"
-    # the public gate: big workloads flip to the pruned path and still
-    # equal the reference scan
-    pts = rng.rand(600, 2) * 12
-    z = rng.rand(600)
-    q = rng.rand(8000, 2) * 40 - 14
+    # above the old 4M-pair size gate: 8000 x 600 pairs, and a
+    # 16 x 16-tile case whose quantized points force exact ties
+    for pts, nq in ((rng.rand(600, 2) * 12, 8000),
+                    (np.round(rng.rand(900, 2) * 40) * 0.25, 20000)):
+        z = rng.rand(len(pts))
+        q = rng.rand(nq, 2) * 40 - 14
+        assert np.array_equal(
+            nearest_values(pts, z, q[:, 0], q[:, 1]),
+            _nearest_scan_reference(pts, z, q[:, 0], q[:, 1]))
+
+
+def test_nearest_pruned_degenerate_geometry():
+    """Zero queries, one point, zero-extent query sets (every query
+    identical), far-away clusters and tiles holding more than one
+    2048-row chunk of queries must all equal the full scan."""
+    from raster_tools_spark.functions.triangulate import nearest_values
+
+    rng = np.random.RandomState(3)
+    pts = rng.rand(200, 2) * 4 + 1000.0  # cluster far from queries
+    z = rng.rand(200)
+    assert nearest_values(pts, z, np.empty(0), np.empty(0)).size == 0
+    # one point: every query takes its value
+    assert (nearest_values(pts[:1], z[:1], rng.rand(50), rng.rand(50))
+            == z[0]).all()
+    # all queries the SAME point -> qx/qy extent exactly 0, and 5000
+    # queries in the one tile -> three chunks
+    for nq in (500, 5000):
+        qx = np.full(nq, -5.0)
+        qy = np.full(nq, 7.5)
+        assert np.array_equal(
+            nearest_values(pts, z, qx, qy),
+            _nearest_scan_reference(pts, z, qx, qy))
+    # queries ON the cluster plus a distant tail in one call
+    qx2 = np.concatenate([pts[:100, 0], np.linspace(-50, 2000, 400)])
+    qy2 = np.concatenate([pts[:100, 1], np.full(400, 3.0)])
     assert np.array_equal(
-        nearest_values(pts, z, q[:, 0], q[:, 1]),
-        _nearest_scan_reference(pts, z, q[:, 0], q[:, 1]))
+        nearest_values(pts, z, qx2, qy2),
+        _nearest_scan_reference(pts, z, qx2, qy2))
+    # many tiles, one of them holding 6000 clustered queries
+    pts3 = rng.rand(700, 2) * 10
+    z3 = rng.rand(700)
+    q3 = np.concatenate([rng.rand(24000, 2) * 10,
+                         rng.rand(6000, 2) * 0.01 + 5.0])
+    assert np.array_equal(
+        nearest_values(pts3, z3, q3[:, 0], q3[:, 1]),
+        _nearest_scan_reference(pts3, z3, q3[:, 0], q3[:, 1]))
+
+
+def test_nearest_memory_bounded_by_chunk():
+    """Weak pruning (every point survives) with nearly every query in
+    one tile: the working set is one chunk x candidates, not the
+    tile's queries x candidates (~64 MB per array here).  The rest of
+    the bound is the O(queries) index arrays."""
+    import tracemalloc
+
+    from raster_tools_spark.functions.triangulate import nearest_values
+
+    rng = np.random.RandomState(5)
+    ang = rng.rand(80) * 2 * np.pi  # a ring around the query cluster:
+    pts = np.c_[np.cos(ang), np.sin(ang)] * 100.0  # nothing is pruned
+    z = rng.rand(80)
+    q = np.concatenate([rng.rand(100_000, 2) * 0.01,
+                        np.array([[-500.0, -500.0], [500.0, 500.0]])])
+    tracemalloc.start()
+    try:
+        got = nearest_values(pts, z, q[:, 0], q[:, 1])
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 24 * 2**20, peak
+    assert np.array_equal(
+        got, _nearest_scan_reference(pts, z, q[:, 0], q[:, 1]))
 
 
 def _scanline_fill_reference(mask, rings, p, a, q, d, i0, i1, j0, j1):
@@ -350,53 +486,18 @@ def _blob_sizes_reference(mask):
 
 
 def test_blob_sizes_runbased_matches_dict_reference():
-    """Size multisets must match the per-pixel reference exactly over
-    random densities, serpentines, diagonal-only chains, and
-    degenerate shapes (8-connectivity)."""
-    from raster_tools_spark.functions.image_enhance import _blob_sizes
+    """blob_stats' sizes -- bincount of label(m, 8) -- must match the
+    per-pixel reference's size multiset exactly over random densities,
+    serpentines, diagonal-only chains, checkerboards and degenerate
+    shapes (8-connectivity)."""
+    from raster_tools_spark.fillnodata import label
 
+    cases = _label_cases(29)
     rng = np.random.default_rng(29)
-    cases = [rng.random(shape) < p
-             for p in (0.15, 0.4, 0.6, 0.9)
-             for shape in ((1, 1), (1, 19), (23, 1), (14, 17), (40, 40))
-             for _ in range(3)]
-    diag = np.zeros((12, 12), bool)
-    for t in range(11):
-        diag[t, t] = True
-        diag[t, 11 - t] = True
-    serp = np.zeros((30, 30), bool)
-    serp[::2, :] = True
-    serp[1::4, -1] = True
-    serp[3::4, 0] = True
-    cases += [diag, serp, np.zeros((6, 6), bool), np.ones((6, 6), bool)]
+    cases += [rng.random((40, 40)) < p for p in (0.15, 0.4, 0.6, 0.9)]
     for msk in cases:
-        assert (sorted(_blob_sizes(msk))
-                == sorted(_blob_sizes_reference(msk)))
-
-
-def test_nearest_pruned_degenerate_geometry():
-    """Zero-extent query sets (every query identical) and far-away
-    clusters must take the pruned path without loss: the tile grid
-    degenerates to one cell and the bound still admits the winner."""
-    from raster_tools_spark.functions.triangulate import _nearest_pruned
-
-    rng = np.random.RandomState(3)
-    pts = rng.rand(200, 2) * 4 + 1000.0  # cluster far from queries
-    z = rng.rand(200)
-    # all queries the SAME point -> qx/qy extent exactly 0
-    qx = np.full(500, -5.0)
-    qy = np.full(500, 7.5)
-    ref = _nearest_scan_reference(pts, z, qx, qy)
-    got = np.empty(500)
-    _nearest_pruned(pts, z, qx.copy(), qy.copy(), got, tiles=16)
-    assert np.array_equal(ref, got)
-    # queries ON the cluster plus a distant tail in one call
-    qx2 = np.concatenate([pts[:100, 0], np.linspace(-50, 2000, 400)])
-    qy2 = np.concatenate([pts[:100, 1], np.full(400, 3.0)])
-    ref2 = _nearest_scan_reference(pts, z, qx2, qy2)
-    got2 = np.empty(qx2.size)
-    _nearest_pruned(pts, z, qx2.copy(), qy2.copy(), got2, tiles=7)
-    assert np.array_equal(ref2, got2)
+        sizes = np.bincount(label(msk, 8)[0].ravel())[1:]
+        assert sorted(sizes.tolist()) == sorted(_blob_sizes_reference(msk))
 
 
 def test_anchor_cols_matches_numpy(spark):

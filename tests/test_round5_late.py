@@ -209,7 +209,11 @@ def test_blob_stats_8_connectivity(spark):
 
 
 def test_blob_sizes_empty_mask():
-    assert image_enhance._blob_sizes(np.zeros((5, 5), bool)) == []
+    from raster_tools_spark.fillnodata import label
+
+    labels, n = label(np.zeros((5, 5), bool), 8)
+    assert n == 0
+    assert np.bincount(labels.ravel())[1:].size == 0
 
 
 # ---------------------------------------------------------------------------
