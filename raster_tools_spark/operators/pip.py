@@ -6,18 +6,20 @@ masking (raster_tools/zonal.py:80-87, groups.py:115-135) with an
 envelope prejoin pushed into PostGIS/OGR (rasterize2.py:151-158,
 datasources.py:28-33).  Spark-first re-expression:
 
+- polygon meta: one Arrow-batched pandas UDF pass per polygon yields
+  the cover count, envelope, covering cells and the edge array -- the
+  only Python in the query.
 - phase H (hot/broadcast): polygons whose envelope covers more than
   ``hot_cover`` cells at the join resolution are few but huge (the skew
   drivers).  They are broadcast and bbox-prejoined with a JVM-side
-  predicate; exact refine in an Arrow-batched pandas UDF.
+  predicate.
 - phase N (normal/shuffle): remaining polygons explode their covering
   cells at ``join_res`` and equi-join images on the cell key -- the
-  canonical shuffle join on grid keys.  Optional explicit salting splits
-  hot *cells* across ``salt`` buckets (AQE skew join is the backstop,
-  explicit salt is the deterministic fix).
-- exact refinement: vectorized even-odd ray cast (geom.points_in_wkb),
-  batch-grouped by polygon so each polygon's rings are parsed once per
-  Arrow batch.
+  canonical shuffle join on grid keys (AQE skew join handles hot
+  cells).
+- exact refinement: the even-odd ray cast of geom.points_in_rings as a
+  JVM ``aggregate`` over each candidate's edge array, so candidate
+  pairs never cross into Python.
 
 Output: one row per (image, polygon) containment pair.  No dedup pass is
 needed: the two phases partition the polygon set, and at one resolution
@@ -26,8 +28,6 @@ once -- at 10^12 rows a distinct() here would be the bottleneck.
 """
 
 from __future__ import annotations
-
-from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -58,11 +58,15 @@ _POLY_META_SCHEMA = T.StructType([
     T.StructField("ey1", T.DoubleType()),
     T.StructField("ey2", T.DoubleType()),
     T.StructField("cells", T.ArrayType(T.LongType())),
+    T.StructField("edges", T.ArrayType(T.StructType([
+        T.StructField(k, T.DoubleType()) for k in ("x1", "y1", "x2", "y2")
+    ]))),
 ])
 
 
 def _poly_meta_udf(res: int, hot_cover: int):
-    """Cover count + envelope + covering cells in ONE Python pass.
+    """Cover count + envelope + covering cells + ring edges in ONE
+    Python pass.
 
     Every separate pandas UDF on the polygon side costs a full Spark
     stage of fixed scheduler/worker latency (~0.2s each on a warm
@@ -70,45 +74,47 @@ def _poly_meta_udf(res: int, hot_cover: int):
     overhead dominated small-polygon-layer joins.  Hot polygons
     (n_cover > hot_cover) skip cell enumeration -- phase H never needs
     it and a continent-sized envelope would materialize millions of
-    ids."""
+    ids.  ``edges`` is the (x1, y1, x2, y2) list of
+    geom._edges_of_rings, the input of the JVM ray cast."""
 
     @F.pandas_udf(_POLY_META_SCHEMA)
     def meta(wkb_s: pd.Series) -> pd.DataFrame:
         rows = []
         for b in wkb_s:
-            env = geom.envelope(bytes(b))
+            b = bytes(b)
+            env = geom.envelope(b)
             n = n_covering(env, res)
             cells = covering_cells(env, res) if n <= hot_cover else []
-            rows.append((n, env[0], env[1], env[2], env[3], cells))
+            edges = list(zip(*(
+                a.tolist() for a in geom._edges_of_rings(geom._rings_of(b))
+            )))
+            rows.append((n, env[0], env[1], env[2], env[3], cells, edges))
         return pd.DataFrame(
             rows, columns=["n_cover", "ex1", "ex2", "ey1", "ey2",
-                           "cells"],
+                           "cells", "edges"],
         )
 
     return meta
 
 
-def _refine(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact PIP refine of candidate pairs; one ring-parse per polygon
-    per batch (polygons repeat heavily within a cell's batch)."""
-    if len(pdf) == 0:
-        return pdf
-    keep = pd.Series(False, index=pdf.index)
-    for _, idx in pdf.groupby("feat_id").groups.items():
-        sub = pdf.loc[idx]
-        wkb_b = bytes(sub["geom_wkb"].iloc[0])
-        inside = geom.points_in_wkb(
-            sub["cx"].to_numpy(), sub["cy"].to_numpy(), wkb_b
+def _inside(cx, cy, edges):
+    """Even-odd ray cast of point (cx, cy) against an edge array, as a
+    JVM higher-order expression: bit-for-bit geom.points_in_rings (the
+    same straddle test, the same ``x1 + (cy - y1) * (x2 - x1) /
+    (y2 - y1)`` operation order, the same strict ``<``).  The division
+    is evaluated only under the straddle test, where ``y1 != y2``:
+    ANSI mode raises on a zero divisor."""
+    cx = cx.cast("double")
+    cy = cy.cast("double")
+
+    def step(n, e):
+        straddle = (e["y1"] > cy) != (e["y2"] > cy)
+        xint = e["x1"] + (cy - e["y1"]) * (e["x2"] - e["x1"]) / (
+            e["y2"] - e["y1"]
         )
-        keep.loc[idx] = inside
-    return pdf[keep.to_numpy()]
+        return n + F.when(straddle, (cx < xint).cast("int")).otherwise(0)
 
-
-def _refine_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = _refine(pdf)
-        if len(out):
-            yield out
+    return F.aggregate(edges, F.lit(0), step) % 2 == 1
 
 
 def pip_join(
@@ -116,25 +122,11 @@ def pip_join(
     polygons: DataFrame,
     join_res: int = JOIN_RES,
     hot_cover: int = 64,
-    salt: Optional[int] = None,
     keep_cols=("image_id", "cx", "cy"),
     poly_cols=("feat_id", "category", "value"),
-    rehydrate_geom: bool = False,
 ) -> DataFrame:
     """images (assign_cells output) x polygons(feat_id, geom_wkb, ...)
-    -> containment pairs.
-
-    ``salt``: explicit salt bucket count for the shuffle phase (None =
-    rely on AQE skew join only).
-
-    ``rehydrate_geom``: phase N normally carries ``geom_wkb``
-    duplicated once per covering cell through the shuffle -- cheap for
-    typical polygons, wasteful for vertex-heavy ones.  True strips the
-    geometry from the exploded cell table (the shuffle moves only
-    (feat_id, cell) keys) and broadcast-joins it back by feat_id just
-    before the exact refine.  Requires the phase-N polygon set to be
-    broadcastable; the default False works at any polygon-layer size.
-    """
+    -> containment pairs."""
     cell_key = f"qk_r{join_res}"
     # the point side is the guide-8 lightweight proxy of the image scan
     # (id + center + cell key, ~50 bytes/row); materialize it lazily so
@@ -143,119 +135,51 @@ def pip_join(
     # The checkpoint lives inside this query's DAG and dies with it.
     pts = images.select(*keep_cols, cell_key).localCheckpoint(eager=False)
 
-    # polygon meta (cover count, envelope, cells) is consumed by both
-    # phases and by every broadcast build; checkpoint so the pandas UDF
-    # runs once per query instead of once per consumer subtree
+    # polygon meta (cover count, envelope, cells, edges) is consumed by
+    # both phases and by every broadcast build; checkpoint so the pandas
+    # UDF runs once per query instead of once per consumer subtree
     polys = polygons.withColumn(
         "_pm", _poly_meta_udf(join_res, hot_cover)(F.col("geom_wkb"))
     ).localCheckpoint(eager=False)
     hot = polys.filter(F.col("_pm.n_cover") > hot_cover)
     normal = polys.filter(F.col("_pm.n_cover") <= hot_cover)
+    attrs = [c for c in poly_cols if c != "feat_id"]
 
-    refine_schema = ", ".join(
-        [
-            "image_id string",
-            "cx double",
-            "cy double",
-            "feat_id long",
-            "geom_wkb binary",
-        ]
-        + [f"{c} {_sql_type(polygons, c)}" for c in poly_cols if c != "feat_id"]
-    )
-    out_cols = [*(c for c in keep_cols), *poly_cols]
-
-    # ---- phase N: shuffle equi-join on covering cells -------------------
-    # envelope columns ride along (4 doubles/row) so a JVM-side bbox
-    # predicate can drop candidates BEFORE the Python refine: boundary
-    # cells -- especially the closed-bottom cover row, where only
-    # points exactly ON y == ymin can ever match -- otherwise flood the
-    # pandas UDF with pairs that fail trivially
-    env_cols = [
+    # the envelope rides along as 4 doubles so a JVM-side bbox predicate
+    # drops candidates before the ray cast: boundary cells -- especially
+    # the closed-bottom cover row, where only points exactly ON
+    # y == ymin can ever match -- otherwise pay a full edge scan for
+    # pairs that fail trivially.  Closed comparisons keep it a
+    # conservative SUPERSET of containment (the even-odd ray cast's
+    # boundary behavior varies by edge)
+    meta = [
+        F.col("_pm.edges").alias("_edges"),
         F.col("_pm.ex1").alias("_ex1"), F.col("_pm.ex2").alias("_ex2"),
         F.col("_pm.ey1").alias("_ey1"), F.col("_pm.ey2").alias("_ey2"),
     ]
-    if rehydrate_geom:
-        ncells = normal.withColumn(
-            "cover_cell", F.explode("_pm.cells")
-        ).select("feat_id", "cover_cell", *env_cols)
-    else:
-        ncells = normal.withColumn(
-            "cover_cell", F.explode("_pm.cells")
-        ).select("feat_id", "geom_wkb", "cover_cell", *env_cols,
-                 *[c for c in poly_cols if c != "feat_id"])
+    bbox = (
+        (F.col("cx") >= F.col("_ex1"))
+        & (F.col("cx") < F.col("_ex2"))
+        & (F.col("cy") >= F.col("_ey1"))
+        & (F.col("cy") <= F.col("_ey2"))
+    )
 
-    # same closed-comparison bbox as phase H: a conservative SUPERSET
-    # of containment (the even-odd ray cast's boundary behavior varies
-    # by edge; closed bounds never drop a point the refine would keep,
-    # they only admit boundary candidates the refine then rejects)
-    def _bbox_pred(left):
-        return (
-            (left["cx"] >= F.col("_ex1"))
-            & (left["cx"] < F.col("_ex2"))
-            & (left["cy"] >= F.col("_ey1"))
-            & (left["cy"] <= F.col("_ey2"))
-        )
-
-    if salt:
-        pts_s = pts.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("image_id")), F.lit(salt))
-        )
-        ncells_s = ncells.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        ).withColumn("_salt", F.col("_salt").cast("long"))
-        cand_n = pts_s.join(
-            ncells_s,
-            (pts_s[cell_key] == ncells_s["cover_cell"])
-            & (pts_s["_salt"] == ncells_s["_salt"])
-            & _bbox_pred(pts_s),
-        ).drop("_salt")
-    else:
-        cand_n = pts.join(
-            ncells,
-            (pts[cell_key] == ncells["cover_cell"]) & _bbox_pred(pts),
-        )
-
-    if rehydrate_geom:
-        # geometry (and attributes) re-attached AFTER the big shuffle,
-        # from a broadcast of the phase-N polygon table keyed by id
-        geo = F.broadcast(
-            normal.select(
-                "feat_id", "geom_wkb",
-                *[c for c in poly_cols if c != "feat_id"],
-            )
-        )
-        cand_n = cand_n.join(geo, "feat_id")
+    # ---- phase N: shuffle equi-join on covering cells -------------------
+    ncells = normal.select(
+        "feat_id", F.explode("_pm.cells").alias("cover_cell"), *meta,
+        *attrs,
+    )
+    cand_n = pts.join(ncells, (pts[cell_key] == ncells["cover_cell"]) & bbox)
 
     # ---- phase H: broadcast bbox prejoin ---------------------------------
-    hot_b = F.broadcast(
-        hot.select(
-            "feat_id", "geom_wkb", F.col("_pm").alias("env_s"),
-            *[c for c in poly_cols if c != "feat_id"],
-        )
-    )
-    bbox_pred = (
-        (F.col("cx") >= F.col("env_s.ex1"))
-        & (F.col("cx") < F.col("env_s.ex2"))
-        & (F.col("cy") >= F.col("env_s.ey1"))
-        & (F.col("cy") <= F.col("env_s.ey2"))
-    )
-    cand_h = pts.join(hot_b, bbox_pred)
-
-    # one refine stage over the union of both candidate streams: the
-    # phases partition the polygon set, so the refine decision per row
-    # is unchanged; merging saves a full Python-runner stage per query
-    refine_cols = ["image_id", "cx", "cy", "feat_id", "geom_wkb",
-                   *[c for c in poly_cols if c != "feat_id"]]
-    cand = cand_n.select(*refine_cols).unionByName(
-        cand_h.select(*refine_cols)
-    )
-    return (
-        cand.mapInPandas(_refine_iter, schema=refine_schema)
-        .select(*out_cols)
+    cand_h = pts.join(
+        F.broadcast(hot.select("feat_id", *meta, *attrs)), bbox
     )
 
-
-def _sql_type(df: DataFrame, col: str) -> str:
-    return dict((f.name, f.dataType.simpleString()) for f in df.schema.fields)[
-        col
-    ]
+    # the phases partition the polygon set, so their union carries each
+    # candidate pair once; the exact ray cast filters it JVM-side
+    cols = [*keep_cols, "feat_id", "_edges", *attrs]
+    cand = cand_n.select(*cols).unionByName(cand_h.select(*cols))
+    return cand.filter(
+        _inside(F.col("cx"), F.col("cy"), F.col("_edges"))
+    ).select(*keep_cols, *poly_cols)

@@ -16,9 +16,11 @@ Spark-first shape (the reference's per-feature loop becomes one job):
    max, 256-bin histogram) -- the expensive pixel work happens map-side,
    mirroring the reference's blocked partial aggregation
    (ruimtekaart.py:214-233);
-3. ``groupBy(feat_id)`` combines partials; exact percentiles come from
-   the merged uint8 histogram (bit-exact vs np.percentile, no
-   approx_percentile needed because the value domain is u8).
+3. ``groupBy(feat_id)`` combines partials with JVM aggregates (sums,
+   min/max, a zip_with histogram merge); exact percentiles come from
+   the merged uint8 histogram through a higher-order expression
+   (bit-exact vs np.percentile, no approx_percentile needed because
+   the value domain is u8).
 
 Per-pair partial rows are ~300 bytes vs ~64 KiB of pixels, so the
 shuffle moves ~0.5% of the scanned data -- the property that keeps this
@@ -28,7 +30,6 @@ plan alive at 100 TB.
 from __future__ import annotations
 
 import math
-from typing import Iterator, List
 
 import numpy as np
 import pandas as pd
@@ -48,19 +49,52 @@ from ..grid import (
 NODATA_DEFAULT = 255  # dtype-max convention (extract.py:94-99, merge.py:59)
 
 
-def percentile_from_hist(hist: np.ndarray, q: float) -> float:
-    """Exact percentile of u8 data from its 256-bin histogram, matching
-    np.percentile's default linear interpolation."""
-    n = int(hist.sum())
-    if n == 0:
-        return float("nan")
-    pos = q / 100.0 * (n - 1)
-    lo = int(math.floor(pos))
-    hi = int(math.ceil(pos))
-    cum = np.cumsum(hist)
-    v_lo = float(np.searchsorted(cum, lo + 1))
-    v_hi = float(np.searchsorted(cum, hi + 1))
-    return v_lo + (v_hi - v_lo) * (pos - lo)
+def _hist_sum(hist):
+    return F.aggregate(hist, F.lit(0).cast("long"), lambda a, x: a + x)
+
+
+def percentile_from_hist(hist, q: float):
+    """Exact percentile of u8 data from its 256-bin histogram column,
+    matching np.percentile's default linear interpolation (same
+    ``pos = q / 100.0 * (n - 1)`` operation order); NaN for an empty
+    histogram.
+
+    One pass over the bins finds the first bin whose running count
+    reaches ``lo + 1`` and ``hi + 1`` (the
+    ``np.searchsorted(np.cumsum(hist), k)`` rule).  Every per-row
+    constant rides in the zero struct, which is evaluated once: a
+    lambda body referencing ``n`` would re-sum the histogram for every
+    bin, because higher-order functions run interpreted."""
+    n = _hist_sum(hist)
+    pos = F.lit(q) / F.lit(100.0) * (n - 1).cast("double")
+    lo = F.floor(pos)
+    zero = F.struct(
+        (lo + 1).alias("k_lo"), (F.ceil(pos) + 1).alias("k_hi"),
+        (pos - lo.cast("double")).alias("frac"),
+        F.lit(0).cast("long").alias("c"), F.lit(0).alias("i"),
+        F.lit(-1).alias("v_lo"), F.lit(-1).alias("v_hi"),
+    )
+
+    def step(acc, x):
+        c = acc["c"] + x
+        return F.struct(
+            acc["k_lo"].alias("k_lo"), acc["k_hi"].alias("k_hi"),
+            acc["frac"].alias("frac"), c.alias("c"),
+            (acc["i"] + 1).alias("i"),
+            F.when((acc["v_lo"] < 0) & (c >= acc["k_lo"]), acc["i"])
+            .otherwise(acc["v_lo"]).alias("v_lo"),
+            F.when((acc["v_hi"] < 0) & (c >= acc["k_hi"]), acc["i"])
+            .otherwise(acc["v_hi"]).alias("v_hi"),
+        )
+
+    def finish(acc):
+        v_lo = acc["v_lo"].cast("double")
+        v_hi = acc["v_hi"].cast("double")
+        return v_lo + (v_hi - v_lo) * acc["frac"]
+
+    return F.when(n > 0, F.aggregate(hist, zero, step, finish)).otherwise(
+        F.lit(float("nan"))
+    )
 
 
 def _image_cover_udf(res: int):
@@ -152,8 +186,8 @@ def _partials_stream(batches, expr: str | None = None):
     def _flush():
         rows = [
             (fid, a[0], a[1], a[2], a[3],
-             a[4] if a[1] else float("nan"),
-             a[5] if a[1] else float("nan"),
+             a[4] if a[1] else None,
+             a[5] if a[1] else None,
              a[6], a[7])
             for fid, a in acc.items()
         ]
@@ -262,46 +296,56 @@ def eval_band_expr(expr: str, values: np.ndarray) -> np.ndarray:
     return np.asarray(eval(compile(tree, "<band_expr>", "eval"), {"__builtins__": {}}, ns))
 
 
-_FINAL_SCHEMA = (
-    "feat_id long, size long, cnt long, mean double, std double, "
-    "mn double, mx double, median double, p75 double, "
-    "frac_in_range double"
-)
+def _merge_hists(hist):
+    """Element-wise sum of the group's 256-bin histograms: a
+    collect_list folded with zip_with, so the merge rides the same
+    partial/final aggregate (and exchange) as the scalar sums."""
+    return F.aggregate(
+        F.collect_list(hist),
+        F.array_repeat(F.lit(0).cast("long"), 256),
+        lambda acc, h: F.zip_with(acc, h, lambda x, y: x + y),
+    )
 
 
-def _finalize(pdf: pd.DataFrame, range_frac=None) -> pd.DataFrame:
-    feat_id = pdf["feat_id"].iloc[0]
-    size = int(pdf["size"].sum())
-    cnt = int(pdf["cnt"].sum())
-    hist = np.sum(np.stack(pdf["hist"].map(np.asarray)), axis=0)
-    frac = float("nan")
-    if cnt:
-        s = float(pdf["s"].sum())
-        ss = float(pdf["ss"].sum())
-        mean = s / cnt
-        # population std (np.std default, matching getattr(np, 'std'))
-        var = max(ss / cnt - mean * mean, 0.0)
-        std = math.sqrt(var)
-        mn = float(pdf["mn"].min())
-        mx = float(pdf["mx"].max())
-        if int(hist.sum()) == cnt:
-            med = percentile_from_hist(hist, 50.0)
-            p75 = percentile_from_hist(hist, 75.0)
-        else:  # non-u8 band: no exact histogram
-            med = p75 = float("nan")
-        if range_frac is not None and int(hist.sum()) == cnt:
-            lo, hi = range_frac
-            # green-factor style in-range fraction, exact from the u8
-            # histogram (green_factor.py:176-193 semantics)
-            frac = float(hist[lo : hi + 1].sum()) / cnt
+def _finalize_stats(partials: DataFrame, range_frac=None) -> DataFrame:
+    """Merge per-(task, feature) partials into the A1 stats row with JVM
+    aggregates.  Every partial sum on u8 pixels (and on the dyadic
+    expr/f4 registry inputs) is integer-valued or dyadic, so the double
+    sums are exact and independent of merge order.  Partials carry null
+    ``mn``/``mx`` when ``cnt == 0``, which min/max skip; a feature with
+    no data pixel gets null stats."""
+    m = partials.groupBy("feat_id").agg(
+        F.sum("size").alias("size"), F.sum("cnt").alias("cnt"),
+        F.sum("s").alias("s"), F.sum("ss").alias("ss"),
+        F.min("mn").alias("mn"), F.max("mx").alias("mx"),
+        _merge_hists("hist").alias("hist"),
+    )
+    cnt = F.col("cnt")
+    hist = F.col("hist")
+    has = cnt > 0
+    # non-u8 band: the histogram is empty, so no exact percentiles
+    u8 = has & (_hist_sum(hist) == cnt)
+    mean = F.col("s") / cnt
+    # population std (np.std default, matching getattr(np, 'std'))
+    var = F.greatest(F.col("ss") / cnt - mean * mean, F.lit(0.0))
+    if range_frac is not None:
+        lo, hi = range_frac
+        # green-factor style in-range fraction, exact from the u8
+        # histogram (green_factor.py:176-193 semantics)
+        frac = F.when(
+            u8, _hist_sum(F.slice(hist, lo + 1, hi - lo + 1))
+            .cast("double") / cnt,
+        )
     else:
-        mean = std = mn = mx = med = p75 = float("nan")
-    return pd.DataFrame(
-        [(feat_id, size, cnt, mean, std, mn, mx, med, p75, frac)],
-        columns=[
-            "feat_id", "size", "cnt", "mean", "std", "mn", "mx",
-            "median", "p75", "frac_in_range",
-        ],
+        frac = F.lit(None).cast("double")
+    return m.select(
+        "feat_id", "size", "cnt",
+        F.when(has, mean).alias("mean"),
+        F.when(has, F.sqrt(var)).alias("std"),
+        "mn", "mx",
+        F.when(u8, percentile_from_hist(hist, 50.0)).alias("median"),
+        F.when(u8, percentile_from_hist(hist, 75.0)).alias("p75"),
+        frac.alias("frac_in_range"),
     )
 
 
@@ -454,7 +498,6 @@ def rgb_zonal(
 
 
 _FLOOR_PARTIAL_SCHEMA = "feat_id long, hist array<long>"
-_FLOOR_SCHEMA = "feat_id long, ring_px long, floor_75 double"
 
 
 def floor_level(
@@ -553,20 +596,13 @@ def floor_level(
             if rows:
                 yield pd.DataFrame(rows, columns=["feat_id", "hist"])
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        hist = np.sum(np.stack(pdf["hist"].map(np.asarray)), axis=0)
-        cnt = int(hist.sum())
-        return pd.DataFrame(
-            {
-                "feat_id": [int(pdf["feat_id"].iloc[0])],
-                "ring_px": [cnt],
-                "floor_75": [percentile_from_hist(hist, 75.0)],
-            }
-        )
-
     parts = cand.mapInPandas(partials, schema=_FLOOR_PARTIAL_SCHEMA)
-    return parts.groupBy("feat_id").applyInPandas(
-        finalize, schema=_FLOOR_SCHEMA
+    hist = F.col("hist")
+    return parts.groupBy("feat_id").agg(
+        _merge_hists("hist").alias("hist")
+    ).select(
+        "feat_id", _hist_sum(hist).alias("ring_px"),
+        percentile_from_hist(hist, 75.0).alias("floor_75"),
     )
 
 
@@ -575,7 +611,6 @@ def zonal_stats(
     polygons: DataFrame,
     join_res: int = JOIN_RES,
     nodata: int = NODATA_DEFAULT,
-    broadcast_polygons: bool = True,
     expr: str | None = None,
     range_frac=None,
 ) -> DataFrame:
@@ -592,14 +627,12 @@ def zonal_stats(
     expr-space percentiles must apply the expression upstream of the
     tile encode instead.
 
-    ``broadcast_polygons=True`` (the default; polygon layers are the
-    small side in the reference's workloads) broadcast-hash-joins the
-    exploded polygon cells, so the IMAGE SIDE IS NEVER SHUFFLED OR
-    SORTED: candidate pairs stream out of the scan with all pairs of an
-    image contiguous (the explode+BHJ preserves row adjacency), and the
-    only shuffle in the whole job is the tiny partial-stats groupBy.
-    Set False for huge polygon layers -> shuffle equi-join + explicit
-    repartition by image.
+    The exploded polygon cells are broadcast-hash-joined (polygon
+    layers are the small side in the reference's workloads), so the
+    IMAGE SIDE IS NEVER SHUFFLED OR SORTED: candidate pairs stream out
+    of the scan with all pairs of an image contiguous (the explode+BHJ
+    preserves row adjacency), and the only shuffle in the whole job is
+    the tiny partial-stats groupBy.
     """
     img = images_cells.withColumn(
         "icell",
@@ -650,34 +683,14 @@ def zonal_stats(
            <= F.col("_ey2"))
         & (F.col("y_top") - half >= F.col("_ey1"))
     )
-    if broadcast_polygons:
-        cand = img.join(
-            F.broadcast(pcells),
-            (img["icell"] == pcells["pcell"]) & overlap,
-        )
-    else:
-        cand = img.join(
-            pcells, (img["icell"] == pcells["pcell"]) & overlap
-        )
-    cand = cand.select(
+    cand = img.join(
+        F.broadcast(pcells), (img["icell"] == pcells["pcell"]) & overlap
+    ).select(
         "image_id", "bytes", "fmt", "x0", "y_top", "w", "h",
         "feat_id", "geom_wkb",
     ).withColumn("nodata", F.lit(nodata))
 
-    if not broadcast_polygons:
-        # shuffle path: co-locate and order pairs per image so the
-        # streaming UDF still decodes each tile exactly once
-        n_parts = images_cells.sparkSession.sparkContext.defaultParallelism
-        cand = cand.repartition(n_parts, "image_id").sortWithinPartitions(
-            "image_id"
-        )
     partials = cand.mapInPandas(
         lambda it: _partials_stream(it, expr=expr), schema=_PARTIAL_SCHEMA
     )
-    return (
-        partials.groupBy("feat_id")
-        .applyInPandas(
-            lambda pdf: _finalize(pdf, range_frac=range_frac),
-            schema=_FINAL_SCHEMA,
-        )
-    )
+    return _finalize_stats(partials, range_frac=range_frac)

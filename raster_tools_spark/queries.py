@@ -310,7 +310,7 @@ def _zonal_stats_sql(
     pix_filter: str, expr_val: str, range_lo=None, range_hi=None
 ) -> str:
     """Shared zonal-stats SQL over the joined (feat_id, v) pixel set:
-    mirrors operators/zonal._finalize exactly, including the u8-
+    mirrors operators/zonal._finalize_stats exactly, including the u8-
     histogram percentile interpolation (np.percentile linear rule) and
     the raw-vs-expr value domains.  ``expr_val`` transforms v for
     mean/std/mn/mx; percentiles are always raw-domain."""

@@ -96,30 +96,34 @@ def _run_partials(batches, monkeypatch=None, max_feats=None):
     return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
 
-def _finalized(parts):
-    from raster_tools_spark.operators.zonal import _finalize
+def _finalized(spark, parts):
+    from raster_tools_spark.operators.zonal import (
+        _PARTIAL_SCHEMA, _finalize_stats,
+    )
 
     return (
-        pd.concat(
-            [_finalize(g) for _, g in parts.groupby("feat_id")],
-            ignore_index=True,
-        )
+        _finalize_stats(spark.createDataFrame(parts, _PARTIAL_SCHEMA))
+        .toPandas()
         .sort_values("feat_id")
         .reset_index(drop=True)
     )
 
 
-def test_partials_preagg_flush_merge_identical(monkeypatch):
+def test_partials_preagg_flush_merge_identical(spark, monkeypatch):
     """Forcing the bounded-accumulator flush after every feature must
     finalize to exactly the same per-feature stats as the unflushed
     single-yield path (the commutative-merge property the
     pre-aggregation relies on)."""
     pdf = _mk_candidates()
-    one = _finalized(_run_partials([pdf]))
-    flushed = _finalized(_run_partials([pdf], monkeypatch, max_feats=1))
+    one = _finalized(spark, _run_partials([pdf]))
+    flushed = _finalized(
+        spark, _run_partials([pdf], monkeypatch, max_feats=1)
+    )
     pd.testing.assert_frame_equal(one, flushed, check_exact=True)
     # split across batches (decode state carries over) is also identical
-    split = _finalized(_run_partials([pdf.iloc[:4], pdf.iloc[4:]]))
+    split = _finalized(
+        spark, _run_partials([pdf.iloc[:4], pdf.iloc[4:]])
+    )
     pd.testing.assert_frame_equal(one, split, check_exact=True)
     assert set(one["feat_id"]) == {0, 1, 2}
     assert (one["cnt"] > 0).all()

@@ -31,6 +31,12 @@ def qcat_polys_small(spark):
     return _zrect_polygons(spark, SF)
 
 
+def qcat_polys_rect(spark):
+    from raster_tools_spark.queries import _rect_polygons
+
+    return _rect_polygons(spark, SF)
+
+
 def main():
     from pyspark.sql import functions as F
 
@@ -108,6 +114,8 @@ def main():
                 "single shuffle (final agg only)",
                 lambda p: len(re.findall(r"[+:]- Exchange ", p)) == 1,
             ),
+            ("partials merged by JVM aggregates (no grouped-pandas "
+             "stage)", lambda p: "FlatMapGroupsInPandas" not in p),
         ],
     )
 
@@ -126,6 +134,8 @@ def main():
                 "single shuffle (final agg only)",
                 lambda p: len(re.findall(r"[+:]- Exchange ", p)) == 1,
             ),
+            ("histograms merged by JVM aggregates (no grouped-pandas "
+             "stage)", lambda p: "FlatMapGroupsInPandas" not in p),
         ],
     )
 
@@ -779,18 +789,37 @@ def main():
         ],
     )
 
-    # r6 optimization-round gates: single shared refine stage in the
-    # PIP join (the two phases union their candidates into ONE python
-    # runner) and no duplicated anchor evaluation in the zonal plan
+    # the PIP refine is a JVM ray-cast filter: no Python node reads the
+    # candidate pairs.  The one Python stage left is the polygon meta
+    # (one ArrowEvalPython over the polygon layer), which pip_join
+    # checkpoints, so the pip_rect plan reads it as an ExistingRDD scan;
+    # it is audited on the frame that checkpoint materializes.
+    from raster_tools_spark.operators import pip as op_pip
+
     audit(
-        "pip_single_refine",
+        "pip_jvm_refine",
         qcat["pip_rect"](spark, SF),
         [
-            ("exactly one MapInPandas refine stage for both phases",
-             lambda p: len(re.findall(r"\(\d+\) MapInPandas", p)) == 1),
+            ("no MapInPandas / BatchEvalPython / ArrowEvalPython: the "
+             "refine runs JVM-side",
+             lambda p: not re.search(
+                 r"MapInPandas|BatchEvalPython|ArrowEvalPython", p)),
             ("point proxy and polygon meta are checkpointed "
              "(ExistingRDD scans feed the joins)",
              lambda p: p.count("Scan ExistingRDD") >= 2),
+        ],
+    )
+    audit(
+        "pip_polygon_meta",
+        qcat_polys_rect(spark).withColumn(
+            "_pm", op_pip._poly_meta_udf(9, 64)(F.col("geom_wkb"))
+        ),
+        [
+            ("exactly one ArrowEvalPython (the polygon meta)",
+             lambda p: len(re.findall(r"\(\d+\) ArrowEvalPython", p))
+             == 1),
+            ("no other Python node",
+             lambda p: not re.search(r"MapInPandas|BatchEvalPython", p)),
         ],
     )
     audit(
