@@ -60,8 +60,7 @@ if workload == "pipeline":
     polys.cache().count()
 
     def run():
-        images = synth.images_df(spark, n_units, tiles_axis=tiles_axis,
-                                 partitions=64)
+        images = synth.images_df(spark, n_units, tiles_axis=tiles_axis)
         cells = op_tile.assign_cells(images, tiles_axis=tiles_axis)
         return op_zonal.zonal_stats(cells, polys).count()
 elif workload == "dedup":
@@ -93,8 +92,7 @@ elif workload == "enhance":
     from raster_tools_spark.functions import image_enhance
 
     def run():
-        images = synth.images_df(spark, n_units, tiles_axis=256,
-                                 partitions=64)
+        images = synth.images_df(spark, n_units, tiles_axis=256)
         return image_enhance.box_blur_stats(images, 2).count()
 elif workload == "graph":
     # round-5 graph leg: degree-ordered triangle counting over a

@@ -2,11 +2,13 @@
 
 Reference semantics (flow/flow_fil.py:77-184): a bottom-up pour-point
 raise -- depressions are lifted to the minimum height of their
-surrounding contour, iteratively, with the array border (and an
-optional water mask) acting as outlets, then the whole procedure runs
-over staged 100x100 blocks at offsets 0/25/50 so seams move between
-passes (stage 1 of fill_complex_depressions; the reference's stage 2
-whole-array pass is disabled in the reference itself).
+surrounding contour, iteratively, with the array border acting as
+the outlet (the reference's optional water-mask outlets,
+flow_fil.py:96-104, are not ported: no operator has a water mask),
+then the whole procedure runs over staged 100x100 blocks at offsets
+0/25/50 so seams move between passes (stage 1 of
+fill_complex_depressions; the reference's stage 2 whole-array pass is
+disabled in the reference itself).
 
 This implementation reaches the identical fixpoint by a different,
 published algorithm: PRIORITY-FLOOD (Barnes, Lehman & Mulla 2014,
@@ -25,7 +27,7 @@ independent iterative-relaxation oracle in test_fill.py).
 from __future__ import annotations
 
 import heapq
-from typing import Optional, Tuple
+from typing import Tuple
 
 import numpy as np
 
@@ -33,13 +35,10 @@ _NEIGH = ((-1, -1), (-1, 0), (-1, 1), (0, -1),
           (0, 1), (1, -1), (1, 0), (1, 1))
 
 
-def priority_flood_fill(
-    values: np.ndarray, mask: Optional[np.ndarray] = None
-) -> np.ndarray:
+def priority_flood_fill(values: np.ndarray) -> np.ndarray:
     """Fill all depressions of ``values`` IN-PLACE; returns values.
 
-    Outlets are the array border plus any True cells of ``mask``
-    (the reference's water mask, flow_fil.py:96-104).  8-connected.
+    The array border is the outlet.  8-connected.
     """
     h, w = values.shape
     if h == 0 or w == 0:
@@ -51,9 +50,6 @@ def priority_flood_fill(
         closed[i, j] = True
         heapq.heappush(heap, (lvl, i, j))
 
-    if mask is not None:
-        for i, j in zip(*np.nonzero(mask)):
-            push(int(i), int(j), float(values[i, j]))
     for j in range(w):
         if not closed[0, j]:
             push(0, j, float(values[0, j]))
@@ -95,7 +91,6 @@ def block_grid(extent_px: Tuple[int, int, int, int], step: int,
 
 def fill_depressions_staged(
     values: np.ndarray,
-    mask: Optional[np.ndarray] = None,
     step: int = 100,
     offsets=(0, 25, 50),
 ) -> np.ndarray:
@@ -109,7 +104,5 @@ def fill_depressions_staged(
     for offset in offsets:
         for y, x in block_grid((0, 0, h, w), step, offset):
             win = np.s_[y:y + step, x:x + step]
-            priority_flood_fill(
-                values[win], None if mask is None else mask[win]
-            )
+            priority_flood_fill(values[win])
     return values

@@ -63,7 +63,6 @@ def _positions(keys: np.ndarray, n_hashes: int, m_bits: int) -> np.ndarray:
 def build_bloom(
     keys_df: DataFrame,
     key_col: str,
-    n_keys: int | None = None,
     bits_per_key: int = 16,
     n_hashes: int = 7,
 ):
@@ -75,9 +74,7 @@ def build_bloom(
     single ``bit_or`` aggregation merges word-wise, and only m/64
     (idx, word) rows reach the driver -- the key set itself never
     does."""
-    if n_keys is None:
-        n_keys = keys_df.count()
-    n = max(1, n_keys)
+    n = max(1, keys_df.count())
     m_bits = 1 << max(6, int(np.ceil(np.log2(bits_per_key * n))))
     n_words = m_bits // 64
 

@@ -20,7 +20,7 @@ shingles otherwise create O(n^2) candidate blowup at corpus scale).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_SHINGLE = 3

@@ -29,7 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import WORLD_TOP
 from ..operators import knn as op_knn
 from ..operators.tile import cell_col
 
@@ -176,7 +175,6 @@ def linear_grid_tiles(
     points: DataFrame,
     res: int = 10,
     halo: float = 32.0,
-    nearest_fallback: bool = False,
 ) -> DataFrame:
     """Distributed linear gridding of a scattered point cloud to
     canonical f4 tiles (reference zvp2tif.py:55-80: griddata linear
@@ -191,17 +189,13 @@ def linear_grid_tiles(
     3 orders of magnitude of slack; sparse clouds need a larger halo
     or the per-feature path (linear_grid_features).
 
-    Pixels outside the LOCAL hull are nodata (zvp2tif's fill_value) or,
-    with ``nearest_fallback``, the nearest local point's value (the
-    roof.py combo).
+    Pixels outside the LOCAL hull are nodata (zvp2tif's fill_value).
     """
     import numpy as np
 
     from .. import codecs
     from ..grid import CELL_SIZE, cell_bounds, cell_edge, covering_cells
-    from .triangulate import (
-        dedup_points, griddata_linear_nearest, interp_linear,
-    )
+    from .triangulate import dedup_points, interp_linear
 
     nodata = float(np.finfo("f4").min)
 
@@ -233,11 +227,8 @@ def linear_grid_tiles(
         gj, gi = np.meshgrid(np.arange(tile_px), np.arange(tile_px))
         cx = x1 + (gj.ravel() + 0.5) * CELL_SIZE
         cy = y2 - (gi.ravel() + 0.5) * CELL_SIZE
-        if nearest_fallback:
-            vals = griddata_linear_nearest(pts, z, cx, cy)
-        else:
-            dpts, dz = dedup_points(pts, z)
-            vals = interp_linear(dpts, dz, cx, cy)
+        dpts, dz = dedup_points(pts, z)
+        vals = interp_linear(dpts, dz, cx, cy)
         arr = vals.reshape(tile_px, tile_px)
         arr = np.where(np.isnan(arr), nodata, arr).astype(np.float32)
         if (arr == np.float32(nodata)).all():

@@ -96,9 +96,9 @@ def cosine_topk(
     id_c: str = "vec_id",
     vec_q: str = "embedding",
     vec_c: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector, the query
+    itself excluded.
 
     Returns (qid, cid, sim, rn) with sim rounded to 6 dp and
     deterministic tie-break on cid.
@@ -114,9 +114,7 @@ def cosine_topk(
     c = _spread(candidates, id_c).select(
         F.col(id_c).alias("cid"), F.col(vec_c).alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
-    pairs = q.crossJoin(c)
-    if exclude_self:
-        pairs = pairs.filter(F.col("qid") != F.col("cid"))
+    pairs = q.crossJoin(c).filter(F.col("qid") != F.col("cid"))
     # floor-scale, not round(): engines disagree on decimal-tie
     # rounding of doubles, floor of the identical quotient cannot
     scored = pairs.withColumn(
@@ -138,30 +136,23 @@ def cosine_topk(
     )
 
 
-def _ensure_sized(vectors: DataFrame, n_rows: int | None):
-    """Sizing count without a second source scan: when the caller
-    does not pass ``n_rows``, materialize the input once via an eager
-    localCheckpoint so the count and the downstream pipeline share
-    one materialization (otherwise a 100-TB corpus is scanned twice
-    -- once by the eager count hidden in plan construction, once at
-    execution).  localCheckpoint rather than persist: the blocks are
-    released by the ContextCleaner when the DataFrame goes out of
-    scope, instead of pinning executor storage for the application
-    lifetime.  Large-scale callers should pass ``n_rows`` (e.g. from
-    table stats) and skip the materialization entirely.
+def _ensure_sized(vectors: DataFrame):
+    """Sizing count without a second source scan: materialize the
+    input once via an eager localCheckpoint so the count and the
+    downstream pipeline share one materialization (otherwise a 100-TB
+    corpus is scanned twice -- once by the eager count hidden in plan
+    construction, once at execution).  localCheckpoint rather than
+    persist: the blocks are released by the ContextCleaner when the
+    DataFrame goes out of scope, instead of pinning executor storage
+    for the application lifetime.
 
     Reliability trade-off: localCheckpoint stores NON-replicated
     blocks and truncates lineage, so losing any executor after the
-    checkpoint fails the job unrecoverably -- acceptable in this
-    single-JVM sandbox, but on a 1000-executor cluster where
-    executor loss is routine, pass ``n_rows`` (preferred -- no
-    materialization at all) or swap in persist()+unpersist(), which
-    keeps the lineage recomputable at the cost of a second scan on
-    block loss.  The eager trigger also runs the upstream plan at
+    checkpoint fails the job unrecoverably; persist()+unpersist()
+    would keep the lineage recomputable at the cost of a second scan
+    on block loss.  The eager trigger also runs the upstream plan at
     query-CONSTRUCTION time, which surprises callers building plans
     lazily."""
-    if n_rows is not None:
-        return vectors, n_rows
     vectors = vectors.localCheckpoint(eager=True)
     return vectors, vectors.count()
 
@@ -234,28 +225,23 @@ def lsh_band_sigs_udf(n_planes: int, dim: int, n_bands: int):
 def lsh_topk(
     vectors: DataFrame,
     k: int = 5,
-    n_planes: int | None = None,
     dim: int = 64,
     n_bands: int = 2,
-    n_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN: exact cosine within each random-hyperplane bucket.
 
-    ``n_planes=None`` (the default) derives the plane count from the
-    corpus size so expected bucket occupancy stays bounded
-    (derive_n_planes) -- a fixed plane count makes the within-bucket
-    join quadratic at large n.  ``n_bands`` independent plane sets are
-    probed and their candidates unioned (minhash-style banding) to
-    recover recall lost to the larger plane count.  Pass ``n_rows``
-    to skip the sizing count when the caller already knows it.  The
-    join is an equi-join on (band, signature) -- the shape that scales
-    (shuffle by bucket, no cross join).
+    The plane count is derived from the corpus size so expected
+    bucket occupancy stays bounded (derive_n_planes) -- a fixed plane
+    count makes the within-bucket join quadratic at large n.
+    ``n_bands`` independent plane sets are probed and their candidates
+    unioned (minhash-style banding) to recover recall lost to the
+    larger plane count.  The join is an equi-join on (band, signature)
+    -- the shape that scales (shuffle by bucket, no cross join).
     """
-    if n_planes is None:
-        vectors, n = _ensure_sized(vectors, n_rows)
-        n_planes = derive_n_planes(n)
+    vectors, n = _ensure_sized(vectors)
+    n_planes = derive_n_planes(n)
     sigs = lsh_band_sigs_udf(n_planes, dim, n_bands)
     v = vectors.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
@@ -443,7 +429,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int | None = None,
     nprobe: int = 2,
-    n_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_closure_centroids: int = MAX_CLOSURE_CENTROIDS,
@@ -455,8 +440,7 @@ def ivf_topk(
     equi-join on the cluster id -- the IVF shape that scales (shuffle
     by list, never all-pairs); recall < 1 by construction, raise
     ``nprobe`` to trade cost for recall.  ``n_centroids=None`` derives
-    sqrt(n) lists (derive_n_centroids); pass ``n_rows`` to skip the
-    sizing count.
+    sqrt(n) lists (derive_n_centroids) from a sizing count.
 
     Beyond ``max_closure_centroids`` lists the quantizer goes TWO-
     LEVEL (see _two_level_lists_and_probes): the closure shipped to
@@ -464,7 +448,7 @@ def ivf_topk(
     broadcast DataFrame -- the single-level path would close ~GB of
     centroids into every task at 10^9+ vectors."""
     if n_centroids is None:
-        vectors, n = _ensure_sized(vectors, n_rows)
+        vectors, n = _ensure_sized(vectors)
         n_centroids = derive_n_centroids(n)
 
     v = vectors.select(
@@ -554,18 +538,15 @@ def ivf_topk(
 def embedding_near_dup(
     vectors: DataFrame,
     threshold: float = 0.95,
-    n_planes: int | None = None,
     dim: int = 64,
     n_bands: int = 2,
-    n_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH buckets
     (corpus-scaled plane count, same shape as lsh_topk)."""
-    if n_planes is None:
-        vectors, n = _ensure_sized(vectors, n_rows)
-        n_planes = derive_n_planes(n)
+    vectors, n = _ensure_sized(vectors)
+    n_planes = derive_n_planes(n)
     sigs = lsh_band_sigs_udf(n_planes, dim, n_bands)
     v = vectors.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")

@@ -18,48 +18,8 @@ exactness).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _bounded_partial_bottom_k(hashed: DataFrame, k: int) -> DataFrame:
-    """Per-partition bottom-k partials with memory bounded by
-    O(keys_in_partition x k), NOT by partition rows: a stateful
-    mapInPandas pass folds each Arrow batch into a <= k sorted
-    distinct array per key, so a skewed fat key costs k doubles of
-    state instead of materializing its full in-partition value list
-    (the collect_list partial's failure mode).  Emits (key, hs) with
-    len(hs) <= k -- identical contract to the collect_list partial,
-    so the merge stage and the sketch estimate are bit-identical."""
-    key_field = hashed.schema["key"]
-
-    def partials(batches):
-        state: dict = {}
-        for pdf in batches:
-            for key, grp in pdf.groupby("key", sort=False)["h"]:
-                vals = grp.values
-                prev = state.get(key)
-                if prev is not None:
-                    vals = np.concatenate([prev, vals])
-                state[key] = np.unique(vals)[:k]  # sorted distinct
-        if state:
-            yield pd.DataFrame(
-                {
-                    "key": list(state.keys()),
-                    "hs": [v.tolist() for v in state.values()],
-                }
-            )
-
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [key_field, T.StructField(
-            "hs", T.ArrayType(T.DoubleType()), False
-        )]
-    )
-    return hashed.mapInPandas(partials, schema=schema)
 
 
 def kmv_distinct(
@@ -67,22 +27,13 @@ def kmv_distinct(
     key_col: str,
     val_col: str,
     k: int = 64,
-    bounded_partials: bool = False,
 ) -> DataFrame:
     """Per-``key_col`` distinct-count estimate of ``val_col`` via a
     k-minimum-values sketch.  Returns (key, n_kept, estimate) where
     estimate is floor-scaled to 6 dp; n_kept < k certifies the exact
     branch.  The hash fraction is the first 15 hex chars of
     md5(value) over 16^15 -- exactly reproducible in any engine with
-    md5.
-
-    ``bounded_partials=True`` swaps the JVM collect_list partial
-    (buffers a key's full in-partition value list before the
-    bottom-k slice -- memory proportional to partition rows under
-    skew) for an incremental Arrow-batched fold whose state is
-    bounded by k per key.  Same bits out either way; the bounded
-    path is the one to use when a single key can dominate a fat
-    partition."""
+    md5."""
     h = F.conv(
         F.substring(F.md5(F.col(val_col).cast("string")), 1, 15),
         16, 10,
@@ -102,17 +53,14 @@ def kmv_distinct(
     # per-key global sort, no full distinct set ever materializes
     # (a window row_number over the key would sort EVERY distinct
     # hash of the key; this shape is what scales to 10^12 rows)
-    if bounded_partials:
-        part = _bounded_partial_bottom_k(hashed, k)
-    else:
-        part = hashed.groupBy(
-            "key", F.spark_partition_id().alias("_p")
-        ).agg(
-            F.slice(
-                F.array_sort(F.array_distinct(F.collect_list("h"))),
-                1, k,
-            ).alias("hs")
-        )
+    part = hashed.groupBy(
+        "key", F.spark_partition_id().alias("_p")
+    ).agg(
+        F.slice(
+            F.array_sort(F.array_distinct(F.collect_list("h"))),
+            1, k,
+        ).alias("hs")
+    )
     merged = (
         part.select("key", F.explode("hs").alias("h"))
         .groupBy("key")

@@ -45,17 +45,14 @@ def asof_join(
     key_col: str,
     ts_col: str,
     value_cols: Sequence[str],
-    inclusive: bool = True,
 ) -> DataFrame:
     """AS-OF join: every ``left`` row gains the ``value_cols`` of the
     latest ``right`` row with the same ``key_col`` and
-    ``right.ts <= left.ts`` (``<`` when ``inclusive=False``); NULL
-    when no right row precedes it.  ``right`` must be unique per
-    (key, ts) -- pre-aggregate otherwise.
+    ``right.ts <= left.ts``; NULL when no right row precedes it.
+    ``right`` must be unique per (key, ts) -- pre-aggregate otherwise.
 
     Single shuffle by key; at equal timestamps the right row sorts
-    first (inclusive) or last (exclusive) via the tag column, so the
-    window needs no range frame.
+    first via the tag column, so the window needs no range frame.
 
     Skew note: each key's rows sort within one task (Spark windows
     spill to disk, so a hot key is slow, not fatal).  At 100-TB scale
@@ -68,7 +65,6 @@ def asof_join(
     comes from the same (latest preceding) right row -- standard
     as-of semantics even with NULLs in ``value_cols``."""
     _assert_asof_columns(left, right, value_cols)
-    tag_right = 0 if inclusive else 2
     # one struct holds ALL value cols: last(ignorenulls) then picks
     # the single latest preceding right ROW, not the latest non-null
     # value per column (which could mix rows / skip legit NULLs)
@@ -80,7 +76,7 @@ def asof_join(
     r = right.select(
         F.col(key_col),
         F.col(ts_col),
-        F.lit(tag_right).alias("_tag"),
+        F.lit(0).alias("_tag"),
         right_struct.alias("_v"),
     )
     for c in left.columns:
@@ -109,7 +105,6 @@ def asof_join_bucketed(
     ts_col: str,
     value_cols: Sequence[str],
     n_buckets: int = 32,
-    inclusive: bool = True,
 ) -> DataFrame:
     """Carried-state AS-OF join for LOW-CARDINALITY key sets: same
     semantics as :func:`asof_join`, but each key's timeline is split
@@ -126,7 +121,6 @@ def asof_join_bucketed(
     always share a bucket (bucketing is by value), so the inclusive
     tag trick is unchanged."""
     _assert_asof_columns(left, right, value_cols)
-    tag_right = 0 if inclusive else 2
     right_struct = F.struct(*[F.col(c) for c in value_cols])
     struct_type = right.select(
         right_struct.alias("_v")
@@ -164,7 +158,7 @@ def asof_join_bucketed(
     r = right.select(
         F.col(key_col),
         F.col(ts_col),
-        F.lit(tag_right).alias("_tag"),
+        F.lit(0).alias("_tag"),
         right_struct.alias("_v"),
     ).withColumn("_bkt", bkt)
     for c in left.columns:

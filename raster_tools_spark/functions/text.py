@@ -321,14 +321,10 @@ TARGET_DOCS_PER_SHARD = 1_000_000
 MIN_SHARDS = 8
 
 
-def derive_n_shards(
-    n_docs: int,
-    target_docs_per_shard: int = TARGET_DOCS_PER_SHARD,
-    min_shards: int = MIN_SHARDS,
-) -> int:
+def derive_n_shards(n_docs: int) -> int:
     """Corpus-scaled shard count for the sequential packing walk:
     enough shards that the EXPECTED shard holds <=
-    ``target_docs_per_shard`` documents, so each ``applyInPandas``
+    ``TARGET_DOCS_PER_SHARD`` documents, so each ``applyInPandas``
     group stays executor-memory-sized and the per-shard serial Python
     walk stays bounded (a fixed shard count puts n/const rows in one
     group -- OOM at 10^12 docs).  Mirrors similarity.derive_n_planes;
@@ -337,15 +333,13 @@ def derive_n_shards(
     check."""
     import math
 
-    if n_docs <= target_docs_per_shard * min_shards:
-        return min_shards
-    return max(min_shards, math.ceil(n_docs / target_docs_per_shard))
+    if n_docs <= TARGET_DOCS_PER_SHARD * MIN_SHARDS:
+        return MIN_SHARDS
+    return max(MIN_SHARDS, math.ceil(n_docs / TARGET_DOCS_PER_SHARD))
 
 
 def pack_sequences(
-    docs, budget: int, n_shards: int | None = None,
-    n_rows: int | None = None,
-    id_col: str = "doc_id", text_col: str = "text",
+    docs, budget: int, id_col: str = "doc_id", text_col: str = "text",
 ):
     """Greedy sequential sequence packing (the pre-training batching
     op): walk each shard's documents in id order, filling packs of at
@@ -353,24 +347,19 @@ def pack_sequences(
     starts the next pack (oversized documents get a pack of their
     own).  Sharding makes the inherently-sequential walk parallel --
     the order-sensitive state never crosses a shard, so the operator
-    scales with the corpus: ``n_shards=None`` (the default) derives
-    the shard count from the corpus size (``derive_n_shards``, target
-    ~1e6 docs/shard).  Pass ``n_rows`` to skip the sizing count when
-    the caller already knows it (large-scale callers should).
+    scales with the corpus: the shard count is derived from the corpus
+    size (``derive_n_shards``, target ~1e6 docs/shard).
     Returns (doc_id, shard, n_tokens, pack_id); oracle = per-shard
     recursive CTE with the shard formula mirrored in SQL."""
     from pyspark.sql import functions as F
 
-    if n_shards is None:
-        if n_rows is None:
-            # eager localCheckpoint before the sizing count: the
-            # corpus is materialized once, not scanned twice (count +
-            # pack), and the blocks are ContextCleaner-released when
-            # the DataFrame is garbage-collected (persist would pin
-            # them for the application lifetime)
-            docs = docs.localCheckpoint(eager=True)
-            n_rows = docs.count()
-        n_shards = derive_n_shards(n_rows)
+    # eager localCheckpoint before the sizing count: the corpus is
+    # materialized once, not scanned twice (count + pack), and the
+    # blocks are ContextCleaner-released when the DataFrame is
+    # garbage-collected (persist would pin them for the application
+    # lifetime)
+    docs = docs.localCheckpoint(eager=True)
+    n_shards = derive_n_shards(docs.count())
 
     d = docs.select(
         F.col(id_col).alias("doc_id"),

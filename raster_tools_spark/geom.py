@@ -20,7 +20,7 @@ from typing import List, Sequence
 import numpy as np
 
 from . import wkb as _wkb
-from .grid import GeoTransform, CELL_SIZE
+from .grid import GeoTransform
 
 
 def _rings_of(wkb_bytes: bytes) -> List[np.ndarray]:

@@ -19,8 +19,8 @@ Reference semantics ported bit-exactly:
 - ``GeoTransform.shifted``        <- utils.py:82-92
 - ``GeoTransform.scaled``         <- utils.py:94-101
 - ``GeoTransform.get_coordinates``<- utils.py:103-112
-- ``GeoTransform.get_indices``    <- utils.py:114-144 (round vs floor/ceil
-  "inflate" mode, zero-dim guards at 138-143; Python 3 banker's rounding)
+- ``GeoTransform.get_indices``    <- utils.py:114-144, round mode (Python 3
+  banker's rounding); the floor/ceil "inflate" mode has no caller here
 - ``GeoTransform.get_slices`` / ``get_window`` <- utils.py:146-162
 """
 
@@ -82,14 +82,14 @@ class GeoTransform(tuple):
     ``(i, j)`` (row, col).  Port of raster_tools/utils.py:81-162.
     """
 
-    def shifted(self, envelope, inflate=False) -> "GeoTransform":
+    def shifted(self, envelope) -> "GeoTransform":
         """Re-anchor origin to the envelope's top-left grid point.
 
         utils.py:82-92.  ``envelope`` is ``(x1, x2, y1, y2)`` as returned
         by OGR ``GetEnvelope`` (minx, maxx, miny, maxy).
         """
         values = list(self)
-        index = self.get_indices(envelope, inflate=inflate)[1::-1]
+        index = self.get_indices(envelope)[1::-1]
         values[0], values[3] = self.get_coordinates(index)
         return self.__class__(values)
 
@@ -104,31 +104,21 @@ class GeoTransform(tuple):
         i, j = indices
         return p + a * j + b * i, q + c * j + d * i
 
-    def get_indices(self, envelope, inflate=False):
+    def get_indices(self, envelope):
         """Envelope -> integer pixel window ``(X1, Y1, X2, Y2)``.
 
-        utils.py:114-144.  ``inflate=False`` uses Python 3 ``round``
-        (banker's rounding) on both corners; ``inflate=True`` uses
-        floor/ceil so the whole envelope is covered, with the zero-dim
-        guards of utils.py:138-143.
+        utils.py:114-144 in its round mode: Python 3 ``round``
+        (banker's rounding) on both corners.
         """
         x1, x2, y1, y2 = envelope
 
         p, a, b, q, c, d = self
         e, f, g, h = get_inverse(a, b, c, d)
 
-        f_lo, f_hi = (math.floor, math.ceil) if inflate else (round, round)
-
-        X1 = int(f_lo(e * (x1 - p) + f * (y2 - q)))
-        Y1 = int(f_lo(g * (x1 - p) + h * (y2 - q)))
-        X2 = int(f_hi(e * (x2 - p) + f * (y1 - q)))
-        Y2 = int(f_hi(g * (x2 - p) + h * (y1 - q)))
-
-        if inflate:
-            if X1 == X2:
-                X2 += 1
-            if Y1 == Y2:
-                Y1 -= 1
+        X1 = int(round(e * (x1 - p) + f * (y2 - q)))
+        Y1 = int(round(g * (x1 - p) + h * (y2 - q)))
+        X2 = int(round(e * (x2 - p) + f * (y1 - q)))
+        Y2 = int(round(g * (x2 - p) + h * (y1 - q)))
 
         return X1, Y1, X2, Y2
 
@@ -202,41 +192,38 @@ def cell_bounds(cell_id):
     return x1, x1 + edge, y2 - edge, y2
 
 
-def covering_cells(envelope, res, pad=0.0, closed_bottom=True):
-    """All cell ids at ``res`` whose square intersects ``envelope``.
-
-    The bbox-prejoin key generator: the Spark-side analog of the
-    reference's envelope ``&&`` prefilter (rasterize2.py:151-158,
-    datasources.py:28-33).  Half-open convention: a cell covers
-    ``[x1, x2) x (y1, y2]`` so an envelope touching only a shared edge
-    does not pull in the neighbor (pad to widen).
-
-    ``closed_bottom=True`` (the default, for POLYGON join keys) keeps
-    the cell row containing an exactly grid-aligned bottom edge: the
-    PIP convention (geom.py) counts ``y == ymin`` as inside, so a point
-    on that edge lives in the row BELOW the half-open cover and must
-    still find the polygon in the cell-key equi-join.  Pass False for
-    raster-pixel covers (pixel centers are strictly interior, the extra
-    row would only add empty candidate pairs).
-    """
+def _cover_range(envelope, res, pad):
+    """Index ranges ``(jx1, jx2, jy1, jy2)``, half-open and clamped to
+    the world, of the cells at ``res`` that cover ``envelope`` widened
+    by ``pad``: the one place that knows the cover convention."""
     x1, x2, y1, y2 = envelope
     x1, x2, y1, y2 = x1 - pad, x2 + pad, y1 - pad, y2 + pad
     edge = cell_edge(res)
     jx1 = int(math.floor(x1 / edge))
-    jx2 = int(math.ceil(x2 / edge))
+    jx2 = max(int(math.ceil(x2 / edge)), jx1 + 1)
     jy1 = int(math.floor((WORLD_TOP - y2) / edge))
-    if closed_bottom:
-        jy2 = int(math.floor((WORLD_TOP - y1) / edge)) + 1
-    else:
-        jy2 = int(math.ceil((WORLD_TOP - y1) / edge))
-    jx2 = max(jx2, jx1 + 1)
-    jy2 = max(jy2, jy1 + 1)
+    jy2 = max(int(math.floor((WORLD_TOP - y1) / edge)) + 1, jy1 + 1)
     # clamp to the world: negative indices would smear into the res/ix
     # bit fields of pack_cell and collapse distinct out-of-world
     # regions onto one garbage id
     n_axis = 1 << (res + 2)  # WORLD_SIZE / cell_edge(res)
-    jx1, jx2 = max(jx1, 0), min(jx2, n_axis)
-    jy1, jy2 = max(jy1, 0), min(jy2, n_axis)
+    return max(jx1, 0), min(jx2, n_axis), max(jy1, 0), min(jy2, n_axis)
+
+
+def covering_cells(envelope, res, pad=0.0):
+    """All cell ids at ``res`` whose square intersects ``envelope``.
+
+    The bbox-prejoin key generator: the Spark-side analog of the
+    reference's envelope ``&&`` prefilter (rasterize2.py:151-158,
+    datasources.py:28-33).  An envelope whose left, right or top edge
+    only touches a shared cell edge does not pull in that neighbor
+    (pad to widen).  The bottom edge is closed: the row containing an
+    exactly grid-aligned bottom edge is kept, because the PIP
+    convention (geom.py) counts ``y == ymin`` as inside, so a point on
+    that edge lives in the row BELOW and must still find the polygon
+    in the cell-key equi-join.  Cells outside the world are dropped.
+    """
+    jx1, jx2, jy1, jy2 = _cover_range(envelope, res, pad)
     out = []
     for iy in range(jy1, jy2):
         for ix in range(jx1, jx2):
@@ -245,17 +232,9 @@ def covering_cells(envelope, res, pad=0.0, closed_bottom=True):
 
 
 def n_covering(envelope, res, pad=0.0):
-    """Count of covering cells without materializing them."""
-    x1, x2, y1, y2 = envelope
-    x1, x2, y1, y2 = x1 - pad, x2 + pad, y1 - pad, y2 + pad
-    edge = cell_edge(res)
-    nx = max(int(math.ceil(x2 / edge)) - int(math.floor(x1 / edge)), 1)
-    ny = max(
-        int(math.ceil((WORLD_TOP - y1) / edge))
-        - int(math.floor((WORLD_TOP - y2) / edge)),
-        1,
-    )
-    return nx * ny
+    """Count of :func:`covering_cells` without materializing them."""
+    jx1, jx2, jy1, jy2 = _cover_range(envelope, res, pad)
+    return max(jx2 - jx1, 0) * max(jy2 - jy1, 0)
 
 
 def ring_cells(cell_id, k=1):

@@ -23,10 +23,8 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
-from typing import Callable, Iterator
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, wkb as _wkb
-from ..fill import block_grid, priority_flood_fill
+from ..fill import priority_flood_fill
 from ..flow import flow_targets
 from ..flow_vec import CLASSES, vectorize_streams
 from ..grid import (CELL_SIZE, cell_bounds, cell_edge, pack_cell,

@@ -27,16 +27,14 @@ Kernels ported bit-exactly:
 from __future__ import annotations
 
 import math
-import struct
 from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import codecs
-from ..grid import RES_TILE, pack_cell, unpack_cell
+from ..grid import pack_cell, unpack_cell
 
 HALO_PART_SCHEMA = (
     "target long, src_dy int, src_dx int, payload binary, "

@@ -28,7 +28,7 @@ the accepted kth, so ties force one more ring expansion.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
 import numpy as np
 import pandas as pd
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..grid import cell_edge, pack_cell, ring_cells, unpack_cell
+from ..grid import cell_edge, ring_cells
 
 
 def _ring_range_udf(lo: int, hi: int):

@@ -231,10 +231,9 @@ def line_carpet_profile(
     carpet_step: float = CELL_SIZE,
     res: int = RES_TILE,
     nodata: int = 255,
-    find_max: bool = True,
 ) -> DataFrame:
     """Carpet drape (line_up.py --distance mode): per on-line sample,
-    the extremum of the raster over the perpendicular carpet row;
+    the maximum of the raster over the perpendicular carpet row;
     nodata carpet points are ignored, rows whose whole carpet is
     nodata (or off-coverage) are dropped.  Returns
     (line_id, seq, cx, cy, value)."""
@@ -295,27 +294,24 @@ def line_carpet_profile(
             ),
         )
     )
-    agg = F.max("value") if find_max else F.min("value")
     return (
         vals.filter(F.col("value") != nodata)
         .groupBy("line_id", "seq")
         .agg(
             F.min("cx").alias("cx"),
             F.min("cy").alias("cy"),
-            agg.alias("value"),
+            F.max("value").alias("value"),
         )
     )
 
 
-def line_extremum(profile: DataFrame, find_max: bool = True) -> DataFrame:
-    """Per-line extremum sample with its position -- the reference's
-    rank-along-line (line_up.py:169-188) as a Window row_number."""
-    order = (
-        [F.col("value").desc(), F.col("seq").asc()]
-        if find_max
-        else [F.col("value").asc(), F.col("seq").asc()]
+def line_extremum(profile: DataFrame) -> DataFrame:
+    """Per-line maximum sample (first along the line on ties) with its
+    position -- the reference's rank-along-line (line_up.py:169-188)
+    as a Window row_number."""
+    w = Window.partitionBy("line_id").orderBy(
+        F.col("value").desc(), F.col("seq").asc()
     )
-    w = Window.partitionBy("line_id").orderBy(*order)
     return (
         profile.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)

@@ -23,8 +23,6 @@ to 4 (straddling tiles), then all pixel work is map-side numpy.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -178,7 +176,7 @@ def retile_job(
     completed unit is a manifest row; replay is idempotent
     (manifest.run_with_manifest)."""
     from .. import manifest as mf
-    from .tile import cell_col, parent_cell_col
+    from .tile import parent_cell_col
 
     shift = (res - work_res) * 1  # res levels between tile and unit
 

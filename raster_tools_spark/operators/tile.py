@@ -124,15 +124,14 @@ def quad_rollup(
     cell_col_name: str,
     value_col: str,
     levels: int = 1,
-    agg: str = "mean",
 ) -> DataFrame:
-    """Iterated parent-cell aggregation -- the reference's quad-tree
+    """Iterated parent-cell mean -- the reference's quad-tree
     downsample (utils.py:38-51, driver aggregate.py:91,107-112) as a
     hierarchy of partial-aggregating groupBys.
 
-    ``agg`` in {mean, min, max, sum}; mean-of-means matches the
-    reference's masked 2x2 mean when weights are carried, so we carry
-    (sum, count) through the levels and finalize mean = sum/count.
+    Mean-of-means matches the reference's masked 2x2 mean when weights
+    are carried, so we carry (sum, count) through the levels and
+    finalize mean = sum/count.
     """
     # decimal-backed sum: exact and order-independent, so results are
     # bit-identical regardless of partitioning (north rule) and match
@@ -143,28 +142,15 @@ def quad_rollup(
     ).groupBy("cell").agg(
         F.sum(F.col("v").cast("decimal(30,6)")).alias("s"),
         F.count("v").alias("n"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
     )
     for _ in range(levels):
         out = (
             out.withColumn("cell", parent_cell_col(F.col("cell")))
             .groupBy("cell")
-            .agg(
-                F.sum("s").alias("s"),
-                F.sum("n").alias("n"),
-                F.min("mn").alias("mn"),
-                F.max("mx").alias("mx"),
-            )
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         )
-    if agg == "mean":
-        val = F.col("s").cast("double") / F.col("n")
-    elif agg == "sum":
-        val = F.col("s").cast("double")
-    elif agg == "min":
-        val = F.col("mn")
-    elif agg == "max":
-        val = F.col("mx")
-    else:
-        raise ValueError(agg)
-    return out.select("cell", val.alias("value"), F.col("n").alias("n_px"))
+    return out.select(
+        "cell",
+        (F.col("s").cast("double") / F.col("n")).alias("value"),
+        F.col("n").alias("n_px"),
+    )

@@ -117,6 +117,17 @@ def _diamond_of(n: int) -> bytes:
     )
 
 
+def _drape_line_of(n: int) -> bytes:
+    """A 96 m horizontal line inside linear image n's anchor tile
+    (synth.linear_anchor), the line layer of line_carpet and
+    line_drape."""
+    tx = (n * 7) % 16
+    ty = (n * 13) % 16
+    x1 = tx * 128.0 + 1.25
+    y = WORLD_TOP - ty * 128.0 - 5.25
+    return wkb.linestring_wkb([(x1, y), (x1 + 96.0, y)])
+
+
 def _rect_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _nation_layer(spark, sf_dir, _box_of(_rect_params))
 
@@ -1595,22 +1606,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = synth.linear_images_df(spark, 150, tiles_axis=16)
         tiles = op_retile.retile(images)
 
-        @F.pandas_udf("binary")
-        def mk_line(nk: pd.Series) -> pd.Series:
-            def build(n: int) -> bytes:
-                tx = (n * 7) % 16
-                ty = (n * 13) % 16
-                x1 = tx * 128.0 + 1.25
-                y = WORLD_TOP - ty * 128.0 - 5.25
-                return wkb.linestring_wkb([(x1, y), (x1 + 96.0, y)])
-
-            return nk.map(lambda n: build(int(n)))
-
-        lines_df = (
-            _t(spark, sf_dir, "nation")
-            .select(F.col("n_nationkey").cast("long").alias("line_id"))
-            .withColumn("geom_wkb", mk_line(F.col("line_id")))
-        )
+        lines_df = _nation_layer(
+            spark, sf_dir, _drape_line_of
+        ).withColumnRenamed("feat_id", "line_id")
         return op_lines.line_carpet_profile(
             lines_df, tiles, step=2.0, distance=1.0, carpet_step=0.5
         )
@@ -1793,22 +1791,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = synth.linear_images_df(spark, 150, tiles_axis=16)
         tiles = op_retile.retile(images)
 
-        @F.pandas_udf("binary")
-        def mk_line(nk: pd.Series) -> pd.Series:
-            def build(n: int) -> bytes:
-                tx = (n * 7) % 16
-                ty = (n * 13) % 16
-                x1 = tx * 128.0 + 1.25
-                y = WORLD_TOP - ty * 128.0 - 5.25
-                return wkb.linestring_wkb([(x1, y), (x1 + 96.0, y)])
-
-            return nk.map(lambda n: build(int(n)))
-
-        lines_df = (
-            _t(spark, sf_dir, "nation")
-            .select(F.col("n_nationkey").cast("long").alias("line_id"))
-            .withColumn("geom_wkb", mk_line(F.col("line_id")))
-        )
+        lines_df = _nation_layer(
+            spark, sf_dir, _drape_line_of
+        ).withColumnRenamed("feat_id", "line_id")
         prof = op_lines.line_profile(lines_df, tiles, step=2.0)
         return op_lines.line_extremum(prof)
 

@@ -18,7 +18,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "raster-tools-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # one BLAS thread per Python worker: N workers each spawning
@@ -39,7 +38,7 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     n_threads = cpus if master == "local[*]" else _threads_of(master, cpus)
-    shuffle_partitions = shuffle_partitions or max(n_threads, 8)
+    shuffle_partitions = max(n_threads, 8)
 
     builder = (
         SparkSession.builder.master(master)

@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def derby_url(path: str, create: bool = True) -> str:
-    return f"jdbc:derby:{path}" + (";create=true" if create else "")
+def derby_url(path: str) -> str:
+    """Embedded Derby url that creates the database if missing."""
+    return f"jdbc:derby:{path};create=true"
 
 
 def write_table(df: DataFrame, url: str, table: str,

@@ -16,9 +16,9 @@ PLUGGABLE TRANSPORT:
   walks its requests through ``transport`` with the reference's retry
   classes; the per-row attempt count and status are emitted so the
   driver-side bookkeeping is queryable instead of a progress file;
-- resume composes with manifest.pending_units: left-anti the completed
-  (feat_id, serial) set, exactly the indicator-file semantics but
-  partition-parallel;
+- resume is a left-anti of the completed (feat_id, serial) set from
+  the request table before ``fetch_chunks`` (as manifest.pending_units
+  does for units): the indicator-file semantics, partition-parallel;
 - ``upload_parts`` (K5): split a payload into fixed-size parts, push
   each through ``transport`` with the same retry classes, emit part
   receipts (upload.py's chunked POST loop).
@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import math
 import zlib
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -147,21 +147,15 @@ def fetch_chunks(
     requests: DataFrame,
     transport: Callable = default_transport,
     max_retries: int = 2,
-    completed: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Fetch every request through ``transport`` with the reference's
-    retry classes; ``completed`` (feat_id, serial) rows are skipped via
-    a left-anti join (the indicator-file resume, partition-parallel).
+    retry classes.  To resume, left-anti the completed (feat_id,
+    serial) rows from ``requests`` first (the indicator-file resume,
+    partition-parallel).
 
     Emits per chunk: status (last), attempts, and the payload on
     success -- failures surface as rows, not exceptions, so a resume
     manifest can be derived with a plain filter."""
-    if completed is not None:
-        requests = requests.join(
-            completed.select("feat_id", "serial"),
-            ["feat_id", "serial"],
-            "left_anti",
-        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -18,7 +18,7 @@ aggs are.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window

@@ -44,17 +44,13 @@ def read_event_stream(
 def windowed_agg(
     events: DataFrame,
     window: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Tumbling/sliding window counts + decimal-exact sums per
-    event_type; watermark bounds state for late data."""
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
+    """Tumbling window counts + decimal-exact sums per event_type;
+    watermark bounds state for late data."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(win.alias("win"), "event_type")
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col("value").cast("decimal(30,6)"))

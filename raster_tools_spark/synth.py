@@ -16,7 +16,7 @@ grid (tiles_axis=4096).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -142,15 +142,13 @@ def images_df(
     n: int,
     seed: int = DEFAULT_SEED,
     tiles_axis: int = DEFAULT_TILES_AXIS,
-    with_pixels: bool = True,
-    partitions: Optional[int] = None,
 ):
     """Distributed images table: spark.range -> mapInPandas generator.
 
     The generator runs on executors; each output row depends only on its
     ``id``, so the table is identical at any parallelism (north rule).
     """
-    parts = partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -163,7 +161,6 @@ def images_df(
                 int(ids.max()) + 1,
                 seed=seed,
                 tiles_axis=tiles_axis,
-                with_pixels=with_pixels,
             )
 
     return (
@@ -215,10 +212,10 @@ def linear_size(idx: int):
     return LINEAR_SIZE - 2 * (idx % 3), LINEAR_SIZE - 2 * (idx % 5)
 
 
-def linear_images_df(spark, n: int, tiles_axis: int = 16, partitions=None):
+def linear_images_df(spark, n: int, tiles_axis: int = 16):
     """Distributed SQL-expressible images table with x0/y_top attached
     (ready for zonal/retile without assign_cells)."""
-    parts = partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -298,10 +295,9 @@ def linear_rgb_pixels(idx: int, h: int, w: int) -> np.ndarray:
     return ((seed + 7 * ii + 13 * jj + 31 * bb) % 251).astype(np.uint8)
 
 
-def linear_rgb_images_df(spark, n: int, tiles_axis: int = 16,
-                         partitions=None):
+def linear_rgb_images_df(spark, n: int, tiles_axis: int = 16):
     """3-band (RGB PNG) variant of linear_images_df (S2 multi-band)."""
-    parts = partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -346,10 +342,9 @@ def linear_f4_pixels(idx: int, h: int, w: int) -> np.ndarray:
     return (3.0 * seed + 0.5 * ii + 0.25 * jj).astype(np.float32)
 
 
-def linear_f4_images_df(spark, n: int, tiles_axis: int = 16,
-                        partitions=None):
+def linear_f4_images_df(spark, n: int, tiles_axis: int = 16):
     """f4 (rawz) variant of linear_images_df (S2 non-u8 dtypes)."""
-    parts = partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

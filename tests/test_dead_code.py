@@ -1,7 +1,14 @@
-"""Dead-code guard: every top-level name defined in raster_tools_spark/
-must be referenced somewhere in the repo's Python files outside its
-own definition.  There is no allowlist -- delete a definition when its
-last user goes."""
+"""Dead-code guards over raster_tools_spark/, with no allowlist:
+
+- every top-level name must be referenced somewhere in the repo's
+  Python files outside its own definition;
+- every parameter defaulting to None, True or False must be set to
+  something else by a call outside tests/ (an option only tests select
+  is a second code path nothing ships);
+- every import must be referenced by its module or imported from it
+  by another file.
+
+Delete a definition, an option or an import when its last user goes."""
 
 from __future__ import annotations
 
@@ -21,6 +28,14 @@ def _py_files(root):
         for f in files:
             if f.endswith(".py"):
                 yield os.path.join(d, f)
+
+
+def _parse_all(root):
+    trees = {}
+    for path in _py_files(root):
+        with open(path, encoding="utf-8") as f:
+            trees[path] = ast.parse(f.read())
+    return trees
 
 
 def _top_level_defs(tree):
@@ -82,3 +97,213 @@ def test_scan_flags_a_planted_dead_definition(tmp_path):
     assert unreferenced_definitions(str(tmp_path)) == [
         (os.path.join("raster_tools_spark", "mod.py"), 5, "dead_helper")
     ]
+
+
+_NOT_LITERAL = object()
+
+
+def _literal(node):
+    """The None/True/False that ``node`` spells, else a sentinel."""
+    if isinstance(node, ast.Constant) and (
+            node.value is None or isinstance(node.value, bool)):
+        return node.value
+    return _NOT_LITERAL
+
+
+def _options(tree):
+    """(line, callee names, parameter, positional index or None,
+    default) of every None/True/False-defaulted parameter of every def
+    in ``tree``, methods and nested defs included.  A method is called
+    without its self/cls argument, and ``__init__`` under its class
+    name."""
+    out = []
+
+    def visit(node, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, child.name)
+                continue
+            if not isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, cls)
+                continue
+            a = child.args
+            pos = a.posonlyargs + a.args
+            static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                         for d in child.decorator_list)
+            shift = 1 if cls and not static else 0
+            names = {child.name}
+            if cls and child.name == "__init__":
+                names.add(cls)
+            first = len(pos) - len(a.defaults)
+            params = [(p, i - shift, d) for i, (p, d) in enumerate(
+                zip(pos[first:], a.defaults), start=first)]
+            params += [(p, None, d)
+                       for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                       if d is not None]
+            for p, i, d in params:
+                if _literal(d) is not _NOT_LITERAL:
+                    out.append((child.lineno, names, p.arg, i, d.value))
+            visit(child, None)
+
+    visit(tree, None)
+    return out
+
+
+def _sets(call, param, index, default):
+    """Does ``call`` pass ``param`` (keyword, or position ``index``)
+    anything but ``default``?  ``*``/``**`` unpacking that could reach
+    the parameter counts as setting it."""
+    for k in call.keywords:
+        if k.arg is None or (
+                k.arg == param and _literal(k.value) is not default):
+            return True
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return index is not None and i <= index
+        if i == index:
+            return _literal(arg) is not default
+    return False
+
+
+def unset_options(root=ROOT):
+    """(path, line, function names, parameter) of every None/True/
+    False-defaulted parameter in the package that no call in a .py
+    file outside tests/ sets.  Callees match by bare or attribute name,
+    so a forward such as ``f(x=x)`` sets ``f``'s ``x``."""
+    trees = _parse_all(root)
+    pkg = os.path.join(root, "raster_tools_spark") + os.sep
+    tests = os.path.join(root, "tests") + os.sep
+    calls = {}
+    for path, tree in trees.items():
+        if path.startswith(tests):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    out = []
+    for path, tree in sorted(trees.items()):
+        if not path.startswith(pkg):
+            continue
+        for line, names, param, index, default in _options(tree):
+            if not any(_sets(c, param, index, default)
+                       for n in names for c in calls.get(n, [])):
+                out.append((os.path.relpath(path, root), line,
+                            min(names), param))
+    return out
+
+
+def _module_name(root, path):
+    parts = os.path.relpath(path, root)[:-3].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _import_source(root, path, node):
+    """Absolute module name an ``ImportFrom`` reads from."""
+    if node.level == 0:
+        return node.module
+    base = _module_name(root, path).split(".")
+    if not path.endswith("__init__.py"):
+        base = base[:-1]
+    base = base[:len(base) - node.level + 1]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _referenced_names(tree):
+    """Every Name a module loads, including those inside string
+    annotations and ``__all__``."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        notes = []
+        if isinstance(node, ast.arg):
+            notes.append(node.annotation)
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            notes.append(node.returns)
+        elif isinstance(node, ast.AnnAssign):
+            notes.append(node.annotation)
+        elif (isinstance(node, ast.Assign)
+              and any(getattr(t, "id", None) == "__all__"
+                      for t in node.targets)):
+            used.update(c.value for c in ast.walk(node.value)
+                        if isinstance(c, ast.Constant))
+        for note in notes:
+            if isinstance(note, ast.Constant) and isinstance(note.value, str):
+                used.update(n.id for n in ast.walk(ast.parse(note.value))
+                            if isinstance(n, ast.Name))
+    return used
+
+
+def unused_imports(root=ROOT):
+    """(path, line, name) of every import in a package module whose
+    bound name the module never references and no file imports from
+    that module."""
+    trees = _parse_all(root)
+    imported_from = set()
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                src = _import_source(root, path, node)
+                imported_from.update((src, a.name) for a in node.names)
+    pkg = os.path.join(root, "raster_tools_spark") + os.sep
+    out = []
+    for path, tree in sorted(trees.items()):
+        if not path.startswith(pkg):
+            continue
+        used = _referenced_names(tree)
+        me = _module_name(root, path)
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__":
+                continue
+            for a in node.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound not in used and (me, bound) not in imported_from:
+                    out.append((os.path.relpath(path, root), node.lineno,
+                                bound))
+    return out
+
+
+def test_every_option_is_set_outside_tests():
+    assert unset_options() == []
+
+
+def test_no_unused_imports():
+    assert unused_imports() == []
+
+
+def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
+    """An unset option and a tests-only option are flagged; an option a
+    non-test file sets (by position here) and one it reaches only
+    through a forward are not.  An import nothing references is
+    flagged; one another file imports from the module is not."""
+    pkg = tmp_path / "raster_tools_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "import os\n"
+        "from math import pi\n\n\n"
+        "def run(x, unset=None, tests_only=False, outside=None,\n"
+        "        forwarded=False):\n"
+        "    return x\n\n\n"
+        "def forwarder(x, forwarded=False):\n"
+        "    return run(x, forwarded=forwarded)\n"
+    )
+    (tmp_path / "user.py").write_text(
+        "from raster_tools_spark.mod import forwarder, pi, run\n\n"
+        "run(1, None, False, 'out')\n"
+        "forwarder(pi, True)\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from raster_tools_spark.mod import run\n\n"
+        "run(1, tests_only=True)\n"
+    )
+    mod = os.path.join("raster_tools_spark", "mod.py")
+    assert unset_options(str(tmp_path)) == [
+        (mod, 5, "run", "unset"),
+        (mod, 5, "run", "tests_only"),
+    ]
+    assert unused_imports(str(tmp_path)) == [(mod, 1, "os")]

@@ -15,7 +15,7 @@ from raster_tools_spark import synth
 from raster_tools_spark.operators import pip, tile
 
 spark = get_spark(master=f"local[{cpus}]", app_name=f"det{cpus}")
-images = synth.images_df(spark, 200, tiles_axis=64, with_pixels=False)
+images = synth.images_df(spark, 200, tiles_axis=64)
 cells = tile.assign_cells(images, tiles_axis=64)
 polys = synth.polygons_df(spark, 25, tiles_axis=64)
 assign = sorted(
@@ -44,7 +44,7 @@ docs = spark.createDataFrame(
 ).repartition(cpus)
 packs = sorted(
     (r.doc_id, r.shard, r.pack_id)
-    for r in ftext.pack_sequences(docs, budget=64, n_shards=4).collect()
+    for r in ftext.pack_sequences(docs, budget=64).collect()
 )
 near = sorted(
     (r.doc_a, r.doc_b, r.hamming)

@@ -7,17 +7,15 @@ import pytest
 from raster_tools_spark import fill as fmod
 
 
-def relax_fill(dem, mask=None):
+def relax_fill(dem):
     """Independent oracle: fixpoint of
     fill(c) = max(dem(c), min over 8-neighbors n of fill(n)), border
-    (and mask) pinned to dem.  Classic O(n^2) relaxation."""
+    pinned to dem.  Classic O(n^2) relaxation."""
     f = np.full_like(dem, np.inf, dtype=np.float64)
     f[0, :] = dem[0, :]
     f[-1, :] = dem[-1, :]
     f[:, 0] = dem[:, 0]
     f[:, -1] = dem[:, -1]
-    if mask is not None:
-        f[mask] = dem[mask]
     h, w = dem.shape
     changed = True
     while changed:
@@ -47,21 +45,6 @@ def test_priority_flood_matches_relaxation(seed):
     expected = relax_fill(dem)
     got = fmod.priority_flood_fill(dem.copy())
     assert np.array_equal(got, expected)
-
-
-def test_priority_flood_mask_outlet():
-    dem = np.full((9, 9), 10.0)
-    dem[4, 4] = 1.0  # pit
-    mask = np.zeros((9, 9), dtype=bool)
-    # without mask: pit raised to the surrounding level
-    out = fmod.priority_flood_fill(dem.copy())
-    assert out[4, 4] == 10.0
-    # a water-mask outlet adjacent to the pit drains it
-    mask[4, 5] = True
-    dem2 = dem.copy()
-    dem2[4, 5] = 1.0
-    out2 = fmod.priority_flood_fill(dem2.copy(), mask=mask)
-    assert out2[4, 4] == 1.0
 
 
 def test_fill_is_idempotent_and_monotone():

@@ -19,13 +19,6 @@ class TestGetIndices:
         env = (200001.3, 200004.9, 400001.1, 400005.2)
         assert REF_GT.get_indices(env) == (1, 2, 5, 6)
 
-    def test_inflate_mode_covers_envelope(self):
-        env = (200001.3, 200004.9, 400001.1, 400005.2)
-        x1, y1, x2, y2 = REF_GT.get_indices(env, inflate=True)
-        assert (x1, y1, x2, y2) == (1, 1, 5, 6)
-        # envelope fully inside [x1, x2) x [y1, y2) pixel window
-        assert x1 <= (env[0] - 200000.0) and x2 >= (env[1] - 200000.0)
-
     def test_banker_rounding(self):
         # 0.5 offsets exercise Python 3 round-half-even, the exact
         # behavior of the reference under py3 (utils.py:130-135)
@@ -36,17 +29,11 @@ class TestGetIndices:
         assert Y1 == round(400007.0 - 400006.5)  # 0.5 -> 0
         assert Y2 == round(400007.0 - 400004.5)  # 2.5 -> 2
 
-    def test_zero_dim_guard(self):
-        # degenerate envelope: inflate must never produce empty window
-        # (utils.py:138-143)
-        env = (200001.0, 200001.0, 400003.0, 400003.0)
-        x1, y1, x2, y2 = REF_GT.get_indices(env, inflate=True)
-        assert x2 > x1 and y2 > y1
-
     def test_shifted_anchors_origin(self):
         env = (200001.3, 200004.9, 400001.1, 400005.2)
-        sh = REF_GT.shifted(env, inflate=True)
-        assert sh == (200001.0, 1.0, 0.0, 400006.0, 0.0, -1.0)
+        # round mode: top-left pixel index (col 1, row 2)
+        sh = REF_GT.shifted(env)
+        assert sh == (200001.0, 1.0, 0.0, 400005.0, 0.0, -1.0)
 
     def test_scaled(self):
         assert REF_GT.scaled(2, 3) == (200000.0, 2.0, 0.0, 400007.0, 0.0, -3.0)
@@ -84,6 +71,43 @@ class TestCells:
         assert len(cells) == 16
         assert len(set(cells)) == 16
         assert grid.n_covering(env, 9) == 16
+
+    def test_aligned_bottom_edge_keeps_row_below(self):
+        # a point on a grid-aligned bottom edge lives in the row below
+        edge = grid.cell_edge(9)
+        env = (0.0, edge, grid.WORLD_TOP - edge, grid.WORLD_TOP)
+        y_bottom = grid.cell_of_xy(1.0, env[2], 9)
+        assert int(y_bottom) in grid.covering_cells(env, 9)
+        assert grid.n_covering(env, 9) == 2
+
+    def test_n_covering_counts_covering_cells(self):
+        """n_covering is len(covering_cells) on aligned, unaligned,
+        padded and out-of-world envelopes."""
+        rng = np.random.default_rng(13)
+        top, size = grid.WORLD_TOP, float(grid.WORLD_SIZE)
+        envs = []
+        for _ in range(300):
+            # quarter-cell lattice at r13 (16 m cells): many edges aligned
+            x1, y1 = rng.integers(-64, 256, size=2) * 4.0
+            w, h = rng.integers(0, 24, size=2) * 4.0
+            envs.append((x1, x1 + w, top - y1 - h, top - y1))
+            x1, y1 = rng.uniform(-300.0, 3000.0, size=2)
+            w, h = rng.uniform(0.0, 300.0, size=2)
+            envs.append((x1, x1 + w, top - y1 - h, top - y1))
+        envs += [
+            (-500.0, -100.0, top - 50.0, top - 10.0),      # west of world
+            (size + 10.0, size + 90.0, 10.0, 20.0),        # east of world
+            (10.0, 90.0, top + 10.0, top + 50.0),          # above world
+            (10.0, 90.0, -50.0, -10.0),                    # below world
+            (-100.0, 100.0, top - 100.0, top + 100.0),     # straddles corner
+            (32.0, 32.0, top - 48.0, top - 48.0),          # aligned point
+        ]
+        for env in envs:
+            for res in (9, 11, 13):
+                for pad in (0.0, 3.5, 16.0):
+                    assert grid.n_covering(env, res, pad) == len(
+                        grid.covering_cells(env, res, pad)
+                    ), (env, res, pad)
 
     def test_ring_and_disk(self):
         c = grid.cell_of_xy(5000.0, grid.WORLD_TOP - 5000.0, 9)

@@ -1,7 +1,9 @@
 """The JVM expressions that replaced Python stages: the PIP ray cast
-(pip._inside) must equal geom.points_in_rings point for point, and the
-zonal merge must keep the nodata edge (features with no data pixel).
-The percentile expression is checked in test_operators_spark."""
+(pip._inside) must equal geom.points_in_rings point for point, the
+image cover (zonal._image_cover_udf) must equal the half-open grid
+cover cell for cell, and the zonal merge must keep the nodata edge
+(features with no data pixel).  The percentile expression is checked
+in test_operators_spark."""
 
 from __future__ import annotations
 
@@ -11,8 +13,75 @@ import pytest
 from pyspark.sql import functions as F
 
 from raster_tools_spark import codecs, geom, wkb
-from raster_tools_spark.grid import WORLD_TOP
+from raster_tools_spark import grid
+from raster_tools_spark.grid import CELL_SIZE, WORLD_TOP
 from raster_tools_spark.operators import pip, zonal
+
+
+# ---- image cover -----------------------------------------------------------
+
+
+def _half_open_cover(x0, y_top, w, h, res):
+    """Reference: the cells at ``res`` whose half-open squares
+    ``[x1, x2) x [y1, y2)`` the tile's pixel extent intersects, clamped
+    to the world, in the same floor/ceil double arithmetic and the same
+    row-major order as the JVM expression.  Pixel centers are strictly
+    interior, so no closed bottom row is needed."""
+    import math
+
+    edge = grid.cell_edge(res)
+    jx1 = math.floor(x0 / edge)
+    jx2 = max(math.ceil((x0 + w * CELL_SIZE) / edge), jx1 + 1)
+    jy1 = math.floor((WORLD_TOP - y_top) / edge)
+    jy2 = max(
+        math.ceil((WORLD_TOP - (y_top - h * CELL_SIZE)) / edge), jy1 + 1
+    )
+    n_axis = 1 << (res + 2)
+    jx1, jx2 = max(jx1, 0), min(jx2, n_axis)
+    jy1, jy2 = max(jy1, 0), min(jy2, n_axis)
+    return [int(grid.pack_cell(res, ix, iy))
+            for iy in range(jy1, jy2) for ix in range(jx1, jx2)]
+
+
+def test_image_cover_matches_half_open_cover(spark):
+    size = float(grid.WORLD_SIZE)
+    rng = np.random.default_rng(21)
+    tiles = []
+    for w, h in ((256, 256), (250, 100), (100, 250), (1, 1)):
+        # aligned: anchors on the 128 m canonical tile grid
+        for tx, ty in ((0, 0), (3, 5), (4095, 4095), (17, 2)):
+            tiles.append((tx * 128.0, WORLD_TOP - ty * 128.0, w, h))
+        # unaligned: anchors anywhere, some on the quarter-pixel lattice
+        for _ in range(12):
+            x0, dy = rng.uniform(0.0, 5000.0, size=2)
+            tiles.append((float(x0), WORLD_TOP - float(dy), w, h))
+            x0, dy = rng.integers(0, 20000, size=2) * 0.125
+            tiles.append((float(x0), WORLD_TOP - float(dy), w, h))
+    tiles += [
+        # edge-clipped: straddling the world's west, north, east and
+        # south edges
+        (-40.0, WORLD_TOP - 300.0, 256, 256),
+        (300.0, WORLD_TOP + 60.0, 256, 256),
+        (size - 50.0, 5000.0, 256, 256),
+        (700.0, 30.0, 256, 256),
+        (-64.0, WORLD_TOP + 64.0, 256, 256),
+        # out of world: entirely west, north, east, south
+        (-300.0, WORLD_TOP - 10.0, 256, 256),
+        (10.0, WORLD_TOP + 300.0, 256, 256),
+        (size + 1.0, 5000.0, 256, 256),
+        (10.0, -1.0, 256, 256),
+    ]
+    df = spark.createDataFrame(
+        tiles, "x0 double, y_top double, w int, h int"
+    )
+    for res in (9, 10, 11):
+        got = df.select(
+            zonal._image_cover_udf(res)(
+                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
+            ).alias("cells")
+        ).collect()
+        for t, r in zip(tiles, got):
+            assert list(r.cells) == _half_open_cover(*t, res), (t, res)
 
 
 # ---- ray cast ------------------------------------------------------------

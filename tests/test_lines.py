@@ -59,7 +59,7 @@ def test_extremum_is_line_end(spark, gradient_tile):
     y = y_top - 30.25
     line = _line(spark, [(x0 + 0.25, y), (x0 + 100.25, y)])
     prof = op_lines.line_profile(line, tiles, step=CELL_SIZE)
-    ext = op_lines.line_extremum(prof, find_max=True).collect()[0]
+    ext = op_lines.line_extremum(prof).collect()[0]
     # values increase along x -> max at the last sample
     assert ext.extremum_value == int(
         np.floor((x0 + 100.25 - x0) / CELL_SIZE)

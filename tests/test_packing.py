@@ -14,9 +14,7 @@ def _docs(spark, rows):
 
 def test_budget_invariant_and_order(spark):
     rows = [(i, " ".join(["w"] * (5 + (i * 7) % 40))) for i in range(60)]
-    out = ftext.pack_sequences(
-        _docs(spark, rows), budget=64, n_shards=4
-    ).collect()
+    out = ftext.pack_sequences(_docs(spark, rows), budget=64).collect()
     assert len(out) == 60
     by_pack = {}
     for r in out:
@@ -53,9 +51,10 @@ def test_derive_n_shards_scales_with_corpus():
     assert ks == sorted(ks)
 
 
-def test_default_shards_derived_and_bounded(spark):
-    """n_shards=None derives the count; every shard group stays under
-    the target and the budget invariant still holds."""
+def test_default_shards_derived_and_bounded(spark, monkeypatch):
+    """The shard count is derived from the corpus size; every shard
+    group stays under the target and the budget invariant still
+    holds."""
     from raster_tools_spark.functions.text import derive_n_shards
 
     rows = [(i, " ".join(["w"] * (5 + (i * 7) % 40))) for i in range(60)]
@@ -63,22 +62,24 @@ def test_default_shards_derived_and_bounded(spark):
     assert len(out) == 60
     k = derive_n_shards(60)
     assert {r.shard for r in out} <= set(range(k))
-    # forcing a tiny target proves the multi-shard path end-to-end:
-    # 60 docs / target 8 -> >= 8 shards, each group <= target-ish
-    out2 = ftext.pack_sequences(
-        _docs(spark, rows), budget=64,
-        n_shards=derive_n_shards(60, target_docs_per_shard=8),
-    ).collect()
+    # a tiny target proves the corpus-scaled path end-to-end:
+    # 60 docs / target 5 -> 12 shards, each group <= target-ish
+    monkeypatch.setattr(ftext, "TARGET_DOCS_PER_SHARD", 5)
+    assert derive_n_shards(60) == 12
+    out2 = ftext.pack_sequences(_docs(spark, rows), budget=64).collect()
     from collections import Counter
     per_shard = Counter(r.shard for r in out2)
-    assert max(per_shard.values()) <= 8 + 1  # % sharding is near-even
+    assert len(per_shard) == 12
+    assert max(per_shard.values()) <= 5  # % sharding is even here
 
 
-def test_oversized_doc_gets_own_pack(spark):
+def test_oversized_doc_gets_own_pack(spark, monkeypatch):
+    # one shard, so all three documents share one packing walk
+    monkeypatch.setattr(ftext, "MIN_SHARDS", 1)
     rows = [(0, " ".join(["w"] * 10)), (1, " ".join(["w"] * 200)),
             (2, " ".join(["w"] * 10))]
     out = {r.doc_id: r for r in ftext.pack_sequences(
-        _docs(spark, rows), budget=64, n_shards=1
+        _docs(spark, rows), budget=64
     ).collect()}
     assert out[1].pack_id not in (out[0].pack_id, out[2].pack_id)
     assert out[0].pack_id != out[2].pack_id or (

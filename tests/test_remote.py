@@ -36,8 +36,9 @@ def test_resume_left_anti(spark):
         [k for k in sorted(keys)[: len(keys) // 2]],
         "feat_id long, serial int",
     )
+    pending = reqs.join(done, ["feat_id", "serial"], "left_anti")
     rest = remote.fetch_chunks(
-        reqs, remote.fake_raster_transport(), completed=done
+        pending, remote.fake_raster_transport()
     ).collect()
     rest_keys = {(r.feat_id, r.serial) for r in rest}
     assert rest_keys == keys - set(

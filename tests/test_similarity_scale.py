@@ -87,7 +87,7 @@ def test_two_level_quantizer_recall_and_bounded_closure(spark):
         schema="vec_id long, embedding array<double>",
     )
     out = similarity.ivf_topk(
-        df, k=3, n_centroids=36, nprobe=4, n_rows=n,
+        df, k=3, n_centroids=36, nprobe=4,
         max_closure_centroids=16,      # force the two-level path
     ).toPandas()
     assert set(out.columns) == {"qid", "cid", "sim", "rn"}
@@ -123,9 +123,9 @@ def test_two_level_matches_single_level_when_under_cap(spark):
         }),
         schema="vec_id long, embedding array<double>",
     )
-    a = similarity.ivf_topk(df, k=2, n_centroids=9, nprobe=2, n_rows=n)
+    a = similarity.ivf_topk(df, k=2, n_centroids=9, nprobe=2)
     b = similarity.ivf_topk(
-        df, k=2, n_centroids=9, nprobe=2, n_rows=n,
+        df, k=2, n_centroids=9, nprobe=2,
         max_closure_centroids=4096,
     )
     assert sorted(map(tuple, a.collect())) == sorted(

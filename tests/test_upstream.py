@@ -217,8 +217,8 @@ def test_partitioning_invariance(spark, result):
         "feat_id long, geom_wkb binary",
     ).repartition(5)
     images = synth.linear_images_df(
-        spark, N_IMG, tiles_axis=AXIS, partitions=3
-    )
+        spark, N_IMG, tiles_axis=AXIS
+    ).repartition(3)
     tiles = op_retile.retile(images)
     out = op_up.upstream_levels(
         roofless, polys, tiles,
