@@ -126,8 +126,6 @@ def rasterize_mask_rings(
     crossing = any(
         _bbox_overlap(_ring_env(r), (wx1, wx2, wy1, wy2)) for r in rings
     )
-    sub_w = j1 - j0
-    sub_h = i1 - i0
     if not crossing:
         cx = p + a * (j0 + 0.5)
         cy = q + d * (i0 + 0.5)

@@ -23,23 +23,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import geom
-from ..grid import (GeoTransform, WORLD_TOP, cell_bounds, cell_edge,
-                    covering_cells)
+from ..grid import GeoTransform, WORLD_TOP, cell_bounds, cell_edge
+from .pip import _cover_udf
 
 JOIN_RES_DEFAULT = 9
-
-
-def _cover_udf(res: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(wkb_s: pd.Series) -> pd.Series:
-        return wkb_s.map(
-            lambda b: covering_cells(geom.envelope(bytes(b)), res)
-        )
-
-    return cover
 
 
 def _cell_gt(cell_id: int, pixel: float):
@@ -59,10 +48,10 @@ def mask_difference_area(
     npx = int(round(cell_edge(join_res) / pixel))
 
     c1 = layer1.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select(F.col("feat_id"), F.col("geom_wkb").alias("wkb1"), "cell")
     c2 = layer2.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select(F.col("geom_wkb").alias("wkb2"), "cell")
 
     # Pre-aggregate layer 2 to ONE list-row per cell before the join:
@@ -914,10 +903,10 @@ def mask_difference_polygons(
     from .. import wkb as _wkb
 
     c1 = layer1.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select(F.col("feat_id"), F.col("geom_wkb").alias("wkb1"), "cell")
     c2 = layer2.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select(F.col("geom_wkb").alias("wkb2"), "cell")
     # same per-cell pre-aggregation as mask_difference_area: one
     # list-row per cell, so the join emits |l1_cells| rows, not
@@ -1081,7 +1070,7 @@ def union_area_exact(
     mask_union_area: shuffle carries (cell, wkb) pairs only, the
     per-cell work is independent."""
     cells = layer.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select("geom_wkb", "cell")
     npx = int(round(cell_edge(join_res) / pixel))
 
@@ -1146,7 +1135,7 @@ def mask_union_area(
     (union_px, union_area)."""
     npx = int(round(cell_edge(join_res) / pixel))
     cells = layer.withColumn(
-        "cell", F.explode(_cover_udf(join_res)(F.col("geom_wkb")))
+        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
     ).select("geom_wkb", "cell")
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -38,14 +38,27 @@ from .. import geom
 from ..grid import covering_cells, n_covering, JOIN_RES
 
 
-_COVER_SCHEMA = T.ArrayType(T.LongType())
+_COVER_SCHEMA = T.StructType([
+    *(T.StructField(k, T.DoubleType())
+      for k in ("ex1", "ex2", "ey1", "ey2")),
+    T.StructField("cells", T.ArrayType(T.LongType())),
+])
 
 
-def _covering_udf(res: int):
+def _cover_udf(res: int, pad: float):
+    """Envelope + covering cells at ``res`` of the envelope grown by
+    ``pad`` meters, in one Python pass per polygon: the polygon side of
+    every covering-cell equi-join (zonal, overlay, upstream).  Callers
+    that only key on the cell explode ``cells``."""
+
     @F.pandas_udf(_COVER_SCHEMA)
-    def cover(wkb_s: pd.Series) -> pd.Series:
-        return wkb_s.map(
-            lambda b: covering_cells(geom.envelope(bytes(b)), res)
+    def cover(wkb_s: pd.Series) -> pd.DataFrame:
+        rows = []
+        for b in wkb_s:
+            env = geom.envelope(bytes(b))
+            rows.append((*env, covering_cells(env, res, pad)))
+        return pd.DataFrame(
+            rows, columns=["ex1", "ex2", "ey1", "ey2", "cells"]
         )
 
     return cover

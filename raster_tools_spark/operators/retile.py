@@ -178,8 +178,6 @@ def retile_job(
     from .. import manifest as mf
     from .tile import parent_cell_col
 
-    shift = (res - work_res) * 1  # res levels between tile and unit
-
     def process(pending: DataFrame) -> DataFrame:
         tiles = retile(
             pending.drop("unit"), res=res, nodata=nodata

@@ -89,6 +89,7 @@ from .. import codecs, geom, wkb as _wkb
 from ..fillnodata import label
 from ..grid import (CELL_SIZE, JOIN_RES, RES_TILE, WORLD_TOP,
                     covering_cells)
+from .pip import _cover_udf
 from .tile import cell_col
 
 DIRECTED_SCHEMA = (
@@ -165,16 +166,6 @@ def sample_directed_points(lines: DataFrame, step: float) -> DataFrame:
     )
 
 
-def _padded_cover_udf(res: int, pad: float):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(wkb_s: pd.Series) -> pd.Series:
-        return wkb_s.map(
-            lambda b: covering_cells(geom.envelope(bytes(b)), res, pad=pad)
-        )
-
-    return cover
-
-
 _PAIR_SCHEMA = (
     "line_id long, feat_id long, seq int, sx double, sy double, "
     "fdx double, fdy double, rdx double, rdy double, radius double, "
@@ -242,7 +233,7 @@ def _pair_with_polygons(
     distance) (upstream.py:169-172).
     """
     pcells = polygons.withColumn(
-        "pcell", F.explode(_padded_cover_udf(pair_res, grow)("geom_wkb"))
+        "pcell", F.explode(_cover_udf(pair_res, grow)("geom_wkb")["cells"])
     ).select("feat_id", "geom_wkb", "pcell")
     s = samples.withColumn(
         "scell", cell_col(F.col("sx"), F.col("sy"), pair_res)

@@ -1,4 +1,5 @@
-"""Zonal statistics: polygon x raster aggregation (SURVEY.md J4 + A1).
+"""Zonal statistics: polygon x raster aggregation (SURVEY.md J4 + A1,
+A6 floor level, A8 multi-band calculation).
 
 Reference semantics (raster_tools/zonal.py:28-123):
 
@@ -8,19 +9,26 @@ Reference semantics (raster_tools/zonal.py:28-123):
   (value != nodata) -- the distinction at zonal.py:95,108-111;
 - stats (min/max/mean/median/std/var/p<n>) computed over data pixels.
 
-Spark-first shape (the reference's per-feature loop becomes one job):
+Spark-first shape (the reference's per-feature loop becomes one job),
+shared by zonal_stats, floor_level and rgb_zonal:
 
-1. bbox prejoin on covering cells (J2) pairs images with polygons;
-2. ``mapInPandas`` decodes each paired tile ONCE, rasterizes the polygon
-   mask, and emits a tiny partial-stats row (count, sum, sumsq, min,
-   max, 256-bin histogram) -- the expensive pixel work happens map-side,
-   mirroring the reference's blocked partial aggregation
-   (ruimtekaart.py:214-233);
-3. ``groupBy(feat_id)`` combines partials with JVM aggregates (sums,
+1. ``_candidates``: a covering-cell broadcast join pairs images with
+   polygons, and a pixel-center envelope predicate (grown by the mask's
+   reach, ``pad``) drops pairs that cannot select a pixel;
+2. ``_pair_stream`` decodes each paired tile ONCE, parses each polygon
+   once per task and yields every distinct pair's pixels with its mask
+   (center-inside for zonal/rgb, the buffer ring for floor level);
+3. ``_partials_stream`` folds that stream into a tiny partial-stats row
+   per (task, feature) (count, sum, sumsq, min, max, 256-bin
+   histogram) -- the expensive pixel work happens map-side, mirroring
+   the reference's blocked partial aggregation (ruimtekaart.py:214-233);
+4. ``groupBy(feat_id)`` combines partials with JVM aggregates (sums,
    min/max, a zip_with histogram merge); exact percentiles come from
    the merged uint8 histogram through a higher-order expression
    (bit-exact vs np.percentile, no approx_percentile needed because
-   the value domain is u8).
+   the value domain is u8).  rgb_zonal instead ships the masked band
+   vectors and finalizes in Python, because it evaluates a user
+   expression over them.
 
 Per-pair partial rows are ~300 bytes vs ~64 KiB of pixels, so the
 shuffle moves ~0.5% of the scanned data -- the property that keeps this
@@ -29,16 +37,19 @@ plan alive at 100 TB.
 
 from __future__ import annotations
 
+import ast
+import functools
+import itertools
 import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import codecs, geom
 from ..grid import CELL_SIZE, JOIN_RES, GeoTransform
+from .pip import _cover_udf
 
 NODATA_DEFAULT = 255  # dtype-max convention (extract.py:94-99, merge.py:59)
 
@@ -146,18 +157,126 @@ def _image_cover_udf(res: int):
     return cover
 
 
+def _candidates(
+    images_cells: DataFrame,
+    polygons: DataFrame,
+    join_res: int,
+    pad: float,
+    max_extent: float | None = None,
+) -> DataFrame:
+    """Candidate (image, polygon) pairs for a mask that selects pixel
+    centers at most ``pad`` meters outside the polygon's envelope.
+
+    The exploded polygon cells are broadcast-hash-joined (polygon
+    layers are the small side in the reference's workloads), so the
+    IMAGE SIDE IS NEVER SHUFFLED OR SORTED: candidate pairs stream out
+    of the scan with all pairs of an image contiguous (the explode+BHJ
+    preserves row adjacency).  A pair can arise from up to 4 shared
+    corner cells; the pair stream drops the repeats.
+
+    ``max_extent`` drops polygons whose unpadded envelope is wider or
+    taller than it (bag2tif.py:95-97)."""
+    img = images_cells.withColumn(
+        "icell",
+        # explode_outer + null filter below: plain explode infers a
+        # size()/isnotnull generate filter that would re-evaluate the
+        # whole cover expression per conjunct in the scan stage
+        F.explode_outer(
+            _image_cover_udf(join_res)(
+                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
+            )
+        ),
+    ).select(
+        "image_id", "bytes", "fmt", "x0", "y_top", "w", "h", "icell"
+    ).filter(F.col("icell").isNotNull())
+
+    # checkpoint the cover BEFORE field extraction: the broadcast build
+    # and every extracted field otherwise re-run the pandas UDF (same
+    # fix as pip_join's polygon meta)
+    polys = polygons.withColumn(
+        "_pc", _cover_udf(join_res, pad)(F.col("geom_wkb"))
+    ).localCheckpoint(eager=False)
+    if max_extent is not None:
+        polys = polys.filter(
+            F.greatest(
+                F.col("_pc.ex2") - F.col("_pc.ex1"),
+                F.col("_pc.ey2") - F.col("_pc.ey1"),
+            ) <= max_extent
+        )
+    pcells = polys.select(
+        "feat_id", "geom_wkb",
+        F.explode("_pc.cells").alias("pcell"),
+        (F.col("_pc.ex1") - pad).alias("_ex1"),
+        (F.col("_pc.ex2") + pad).alias("_ex2"),
+        (F.col("_pc.ey1") - pad).alias("_ey1"),
+        (F.col("_pc.ey2") + pad).alias("_ey2"),
+    )
+
+    # The JVM-side predicate drops pairs BEFORE they pay a decode +
+    # mask in the pandas stage.  It tests the PIXEL-CENTER lattice
+    # against the padded envelope, not raw tile bounds: centers sit
+    # CELL_SIZE/2 inside the tile edge, so a tile merely TOUCHING the
+    # box (the closed-bottom cover row, edge-adjacent tiles) can never
+    # contribute a pixel and is dropped exactly, while any tile with a
+    # center inside the box passes (closed comparisons keep
+    # boundary-center ties).
+    half = CELL_SIZE * 0.5
+    overlap = (
+        (F.col("x0") + half <= F.col("_ex2"))
+        & (F.col("x0") + F.col("w") * CELL_SIZE - half >= F.col("_ex1"))
+        & (F.col("y_top") - F.col("h") * CELL_SIZE + half
+           <= F.col("_ey2"))
+        & (F.col("y_top") - half >= F.col("_ey1"))
+    )
+    return img.join(
+        F.broadcast(pcells), (img["icell"] == pcells["pcell"]) & overlap
+    ).select(
+        "image_id", "bytes", "fmt", "x0", "y_top", "feat_id", "geom_wkb",
+    )
+
+
+def _pair_stream(batches, mask_fn):
+    """(row, pixels, mask) of every distinct candidate pair whose mask
+    selects a pixel, over candidate batches with all pairs of an image
+    adjacent: each image is decoded once, each polygon's rings are
+    parsed once per task.  ``mask_fn(rings, gt, height, width)`` burns
+    the polygon onto the tile's pixel grid."""
+    cur_img = None
+    px = None
+    gt = None
+    seen: set = set()
+    ring_cache: dict = {}
+    for pdf in batches:
+        for t in pdf.itertuples():
+            if t.image_id != cur_img:
+                cur_img = t.image_id
+                px = codecs.decode(bytes(t.bytes), t.fmt)
+                gt = GeoTransform(
+                    (t.x0, CELL_SIZE, 0.0, t.y_top, 0.0, -CELL_SIZE)
+                )
+                seen = set()
+            if t.feat_id in seen:  # pair dup via shared corner cells
+                continue
+            seen.add(t.feat_id)
+            rings = ring_cache.get(t.feat_id)
+            if rings is None:
+                rings = geom._rings_of(bytes(t.geom_wkb))
+                ring_cache[t.feat_id] = rings
+            mask = mask_fn(rings, gt, px.shape[0], px.shape[1])
+            if mask.any():
+                yield t, px, mask
+
+
 _PARTIAL_SCHEMA = (
     "feat_id long, size long, cnt long, s double, ss double, "
     "mn double, mx double, hist array<long>, decode_bytes long"
 )
 
 
-def _partials_stream(batches, expr: str | None = None):
-    """Streaming partials over candidate pairs sorted by image_id:
-    decode each image once (rows of an image are adjacent after
-    sortWithinPartitions), parse each polygon's rings once per task.
-
-    Partials are PRE-AGGREGATED per feat_id within the task before
+def _partials_stream(batches, mask_fn=geom.rasterize_mask_rings,
+                     expr: str | None = None):
+    """Partial stats of the pair stream (rows need a ``nodata``
+    column), PRE-AGGREGATED per feat_id within the task before
     anything crosses back over Arrow: the finalize step is a pure
     commutative merge (sums, min/max, histogram adds), so collapsing
     the per-pair rows to one row per (task, feat) is result-identical
@@ -170,12 +289,6 @@ def _partials_stream(batches, expr: str | None = None):
     ``expr``: optional whitelisted band expression applied to the
     masked data vector before stats (A8 semantics, rgb_zonal.py:95-98);
     histogram/percentiles are raw-value only (u8 domain)."""
-    cur_img = None
-    px = None
-    gt = None
-    n_bytes = 0
-    seen: set = set()
-    ring_cache: dict = {}
     # feat_id -> [size, cnt, s, ss, mn, mx, hist, decode_bytes]
     acc: dict = {}
 
@@ -196,67 +309,58 @@ def _partials_stream(batches, expr: str | None = None):
             ],
         )
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        for t in pdf.itertuples():
-            if t.image_id != cur_img:
-                cur_img = t.image_id
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                gt = GeoTransform(
-                    (t.x0, CELL_SIZE, 0.0, t.y_top, 0.0, -CELL_SIZE)
-                )
-                n_bytes = len(bytes(t.bytes))
-                seen = set()
-            if t.feat_id in seen:  # pair dup via shared corner cells
-                continue
-            seen.add(t.feat_id)
-            rings = ring_cache.get(t.feat_id)
-            if rings is None:
-                rings = geom._rings_of(bytes(t.geom_wkb))
-                ring_cache[t.feat_id] = rings
-            mask = geom.rasterize_mask_rings(
-                rings, gt, px.shape[0], px.shape[1]
-            )
-            size = int(mask.sum())
-            if size == 0:
-                continue
-            vals = px[mask]
-            data = vals[vals != t.nodata]
-            if data.dtype == np.uint8:
-                hist = np.bincount(data, minlength=256).astype(np.int64)
-            else:
-                # non-u8 band (f4 DEM etc.): exact-histogram
-                # percentiles are a u8-domain feature; mean/std/min/max
-                # remain exact, median/p75/frac become NaN downstream
-                hist = None
-            if expr is not None and data.size:
-                stat_data = eval_band_expr(expr, data)
-            else:
-                stat_data = data.astype(np.float64)
-            a = acc.get(t.feat_id)
-            if a is None:
-                a = [0, 0, 0.0, 0.0, math.inf, -math.inf,
-                     np.zeros(256, dtype=np.int64), 0]
-                acc[t.feat_id] = a
-            a[0] += size
-            a[1] += int(data.size)
-            a[2] += float(stat_data.sum(dtype=np.float64))
-            a[3] += float((stat_data.astype(np.float64) ** 2).sum())
-            if data.size:
-                a[4] = min(a[4], float(stat_data.min()))
-                a[5] = max(a[5], float(stat_data.max()))
-            if hist is not None:
-                a[6] += hist
-            a[7] += n_bytes
-            if len(acc) >= _MAX_ACC_FEATS:
-                yield _flush()
-        # batch boundary: keep accumulating (decode state carries over)
+    for t, px, mask in _pair_stream(batches, mask_fn):
+        vals = px[mask]
+        data = vals[vals != t.nodata]
+        if data.dtype == np.uint8:
+            hist = np.bincount(data, minlength=256).astype(np.int64)
+        else:
+            # non-u8 band (f4 DEM etc.): exact-histogram
+            # percentiles are a u8-domain feature; mean/std/min/max
+            # remain exact, median/p75/frac become NaN downstream
+            hist = None
+        if expr is not None and data.size:
+            stat_data = eval_band_expr(expr, data)
+        else:
+            stat_data = data.astype(np.float64)
+        a = acc.get(t.feat_id)
+        if a is None:
+            a = [0, 0, 0.0, 0.0, math.inf, -math.inf,
+                 np.zeros(256, dtype=np.int64), 0]
+            acc[t.feat_id] = a
+        a[0] += len(vals)
+        a[1] += int(data.size)
+        a[2] += float(stat_data.sum(dtype=np.float64))
+        a[3] += float((stat_data.astype(np.float64) ** 2).sum())
+        if data.size:
+            a[4] = min(a[4], float(stat_data.min()))
+            a[5] = max(a[5], float(stat_data.max()))
+        if hist is not None:
+            a[6] += hist
+        a[7] += len(t.bytes)
+        if len(acc) >= _MAX_ACC_FEATS:
+            yield _flush()
     if acc:
         yield _flush()
 
 
 _MAX_ACC_FEATS = 65536
+
+
+def _check_expr(expr: str, allowed: set):
+    """Parse ``expr`` and reject it unless every name is in ``allowed``
+    and every attribute is ``np.<name in allowed>``."""
+    tree = ast.parse(expr, mode="eval")
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and node.id not in allowed:
+            raise ValueError(f"name {node.id!r} not allowed")
+        if isinstance(node, ast.Attribute) and not (
+            isinstance(node.value, ast.Name)
+            and node.value.id == "np"
+            and node.attr in allowed
+        ):
+            raise ValueError("only np.<whitelisted> calls allowed")
+    return tree
 
 
 _EXPR_WHITELIST = {"v", "np", "clip", "sqrt", "log1p", "abs", "minimum",
@@ -268,23 +372,7 @@ def eval_band_expr(expr: str, values: np.ndarray) -> np.ndarray:
     -- the safe re-expression of rgb_zonal's literal eval
     (rgb_zonal.py:95-98).  Only numpy ufuncs from the whitelist and the
     variable ``v`` are visible."""
-    import ast
-
-    tree = ast.parse(expr, mode="eval")
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and node.id not in _EXPR_WHITELIST:
-            raise ValueError(f"name {node.id!r} not allowed in band expr")
-        if isinstance(node, (ast.Attribute, ast.Call)):
-            fn = node
-            if isinstance(node, ast.Call):
-                fn = node.func
-            if isinstance(fn, ast.Attribute):
-                if not (
-                    isinstance(fn.value, ast.Name)
-                    and fn.value.id == "np"
-                    and fn.attr in _EXPR_WHITELIST
-                ):
-                    raise ValueError("only np.<whitelisted> calls allowed")
+    tree = _check_expr(expr, _EXPR_WHITELIST)
     ns = {"v": values.astype(np.float64), "np": np,
           "clip": np.clip, "sqrt": np.sqrt, "log1p": np.log1p,
           "abs": np.abs, "minimum": np.minimum, "maximum": np.maximum,
@@ -354,21 +442,7 @@ def eval_rgb_expr(expr: str, r, g, b) -> float:
     """AST-whitelisted per-feature calculation over the masked band
     vectors r/g/b (int64) -- the safe re-expression of rgb_zonal's
     ``eval(calculation)`` (rgb_zonal.py:95-98)."""
-    import ast
-
-    tree = ast.parse(expr, mode="eval")
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and node.id not in _RGB_EXPR_WHITELIST:
-            raise ValueError(f"name {node.id!r} not allowed")
-        if isinstance(node, (ast.Attribute, ast.Call)):
-            fn = node.func if isinstance(node, ast.Call) else node
-            if isinstance(fn, ast.Attribute):
-                if not (
-                    isinstance(fn.value, ast.Name)
-                    and fn.value.id == "np"
-                    and fn.attr in _RGB_EXPR_WHITELIST
-                ):
-                    raise ValueError("only np.<whitelisted> calls allowed")
+    tree = _check_expr(expr, _RGB_EXPR_WHITELIST)
     ns = {"r": r, "g": g, "b": b, "np": np}
     return float(
         eval(compile(tree, "<rgb_expr>", "eval"), {"__builtins__": {}}, ns)
@@ -380,6 +454,7 @@ _RGB_PARTIAL_SCHEMA = (
     "b array<long>"
 )
 _RGB_FINAL_SCHEMA = "feat_id long, n_px long, result double"
+_RGB_FLUSH_ROWS = 1024
 
 
 def rgb_zonal(
@@ -394,82 +469,34 @@ def rgb_zonal(
     expression over the masked (r, g, b) int64 vectors of every
     overlapping RGB tile.  Polygons with area > ``max_area`` are
     skipped (rgb_zonal.py:74-76), as are polygons with no masked
-    pixels; partials carry the masked band vectors (features are small
-    by the guard) and are concatenated in image_id order so the result
-    is partitioning-independent."""
-    from .. import geom as _geom
+    pixels.
+
+    Same candidate join and decode-once pair stream as zonal_stats.
+    The partials carry the masked band vectors (features are small by
+    the guard) and are concatenated in image_id order by a Python
+    finalize, so the result is partitioning-independent."""
 
     @F.pandas_udf("double")
     def area_udf(wkb_s: pd.Series) -> pd.Series:
-        return wkb_s.map(lambda bb: _geom.area(bytes(bb)))
+        return wkb_s.map(lambda bb: geom.area(bytes(bb)))
 
     polys = polygons.withColumn(
         "_area", area_udf(F.col("geom_wkb"))
     ).filter(F.col("_area") <= max_area).drop("_area")
-
-    img = images_cells.withColumn(
-        "icell",
-        # explode_outer + null filter below: plain explode infers a
-        # size()/isnotnull generate filter that would re-evaluate the
-        # whole cover expression per conjunct in the scan stage
-        F.explode_outer(
-            _image_cover_udf(join_res)(
-                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
-            )
-        ),
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "icell"
-    ).filter(F.col("icell").isNotNull())
-
-    from .pip import _covering_udf
-
-    pcells = polys.withColumn(
-        "pcell", F.explode(_covering_udf(join_res)(F.col("geom_wkb")))
-    ).select("feat_id", "geom_wkb", "pcell")
-    cand = img.join(
-        F.broadcast(pcells), img["icell"] == pcells["pcell"]
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "feat_id", "geom_wkb"
-    )
+    cand = _candidates(images_cells, polys, join_res, 0.0)
 
     def partials(batches):
-        cur_img = None
-        px = None
-        gt = None
-        seen: set = set()
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                if t.image_id != cur_img:
-                    cur_img = t.image_id
-                    px = codecs.decode(bytes(t.bytes), t.fmt)
-                    gt = GeoTransform(
-                        (t.x0, CELL_SIZE, 0.0, t.y_top, 0.0, -CELL_SIZE)
-                    )
-                    seen = set()
-                if t.feat_id in seen:
-                    continue
-                seen.add(t.feat_id)
-                mask = geom.rasterize_mask(
-                    bytes(t.geom_wkb), gt, px.shape[0], px.shape[1]
-                )
-                if not mask.any():
-                    continue
-                sel = px[mask].astype(np.int64)  # (n, 3)
-                rows.append(
-                    (
-                        t.feat_id,
-                        t.image_id,
-                        sel[:, 0].tolist(),
-                        sel[:, 1].tolist(),
-                        sel[:, 2].tolist(),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["feat_id", "image_id", "r", "g", "b"],
-                )
+        # px[mask] is (n, 3): its transpose lists the r, g, b vectors
+        rows = (
+            (t.feat_id, t.image_id, *px[mask].astype(np.int64).T.tolist())
+            for t, px, mask in _pair_stream(
+                batches, geom.rasterize_mask_rings
+            )
+        )
+        while chunk := list(itertools.islice(rows, _RGB_FLUSH_ROWS)):
+            yield pd.DataFrame(
+                chunk, columns=["feat_id", "image_id", "r", "g", "b"]
+            )
 
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("image_id")
@@ -493,9 +520,6 @@ def rgb_zonal(
     )
 
 
-_FLOOR_PARTIAL_SCHEMA = "feat_id long, hist array<long>"
-
-
 def floor_level(
     images_cells: DataFrame,
     polygons: DataFrame,
@@ -510,93 +534,23 @@ def floor_level(
     wider than ``max_extent`` are skipped (bag2tif.py:95-97), as are
     polygons with no data pixel in the ring (reference returns None).
 
-    Same decode-once streaming-partials plan as zonal_stats; the only
-    shuffle carries 256-bin histograms.
+    zonal_stats' plan with a ring mask: the candidate join is padded by
+    ``dist``, the pair stream is folded into the same partials, and the
+    only shuffle carries 256-bin histograms.
     """
-    from .. import geom as _geom
-    from ..grid import covering_cells as _cover
-
-    def cover_udf(res, pad):
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def cover(wkb_s: pd.Series) -> pd.Series:
-            out = []
-            for b in wkb_s:
-                env = _geom.envelope(bytes(b))
-                if max(env[1] - env[0], env[3] - env[2]) > max_extent:
-                    out.append([])  # reference skips huge geometries
-                else:
-                    out.append(_cover(env, res, pad=pad))
-            return pd.Series(out)
-
-        return cover
-
-    img = images_cells.withColumn(
-        "icell",
-        # explode_outer + null filter below: plain explode infers a
-        # size()/isnotnull generate filter that would re-evaluate the
-        # whole cover expression per conjunct in the scan stage
-        F.explode_outer(
-            _image_cover_udf(join_res)(
-                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
-            )
+    cand = _candidates(
+        images_cells, polygons, join_res, dist, max_extent=max_extent
+    ).withColumn("nodata", F.lit(nodata))
+    partials = cand.mapInPandas(
+        lambda it: _partials_stream(
+            it, functools.partial(geom.buffer_ring_mask, dist=dist)
         ),
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "icell"
-    ).filter(F.col("icell").isNotNull())
-    pcells = polygons.withColumn(
-        "pcell", F.explode(cover_udf(join_res, dist)(F.col("geom_wkb")))
-    ).select("feat_id", "geom_wkb", "pcell")
-    cand = img.join(
-        F.broadcast(pcells), img["icell"] == pcells["pcell"]
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "feat_id", "geom_wkb"
+        schema=_PARTIAL_SCHEMA,
     )
-
-    def partials(batches):
-        cur_img = None
-        px = None
-        gt = None
-        seen: set = set()
-        ring_cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                if t.image_id != cur_img:
-                    cur_img = t.image_id
-                    px = codecs.decode(bytes(t.bytes), t.fmt)
-                    gt = GeoTransform(
-                        (t.x0, CELL_SIZE, 0.0, t.y_top, 0.0, -CELL_SIZE)
-                    )
-                    seen = set()
-                if t.feat_id in seen:
-                    continue
-                seen.add(t.feat_id)
-                rings = ring_cache.get(t.feat_id)
-                if rings is None:
-                    rings = geom._rings_of(bytes(t.geom_wkb))
-                    ring_cache[t.feat_id] = rings
-                mask = _geom.buffer_ring_mask(
-                    rings, gt, px.shape[0], px.shape[1], dist
-                )
-                vals = px[mask]
-                data = vals[vals != nodata]
-                if data.size == 0:
-                    continue
-                rows.append(
-                    (
-                        t.feat_id,
-                        np.bincount(data, minlength=256)
-                        .astype(np.int64).tolist(),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["feat_id", "hist"])
-
-    parts = cand.mapInPandas(partials, schema=_FLOOR_PARTIAL_SCHEMA)
     hist = F.col("hist")
-    return parts.groupBy("feat_id").agg(
-        _merge_hists("hist").alias("hist")
-    ).select(
+    return partials.groupBy("feat_id").agg(
+        F.sum("cnt").alias("cnt"), _merge_hists("hist").alias("hist")
+    ).filter(F.col("cnt") > 0).select(
         "feat_id", _hist_sum(hist).alias("ring_px"),
         percentile_from_hist(hist, 75.0).alias("floor_75"),
     )
@@ -623,69 +577,12 @@ def zonal_stats(
     expr-space percentiles must apply the expression upstream of the
     tile encode instead.
 
-    The exploded polygon cells are broadcast-hash-joined (polygon
-    layers are the small side in the reference's workloads), so the
-    IMAGE SIDE IS NEVER SHUFFLED OR SORTED: candidate pairs stream out
-    of the scan with all pairs of an image contiguous (the explode+BHJ
-    preserves row adjacency), and the only shuffle in the whole job is
-    the tiny partial-stats groupBy.
+    The image side is never shuffled or sorted (see _candidates); the
+    only shuffle in the whole job is the tiny partial-stats groupBy.
     """
-    img = images_cells.withColumn(
-        "icell",
-        # explode_outer + null filter below: plain explode infers a
-        # size()/isnotnull generate filter that would re-evaluate the
-        # whole cover expression per conjunct in the scan stage
-        F.explode_outer(
-            _image_cover_udf(join_res)(
-                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
-            )
-        ),
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "w", "h", "icell"
-    ).filter(F.col("icell").isNotNull())
-
-    # one Python pass for envelope + covering cells (the pip operator's
-    # consolidated meta UDF; hot_cover unbounded -- zonal has no
-    # broadcast hot phase, every polygon enumerates its cells)
-    from .pip import _poly_meta_udf
-
-    # checkpoint the meta BEFORE field extraction: the broadcast build
-    # and every extracted field otherwise re-run the pandas UDF (same
-    # fix as pip_join's polygon meta)
-    pcells = polygons.withColumn(
-        "_pm", _poly_meta_udf(join_res, 1 << 30)(F.col("geom_wkb"))
-    ).localCheckpoint(eager=False).select(
-        "feat_id", "geom_wkb",
-        F.explode("_pm.cells").alias("pcell"),
-        F.col("_pm.ex1").alias("_ex1"), F.col("_pm.ex2").alias("_ex2"),
-        F.col("_pm.ey1").alias("_ey1"), F.col("_pm.ey2").alias("_ey2"),
+    cand = _candidates(images_cells, polygons, join_res, 0.0).withColumn(
+        "nodata", F.lit(nodata)
     )
-
-    # candidate pairs; pair dedup happens inside the streaming UDF --
-    # an image/polygon pair can arise from up to 4 shared corner cells.
-    # The JVM-side predicate drops pairs BEFORE they pay a decode +
-    # rasterize in the pandas stage.  It tests the PIXEL-CENTER
-    # lattice against the envelope, not raw tile bounds: mask pixels
-    # are center-inside, and centers sit CELL_SIZE/2 inside the tile
-    # edge, so a tile merely TOUCHING the bbox (the closed-bottom
-    # cover row, edge-adjacent tiles) can never contribute a pixel and
-    # is dropped exactly, while any tile with a center inside the bbox
-    # passes (closed comparisons keep boundary-center ties).
-    half = CELL_SIZE * 0.5
-    overlap = (
-        (F.col("x0") + half <= F.col("_ex2"))
-        & (F.col("x0") + F.col("w") * CELL_SIZE - half >= F.col("_ex1"))
-        & (F.col("y_top") - F.col("h") * CELL_SIZE + half
-           <= F.col("_ey2"))
-        & (F.col("y_top") - half >= F.col("_ey1"))
-    )
-    cand = img.join(
-        F.broadcast(pcells), (img["icell"] == pcells["pcell"]) & overlap
-    ).select(
-        "image_id", "bytes", "fmt", "x0", "y_top", "w", "h",
-        "feat_id", "geom_wkb",
-    ).withColumn("nodata", F.lit(nodata))
-
     partials = cand.mapInPandas(
         lambda it: _partials_stream(it, expr=expr), schema=_PARTIAL_SCHEMA
     )

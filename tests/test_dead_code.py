@@ -6,9 +6,11 @@
   something else by a call outside tests/ (an option only tests select
   is a second code path nothing ships);
 - every import must be referenced by its module or imported from it
-  by another file.
+  by another file;
+- every single-name local assignment must be read by its function.
 
-Delete a definition, an option or an import when its last user goes."""
+Delete a definition, an option, an import or a local when its last
+user goes."""
 
 from __future__ import annotations
 
@@ -267,6 +269,52 @@ def unused_imports(root=ROOT):
     return out
 
 
+def _unread_in(fn):
+    """(line, name) of every ``x = ...``, ``x: T = ...`` or ``x += ...``
+    directly in ``fn`` (not in a nested def, class or lambda) whose name
+    nothing in ``fn``, nested scopes included, reads; ``global`` and
+    ``nonlocal`` names are not locals."""
+    reads = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            reads.add(node.id)
+        elif isinstance(node, (ast.Global, ast.Nonlocal)):
+            reads.update(node.names)
+    out = []
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef, ast.Lambda)):
+            continue
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AugAssign) or (
+                isinstance(node, ast.AnnAssign) and node.value is not None):
+            targets = [node.target]
+        else:
+            targets = []
+        out += [(t.lineno, t.id) for t in targets
+                if isinstance(t, ast.Name) and t.id not in reads]
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def unread_locals(root=ROOT):
+    """(path, line, function, name) of every single-name local
+    assignment in a package def that its function never reads."""
+    pkg = os.path.join(root, "raster_tools_spark") + os.sep
+    out = []
+    for path, tree in sorted(_parse_all(root).items()):
+        if not path.startswith(pkg):
+            continue
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out += [(os.path.relpath(path, root), line, fn.name, name)
+                        for line, name in _unread_in(fn)]
+    return sorted(out)
+
+
 def test_every_option_is_set_outside_tests():
     assert unset_options() == []
 
@@ -275,11 +323,17 @@ def test_no_unused_imports():
     assert unused_imports() == []
 
 
+def test_every_local_is_read():
+    assert unread_locals() == []
+
+
 def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
     """An unset option and a tests-only option are flagged; an option a
     non-test file sets (by position here) and one it reaches only
     through a forward are not.  An import nothing references is
-    flagged; one another file imports from the module is not."""
+    flagged; one another file imports from the module is not.  A local
+    nothing reads is flagged, an augmented-only one at both writes; one
+    read directly or by a lambda is not."""
     pkg = tmp_path / "raster_tools_spark"
     pkg.mkdir()
     (pkg / "mod.py").write_text(
@@ -289,7 +343,14 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
         "        forwarded=False):\n"
         "    return x\n\n\n"
         "def forwarder(x, forwarded=False):\n"
-        "    return run(x, forwarded=forwarded)\n"
+        "    return run(x, forwarded=forwarded)\n\n\n"
+        "def locals_(x):\n"
+        "    dead = x + 1\n"
+        "    kept = x * 2\n"
+        "    closed = 3\n"
+        "    total = 0\n"
+        "    total += kept\n"
+        "    return lambda: closed\n"
     )
     (tmp_path / "user.py").write_text(
         "from raster_tools_spark.mod import forwarder, pi, run\n\n"
@@ -307,3 +368,8 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
         (mod, 5, "run", "tests_only"),
     ]
     assert unused_imports(str(tmp_path)) == [(mod, 1, "os")]
+    assert unread_locals(str(tmp_path)) == [
+        (mod, 15, "locals_", "dead"),
+        (mod, 18, "locals_", "total"),
+        (mod, 19, "locals_", "total"),
+    ]

@@ -307,3 +307,17 @@ class TestZonalExpr:
             zonal.eval_band_expr("__import__('os')", np.arange(3))
         with _pytest.raises(ValueError):
             zonal.eval_band_expr("v.__class__", np.arange(3))
+
+    def test_rgb_expr_whitelist_rejects(self):
+        """The rgb entry point shares the band checker: builtins,
+        dunder attributes and non-whitelisted np calls are rejected
+        before eval; a whitelisted calculation runs."""
+        r, g, b = (np.arange(k, k + 4, dtype=np.int64) for k in (0, 2, 5))
+        for bad in ("__import__('os')", "r.__class__",
+                    "np.save('x', r)", "np.mean(r).__class__",
+                    "open('x')"):
+            with pytest.raises(ValueError):
+                zonal.eval_rgb_expr(bad, r, g, b)
+        assert zonal.eval_rgb_expr("np.mean(3.0 * g - r - b)", r, g, b) == (
+            float(np.mean(3.0 * g - r - b))
+        )

@@ -139,6 +139,20 @@ def main():
         ],
     )
 
+    # 5b-bis. rgb_zonal: the same candidate join -- the image side is
+    # never shuffled; the only exchange groups the band-vector partials
+    audit(
+        "rgb_zonal_broadcast_path",
+        qcat["rgb_zonal"](spark, SF),
+        [
+            ("polygon side broadcast", lambda p: "BroadcastHashJoin" in p),
+            (
+                "single shuffle (final group only)",
+                lambda p: len(re.findall(r"[+:]- Exchange ", p)) == 1,
+            ),
+        ],
+    )
+
     # 5c. lsh_ann: the candidate join is an EQUI-join on the signature
     # bucket -- never a cross join (the shape that survives 10^12 rows)
     audit(
