@@ -92,7 +92,7 @@ def run_bench(spark, sf_dir: str, n_images: int = 20000,
         def enhance_fn():
             from raster_tools_spark.functions import image_enhance
 
-            return image_enhance.box_blur_stats(images, 2).count()
+            return image_enhance.box_blur_stats(images).count()
 
         timed("image_box_blur_full", enhance_fn, repeats=2)
         extras["box_blur_images_per_sec"] = round(

@@ -29,10 +29,14 @@ cores, which is what models N -> 4N *executors* on a real cluster
 (executors do not share a socket).  A host-ceiling calibration
 (pure-numpy multiprocessing) is reported alongside.
 
-Methodology: separate JVM per level, 1 warmup + best-of-2 (the first
+Methodology: separate JVM per level, 1 warmup + best-of-3 (the first
 run of any Python-UDF stage pays worker spinup + JIT).
 
-Usage: python bench_scaling.py [--images N] [--feats N] [--levels 2,8]
+Each level runs in a fresh interpreter as
+``python bench_scaling.py --child WORKLOAD CPUS N``.
+
+Usage: python bench_scaling.py [--images N] [--feats N] [--docs N]
+[--levels 2,8]
 """
 
 from __future__ import annotations
@@ -42,124 +46,128 @@ import os
 import subprocess
 import sys
 
-CHILD = r"""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
-workload, cpus, n_units = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-from raster_tools_spark.session import get_spark
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-spark = get_spark(master=f"local[{cpus}]", app_name=f"scaling_{cpus}")
 
-if workload == "pipeline":
-    from raster_tools_spark import synth
-    from raster_tools_spark.operators import tile as op_tile
-    from raster_tools_spark.operators import zonal as op_zonal
+def child(workload: str, cpus: int, n_units: int) -> None:
+    """Run one workload at local[cpus] in this process and print
+    its JSON line (warmup + best-of-3)."""
+    import time
 
-    tiles_axis = 256
-    polys = synth.polygons_df(spark, 200, tiles_axis=tiles_axis)
-    polys.cache().count()
+    from raster_tools_spark.session import get_spark
 
-    def run():
-        images = synth.images_df(spark, n_units, tiles_axis=tiles_axis)
-        cells = op_tile.assign_cells(images, tiles_axis=tiles_axis)
-        return op_zonal.zonal_stats(cells, polys).count()
-elif workload == "dedup":
-    # LLM-pipeline leg: banded SimHash near-dup over a synthetic
-    # corpus -- pure JVM md5/bit-arithmetic + banded equi-join, the
-    # scaling shape of the training-data dedup stages
-    from pyspark.sql import functions as F
-    from raster_tools_spark.functions import dedup as fdedup
+    spark = get_spark(master=f"local[{cpus}]", app_name=f"scaling_{cpus}")
 
-    docs = spark.range(0, n_units, 1, 64).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[F.concat(F.lit(f"tok"),
-                       ((F.col("id") * (13 + j) + j * 7) % 100003)
-                       .cast("string"))
-              for j in range(30)],
-        ).alias("text"),
-    )
-    docs = docs.cache(); docs.count()
+    if workload == "pipeline":
+        from raster_tools_spark import synth
+        from raster_tools_spark.operators import tile as op_tile
+        from raster_tools_spark.operators import zonal as op_zonal
 
-    def run():
-        return fdedup.simhash_near_dup(docs, max_hamming=3).count()
-elif workload == "enhance":
-    # image-enhance leg (axis B): PNG decode + integral-image box
-    # blur per payload -- one Arrow stage, zero shuffles; scaling is
-    # bounded only by decode/filter CPU
-    from raster_tools_spark import synth
-    from raster_tools_spark.functions import image_enhance
+        tiles_axis = 256
+        polys = synth.polygons_df(spark, 200, tiles_axis=tiles_axis)
+        polys.cache().count()
 
-    def run():
-        images = synth.images_df(spark, n_units, tiles_axis=256)
-        return image_enhance.box_blur_stats(images, 2).count()
-elif workload == "graph":
-    # round-5 graph leg: degree-ordered triangle counting over a
-    # functional double-ring graph built JVM-side -- the scaling
-    # shape of the new graph-analytics family (equi-joins + hash
-    # aggs only, no windows, no python)
-    from pyspark.sql import functions as F
-    from raster_tools_spark.functions import graph as fgraph
+        def run():
+            images = synth.images_df(spark, n_units, tiles_axis=tiles_axis)
+            cells = op_tile.assign_cells(images, tiles_axis=tiles_axis)
+            return op_zonal.zonal_stats(cells, polys).count()
+    elif workload == "dedup":
+        # LLM-pipeline leg: banded SimHash near-dup over a synthetic
+        # corpus -- pure JVM md5/bit-arithmetic + banded equi-join, the
+        # scaling shape of the training-data dedup stages
+        from pyspark.sql import functions as F
+        from raster_tools_spark.functions import dedup as fdedup
 
-    nodes = spark.range(0, n_units, 1, 64).select(
-        F.col("id").alias("node"))
-    e1 = nodes.select(F.col("node").alias("src"),
-                      ((F.col("node") * 7 + 3) % n_units).alias("dst"))
-    e2 = nodes.select(F.col("node").alias("src"),
-                      ((F.col("node") * 13 + 5) % n_units).alias("dst"))
-    edges = e1.unionByName(e2).cache(); edges.count()
+        docs = spark.range(0, n_units, 1, 64).select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(
+                " ",
+                *[F.concat(F.lit(f"tok"),
+                           ((F.col("id") * (13 + j) + j * 7) % 100003)
+                           .cast("string"))
+                  for j in range(30)],
+            ).alias("text"),
+        )
+        docs = docs.cache(); docs.count()
 
-    def run():
-        row = fgraph.triangle_count(edges).collect()[0]
-        return int(row["n_edges"])
-else:  # heavy: mask_difference-class overlay
-    import pandas as pd
+        def run():
+            return fdedup.simhash_near_dup(docs).count()
+    elif workload == "enhance":
+        # image-enhance leg (axis B): PNG decode + integral-image box
+        # blur per payload -- one Arrow stage, zero shuffles; scaling is
+        # bounded only by decode/filter CPU
+        from raster_tools_spark import synth
+        from raster_tools_spark.functions import image_enhance
 
-    from raster_tools_spark import wkb as wkbm
-    from raster_tools_spark.grid import WORLD_TOP
-    from raster_tools_spark.operators import overlay
+        def run():
+            images = synth.images_df(spark, n_units, tiles_axis=256)
+            return image_enhance.box_blur_stats(images).count()
+    elif workload == "graph":
+        # round-5 graph leg: degree-ordered triangle counting over a
+        # functional double-ring graph built JVM-side -- the scaling
+        # shape of the new graph-analytics family (equi-joins + hash
+        # aggs only, no windows, no python)
+        from pyspark.sql import functions as F
+        from raster_tools_spark.functions import graph as fgraph
 
-    def _layer(n, salt):
-        rows = []
-        for i in range(n):
-            gx = ((i * 73 + salt * 37) % 197) * 480.0
-            gy = ((i * 131 + salt * 61) % 181) * 480.0
-            w = 96.0 + (i % 7) * 32.0
-            h = 96.0 + ((i + salt) % 5) * 32.0
-            rows.append(
-                (i, wkbm.box_wkb(gx, WORLD_TOP - gy - h,
-                                 gx + w, WORLD_TOP - gy))
-            )
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=["feat_id", "geom_wkb"]),
-            schema="feat_id long, geom_wkb binary",
-        ).repartition(64)
+        nodes = spark.range(0, n_units, 1, 64).select(
+            F.col("id").alias("node"))
+        e1 = nodes.select(F.col("node").alias("src"),
+                          ((F.col("node") * 7 + 3) % n_units).alias("dst"))
+        e2 = nodes.select(F.col("node").alias("src"),
+                          ((F.col("node") * 13 + 5) % n_units).alias("dst"))
+        edges = e1.unionByName(e2).cache(); edges.count()
 
-    l1 = _layer(n_units, 0).cache(); l1.count()
-    l2 = _layer(n_units, 1).cache(); l2.count()
+        def run():
+            row = fgraph.triangle_count(edges).collect()[0]
+            return int(row["n_edges"])
+    else:  # heavy: mask_difference-class overlay
+        import pandas as pd
 
-    def run():
-        out = overlay.mask_difference_area(l1, l2, pixel=2.0)
-        return out.count()
+        from raster_tools_spark import wkb as wkbm
+        from raster_tools_spark.grid import WORLD_TOP
+        from raster_tools_spark.operators import overlay
 
-run()  # warmup
-best = None
-for _ in range(3):
-    t0 = time.time()
-    n_out = run()
-    dt = time.time() - t0
-    best = dt if best is None else min(best, dt)
-print(json.dumps({"cpus": cpus, "secs": round(best, 3),
-                  "rows_per_sec": round(n_units / best, 1),
-                  "out": n_out}))
-spark.stop()
-"""
+        def _layer(n, salt):
+            rows = []
+            for i in range(n):
+                gx = ((i * 73 + salt * 37) % 197) * 480.0
+                gy = ((i * 131 + salt * 61) % 181) * 480.0
+                w = 96.0 + (i % 7) * 32.0
+                h = 96.0 + ((i + salt) % 5) * 32.0
+                rows.append(
+                    (i, wkbm.box_wkb(gx, WORLD_TOP - gy - h,
+                                     gx + w, WORLD_TOP - gy))
+                )
+            return spark.createDataFrame(
+                pd.DataFrame(rows, columns=["feat_id", "geom_wkb"]),
+                schema="feat_id long, geom_wkb binary",
+            ).repartition(64)
+
+        l1 = _layer(n_units, 0).cache(); l1.count()
+        l2 = _layer(n_units, 1).cache(); l2.count()
+
+        def run():
+            out = overlay.mask_difference_area(l1, l2, pixel=2.0)
+            return out.count()
+
+    run()  # warmup
+    best = None
+    for _ in range(3):
+        t0 = time.time()
+        n_out = run()
+        dt = time.time() - t0
+        best = dt if best is None else min(best, dt)
+    print(json.dumps({"cpus": cpus, "secs": round(best, 3),
+                      "rows_per_sec": round(n_units / best, 1),
+                      "out": n_out}))
+    spark.stop()
 
 
 def run_level(workload: str, cpus: int, n_units: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, workload, str(cpus), str(n_units)],
+        [sys.executable, os.path.abspath(__file__), "--child", workload,
+         str(cpus), str(n_units)],
         capture_output=True, text=True, timeout=2400,
     )
     line = out.stdout.strip().splitlines()[-1]
@@ -297,6 +305,10 @@ at sandbox scale.
 
 
 def main():
+    if sys.argv[1:2] == ["--child"]:
+        workload, cpus, n_units = sys.argv[2:5]
+        child(workload, int(cpus), int(n_units))
+        return
     n_images = 12000
     n_feats = 3000  # ~20 s at local[8]; local[2] leg stays under 2 min
     levels = (2, 8)
@@ -346,6 +358,7 @@ only.  rows/sec below = input nodes per second end-to-end.
 """)
         return
 
+    load_start = "%.2f %.2f %.2f" % os.getloadavg()
     lo = run_level("pipeline", levels[0], n_images)
     hi = run_level("pipeline", levels[1], n_images)
     eff = (hi["rows_per_sec"] / lo["rows_per_sec"]) / (levels[1] / levels[0])
@@ -365,6 +378,7 @@ only.  rows/sec below = input nodes per second end-to-end.
         levels[1] / levels[0]
     )
     ceiling = host_ceiling(*levels)
+    load_end = "%.2f %.2f %.2f" % os.getloadavg()
     result = {"N": lo, "fourN": hi, "efficiency": round(eff, 3),
               "heavy_N": hlo, "heavy_fourN": hhi,
               "heavy_efficiency": round(heff, 3),
@@ -373,7 +387,9 @@ only.  rows/sec below = input nodes per second end-to-end.
               "enhance_N": elo, "enhance_fourN": ehi,
               "enhance_efficiency": round(eeff, 3),
               "host_ceiling_eff": round(ceiling, 3), "images": n_images,
-              "heavy_feats": n_feats, "dedup_docs": n_docs}
+              "heavy_feats": n_feats, "dedup_docs": n_docs,
+              "cpus": os.cpu_count(), "loadavg_start": load_start,
+              "loadavg_end": load_end}
     print(json.dumps(result))
 
     os.makedirs("BENCH", exist_ok=True)
@@ -391,7 +407,9 @@ per-feature aggregation (the round-2 verdict's expensive-path scaling
 leg).
 
 Same job, same input, two parallelism levels, separate JVMs, warmup +
-best-of-2.
+best-of-3.  Host: {os.cpu_count()} CPUs; loadavg (1/5/15 min)
+{load_start} at the start and {load_end} at the end.  The sources are
+in-memory synthesizers, so no sf applies.
 
 | metric | value | config |
 |---|---|---|
@@ -409,9 +427,9 @@ best-of-2.
 | image enhance scaling efficiency N->4N | **{eeff:.3f}** | axis-B leg (PNG decode + integral box blur, {n_images} payloads, zero shuffles) |
 | host pure-CPU ceiling ({levels[0]}->{levels[1]} procs) | {ceiling:.3f} | numpy multiprocessing calibration |
 
-Both legs sit strictly within the box's 16 physical cores, modeling
+Keep both levels within the host's physical cores: that models
 N -> 4N executors on a real cluster (executors don't share a socket;
-at local[16]+ the JVM's service threads oversubscribe physical cores
+past the core count the JVM's service threads oversubscribe the cores
 and the measurement becomes an SMT artifact, not an engine property).
 
 Determinism across levels: the same job produces bit-identical PIP

@@ -28,8 +28,6 @@ import zlib
 
 import numpy as np
 
-PSNR_LOSSY_MIN = 40.0  # dB invariant from BASELINE.json input_hint
-
 # ---------------------------------------------------------------------------
 # PNG (8-bit grayscale) -- real format.
 # ---------------------------------------------------------------------------
@@ -190,11 +188,11 @@ _DCTQ_MAGIC = b"DCQ1"
 _BLK = 8
 
 
-def _dct_matrix(n: int = _BLK) -> np.ndarray:
-    k = np.arange(n)[:, None].astype(np.float64)
-    i = np.arange(n)[None, :].astype(np.float64)
-    m = np.sqrt(2.0 / n) * np.cos((2 * i + 1) * k * np.pi / (2 * n))
-    m[0, :] = np.sqrt(1.0 / n)
+def _dct_matrix() -> np.ndarray:
+    k = np.arange(_BLK)[:, None].astype(np.float64)
+    i = np.arange(_BLK)[None, :].astype(np.float64)
+    m = np.sqrt(2.0 / _BLK) * np.cos((2 * i + 1) * k * np.pi / (2 * _BLK))
+    m[0, :] = np.sqrt(1.0 / _BLK)
     return m
 
 _DCT = _dct_matrix()
@@ -265,11 +263,3 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
         return rawz_decode(data)
     raise ValueError(f"unknown fmt {fmt!r}")
 
-
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB between two uint8 arrays."""
-    diff = a.astype(np.float64) - b.astype(np.float64)
-    mse = float(np.mean(diff * diff))
-    if mse == 0:
-        return float("inf")
-    return 10.0 * np.log10(255.0 * 255.0 / mse)

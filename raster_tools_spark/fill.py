@@ -7,8 +7,9 @@ the outlet (the reference's optional water-mask outlets,
 flow_fil.py:96-104, are not ported: no operator has a water mask),
 then the whole procedure runs over staged 100x100 blocks at offsets
 0/25/50 so seams move between passes (stage 1 of
-fill_complex_depressions; the reference's stage 2 whole-array pass is
-disabled in the reference itself).
+fill_complex_depressions, run over the tile table by
+operators/flow_op.fill_depressions_tiles; the reference's stage 2
+whole-array pass is disabled in the reference itself).
 
 This implementation reaches the identical fixpoint by a different,
 published algorithm: PRIORITY-FLOOD (Barnes, Lehman & Mulla 2014,
@@ -27,7 +28,6 @@ independent iterative-relaxation oracle in test_fill.py).
 from __future__ import annotations
 
 import heapq
-from typing import Tuple
 
 import numpy as np
 
@@ -72,37 +72,4 @@ def priority_flood_fill(values: np.ndarray) -> np.ndarray:
                 values[ni, nj] = lvl
                 nv = lvl
             push(ni, nj, nv)
-    return values
-
-
-def block_grid(extent_px: Tuple[int, int, int, int], step: int,
-               offset: int):
-    """Block windows of a staged pass: all (y, x, step, step) windows
-    of the ``step`` grid anchored at ``offset`` that lie fully inside
-    the pixel extent (y0, x0, y1, x1) -- the reference's
-    range(offset, 1 + H - step, step) loop bounds."""
-    y0, x0, y1, x1 = extent_px
-    out = []
-    for y in range(y0 + offset, 1 + y1 - step, step):
-        for x in range(x0 + offset, 1 + x1 - step, step):
-            out.append((y, x))
-    return out
-
-
-def fill_depressions_staged(
-    values: np.ndarray,
-    step: int = 100,
-    offsets=(0, 25, 50),
-) -> np.ndarray:
-    """Stage-1 complex fill of flow_fil.py:169-184: per-block priority
-    flood at staggered offsets, in-place.  Block borders are outlets of
-    their own block, so a depression wider than a block is only raised
-    to the block-local pour level -- matching the reference's
-    deliberate stage-1 behavior (its whole-array stage 2 is disabled
-    upstream as over-filling)."""
-    h, w = values.shape
-    for offset in offsets:
-        for y, x in block_grid((0, 0, h, w), step, offset):
-            win = np.s_[y:y + step, x:x + step]
-            priority_flood_fill(values[win])
     return values

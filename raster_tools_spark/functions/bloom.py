@@ -60,29 +60,25 @@ def _positions(keys: np.ndarray, n_hashes: int, m_bits: int) -> np.ndarray:
     )
 
 
-def build_bloom(
-    keys_df: DataFrame,
-    key_col: str,
-    bits_per_key: int = 16,
-    n_hashes: int = 7,
-):
+def build_bloom(keys_df: DataFrame, key_col: str):
     """Distributed Bloom-filter build over ``keys_df[key_col]``
-    (integer keys).  Returns ``(bits_bytes, m_bits)`` where
-    bits_bytes is the packed little-endian uint64 word array.
+    (integer keys), 16 bits per key and 7 hashes.  Returns
+    ``(bits_bytes, m_bits)`` where bits_bytes is the packed
+    little-endian uint64 word array.
 
     Each input partition reduces to its nonzero filter words, a
     single ``bit_or`` aggregation merges word-wise, and only m/64
     (idx, word) rows reach the driver -- the key set itself never
     does."""
     n = max(1, keys_df.count())
-    m_bits = 1 << max(6, int(np.ceil(np.log2(bits_per_key * n))))
+    m_bits = 1 << max(6, int(np.ceil(np.log2(16 * n))))
     n_words = m_bits // 64
 
     def to_words(batches):
         local = np.zeros(n_words, dtype=np.uint64)
         for pdf in batches:
             p = _positions(
-                pdf[key_col].to_numpy(dtype=np.int64), n_hashes, m_bits
+                pdf[key_col].to_numpy(dtype=np.int64), 7, m_bits
             ).ravel()
             np.bitwise_or.at(
                 local, p >> np.uint64(6),
@@ -113,8 +109,6 @@ def bloom_semi_join(
     small: DataFrame,
     key_col: str,
     small_key_col: str | None = None,
-    bits_per_key: int = 16,
-    n_hashes: int = 7,
 ) -> DataFrame:
     """``big`` rows whose ``key_col`` appears in ``small``'s
     ``small_key_col`` (default: same name) -- exactly a LEFT SEMI
@@ -122,21 +116,18 @@ def bloom_semi_join(
     key columns only (the 64-bit hash path).
 
     The filter size derives from the build side's distinct-key count
-    (next power of two >= bits_per_key * n_keys), so callers never
-    tune ``m`` by hand; at the default 16 bits/key + 7 hashes the
-    false-positive rate is under 1%."""
+    (next power of two >= 16 * n_keys), so callers never tune ``m``
+    by hand; at 16 bits/key + 7 hashes the false-positive rate is
+    under 1%."""
     skc = small_key_col or key_col
     keys_df = small.select(F.col(skc).alias(key_col)).distinct()
-    bits_bytes, m_bits = build_bloom(
-        keys_df, key_col,
-        bits_per_key=bits_per_key, n_hashes=n_hashes,
-    )
+    bits_bytes, m_bits = build_bloom(keys_df, key_col)
     bc = big.sparkSession.sparkContext.broadcast(bits_bytes)
 
     @F.pandas_udf(BooleanType())
     def might_contain(s: pd.Series) -> pd.Series:
         arr = np.frombuffer(bc.value, dtype=np.uint64)
-        p = _positions(s.to_numpy(dtype=np.int64), n_hashes, m_bits)
+        p = _positions(s.to_numpy(dtype=np.int64), 7, m_bits)
         hit = (arr[p >> np.uint64(6)] >> (p & np.uint64(63))) & np.uint64(1)
         return pd.Series(hit.all(axis=0).astype(bool))
 

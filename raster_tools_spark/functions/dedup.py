@@ -35,6 +35,11 @@ LSH_BAND_ROWS = 2
 # majority of the corpus, which carry no near-dup signal anyway.
 MAX_DF_FRACTION = 0.5
 MAX_DF_MIN = 16
+# the hot-gram guard of anchored_span_pairs: an anchor gram in more
+# than this many documents is boilerplate and is not joined
+SPAN_MAX_DF = 50
+# levenshtein_near_dup keeps pairs within this edit distance
+LEV_MAX_DIST = 6
 
 
 def default_max_df(n_docs: int) -> int:
@@ -56,17 +61,18 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df.repartition(target, F.col(id_col))
 
 
-def shingles_of_words(words: Column, n: int = N_SHINGLE) -> Column:
-    """Distinct word n-gram shingles from a words-array COLUMN.
+def shingles_of_words(words: Column) -> Column:
+    """Distinct word N_SHINGLE-gram shingles from a words-array COLUMN.
 
     Important: take a materialized array column, not an inline
     ``split`` -- Catalyst does not common-subexpression-eliminate
     through higher-order-function lambdas, so an inline split would be
     re-evaluated for every element_at (measured ~25x slowdown)."""
     grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - n),
+        F.sequence(F.lit(0), F.size(words) - N_SHINGLE),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + j + 1) for j in range(n)]
+            " ", *[F.element_at(words, i + j + 1)
+                   for j in range(N_SHINGLE)]
         ),
     )
     return F.array_distinct(grams)
@@ -85,7 +91,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def _doc_shingles(docs: DataFrame, max_df) -> DataFrame:
+def _doc_shingles(docs: DataFrame) -> DataFrame:
     sh = _spread(docs, "doc_id").select(
         "doc_id", F.split(F.col("text"), " ").alias("_w")
     ).select(
@@ -97,38 +103,32 @@ def _doc_shingles(docs: DataFrame, max_df) -> DataFrame:
         "doc_id",
         F.explode_outer(shingles_of_words(F.col("_w"))).alias("shingle"),
     ).filter(F.col("shingle").isNotNull())
-    if max_df == "auto":
-        # one count() job; on a parquet-backed docs table this is a
-        # footer-metadata read, not a scan.  Callers with a known
-        # corpus size can pass max_df explicitly to skip it.
-        max_df = default_max_df(docs.count())
-    if max_df is not None:
-        # the document-frequency guard and the anti-join left side are
-        # two consumers of the shingle pipeline; checkpoint the
-        # exploded (doc_id, shingle) rows lazily so the split/
-        # transform/explode runs once (the hot-set job materializes
-        # it, the anti-join reuses the blocks)
-        sh = sh.localCheckpoint(eager=False)
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        sh = sh.join(hot, "shingle", "left_anti")
-    return sh
+    # one count() job; on a parquet-backed docs table this is a
+    # footer-metadata read, not a scan
+    max_df = default_max_df(docs.count())
+    # the document-frequency guard and the anti-join left side are
+    # two consumers of the shingle pipeline; checkpoint the
+    # exploded (doc_id, shingle) rows lazily so the split/
+    # transform/explode runs once (the hot-set job materializes
+    # it, the anti-join reuses the blocks)
+    sh = sh.localCheckpoint(eager=False)
+    hot = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("shingle")
+    )
+    return sh.join(hot, "shingle", "left_anti")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.2, max_df="auto"
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2) -> DataFrame:
     """Near-duplicate pairs by word-3-gram Jaccard similarity.
 
     jaccard = |S1 n S2| / (|S1| + |S2| - |S1 n S2|) over DISTINCT
     shingles.  Returns (doc_a, doc_b, inter, jaccard) for doc_a < doc_b
     and jaccard >= threshold.
     """
-    sh = _doc_shingles(docs, max_df)
+    sh = _doc_shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -159,15 +159,14 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, k: int = MINHASH_K, max_df="auto"
-) -> DataFrame:
-    """k md5-minhash values per doc: for seed s, min(md5(s || shingle)).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """MINHASH_K md5-minhash values per doc: for seed s,
+    min(md5(s || shingle)).
 
     String-min over hex md5 == numeric min over the hash value; using
     md5 keeps the oracle (DuckDB) bit-identical.
     """
-    sh = _doc_shingles(docs, max_df)
+    sh = _doc_shingles(docs)
     # one-pass: k min-aggregates in a single hash agg (partial combine
     # map-side), then unpivot -- an 8x cheaper plan than exploding a
     # seed column into k times the rows
@@ -175,26 +174,22 @@ def minhash_signatures(
         F.min(
             F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))
         ).alias(f"m{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
     wide = sh.groupBy("doc_id").agg(*aggs)
     stack_expr = "stack({}, {}) as (seed, minhash)".format(
-        k, ", ".join(f"{i}, m{i}" for i in range(k))
+        MINHASH_K, ", ".join(f"{i}, m{i}" for i in range(MINHASH_K))
     )
     return wide.selectExpr("doc_id", stack_expr)
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    band_rows: int = LSH_BAND_ROWS,
-    max_df="auto",
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     """LSH banding: concat minhashes within a band; docs sharing any
     band key become candidate pairs (doc_a < doc_b, n_bands shared)."""
-    sig = minhash_signatures(docs, k, max_df)
+    sig = minhash_signatures(docs)
     bands = (
-        sig.withColumn("band", F.floor(F.col("seed") / band_rows).cast("int"))
+        sig.withColumn("band",
+                       F.floor(F.col("seed") / LSH_BAND_ROWS).cast("int"))
         .groupBy("doc_id", "band")
         .agg(
             F.concat_ws(
@@ -216,14 +211,13 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over whitespace tokens: per bit, the majority vote of
     token-hash bits.  Token hash = the first 15 hex chars of md5 as a
     60-bit integer -- pure JVM expressions (md5 + conv + bit
     arithmetic), and md5 gives the DuckDB oracle an identical hash, so
     the fingerprint is a HARD cross-engine check (xxhash64 previously
     forced a rows-only check)."""
-    assert bits <= 60  # 15 hex chars fit a signed long
     toks = _spread(docs, "doc_id").select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).withColumn(
@@ -232,14 +226,14 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
         .cast("long"),
     )
     agg_exprs = []
-    for i in range(bits):
+    for i in range(60):
         bit = F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))
         agg_exprs.append(
             F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"b{i}")
         )
     per_doc = toks.groupBy("doc_id").agg(*agg_exprs)
     sim = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(60):
         sim = sim.bitwiseOR(
             F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long"))
             .otherwise(F.lit(0).cast("long"))
@@ -248,14 +242,12 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     return per_doc.select("doc_id", sim.alias("simhash"))
 
 
-def contamination(
-    train: DataFrame, eval_docs: DataFrame, n: int = N_SHINGLE,
-) -> DataFrame:
+def contamination(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark-contamination screen: per training document, the
-    fraction of its DISTINCT word n-grams that occur anywhere in the
-    evaluation corpus (the decontamination pass every training
+    fraction of its DISTINCT word N_SHINGLE-grams that occur anywhere
+    in the evaluation corpus (the decontamination pass every training
     pipeline runs before SFT/eval; production uses longer n-grams,
-    e.g. 13-grams -- ``n`` is free).
+    e.g. 13-grams).
 
     Scale shape: the eval corpus is benchmark-sized (small), so its
     distinct-shingle set is BROADCAST and the screen is a map-side
@@ -269,7 +261,7 @@ def contamination(
             .select(
                 "doc_id", F.split(F.col("text"), " ").alias("_w")
             )
-            .filter(F.size("_w") >= n)
+            .filter(F.size("_w") >= N_SHINGLE)
             .select(
                 # explode_OUTER + null filter: plain explode infers a
                 # size()/isnotnull generate filter that Catalyst
@@ -277,7 +269,7 @@ def contamination(
                 # the shingle transform there (see _doc_shingles)
                 "doc_id",
                 F.explode_outer(
-                    shingles_of_words(F.col("_w"), n)
+                    shingles_of_words(F.col("_w"))
                 ).alias("shingle"),
             )
             .filter(F.col("shingle").isNotNull())
@@ -361,20 +353,17 @@ def banded_hamming_pairs(
     )
 
 
-def simhash_near_dup(
-    docs: DataFrame, max_hamming: int = 3, bits: int = 60,
-    n_bands: int = 4,
-) -> DataFrame:
-    """SimHash near-duplicate pairs at scale: band the ``bits``-bit
-    fingerprint into ``n_bands`` equal slices; by pigeonhole, any pair
-    within ``max_hamming <= n_bands - 1`` bit flips shares at least
-    one identical band, so candidates come from an EQUI-join on
-    (band, slice) -- never an all-pairs scan -- and the exact
-    ``bit_count(xor)`` filter runs JVM-side on candidates only.
+def simhash_near_dup(docs: DataFrame) -> DataFrame:
+    """SimHash near-duplicate pairs at scale: band the 60-bit
+    fingerprint into 4 equal slices; by pigeonhole, any pair within
+    3 bit flips shares at least one identical band, so candidates
+    come from an EQUI-join on (band, slice) -- never an all-pairs
+    scan -- and the exact ``bit_count(xor)`` filter runs JVM-side on
+    candidates only.
     Returns (doc_a, doc_b, hamming)."""
     return banded_hamming_pairs(
-        simhash(docs, bits=bits), "doc_id", "simhash",
-        max_hamming=max_hamming, bits=bits, n_bands=n_bands,
+        simhash(docs), "doc_id", "simhash",
+        max_hamming=3, bits=60, n_bands=4,
     )
 
 
@@ -382,13 +371,7 @@ def simhash_near_dup(
 # line-level corpus dedup (CCNet-style)
 # ---------------------------------------------------------------------------
 
-def line_dedup(
-    docs: DataFrame,
-    min_df: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    line_sep: str = "\n",
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """CCNet-style line-level corpus deduplication (Wenzek et al.
     2020): drop every line whose exact content occurs in >= ``min_df``
     DISTINCT documents (boilerplate headers, navigation menus, cookie
@@ -412,9 +395,8 @@ def line_dedup(
     applied at sub-document granularity, the standard first stage of
     an LLM training-data pipeline.
     """
-    base = _spread(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), line_sep).alias("_ls"),
+    base = _spread(docs, "doc_id").select(
+        "doc_id", F.split(F.col("text"), "\n").alias("_ls"),
     )
     # decision pass on HASHES only (guide section-8 shape: decide with
     # small rows, move the payload once): the exploded frame carries
@@ -460,61 +442,53 @@ def line_dedup(
                 F.col("_keep"),
                 lambda i: F.element_at(F.col("_ls"), i + 1),
             ),
-            line_sep,
+            "\n",
         ).alias("text_out"),
     )
 
 
-def anchored_span_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 32,
-    p: int = 4,
-    max_df: int = 50,
-) -> DataFrame:
+def anchored_span_pairs(docs: DataFrame) -> DataFrame:
     """Span-level EXACT dedup (the ExactSubstr stage of training-data
     pipelines; complements line_dedup / rolling_fp): find document
-    pairs sharing an identical k-character substring, indexing only
-    the ~1/p content-defined ANCHOR grams.
+    pairs sharing an identical 32-character substring, indexing only
+    the ~1/4 content-defined ANCHOR grams.
 
-    Every k-gram position is hashed (md5, engine-portable); a gram is
-    an anchor iff its hash class is 0 mod ``p``.  Anchoring is a pure
+    Every 32-gram position is hashed (md5, engine-portable); a gram is
+    an anchor iff its hash class is 0 mod 4.  Anchoring is a pure
     function of CONTENT, so two documents sharing a long span sample
     the same anchors regardless of where the span sits in either
     document (alignment-invariant, unlike positional striding); a
-    shared span of length >= k + p carries an anchor in expectation,
-    and the index is ~p times smaller than the full gram set.
+    shared span of length >= 36 carries an anchor in expectation,
+    and the index is ~4 times smaller than the full gram set.
 
     Scale shape: the corpus side is one projection + repartitioned
     mapInPandas batch pass (hashlib md5 over sliding byte windows --
     the per-position JVM md5 expression ran ~3.6 us/gram and, worse,
     inside however few tasks the parquet split produced, since the
     explode multiplies rows AFTER the scan split decision; measured
-    49.8 s single-task at 50k docs).  Only the ~1/p anchor grams cross
+    49.8 s single-task at 50k docs).  Only the ~1/4 anchor grams cross
     back from Python.  The pair join is an equi-join on the 32-hex
-    hash with a ``max_df`` hot-gram guard (boilerplate/license grams
+    hash with a ``SPAN_MAX_DF`` hot-gram guard (boilerplate/license grams
     would otherwise pair quadratically -- same guard as ngram_jaccard).
     Output: (doc_a, doc_b, n_spans) with doc_a < doc_b.
     """
-    id_type = dict(docs.dtypes)[id_col]
+    id_type = dict(docs.dtypes)["doc_id"]
 
     def gen(batches):
         import hashlib
 
         md5 = hashlib.md5
         # anchor iff the first 8 hex chars (= first 4 bytes,
-        # big-endian) are 0 mod p -- identical to
-        # conv(substring(h, 1, 8), 16, 10) % p == 0.  When p divides
-        # 256 the big-endian value mod p equals the 4th byte mod p,
-        # so the hot loop tests one byte instead of building an int
+        # big-endian) are 0 mod 4 -- identical to
+        # conv(substring(h, 1, 8), 16, 10) % 4 == 0.  4 divides 256,
+        # so the big-endian value mod 4 equals the 4th byte mod 4 and
+        # the hot loop tests one byte instead of building an int
         # (measured 0.92 -> 0.63 us/position with the zero-copy
         # memoryview windows below)
-        byte_mod = (256 % p == 0)
         for pdf in batches:
             ids, hs = [], []
-            for did, txt in zip(pdf[id_col], pdf[text_col]):
-                if txt is None or len(txt) < k:
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
+                if txt is None or len(txt) < 32:
                     continue
                 b = txt.encode("utf-8")
                 if len(b) != len(txt):
@@ -522,36 +496,25 @@ def anchored_span_pairs(
                     # UTF-8 bytes of each char-window exactly as the
                     # JVM md5(substring(...)) did
                     windows = [
-                        txt[pos : pos + k].encode("utf-8")
-                        for pos in range(len(txt) - k + 1)
+                        txt[pos : pos + 32].encode("utf-8")
+                        for pos in range(len(txt) - 32 + 1)
                     ]
                 else:
                     mv = memoryview(b)
                     windows = [
-                        mv[pos : pos + k]
-                        for pos in range(len(b) - k + 1)
+                        mv[pos : pos + 32]
+                        for pos in range(len(b) - 32 + 1)
                     ]
                 seen = set()
                 add = seen.add
                 iapp = ids.append
                 happ = hs.append
-                if byte_mod:
-                    for wb in windows:
-                        dig = md5(wb).digest()
-                        if dig[3] % p == 0 and dig not in seen:
-                            add(dig)
-                            iapp(did)
-                            happ(dig)
-                else:
-                    for wb in windows:
-                        dig = md5(wb).digest()
-                        if (
-                            int.from_bytes(dig[:4], "big") % p == 0
-                            and dig not in seen
-                        ):
-                            add(dig)
-                            iapp(did)
-                            happ(dig)
+                for wb in windows:
+                    dig = md5(wb).digest()
+                    if dig[3] % 4 == 0 and dig not in seen:
+                        add(dig)
+                        iapp(did)
+                        happ(dig)
             import pandas as pd
 
             yield pd.DataFrame({"doc_id": ids, "h": hs})
@@ -561,7 +524,7 @@ def anchored_span_pairs(
     # distinct + hot-guard + self-join exchanges all carry it -- half
     # the key bytes per row (guide: narrower types on the shuffle)
     anchored = _spread(
-        docs.select(F.col(id_col), F.col(text_col)), id_col
+        docs.select(F.col("doc_id"), F.col("text")), "doc_id"
     ).mapInPandas(gen, schema=f"doc_id {id_type}, h binary")
     # the per-document set above already collapses within-document
     # repeats, but the DISTINCT is kept deliberately: its exchange is
@@ -569,14 +532,13 @@ def anchored_span_pairs(
     # self-join sides reuse -- dropping it re-runs the Python anchor
     # pass once per consumer (measured 3.7 s -> 7.1 s)
     d = anchored.select("doc_id", "h").distinct()
-    if max_df is not None:
-        hot = (
-            d.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("h")
-        )
-        d = d.join(hot, "h", "left_anti")
+    hot = (
+        d.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > SPAN_MAX_DF)
+        .select("h")
+    )
+    d = d.join(hot, "h", "left_anti")
     a, b = d.alias("a"), d.alias("b")
     return (
         a.join(b, "h")
@@ -589,24 +551,17 @@ def anchored_span_pairs(
     )
 
 
-def levenshtein_near_dup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_dist: int = 6,
-    prefix_len: int = 16,
-    len_band: int = 8,
-) -> DataFrame:
+def levenshtein_near_dup(docs: DataFrame) -> DataFrame:
     """Edit-distance near-dup pairs with BLOCKED candidate generation:
-    lowercase-normalize, block on (first ``prefix_len`` chars), keep
-    only pairs whose lengths differ by <= ``len_band`` (a free lower
-    bound on edit distance), then score survivors with the exact
-    JVM ``levenshtein`` and keep dist <= ``max_dist``.
+    lowercase-normalize, block on (first 16 chars), keep only pairs
+    whose lengths differ by <= 8 (a free lower bound on edit
+    distance), then score survivors with the exact JVM
+    ``levenshtein`` and keep dist <= ``LEV_MAX_DIST``.
 
     Scale shape: the corpus NEVER self-joins -- the equi-join key is
     the prefix block, so candidate volume is sum over blocks of
-    |block|^2, bounded in practice by the prefix selectivity (tune
-    ``prefix_len`` up for boilerplate-heavy corpora; pair it with a
+    |block|^2, bounded in practice by the prefix selectivity (a
+    boilerplate-heavy corpus needs a longer prefix or a
     ``max_df``-style hot-block drop if a block explodes).  The length
     band is applied INSIDE the join condition so over-length pairs
     die before the O(L^2) distance kernel, which runs whole-stage
@@ -616,15 +571,16 @@ def levenshtein_near_dup(
 
     Returns (doc_a, doc_b, dist int) with doc_a < doc_b.
     """
+    max_dist = LEV_MAX_DIST
     n = docs.select(
-        F.col(id_col).alias("_id"),
-        F.lower(F.col(text_col)).alias("_t"),
-    ).withColumn("_blk", F.substring("_t", 1, prefix_len))
+        F.col("doc_id").alias("_id"),
+        F.lower(F.col("text")).alias("_t"),
+    ).withColumn("_blk", F.substring("_t", 1, 16))
     a, b = n.alias("a"), n.alias("b")
     # dist <= max_dist implies |len(a) - len(b)| <= max_dist, so the
-    # band can be tightened to min(len_band, max_dist) for free --
+    # band can be tightened to min(8, max_dist) for free --
     # pairs in the gap would run the kernel only to be rejected
-    eff_band = min(len_band, max_dist)
+    eff_band = min(8, max_dist)
     # the distance threshold is the LAST conjunct of the join
     # condition on purpose: conjuncts evaluate in order, so the id
     # and length-band predicates kill most same-block pairs before

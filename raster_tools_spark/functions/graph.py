@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# edge sets up to this size are labeled by one driver-side union-find
+DRIVER_THRESHOLD = 200_000
+
 
 def _driver_components(pairs) -> list:
     """Union-find on the driver for small edge sets."""
@@ -46,22 +49,21 @@ def _driver_components(pairs) -> list:
 
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst",
-    max_iter: int = 20, driver_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node
     id reachable.  Nodes appear iff they occur in an edge.
 
     HYBRID execution: near-dup candidate edge sets are usually a tiny
     fraction of the corpus (LSH pairs ~0.1%), so when at most
-    ``driver_threshold`` edges exist (a few tens of MB of Row objects
-    at the default 200k) the components are solved in one driver-side
+    ``DRIVER_THRESHOLD`` edges exist (a few tens of MB of Row objects
+    at 200k) the components are solved in one driver-side
     union-find pass instead of paying one full Spark job per
     propagation round.  Larger edge sets take the distributed
-    min-label-propagation loop below (equivalence is pytest-checked on
-    both paths)."""
+    min-label-propagation loop below, at most 20 rounds (equivalence
+    is pytest-checked on both paths)."""
     spark = edges.sparkSession
-    probe = edges.select(src, dst).limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
+    probe = edges.select(src, dst).limit(DRIVER_THRESHOLD + 1).collect()
+    if len(probe) <= DRIVER_THRESHOLD:
         # ONE job: the limit+collect above doubles as the size probe,
         # so the (often expensive) edge pipeline never runs twice
         pairs = [(int(r[0]), int(r[1])) for r in probe]
@@ -92,7 +94,7 @@ def connected_components(
             F.least(F.col("u"), F.col("mv")).alias("comp"),
         )
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         # propagate: comp(node) -> min(comp(comp(node)), min over
         # neighbors' comps)  == one pointer-jump + one hop.
         # (renamed projections avoid Spark's fragile self-join
@@ -142,12 +144,10 @@ def connected_components(
     return labels
 
 
-def dedup_clusters(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs -> (doc_id, cluster, is_representative).
     Representative = min doc id of the component (deterministic)."""
-    comp = connected_components(pairs, src=a, dst=b)
+    comp = connected_components(pairs, src="doc_a", dst="doc_b")
     return comp.select(
         F.col("node").alias("doc_id"),
         F.col("comp").alias("cluster"),
@@ -155,14 +155,7 @@ def dedup_clusters(
     )
 
 
-def pagerank_fixed(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iterations: int = 3,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank_fixed(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Fixed-iteration PageRank in EXACT integer arithmetic.
 
     Iterative algorithms are normally impossible to oracle-check
@@ -175,7 +168,7 @@ def pagerank_fixed(
     (asserted); general graphs fall back to per-node degree scaling,
     which reintroduces rationals -- out of scope here.
 
-    Returns (node, pr_num long, pr double) after ``iterations``
+    Returns (node, pr_num long, pr double) after k = 3
     damped steps from the uniform start; ``pr = pr_num /
     (N * (40*outdeg)^k)``, a single exact-int-to-IEEE conversion.
 
@@ -186,20 +179,18 @@ def pagerank_fixed(
     """
     n = nodes.count()
     outdeg_rows = (
-        edges.groupBy(src_col).count().select("count").distinct().collect()
+        edges.groupBy("src").count().select("count").distinct().collect()
     )
     assert len(outdeg_rows) == 1, "pagerank_fixed needs constant out-degree"
     outdeg = outdeg_rows[0]["count"]
     step = 40 * outdeg
 
     ranks = nodes.select(
-        F.col(node_col).alias("node"), F.lit(1).cast("long").alias("num")
+        "node", F.lit(1).cast("long").alias("num")
     )
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     base = 1  # (40*outdeg)^k
-    for _ in range(iterations):
+    for _ in range(3):
         contrib = (
             e.join(ranks, e.src == ranks.node)
             .groupBy("dst")
@@ -210,7 +201,7 @@ def pagerank_fixed(
         # d * sum(pr_j)/outdeg = 17 * 2 * sum(num_j) over the same
         teleport = 6 * outdeg * base
         ranks = (
-            nodes.select(F.col(node_col).alias("node"))
+            nodes.select("node")
             .join(contrib, F.col("node") == contrib.dst, "left")
             .select(
                 "node",
@@ -229,9 +220,7 @@ def pagerank_fixed(
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact triangle counting by DEGREE-ORDERED orientation (the
     compact-forward / MapReduce NodeIterator++ scheme of Suri &
     Vassilvitskii, WWW 2011): orient every undirected edge from the
@@ -261,7 +250,7 @@ def triangle_count(
     closure left-join, not separate passes.
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")

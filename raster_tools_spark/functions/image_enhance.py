@@ -37,11 +37,11 @@ BOX_BLUR_SCHEMA = (
 )
 
 
-def box_blur_stats(images: DataFrame, radius: int = 2) -> DataFrame:
+def box_blur_stats(images: DataFrame) -> DataFrame:
     """Clamped-window box mean via integral image.
 
     Output pixel (i, j) is ``floor(sum(W) / |W|)`` where W is the
-    (2r+1)^2 window intersected with the image bounds (edge pixels
+    5x5 (r = 2) window intersected with the image bounds (edge pixels
     average over their real, smaller window -- no padding bias).
     Integer floor keeps the result bit-exact against a SQL
     neighborhood self-join.  Per-image aggregates (sum/min/max of the
@@ -54,7 +54,7 @@ def box_blur_stats(images: DataFrame, radius: int = 2) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                blur = _box_blur_plane(px, radius)
+                blur = _box_blur_plane(px, 2)
                 rows.append(
                     (
                         t.image_id,
@@ -103,7 +103,7 @@ def _box_blur_plane(px: np.ndarray, radius: int) -> np.ndarray:
     return (s // cnt).astype(np.int64)
 
 
-def box_blur_images(images: DataFrame, radius: int = 2) -> DataFrame:
+def box_blur_images(images: DataFrame) -> DataFrame:
     """Same filter, emitting the blurred PNG payload (production
     shape: decode -> integral -> floor-mean -> re-encode)."""
 
@@ -112,7 +112,7 @@ def box_blur_images(images: DataFrame, radius: int = 2) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                blur = _box_blur_plane(px, radius).astype(np.uint8)
+                blur = _box_blur_plane(px, 2).astype(np.uint8)
                 rows.append(
                     (t.image_id, codecs.png_encode(blur),
                      blur.shape[1], blur.shape[0], "png")
@@ -297,10 +297,10 @@ SOBEL_SCHEMA = (
 )
 
 
-def sobel_stats(images: DataFrame, edge_thresh: int = 200) -> DataFrame:
+def sobel_stats(images: DataFrame) -> DataFrame:
     """Integer Sobel gradient magnitude (|gx| + |gy|, the L1 variant)
     over interior pixels; per-image edge energy, peak gradient, and
-    the count of pixels above ``edge_thresh`` (an edge-density
+    the count of pixels above 200 (an edge-density
     quality signal for image curation).  Exact int64 arithmetic --
     the SQL mirror recomputes both kernels with a bounded 3x3
     neighborhood self-join."""
@@ -322,7 +322,7 @@ def sobel_stats(images: DataFrame, edge_thresh: int = 200) -> DataFrame:
                 mag = np.abs(gx) + np.abs(gy)
                 rows.append(
                     (t.image_id, int(mag.sum()), int(mag.max()),
-                     int((mag > edge_thresh).sum()))
+                     int((mag > 200).sum()))
                 )
             if rows:
                 yield pd.DataFrame(
@@ -341,12 +341,12 @@ QUADTREE_SCHEMA = (
 )
 
 
-def quadtree_stats(images: DataFrame, threshold: int = 128) -> DataFrame:
+def quadtree_stats(images: DataFrame) -> DataFrame:
     """Quadtree compression estimate of the thresholded bitmap
     (reference analog: the quad-tree downsample at utils.py:38-51,
     A2 in SURVEY §2, inverted into an adaptive-subdivision encoder).
 
-    The u8 plane is binarized at ``threshold`` and subdivided on a
+    The u8 plane is binarized at 128 and subdivided on a
     virtual 64x64 grid (block sizes 64 down to 1, clamped to the
     actual extent): a block is a LEAF when all covered pixels agree
     and no ancestor was already uniform.  Returns the leaf count, the
@@ -360,7 +360,7 @@ def quadtree_stats(images: DataFrame, threshold: int = 128) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                b = (px >= threshold).astype(np.int64)
+                b = (px >= 128).astype(np.int64)
                 per = _quadtree_leaf_counts(b)
                 n_leaves = sum(per)
                 rows.append(
@@ -379,19 +379,18 @@ def quadtree_stats(images: DataFrame, threshold: int = 128) -> DataFrame:
     )
 
 
-def _quadtree_leaf_counts(plane: np.ndarray, size: int = 64) -> list:
-    """Leaves per level 0..log2(size) of the clamped quadtree."""
+def _quadtree_leaf_counts(plane: np.ndarray) -> list:
+    """Leaves per level 0..log2(64) of the clamped 64x64 quadtree."""
     h, w = plane.shape
-    pad_min = np.full((size, size), 1 << 20, np.int64)
-    pad_max = np.full((size, size), -1, np.int64)
+    pad_min = np.full((64, 64), 1 << 20, np.int64)
+    pad_max = np.full((64, 64), -1, np.int64)
     pad_min[:h, :w] = plane
     pad_max[:h, :w] = plane
-    levels = size.bit_length()  # 64 -> 7 levels
     parent_uniform = None
     per = []
-    for lvl in range(levels):
-        bs = size >> lvl
-        nb = size // bs
+    for lvl in range(7):
+        bs = 64 >> lvl
+        nb = 64 // bs
         mn = pad_min.reshape(nb, bs, nb, bs).min(axis=(1, 3))
         mx = pad_max.reshape(nb, bs, nb, bs).max(axis=(1, 3))
         present = mx >= 0
@@ -412,23 +411,24 @@ MORPH_SCHEMA = (
 )
 
 
-def morph_gradient_stats(images: DataFrame, radius: int = 1) -> DataFrame:
+def morph_gradient_stats(images: DataFrame) -> DataFrame:
     """Morphological gradient (clamped-window dilation minus erosion,
     the reference's W5 binary-morphology family lifted to grayscale
-    payloads): per-image gradient energy, peak, and flat-pixel count.
+    payloads, 3x3 window): per-image gradient energy, peak, and
+    flat-pixel count.
     Windows clamp at borders (min/max over present pixels only), so a
     bounded neighborhood self-join reproduces it exactly."""
     from numpy.lib.stride_tricks import sliding_window_view
 
-    win = 2 * radius + 1
+    win = 3
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
-                pmax = np.pad(px, radius, constant_values=-1)
-                pmin = np.pad(px, radius, constant_values=1 << 20)
+                pmax = np.pad(px, 1, constant_values=-1)
+                pmin = np.pad(px, 1, constant_values=1 << 20)
                 dil = sliding_window_view(pmax, (win, win)).max((2, 3))
                 ero = sliding_window_view(pmin, (win, win)).min((2, 3))
                 grad = dil - ero
@@ -501,9 +501,7 @@ STRETCH_SCHEMA = (
 )
 
 
-def contrast_stretch_stats(
-    images: DataFrame, lo_pct: int = 2, hi_pct: int = 98
-) -> DataFrame:
+def contrast_stretch_stats(images: DataFrame) -> DataFrame:
     """Percentile contrast stretch (the 2-98% linear stretch of
     remote-sensing viewers), integer-exact: the cut points are the
     smallest values whose CDF crosses ceil(pct*n/100) (integer
@@ -511,7 +509,6 @@ def contrast_stretch_stats(
     BEFORE scaling so no negative division is involved (DuckDB //
     truncates toward zero while numpy floors -- avoided entirely).
     Returns per-image aggregates plus the saturated-pixel count."""
-    assert 0 < lo_pct < hi_pct < 100
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -520,8 +517,8 @@ def contrast_stretch_stats(
                 px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
                 cdf = np.cumsum(np.bincount(px.ravel(), minlength=256))
                 n = px.size
-                p_lo = int(np.argmax(cdf * 100 >= lo_pct * n))
-                p_hi = int(np.argmax(cdf * 100 >= hi_pct * n))
+                p_lo = int(np.argmax(cdf * 100 >= 2 * n))
+                p_hi = int(np.argmax(cdf * 100 >= 98 * n))
                 den = max(p_hi - p_lo, 1)
                 st = (np.clip(px, p_lo, p_hi) - p_lo) * 255 // den
                 rows.append(
@@ -688,9 +685,9 @@ BLOB_SCHEMA = (
 )
 
 
-def blob_stats(images: DataFrame, threshold: int = 255) -> DataFrame:
+def blob_stats(images: DataFrame) -> DataFrame:
     """8-connected component labeling of the per-image mask
-    ``v >= threshold`` (fillnodata.label, run-based union-find -- no
+    ``v >= 255`` (fillnodata.label, run-based union-find -- no
     assumption about mask shape), emitting per-image blob statistics:
     mask size, blob count, largest blob, and sum of squared blob sizes
     (the 'fragmentation' score used to rank images by speckle).
@@ -715,7 +712,7 @@ def blob_stats(images: DataFrame, threshold: int = 255) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = px >= threshold
+                mask = px >= 255
                 labels, _ = label(mask, 8)
                 sizes = np.bincount(labels.ravel())[1:]
                 rows.append(

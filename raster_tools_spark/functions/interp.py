@@ -40,7 +40,6 @@ def grid_centers(
     n_cols: int,
     n_rows: int,
     edge: float,
-    res: int = 9,
 ) -> DataFrame:
     """Pixel-center query grid (gi, gj, cx, cy, cell), generated
     distributedly from spark.range (no driver materialization)."""
@@ -54,20 +53,17 @@ def grid_centers(
         (F.lit(y_top) - (F.col("gi") + 0.5) * edge).alias("cy"),
     )
     return g.withColumn(
-        "cell", cell_col(F.col("cx"), F.col("cy"), res)
+        "cell", cell_col(F.col("cx"), F.col("cy"), 9)
     ).withColumn("qid", F.col("gi") * n_cols + F.col("gj"))
 
 
-def nearest_grid(
-    grid: DataFrame, points: DataFrame, res: int = 9,
-    max_radius: int = 16,
-) -> DataFrame:
+def nearest_grid(grid: DataFrame, points: DataFrame) -> DataFrame:
     """grid(qid, gi, gj, cx, cy, cell) x points(cid, cx, cy, z, cell)
     -> (gi, gj, z) of the nearest point (ties -> lowest point id)."""
     nn = op_knn.knn_join(
         grid.select("qid", "cx", "cy", "cell"),
         points.select("cid", "cx", "cy", "cell"),
-        k=1, res=res, max_radius=max_radius,
+        k=1, max_radius=16,
     )
     z = points.select(F.col("cid"), F.col("z"))
     return (
@@ -77,22 +73,19 @@ def nearest_grid(
     )
 
 
-def idw_grid(
-    grid: DataFrame, points: DataFrame, k: int = 4, res: int = 9,
-    max_radius: int = 16, power_eps: float = 1e-12,
-) -> DataFrame:
-    """IDW over the k nearest points: z = sum(w_i z_i) / sum(w_i),
-    w = 1 / (d^2 + eps).  The fold runs in rank order (sorted struct
+def idw_grid(grid: DataFrame, points: DataFrame) -> DataFrame:
+    """IDW over the 4 nearest points: z = sum(w_i z_i) / sum(w_i),
+    w = 1 / (d^2 + 1e-12).  The fold runs in rank order (sorted struct
     array + HOF aggregate), so the float result is independent of
     partitioning and reproducible by the SQL oracle."""
     nn = op_knn.knn_join(
         grid.select("qid", "cx", "cy", "cell"),
         points.select("cid", "cx", "cy", "cell"),
-        k=k, res=res, max_radius=max_radius,
+        k=4, max_radius=16,
     )
     z = points.select("cid", "z")
     joined = nn.join(z, "cid").withColumn(
-        "w", 1.0 / (F.col("dist") * F.col("dist") + F.lit(power_eps))
+        "w", 1.0 / (F.col("dist") * F.col("dist") + F.lit(1e-12))
     )
     per_q = joined.groupBy("qid").agg(
         F.sort_array(
@@ -117,14 +110,13 @@ def idw_grid(
 _LINEAR_GRID_SCHEMA = "feat_id long, gi int, gj int, z double"
 
 
-def linear_grid_features(
-    points: DataFrame, pad: float = 1.0, edge: float = 1.0
-) -> DataFrame:
+def linear_grid_features(points: DataFrame) -> DataFrame:
     """points(feat_id, pid, x, y, z) -> per-feature pixel-center grid
     interpolation (feat_id, gi, gj, z): Delaunay-linear inside the
     feature's convex hull, nearest point (ties -> lowest pid) outside.
 
-    The grid covers the feature's point bbox padded by ``pad``; its
+    The grid covers the feature's point bbox padded by 1.0, in 1.0
+    pixels; its
     anchor and the pixel-center math are the engine's usual closed
     forms, so an oracle engine can regenerate them exactly.  Planar
     z-fields are reproduced exactly inside the hull regardless of the
@@ -136,19 +128,19 @@ def linear_grid_features(
         pdf = pdf.sort_values("pid")
         pts = pdf[["x", "y"]].to_numpy(dtype=np.float64)
         z = pdf["z"].to_numpy(dtype=np.float64)
-        x0 = float(pts[:, 0].min()) - pad
-        y_top = float(pts[:, 1].max()) + pad
+        x0 = float(pts[:, 0].min()) - 1.0
+        y_top = float(pts[:, 1].max()) + 1.0
         # ceil, not round: the grid must COVER the padded bbox for
         # non-integral extents too
-        n_cols = int(math.ceil((float(pts[:, 0].max()) + pad - x0) / edge))
+        n_cols = int(math.ceil(float(pts[:, 0].max()) + 1.0 - x0))
         n_rows = int(math.ceil(
-            (y_top - (float(pts[:, 1].min()) - pad)) / edge
+            y_top - (float(pts[:, 1].min()) - 1.0)
         ))
         gj, gi = np.meshgrid(np.arange(n_cols), np.arange(n_rows))
         gi = gi.ravel()
         gj = gj.ravel()
-        cx = x0 + (gj + 0.5) * edge
-        cy = y_top - (gi + 0.5) * edge
+        cx = x0 + (gj + 0.5)
+        cy = y_top - (gi + 0.5)
         vals = griddata_linear_nearest(pts, z, cx, cy)
         return pd.DataFrame(
             {
@@ -171,21 +163,17 @@ _TILE_GRID_SCHEMA = (
 )
 
 
-def linear_grid_tiles(
-    points: DataFrame,
-    res: int = 10,
-    halo: float = 32.0,
-) -> DataFrame:
+def linear_grid_tiles(points: DataFrame) -> DataFrame:
     """Distributed linear gridding of a scattered point cloud to
     canonical f4 tiles (reference zvp2tif.py:55-80: griddata linear
     with nodata fill outside the hull; f4-min nodata).
 
-    Scale shape: every point lands in its own tile cell AND in every
-    neighbor cell within ``halo`` meters (cheap closed-form cover
+    Scale shape: every point lands in its own res-10 tile cell AND in
+    every neighbor cell within a 32 m halo (cheap closed-form cover
     explode), so each tile triangulates ONLY a local cloud; one
     groupBy(cell) shuffle of point rows, no raster bytes ever move.
     Correct whenever no Delaunay triangle near a tile spans more than
-    ``halo`` -- for sensor clouds (points every ~0.5 m) a 32 m halo is
+    the halo -- for sensor clouds (points every ~0.5 m) a 32 m halo is
     3 orders of magnitude of slack; sparse clouds need a larger halo
     or the per-feature path (linear_grid_features).
 
@@ -206,7 +194,7 @@ def linear_grid_tiles(
         out = []
         for x, y in zip(xs, ys):
             out.append(
-                covering_cells((x - halo, x + halo, y - halo, y + halo), res)
+                covering_cells((x - 32.0, x + 32.0, y - 32.0, y + 32.0), 10)
             )
         return pd.Series(out)
 
@@ -214,7 +202,7 @@ def linear_grid_tiles(
         "cell_id", F.explode(halo_cells("x", "y"))
     )
 
-    tile_px = int(cell_edge(res) / CELL_SIZE)
+    tile_px = int(cell_edge(10) / CELL_SIZE)
 
     def build(pdf):
         import pandas as pd

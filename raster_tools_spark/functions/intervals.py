@@ -22,13 +22,9 @@ from pyspark.sql import functions as F
 _NEG_INF = -(1 << 62)
 
 
-def interval_union(
-    df: DataFrame,
-    key_col: str = "key",
-    start_col: str = "s",
-    end_col: str = "e",
-) -> DataFrame:
-    """Merge overlapping/touching [s, e) intervals per key.
+def interval_union(df: DataFrame, key_col: str = "key") -> DataFrame:
+    """Merge overlapping/touching [s, e) intervals (columns s and e)
+    per key.
 
     Returns one row per key: (key, n_islands, covered, longest,
     max_merged) -- island count, total covered length, longest island
@@ -36,10 +32,10 @@ def interval_union(
     island.  Touching intervals (s == prev max e) merge; a strictly
     positive gap starts a new island.
     """
-    k, s, e = F.col(key_col), F.col(start_col), F.col(end_col)
+    k, s, e = F.col(key_col), F.col("s"), F.col("e")
     w_prev = (
         Window.partitionBy(key_col)
-        .orderBy(start_col, end_col)
+        .orderBy("s", "e")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     brk = F.when(

@@ -118,16 +118,14 @@ def _dct2_matrix(n: int) -> np.ndarray:
     return m
 
 
-def perceptual_hash(
-    images: DataFrame, hash_px: int = 32, keep: int = 8,
-) -> DataFrame:
+def perceptual_hash(images: DataFrame) -> DataFrame:
     """64-bit DCT perceptual hash per image (classic pHash): decode,
-    box-downsample to ``hash_px`` squared, 2-D DCT, keep the
-    ``keep`` x ``keep`` low-frequency block, threshold against its
+    box-downsample to 32 x 32, 2-D DCT, keep the 8 x 8 low-frequency
+    block, threshold against its
     median (DC excluded).  Visually-similar images differ in few bits;
     pairing is a banded Hamming join downstream.  Returns (image_id,
     phash64).  Pure numpy per Arrow batch -- one decode per image."""
-    dct = _dct2_matrix(hash_px)
+    dct = _dct2_matrix(32)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -140,20 +138,20 @@ def perceptual_hash(
                 px = px.astype(np.float64)
                 h, w = px.shape
                 # box-downsample via block means (pad to a multiple)
-                bh = max(h // hash_px, 1)
-                bw = max(w // hash_px, 1)
-                px = px[: bh * hash_px, : bw * hash_px]
-                if px.shape[0] < hash_px or px.shape[1] < hash_px:
+                bh = max(h // 32, 1)
+                bw = max(w // 32, 1)
+                px = px[: bh * 32, : bw * 32]
+                if px.shape[0] < 32 or px.shape[1] < 32:
                     # tiny image: nearest-neighbor upsample first
-                    yi = (np.arange(hash_px) * px.shape[0]) // hash_px
-                    xi = (np.arange(hash_px) * px.shape[1]) // hash_px
+                    yi = (np.arange(32) * px.shape[0]) // 32
+                    xi = (np.arange(32) * px.shape[1]) // 32
                     small = px[np.ix_(yi, xi)]
                 else:
                     small = px.reshape(
-                        hash_px, bh, hash_px, bw
+                        32, bh, 32, bw
                     ).mean(axis=(1, 3))
                 freq = dct @ small @ dct.T
-                low = freq[:keep, :keep].ravel()
+                low = freq[:8, :8].ravel()
                 med = np.median(low[1:])  # DC excluded
                 # 1e-9 tie guard: with an odd coefficient count the
                 # median IS one of the coefficients, and "that value
@@ -178,12 +176,10 @@ def perceptual_hash(
     )
 
 
-def image_near_dup(
-    images: DataFrame, max_hamming: int = 6, n_bands: int = 8,
-) -> DataFrame:
+def image_near_dup(images: DataFrame) -> DataFrame:
     """Perceptual-hash image near-duplicates: banded Hamming pairing
-    over the 64-bit pHash (pigeonhole: any pair within
-    ``max_hamming <= n_bands - 1`` flips shares a band), exact
+    over the 64-bit pHash in 8 bands (pigeonhole: any pair within
+    6 flips shares a band), exact
     popcount filter JVM-side.  The image-dedup pass of a multimodal
     training pipeline -- candidates from an equi-join, never
     all-pairs.  Returns (id_a, id_b, hamming)."""
@@ -191,14 +187,12 @@ def image_near_dup(
 
     return banded_hamming_pairs(
         perceptual_hash(images), "image_id", "phash64",
-        max_hamming=max_hamming, bits=64, n_bands=n_bands,
+        max_hamming=6, bits=64, n_bands=8,
         out_a="id_a", out_b="id_b",
     )
 
 
-def audio_near_dup(
-    clips: DataFrame, max_hamming: int = 3, n_bands: int = 8,
-) -> DataFrame:
+def audio_near_dup(clips: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Audio near-duplicates over the 64-bit dominant-frequency-band
     fingerprint of audio_spectral_features: the same banded-Hamming
     equi-join shape as the image pHash pairing (pigeonhole recall,
@@ -209,16 +203,15 @@ def audio_near_dup(
     sig = audio_spectral_features(clips).select("clip_id", "fp64")
     return banded_hamming_pairs(
         sig, "clip_id", "fp64",
-        max_hamming=max_hamming, bits=64, n_bands=n_bands,
+        max_hamming=max_hamming, bits=64, n_bands=8,
         out_a="id_a", out_b="id_b",
     )
 
 
-def audio_spectral_features(
-    clips: DataFrame, sr: int = 16000, frame: int = 1024,
-) -> DataFrame:
-    """REAL spectral analysis over raw-PCM audio columns (int16 LE):
-    framewise FFT magnitude -> spectral centroid, 85% rolloff,
+def audio_spectral_features(clips: DataFrame) -> DataFrame:
+    """REAL spectral analysis over raw-PCM audio columns (int16 LE,
+    16 kHz): 1024-sample framewise FFT magnitude -> spectral centroid,
+    85% rolloff,
     bandwidth, flatness, dominant-bin histogram fingerprint.  No codec
     needed for raw PCM (COMPRESSED audio is not decoded in this
     container).  Returns (clip_id, centroid_hz, rolloff_hz,
@@ -226,7 +219,7 @@ def audio_spectral_features(
     dominant-frequency-band fingerprint (one bit per coarse band,
     set when the band dominates any frame) for banded near-dup
     joins, same shape as the image pHash pairing."""
-    nyq = sr / 2.0
+    nyq = 16000 / 2.0
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -238,14 +231,14 @@ def audio_spectral_features(
                 pcm = np.frombuffer(
                     buf[: len(buf) & ~1], dtype="<i2"
                 ).astype(np.float64)
-                n_fr = pcm.size // frame
+                n_fr = pcm.size // 1024
                 if n_fr == 0:
                     rows.append((t.clip_id, 0.0, 0.0, 0.0, 0.0, 0))
                     continue
-                x = pcm[: n_fr * frame].reshape(n_fr, frame)
-                win = np.hanning(frame)
+                x = pcm[: n_fr * 1024].reshape(n_fr, 1024)
+                win = np.hanning(1024)
                 mag = np.abs(np.fft.rfft(x * win, axis=1))[:, 1:]
-                freqs = np.fft.rfftfreq(frame, 1.0 / sr)[1:]
+                freqs = np.fft.rfftfreq(1024, 1.0 / 16000)[1:]
                 power = mag.sum(axis=1)
                 ok = power > 0
                 if not ok.any():

@@ -51,7 +51,7 @@ def _pairwise_floor_sims(qm, qn, cm, cn) -> "np.ndarray":
     return np.floor(acc / (qn[:, None] * cn[None, :]) * 1000000.0) / 1000000.0
 
 
-def _local_topk_rows(qids, qm, qn, cids, cm, cn, k, chunk=512):
+def _local_topk_rows(qids, qm, qn, cids, cm, cn, k):
     """Per-query local top-k candidate rows (qid, cid, sim) within one
     bucket/cluster, ordered by (sim desc, cid asc), self-pairs
     (qid == cid) excluded.  The LOCAL top-k is a superset argument:
@@ -61,8 +61,8 @@ def _local_topk_rows(qids, qm, qn, cids, cm, cn, k, chunk=512):
     union globally reproduces row_number() over all candidates
     exactly."""
     out_q, out_c, out_s = [], [], []
-    for lo in range(0, len(qids), chunk):
-        hi = min(lo + chunk, len(qids))
+    for lo in range(0, len(qids), 512):
+        hi = min(lo + 512, len(qids))
         sims = _pairwise_floor_sims(qm[lo:hi], qn[lo:hi], cm, cn)
         for r in range(hi - lo):
             qid = qids[lo + r]
@@ -88,16 +88,8 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 5,
-    id_q: str = "vec_id",
-    id_c: str = "vec_id",
-    vec_q: str = "embedding",
-    vec_c: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector, the query
+def cosine_topk(queries: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Exact top-5 cosine neighbors for each query vector, the query
     itself excluded.
 
     Returns (qid, cid, sim, rn) with sim rounded to 6 dp and
@@ -106,13 +98,13 @@ def cosine_topk(
     from .dedup import _spread
 
     q = queries.select(
-        F.col(id_q).alias("qid"), F.col(vec_q).alias("qv")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
     # the candidate corpus usually scans as fewer splits than cores
     # (single-row-group fixture parquet); spread it so the broadcast
     # nested-loop scoring runs at full width (no-op on real corpora)
-    c = _spread(candidates, id_c).select(
-        F.col(id_c).alias("cid"), F.col(vec_c).alias("cv")
+    c = _spread(candidates, "vec_id").select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
     pairs = q.crossJoin(c).filter(F.col("qid") != F.col("cid"))
     # floor-scale, not round(): engines disagree on decimal-tie
@@ -131,7 +123,7 @@ def cosine_topk(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 5)
         .select("qid", "cid", "sim", "rn")
     )
 
@@ -162,14 +154,9 @@ MIN_PLANES = 8
 MAX_PLANES = 32
 
 
-def derive_n_planes(
-    n_rows: int,
-    target_bucket_rows: int = TARGET_BUCKET_ROWS,
-    min_planes: int = MIN_PLANES,
-    max_planes: int = MAX_PLANES,
-) -> int:
+def derive_n_planes(n_rows: int) -> int:
     """Corpus-scaled hyperplane count: enough planes that the EXPECTED
-    bucket holds <= ``target_bucket_rows`` vectors (buckets = 2^planes),
+    bucket holds <= ``TARGET_BUCKET_ROWS`` vectors (buckets = 2^planes),
     so the within-bucket exact-cosine join stays O(n * target) instead
     of degrading toward O(n^2 / 2^const) at fixed plane count.  The
     formula is mirrored verbatim in the DuckDB oracle SQL
@@ -177,12 +164,12 @@ def derive_n_planes(
     cross-engine check."""
     import math
 
-    if n_rows <= target_bucket_rows:
-        return min_planes
+    if n_rows <= TARGET_BUCKET_ROWS:
+        return MIN_PLANES
     return max(
-        min_planes,
-        min(max_planes,
-            math.ceil(math.log2(n_rows / target_bucket_rows))),
+        MIN_PLANES,
+        min(MAX_PLANES,
+            math.ceil(math.log2(n_rows / TARGET_BUCKET_ROWS))),
     )
 
 
@@ -222,29 +209,22 @@ def lsh_band_sigs_udf(n_planes: int, dim: int, n_bands: int):
     return sigs
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    n_bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN: exact cosine within each random-hyperplane bucket.
+def lsh_topk(vectors: DataFrame) -> DataFrame:
+    """ANN: top-5 by exact cosine within each random-hyperplane bucket.
 
     The plane count is derived from the corpus size so expected
     bucket occupancy stays bounded (derive_n_planes) -- a fixed plane
     count makes the within-bucket join quadratic at large n.
-    ``n_bands`` independent plane sets are probed and their candidates
+    Two independent plane sets are probed and their candidates
     unioned (minhash-style banding) to recover recall lost to the
     larger plane count.  The join is an equi-join on (band, signature)
     -- the shape that scales (shuffle by bucket, no cross join).
     """
     vectors, n = _ensure_sized(vectors)
     n_planes = derive_n_planes(n)
-    sigs = lsh_band_sigs_udf(n_planes, dim, n_bands)
+    sigs = lsh_band_sigs_udf(n_planes, 64, 2)
     v = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")
     ).withColumn("sigs", sigs(F.col("vec"))).withColumn(
         "n", _norm(F.col("vec"))
     ).select(
@@ -259,7 +239,7 @@ def lsh_topk(
     # pair (O(n * bucket) rows) through an interpreted
     # aggregate(zip_with(...)) fold and shuffled them all into one
     # global window -- measured 57 s at 20k vectors; this shape emits
-    # <= n_bands * k rows per query into the final window.
+    # <= 2 * 5 rows per query into the final window.
     id_type = dict(v.dtypes)["vid"]
     out_schema = f"qid {id_type}, cid {id_type}, sim double"
 
@@ -267,7 +247,7 @@ def lsh_topk(
         m = _stack_f64(pdf["vec"])
         ns = pdf["n"].to_numpy(dtype=np.float64)
         ids = pdf["vid"].to_numpy()
-        return _local_topk_rows(ids, m, ns, ids, m, ns, k)
+        return _local_topk_rows(ids, m, ns, ids, m, ns, 5)
 
     local = v.groupBy("band", "sig").applyInPandas(
         score_bucket, schema=out_schema
@@ -280,7 +260,7 @@ def lsh_topk(
     )
     return (
         cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 5)
         .select("qid", "cid", "sim", "rn")
     )
 
@@ -311,8 +291,7 @@ def _centroid_sims_udf(centroids: np.ndarray):
     return sims
 
 
-def derive_n_centroids(n_rows: int, min_centroids: int = 8,
-                       max_centroids: int = 65536) -> int:
+def derive_n_centroids(n_rows: int) -> int:
     """IVF list count ~ sqrt(n) (the standard IVF sizing): expected
     list length and probe cost are then both O(sqrt(n)) -- total work
     per query nprobe * n / n_centroids = O(sqrt(n)) instead of O(n).
@@ -321,24 +300,25 @@ def derive_n_centroids(n_rows: int, min_centroids: int = 8,
     extreme; cap and shard beyond that)."""
     import math
 
-    if n_rows <= min_centroids * min_centroids:
-        return min_centroids
+    if n_rows <= 8 * 8:
+        return 8
     return max(
-        min_centroids,
-        min(max_centroids, int(math.isqrt(n_rows))),
+        8,
+        min(65536, int(math.isqrt(n_rows))),
     )
 
 
 MAX_CLOSURE_CENTROIDS = 4096
+# inverted lists each IVF query probes
+IVF_NPROBE = 2
 
 
-def _two_level_lists_and_probes(
-    vectors, v, n_centroids, nprobe, cap, id_col, vec_col
-):
+def _two_level_lists_and_probes(v, n_centroids, nprobe):
     """Two-level coarse quantizer for the IVF paths where sqrt(n)
     centroids no longer fit a task closure (n ~ 10^9+ vectors: the
     single-level closure is ~GB and every vector pays sqrt(n) dot
-    products).  Level 1: <= cap super-centroids in a small closure.
+    products).  Level 1: <= MAX_CLOSURE_CENTROIDS super-centroids in a
+    small closure.
     Level 2: the fine centroids stay a DATAFRAME -- each is assigned
     to its nearest super-group, vectors broadcast-join the fine
     centroids of their own super-group(s), and a row_number picks the
@@ -348,7 +328,8 @@ def _two_level_lists_and_probes(
     Deterministic: ties break on centroid id everywhere."""
     import math
 
-    n_super = max(8, min(cap, math.isqrt(n_centroids)))
+    n_super = max(8, min(MAX_CLOSURE_CENTROIDS,
+                         math.isqrt(n_centroids)))
     super_rows = (
         v.select("vid", "vec")
         .filter(F.col("vid") < n_super)
@@ -424,46 +405,36 @@ def _two_level_lists_and_probes(
     return lists, queries
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    k: int = 5,
-    n_centroids: int | None = None,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_closure_centroids: int = MAX_CLOSURE_CENTROIDS,
-) -> DataFrame:
+def ivf_topk(vectors: DataFrame, n_centroids: int | None = None) -> DataFrame:
     """IVF-flat ANN: a coarse quantizer (the first ``n_centroids``
     vectors by id -- deterministic sampling) partitions the corpus into
-    inverted lists; each query probes its ``nprobe`` nearest lists and
-    ranks candidates by exact cosine.  The probe/list join is an
+    inverted lists; each query probes its ``IVF_NPROBE`` nearest lists
+    and ranks its top-5 candidates by exact cosine.  The probe/list join is an
     equi-join on the cluster id -- the IVF shape that scales (shuffle
     by list, never all-pairs); recall < 1 by construction, raise
-    ``nprobe`` to trade cost for recall.  ``n_centroids=None`` derives
-    sqrt(n) lists (derive_n_centroids) from a sizing count.
+    ``IVF_NPROBE`` to trade cost for recall.  ``n_centroids=None``
+    derives sqrt(n) lists (derive_n_centroids) from a sizing count.
 
-    Beyond ``max_closure_centroids`` lists the quantizer goes TWO-
+    Beyond ``MAX_CLOSURE_CENTROIDS`` lists the quantizer goes TWO-
     LEVEL (see _two_level_lists_and_probes): the closure shipped to
     executors is bounded at the cap and the fine centroids move as a
     broadcast DataFrame -- the single-level path would close ~GB of
     centroids into every task at 10^9+ vectors."""
+    nprobe = IVF_NPROBE
     if n_centroids is None:
         vectors, n = _ensure_sized(vectors)
         n_centroids = derive_n_centroids(n)
 
     v = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")
     ).withColumn("n", _norm(F.col("vec")))
 
-    if n_centroids > max_closure_centroids:
-        lists, queries = _two_level_lists_and_probes(
-            vectors, v, n_centroids, nprobe,
-            max_closure_centroids, id_col, vec_col,
-        )
+    if n_centroids > MAX_CLOSURE_CENTROIDS:
+        lists, queries = _two_level_lists_and_probes(v, n_centroids, nprobe)
     else:
         cents_rows = (
-            vectors.select(F.col(id_col).alias("cid_c"),
-                           F.col(vec_col).alias("cv"))
+            vectors.select(F.col("vec_id").alias("cid_c"),
+                           F.col("embedding").alias("cv"))
             .filter(F.col("cid_c") < n_centroids)
             .orderBy("cid_c")
             .collect()
@@ -503,7 +474,7 @@ def ivf_topk(
     # task.  The former shape materialized every (query, list-member)
     # pair -- nprobe * n^2 / n_centroids rows, measured 198 s at 20k
     # vectors / 32 lists -- through an interpreted fold plus one global
-    # window; this shape feeds the window <= nprobe * k rows per query.
+    # window; this shape feeds the window <= nprobe * 5 rows per query.
     # No cross-list dedup is needed: a candidate lives in exactly ONE
     # inverted list.  Global row_number over the union of local top-ks
     # equals row_number over all candidates (see _local_topk_rows).
@@ -517,7 +488,7 @@ def ivf_topk(
             qpdf["qid"].to_numpy(), _stack_f64(qpdf["qv"]),
             qpdf["qn"].to_numpy(dtype=np.float64),
             lpdf["cid"].to_numpy(), _stack_f64(lpdf["cv2"]),
-            lpdf["cn"].to_numpy(dtype=np.float64), k,
+            lpdf["cn"].to_numpy(dtype=np.float64), 5,
         )
 
     local = (
@@ -530,26 +501,21 @@ def ivf_topk(
     )
     return (
         local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 5)
         .select("qid", "cid", "sim", "rn")
     )
 
 
 def embedding_near_dup(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
-    n_bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH buckets
     (corpus-scaled plane count, same shape as lsh_topk)."""
     vectors, n = _ensure_sized(vectors)
     n_planes = derive_n_planes(n)
-    sigs = lsh_band_sigs_udf(n_planes, dim, n_bands)
+    sigs = lsh_band_sigs_udf(n_planes, 64, 2)
     v = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")
     ).withColumn("sigs", sigs(F.col("vec"))).withColumn(
         "n", _norm(F.col("vec"))
     ).select(

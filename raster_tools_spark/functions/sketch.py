@@ -21,19 +21,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# k of the bottom-k (KMV) sketches
+KMV_K = 64
+# count-min sketch shape: hash rows x cells per row
+CM_DEPTH = 4
+CM_WIDTH = 512
+
 
 def kmv_distinct(
     df: DataFrame,
     key_col: str,
     val_col: str,
-    k: int = 64,
 ) -> DataFrame:
     """Per-``key_col`` distinct-count estimate of ``val_col`` via a
-    k-minimum-values sketch.  Returns (key, n_kept, estimate) where
-    estimate is floor-scaled to 6 dp; n_kept < k certifies the exact
-    branch.  The hash fraction is the first 15 hex chars of
+    k-minimum-values sketch (k = ``KMV_K``).  Returns (key, n_kept,
+    estimate) where estimate is floor-scaled to 6 dp; n_kept < k
+    certifies the exact branch.  The hash fraction is the first 15 hex chars of
     md5(value) over 16^15 -- exactly reproducible in any engine with
     md5."""
+    k = KMV_K
     h = F.conv(
         F.substring(F.md5(F.col(val_col).cast("string")), 1, 15),
         16, 10,
@@ -90,16 +96,14 @@ def kmv_distinct(
 # count-min sketch (heavy-hitter frequency estimation)
 # ---------------------------------------------------------------------------
 
-def cm_sketch(
-    df: DataFrame, col: str, depth: int = 4, width: int = 512
-) -> DataFrame:
+def cm_sketch(df: DataFrame, col: str) -> DataFrame:
     """Count-min sketch table of ``col`` frequencies (Cormode &
     Muthukrishnan 2005): every value increments one cell per hash row,
     estimate(x) = min over rows of cell(x).  Returns
-    (d, cell, cnt) with at most depth x width rows.
+    (d, cell, cnt) with at most CM_DEPTH x CM_WIDTH rows.
 
-    Scale shape: one explode to ``depth`` narrow rows per input, then
-    a single groupBy over <= depth*width groups -- the partial
+    Scale shape: one explode to ``CM_DEPTH`` narrow rows per input,
+    then a single groupBy over <= depth*width groups -- the partial
     aggregation collapses each map task to the sketch size, so the
     shuffle moves O(depth*width) rows per task NO MATTER how large or
     skewed the corpus (the whole point vs an exact count at 100 TB).
@@ -127,10 +131,10 @@ def cm_sketch(
                                     1, 15,
                                 ),
                                 16, 10,
-                            ).cast("long") % width
+                            ).cast("long") % CM_WIDTH
                         ).alias("cell"),
                     )
-                    for d in range(depth)
+                    for d in range(CM_DEPTH)
                 ]
             )
         ).alias("s")
@@ -140,13 +144,7 @@ def cm_sketch(
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cm_estimate(
-    sketch: DataFrame,
-    items: DataFrame,
-    col: str,
-    depth: int = 4,
-    width: int = 512,
-) -> DataFrame:
+def cm_estimate(sketch: DataFrame, items: DataFrame, col: str) -> DataFrame:
     """Frequency estimates for ``items[col]`` against a cm_sketch
     table: (item, estimate) with estimate = min over hash rows of the
     item's cell count (0 for a cell the corpus never touched).  The
@@ -174,10 +172,10 @@ def cm_estimate(
                                     1, 15,
                                 ),
                                 16, 10,
-                            ).cast("long") % width
+                            ).cast("long") % CM_WIDTH
                         ).alias("cell"),
                     )
-                    for d in range(depth)
+                    for d in range(CM_DEPTH)
                 ]
             )
         ).alias("s"),
@@ -295,9 +293,7 @@ def _bottom_k_hashes(df: DataFrame, val_col: str, k: int) -> DataFrame:
     )
 
 
-def kmv_set_ops(
-    df_a: DataFrame, df_b: DataFrame, val_col: str, k: int = 64
-) -> DataFrame:
+def kmv_set_ops(df_a: DataFrame, df_b: DataFrame, val_col: str) -> DataFrame:
     """Set-operation cardinality estimates between two corpora from
     their bottom-k sketches ALONE (the theta-sketch move, Dasgupta et
     al. 2016): union via the merged bottom-k, intersection by
@@ -314,7 +310,9 @@ def kmv_set_ops(
     against ANY other sketched corpus -- is answered from the k-value
     summaries without rescanning data.  Deterministic md5 hashing
     keeps the estimates themselves bit-reproducible in any engine.
+    k = ``KMV_K``.
     """
+    k = KMV_K
     a = _bottom_k_hashes(df_a, val_col, k).select(F.col("hs").alias("ha"))
     b = _bottom_k_hashes(df_b, val_col, k).select(F.col("hs").alias("hb"))
     j = a.crossJoin(b)  # 1 x 1 rows

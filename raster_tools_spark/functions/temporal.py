@@ -98,25 +98,29 @@ def asof_join(
         .drop("_v")
     )
 
+
+# time-range buckets per key of asof_join_bucketed
+ASOF_BUCKETS = 32
+
+
 def asof_join_bucketed(
     left: DataFrame,
     right: DataFrame,
     key_col: str,
     ts_col: str,
     value_cols: Sequence[str],
-    n_buckets: int = 32,
 ) -> DataFrame:
     """Carried-state AS-OF join for LOW-CARDINALITY key sets: same
     semantics as :func:`asof_join`, but each key's timeline is split
-    into ``n_buckets`` time-range buckets so a hot key sorts in
-    ``n_buckets`` parallel tasks instead of one.
+    into ``ASOF_BUCKETS`` time-range buckets so a hot key sorts in
+    that many parallel tasks instead of one.
 
     Three stages, all cheap except the one real shuffle:
     (1) per-(key, bucket) LAST right-row struct (hash agg, tiny);
     (2) running carry-in per key over bucket summaries (window over
     <= keys x buckets rows -- driver-scale); (3) the in-bucket
     running-last window over (key, bucket) -- the only shuffle of
-    |L| + |R|, now with n_buckets x the parallelism per key -- and
+    |L| + |R|, now with ASOF_BUCKETS x the parallelism per key -- and
     COALESCE(in-bucket last, carried-in state).  Equal timestamps
     always share a bucket (bucketing is by value), so the inclusive
     tag trick is unchanged."""
@@ -144,6 +148,7 @@ def asof_join_bucketed(
         .collect()[0]
     )
     lo, hi = float(bounds.lo), float(bounds.hi)
+    n_buckets = ASOF_BUCKETS
     width = max((hi - lo) / n_buckets, 1e-12)
     bkt = F.least(
         F.lit(n_buckets - 1),
@@ -206,17 +211,11 @@ def asof_join_bucketed(
     )
 
 
-def funnel_counts(
-    events: DataFrame,
-    stages: tuple = ("view", "click", "purchase"),
-    budget_minutes: int = 1440,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Ordered-funnel conversion: how many users perform each stage
-    STRICTLY AFTER their previous stage's first qualifying event and
-    within ``budget_minutes`` of it (the product-analytics funnel,
+def funnel_counts(events: DataFrame) -> DataFrame:
+    """Ordered-funnel conversion over view -> click -> purchase: how
+    many users perform each stage STRICTLY AFTER their previous
+    stage's first qualifying event and within 1440 minutes of it (the
+    product-analytics funnel,
     built from first-occurrence semantics so it is deterministic and
     SQL-mirrorable -- no per-row path state).
 
@@ -228,24 +227,25 @@ def funnel_counts(
 
     Returns ONE row: (n_<stage1>, n_<stage2>, ...).
     """
-    u, ts = F.col(user_col), F.col(ts_col)
+    stages = ("view", "click", "purchase")
+    ts = F.col("ts")
     frontier = (
-        events.filter(F.col(type_col) == stages[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
+        events.filter(F.col("event_type") == stages[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("_t"))
     )
     counts = [frontier.count()]
     for stage in stages[1:]:
         nxt = (
-            events.filter(F.col(type_col) == stage)
-            .join(F.broadcast(frontier), user_col)
+            events.filter(F.col("event_type") == stage)
+            .join(F.broadcast(frontier), "user_id")
             .filter(
                 (ts > F.col("_t"))
                 & (ts <= F.col("_t")
-                   + F.expr(f"INTERVAL {budget_minutes} MINUTES"))
+                   + F.expr("INTERVAL 1440 MINUTES"))
             )
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("_t"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("_t"))
         )
         frontier = nxt
         counts.append(frontier.count())

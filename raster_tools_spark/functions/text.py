@@ -87,8 +87,7 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def bpe_ish_token_count(docs: DataFrame, text_col: str = "text"
-                        ) -> DataFrame:
+def bpe_ish_token_count(docs: DataFrame) -> DataFrame:
     """BPE-ish subword token counting via a dialect-portable regex:
     letter runs, digit runs, and single punctuation marks each count as
     one token (the coarse shape of a byte-pair pre-tokenizer).  Pure
@@ -97,48 +96,41 @@ def bpe_ish_token_count(docs: DataFrame, text_col: str = "text"
     pat = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
     return docs.select(
         "doc_id",
-        token_count_col(F.col(text_col)).alias("ws_tokens"),
+        token_count_col(F.col("text")).alias("ws_tokens"),
         F.size(
-            F.regexp_extract_all(F.col(text_col), F.lit(pat), 0)
+            F.regexp_extract_all(F.col("text"), F.lit(pat), 0)
         ).alias("bpe_ish_tokens"),
     )
 
 
-def rolling_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 16,
-    base: int = 256,
-    mod: int = 1_000_003,
-    text_col: str = "text",
-) -> DataFrame:
+def rolling_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
-    polynomial rolling hash over every k-char gram, then the minimum
-    hash of each full sliding window of ``window`` grams; the DISTINCT
-    minima are the document's fingerprints.
+    base-256 polynomial rolling hash mod 1_000_003 over every 8-char
+    gram, then the minimum hash of each full sliding window of 16
+    grams; the DISTINCT minima are the document's fingerprints.
 
     All JVM expressions: gram positions via sequence+explode, the
-    k-term Horner hash as a codegen'd arithmetic chain, the window
+    8-term Horner hash as a codegen'd arithmetic chain, the window
     minimum via a min() frame -- no Python, exact integer math that
     any oracle engine reproduces."""
     from pyspark.sql import Window as W
 
-    n_grams = F.length(F.col(text_col)) - k + 1
-    pos = docs.filter(n_grams >= window).select(
+    n_grams = F.length(F.col("text")) - 8 + 1
+    pos = docs.filter(n_grams >= 16).select(
         "doc_id",
-        F.col(text_col).alias("_t"),
+        F.col("text").alias("_t"),
         F.explode(F.sequence(F.lit(1), n_grams)).alias("p"),
     )
     # Horner chain: h = ((...(c0*B + c1)*B + c2)...) % m per step
     acc = F.lit(0).cast("long")
-    for j in range(k):
+    for j in range(8):
         c = F.ascii(F.expr(f"substring(_t, p + {j}, 1)")).cast("long")
-        acc = (acc * F.lit(base).cast("long") + c) % F.lit(mod)
+        acc = (acc * F.lit(256).cast("long") + c) % F.lit(1_000_003)
     hashed = pos.select(
         "doc_id", "p", acc.alias("h"),
-        (F.length("_t") - k + 1 - window + 1).alias("_maxp"),
+        (F.length("_t") - 8 + 1 - 16 + 1).alias("_maxp"),
     )
-    win = W.partitionBy("doc_id").orderBy("p").rowsBetween(0, window - 1)
+    win = W.partitionBy("doc_id").orderBy("p").rowsBetween(0, 16 - 1)
     fps = hashed.select(
         "doc_id",
         F.min("h").over(win).alias("fp"),
@@ -149,8 +141,7 @@ def rolling_fingerprints(
     )
 
 
-def repetition_metrics(docs: DataFrame, text_col: str = "text"
-                       ) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Repetition-based quality signals (the Gopher/MassiveText rule
     family: boilerplate and spam show up as n-gram repetition): per
     document, the fraction of word-bigram occurrences taken by the
@@ -162,7 +153,7 @@ def repetition_metrics(docs: DataFrame, text_col: str = "text"
     top_bigram_frac, dup_trigram_frac)."""
     from .dedup import _spread
 
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     d = _spread(docs, "doc_id").select(
         "doc_id", words.alias("w")
     ).filter(F.size("w") >= 3)
@@ -217,7 +208,7 @@ EMAIL_PAT = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+"
 PHONE_PAT = r"[0-9][0-9][0-9][0-9][0-9][0-9][0-9]+"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII scrubbing for corpus curation: count and redact email
     addresses and long digit runs (phone-ish) with typed
     placeholders.  Patterns restricted to constructs Java regex and
@@ -225,7 +216,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     regexp codegen, no shuffle at all.  Returns (doc_id, n_emails,
     n_phones, clean_fp) where clean_fp is the md5 of the redacted
     text (the downstream dedup key)."""
-    t = F.col(text_col)
+    t = F.col("text")
     emails = F.size(F.regexp_extract_all(t, F.lit(EMAIL_PAT), 0))
     cleaned = F.regexp_replace(
         F.regexp_replace(t, EMAIL_PAT, "<EMAIL>"),
@@ -245,8 +236,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def oov_fraction(docs: DataFrame, vocab_size: int = 1000,
-                 text_col: str = "text") -> DataFrame:
+def oov_fraction(docs: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """Out-of-vocabulary scoring against the corpus' OWN top-K
     vocabulary: the rank-based form of LM-quality filtering (docs
     full of tokens the corpus has never seen rank as noise), with no
@@ -260,7 +250,7 @@ def oov_fraction(docs: DataFrame, vocab_size: int = 1000,
     map-side -- the corpus-sized side never shuffles.  Returns
     (doc_id, n_tokens, oov_frac)."""
     toks = docs.select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("t")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("t")
     )
     vocab = (
         toks.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
@@ -285,31 +275,26 @@ def oov_fraction(docs: DataFrame, vocab_size: int = 1000,
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    quotas: dict,
-    default_pct: int = 100,
-    salt: str = "strat1",
-) -> DataFrame:
+def stratified_sample(docs: DataFrame, quotas: dict) -> DataFrame:
     """Deterministic language-balanced downsampling: keep a document
     iff its md5-derived uniform draw falls under its language's quota
-    (percent).  The draw is a pure function of (salt, doc_id), so the
+    (percent).  The draw is a pure function of doc_id, so the
     sample is identical at any parallelism and reproducible by any
     engine with md5 -- the corpus-mixing primitive of training-data
     pipelines (downweight over-represented languages without a shuffle
     or an RNG).
 
     ``quotas``: {lang: keep_percent 0..100}; unlisted langs keep
-    ``default_pct``.  All JVM expressions: md5 -> first 8 hex chars ->
-    int -> % 100.
+    every document.  All JVM expressions: md5 of "strat1" || doc_id ->
+    first 8 hex chars -> int -> % 100.
     """
     draw = (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), F.col("doc_id")
+        F.conv(F.substring(F.md5(F.concat(F.lit("strat1"), F.col("doc_id")
                                           .cast("string"))), 1, 8),
                16, 10)
         .cast("long") % 100
     )
-    quota = F.lit(default_pct)
+    quota = F.lit(100)
     for lang, pct in sorted(quotas.items()):
         quota = F.when(F.col("lang") == lang, F.lit(pct)).otherwise(quota)
     # filter on the expression directly: materializing a named column
@@ -338,9 +323,7 @@ def derive_n_shards(n_docs: int) -> int:
     return max(MIN_SHARDS, math.ceil(n_docs / TARGET_DOCS_PER_SHARD))
 
 
-def pack_sequences(
-    docs, budget: int, id_col: str = "doc_id", text_col: str = "text",
-):
+def pack_sequences(docs, budget: int):
     """Greedy sequential sequence packing (the pre-training batching
     op): walk each shard's documents in id order, filling packs of at
     most ``budget`` whitespace tokens; a document that would overflow
@@ -362,9 +345,9 @@ def pack_sequences(
     n_shards = derive_n_shards(docs.count())
 
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(id_col) % n_shards).alias("shard"),
-        F.size(F.split(F.col(text_col), " ")).cast("long")
+        "doc_id",
+        (F.col("doc_id") % n_shards).alias("shard"),
+        F.size(F.split(F.col("text"), " ")).cast("long")
         .alias("n_tokens"),
     )
 
@@ -398,14 +381,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_scores(
-    docs: DataFrame,
-    terms,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms) -> DataFrame:
     """Okapi BM25 score of every document against a fixed small query
     term list.  Returns ``(doc_id, dl, score)`` for documents with
     score > 0, score floor-rounded to 4 dp.
@@ -428,9 +404,8 @@ def bm25_scores(
     from .dedup import _spread
 
     terms = list(terms)
-    d = _spread(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("_w"),
+    d = _spread(docs, "doc_id").select(
+        "doc_id", F.split(F.col("text"), " ").alias("_w"),
     ).select(
         "doc_id",
         F.size("_w").alias("dl"),
@@ -458,6 +433,7 @@ def bm25_scores(
         ],
     )
     scored = d.crossJoin(F.broadcast(stats))
+    k1, b = BM25_K1, BM25_B
     n = F.col("_n").cast("double")
     avgdl = F.col("_sumdl").cast("double") / n
     contrib = []
@@ -480,7 +456,7 @@ def bm25_scores(
     )
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """Corpus text normalization (the cleanup stage every training
     pipeline runs before dedup): lowercase, strip non-printable-ASCII
     bytes, collapse whitespace runs, trim.  Pure JVM regex in the
@@ -490,7 +466,7 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Returns (doc_id, clean_text, n_chars_clean, clean_fp).
     """
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     # whitespace chars -> plain space FIRST (so tabs/newlines act as
     # separators instead of being dropped by the printable filter),
     # then strip non-printables, then collapse the surviving spaces

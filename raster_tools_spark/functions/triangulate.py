@@ -7,7 +7,7 @@ Algorithm: Bowyer-Watson incremental insertion with a super-triangle,
 deterministic insertion order (input order), and float64 in-circle
 determinants.  The evaluation step assigns each query point to the
 triangle with the largest minimum barycentric weight; queries whose
-best weight is below ``-eps`` are outside the convex hull and return
+best weight is below -1e-9 are outside the convex hull and return
 NaN (callers fall back to nearest, as griddata's nearest method does).
 
 The planar-reproduction property -- ANY valid triangulation of points
@@ -155,8 +155,6 @@ def interp_linear(
     z: np.ndarray,
     qx: np.ndarray,
     qy: np.ndarray,
-    eps: float = 1e-9,
-    chunk: int = 4096,
 ) -> np.ndarray:
     """Piecewise-linear interpolation of z at (qx, qy); NaN outside the
     convex hull.  Each query uses the triangle with the largest minimum
@@ -193,7 +191,7 @@ def interp_linear(
         float(max(ty2.max(), qy.max())) - gy1,
         1e-9,
     )
-    slack = 2.0 * eps * extent
+    slack = 2.0 * 1e-9 * extent
     # bucket edge: no triangle bbox (plus eps slack) spans more than
     # one bucket neighborhood; floor the count so tiny clouds stay in
     # one bucket and huge ones cap the hash table
@@ -243,8 +241,8 @@ def interp_linear(
         sel = reg_t[t0:t1]
         a, b, c = a_all[sel], b_all[sel], c_all[sel]
         det = det_all[sel]
-        for s in range(0, qidx.size, chunk):
-            qs = qidx[s: s + chunk]
+        for s in range(0, qidx.size, 4096):
+            qs = qidx[s: s + 4096]
             dqx = qx[qs, None] - c[None, :, 0]
             dqy = qy[qs, None] - c[None, :, 1]
             w1 = (
@@ -259,7 +257,7 @@ def interp_linear(
             minw = np.minimum(np.minimum(w1, w2), w3)
             best = np.argmax(minw, axis=1)
             rows = np.arange(qs.size)
-            good = minw[rows, best] >= -eps
+            good = minw[rows, best] >= -1e-9
             bt = tri[sel[best[good]]]
             out[qs[good]] = (
                 w1[rows[good], best[good]] * z[bt[:, 0]]
@@ -274,7 +272,6 @@ def nearest_values(
     z: np.ndarray,
     qx: np.ndarray,
     qy: np.ndarray,
-    chunk: int = 2048,
 ) -> np.ndarray:
     """Nearest-point value per query; distance ties break to the LOWEST
     point index (deterministic, mirrored by the SQL oracle).
@@ -286,8 +283,8 @@ def nearest_values(
     the tile's nearest-neighbor upper bound (min over points of the max
     distance to the bbox corners) by a relative slack, so float
     rounding can only ADD candidates.  The survivors stay in ascending
-    point order and each tile's queries are scanned ``chunk`` rows at a
-    time (working set ``chunk`` x candidates, however weak the
+    point order and each tile's queries are scanned 2048 rows at a
+    time (working set 2048 x candidates, however weak the
     pruning) with the same per-pair expression, so argmin's
     first-minimum rule picks the same lowest-index winner as a full
     scan.
@@ -329,8 +326,8 @@ def nearest_values(
         cand = np.nonzero(dmin2 <= dup2 * (1.0 + 1e-9) + 1e-12)[0]
         cx = px[cand]
         cy = py[cand]
-        for s in range(0, qsel.size, chunk):
-            qc = qsel[s: s + chunk]
+        for s in range(0, qsel.size, 2048):
+            qc = qsel[s: s + 2048]
             dx = qx[qc, None] - cx[None, :]
             dy = qy[qc, None] - cy[None, :]
             d2 = dx * dx + dy * dy

@@ -50,7 +50,7 @@ def _edges_of_rings(rings: Sequence[np.ndarray]):
     )
 
 
-def points_in_rings(px, py, rings, chunk=262144):
+def points_in_rings(px, py, rings):
     """Even-odd PIP for arrays of points against a ring set.
 
     Returns a boolean array aligned with ``px``/``py``.  Vectorized over
@@ -64,7 +64,7 @@ def points_in_rings(px, py, rings, chunk=262144):
         return np.zeros(px.shape, dtype=bool)
 
     out = np.zeros(px.size, dtype=bool)
-    step = max(chunk // max(n_edges, 1), 1)
+    step = max(262144 // max(n_edges, 1), 1)
     with np.errstate(divide="ignore", invalid="ignore"):
         for s in range(0, px.size, step):
             e = min(s + step, px.size)
@@ -227,7 +227,7 @@ def _bbox_overlap(a, b) -> bool:
     )
 
 
-def sq_distance_to_rings(px, py, rings, chunk=262144) -> np.ndarray:
+def sq_distance_to_rings(px, py, rings) -> np.ndarray:
     """SQUARED Euclidean distance from each point to the polygon
     BOUNDARY (the ring edges), vectorized points x edges.
 
@@ -244,7 +244,7 @@ def sq_distance_to_rings(px, py, rings, chunk=262144) -> np.ndarray:
     ey = y2 - y1
     ee = ex * ex + ey * ey
     out = np.full(px.size, np.inf)
-    step = max(chunk // max(x1.size, 1), 1)
+    step = max(262144 // max(x1.size, 1), 1)
     with np.errstate(divide="ignore", invalid="ignore"):
         for s in range(0, px.size, step):
             e = min(s + step, px.size)

@@ -133,12 +133,6 @@ class GeoTransform(tuple):
         return {"xoff": x1, "yoff": y1, "xsize": x2 - x1, "ysize": y2 - y1}
 
 
-#: The engine's reference grid: origin at the world top-left, 0.5 m cells,
-#: north-up (negative d) -- same shape as the reference's fixture transform
-#: ``(200000, 1, 0, 400007, 0, -1)`` (fill/tests.py:47-52).
-REF_GT = GeoTransform((0.0, CELL_SIZE, 0.0, WORLD_TOP, 0.0, -CELL_SIZE))
-
-
 # ---------------------------------------------------------------------------
 # Quadtree cell keys.
 # ---------------------------------------------------------------------------
@@ -174,13 +168,6 @@ def cell_of_xy(x, y, res):
         np.int64
     )
     return pack_cell(np.int64(res), ix, iy)
-
-
-def parent_cell(cell_id):
-    """Quadtree rollup: resolution r -> r-1 (utils.py:38-51 semantics:
-    the 2x2 quad at res r collapses into one cell at res r-1)."""
-    res, ix, iy = unpack_cell(cell_id)
-    return pack_cell(res - 1, ix >> 1, iy >> 1)
 
 
 def cell_bounds(cell_id):
@@ -231,9 +218,10 @@ def covering_cells(envelope, res, pad=0.0):
     return out
 
 
-def n_covering(envelope, res, pad=0.0):
-    """Count of :func:`covering_cells` without materializing them."""
-    jx1, jx2, jy1, jy2 = _cover_range(envelope, res, pad)
+def n_covering(envelope, res):
+    """Count of :func:`covering_cells` (unpadded) without materializing
+    them."""
+    jx1, jx2, jy1, jy2 = _cover_range(envelope, res, 0.0)
     return max(jx2 - jx1, 0) * max(jy2 - jy1, 0)
 
 
@@ -253,14 +241,6 @@ def ring_cells(cell_id, k=1):
             if jx < 0 or jy < 0:
                 continue
             out.append(int(pack_cell(res, jx, jy)))
-    return out
-
-
-def disk_cells(cell_id, k=1):
-    """Cells within Chebyshev distance <= k (grid_disk analog)."""
-    out = []
-    for r in range(0, k + 1):
-        out.extend(ring_cells(cell_id, r))
     return out
 
 

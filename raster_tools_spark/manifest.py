@@ -122,13 +122,3 @@ def run_with_manifest(
     inc.write.mode("append").parquet(manifest_dir)
     return inc
 
-
-def skew_metrics(manifest: DataFrame) -> DataFrame:
-    """Per-job skew ratio: max/mean rows per unit (the metric the
-    salting threshold feeds on)."""
-    return manifest.groupBy("job_id").agg(
-        F.count(F.lit(1)).alias("units"),
-        F.sum("rows").alias("rows"),
-        (F.max("rows") / F.avg("rows")).alias("skew_ratio"),
-        F.sum("bytes").alias("bytes"),
-    )

@@ -21,8 +21,9 @@ CONTOUR_SCHEMA = (
 )
 
 
-def contour_tiles(tiles: DataFrame, nodata: int = 255) -> DataFrame:
-    """tiles(cell_id, bytes, fmt) -> one row per footprint ring:
+def contour_tiles(tiles: DataFrame) -> DataFrame:
+    """tiles(cell_id, bytes, fmt) -> one row per footprint ring (the
+    non-255 pixels):
     (cell_id, ring_id, n_pts, area, geom_wkb) with world-coordinate
     polygon WKB."""
 
@@ -31,7 +32,7 @@ def contour_tiles(tiles: DataFrame, nodata: int = 255) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = px != nodata
+                mask = px != 255
                 if not mask.any():
                     continue
                 x1, _, _, y2 = cell_bounds(int(t.cell_id))

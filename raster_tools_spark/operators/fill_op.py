@@ -25,8 +25,8 @@ FILLED_SCHEMA = (
 )
 
 
-def fill_voids_tiles(tiles: DataFrame, nodata: int = 255) -> DataFrame:
-    """tiles(cell_id, bytes, fmt) -> same tiles with every nodata void
+def fill_voids_tiles(tiles: DataFrame) -> DataFrame:
+    """tiles(cell_id, bytes, fmt) -> same tiles with every nodata (255) void
     filled by the multi-resolution recursive kernel; ``filled_px``
     counts the pixels that were voids."""
 
@@ -35,11 +35,11 @@ def fill_voids_tiles(tiles: DataFrame, nodata: int = 255) -> DataFrame:
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                void = px == nodata
+                void = px == 255
                 n_void = int(void.sum())
                 if n_void and not void.all():
                     filled = fill_voids(
-                        px.astype(np.float64), float(nodata)
+                        px.astype(np.float64), 255.0
                     )
                     out = px.copy()
                     out[void] = np.clip(

@@ -281,9 +281,12 @@ def _fill_pass(tiles: DataFrame, extent, step: int, offset: int,
     )
 
 
-def fill_depressions_tiles(
-    tiles: DataFrame, step: int = 100, offsets=(0, 25, 50)
-) -> DataFrame:
+# staged fill: FILL_STEP-px blocks, one pass per offset
+FILL_STEP = 100
+FILL_OFFSETS = (0, 25, 50)
+
+
+def fill_depressions_tiles(tiles: DataFrame) -> DataFrame:
     """Staged complex depression fill over the tile table; requires a
     gap-free rectangular mosaic of SAME-RESOLUTION tiles (fragments of
     absent tiles would fill as nodata).  u8 and f4 tiles both work
@@ -298,8 +301,8 @@ def fill_depressions_tiles(
     tile_px = int(round(_ce(res) / _CS))
     extent = _tile_extent_at(tiles, tile_px)
     out = tiles
-    for offset in offsets:
-        out = _fill_pass(out, extent, step, offset, res, tile_px)
+    for offset in FILL_OFFSETS:
+        out = _fill_pass(out, extent, FILL_STEP, offset, res, tile_px)
         out = out.localCheckpoint(eager=False)
     return out
 
@@ -430,8 +433,7 @@ def _build_state(pdf: pd.DataFrame, tile_px: int) -> pd.DataFrame:
     )
 
 
-def _route(pdf: pd.DataFrame, qty_col: str = "qty",
-           tile_px: int = TILE_PX) -> pd.DataFrame:
+def _route(pdf: pd.DataFrame, tile_px: int = TILE_PX) -> pd.DataFrame:
     """Walk each inflow (px, qty) through one tile's static pointers;
     return next-hop outflows (cell_id, px, qty)."""
     n = tile_px * tile_px
@@ -443,7 +445,7 @@ def _route(pdf: pd.DataFrame, qty_col: str = "qty",
     rows = []
     for t in pdf.itertuples():
         cur = int(t.px)
-        qty = int(getattr(t, qty_col))
+        qty = int(t.qty)
         for _ in range(n + 1):
             nxt = int(ptr[cur])
             if nxt == _SINK:
@@ -541,11 +543,16 @@ def _driver_tail(spark, state: DataFrame, records,
     return events
 
 
+# accumulate_tiles: distributed routing rounds, the in-flight record
+# count below which the driver finishes the fixpoint, and the records
+# the driver tail may collect
+MAX_ROUNDS = 64
+TAIL_THRESHOLD = 1024
+DRIVER_TAIL_MAX_RECORDS = 1_000_000
+
+
 def accumulate_tiles(
-    dir_tiles: DataFrame, max_rounds: int = 64,
-    tail_threshold: int = 1024, tile_px: int | None = None,
-    driver_tail_max_records: int = 1_000_000,
-    driver_tail_max_tiles: int = 1024,
+    dir_tiles: DataFrame, tile_px: int | None = None,
 ) -> DataFrame:
     """Global flow accumulation over direction tiles (cell_id, bytes,
     fmt).  Returns (cell_id, acc binary: zlib int64[65536]) -- equal to
@@ -553,10 +560,10 @@ def accumulate_tiles(
 
     The driver-tail finish (small remainders and round exhaustion) is
     bounded: it raises a clear error instead of OOMing the driver when
-    the remainder exceeds ``driver_tail_max_records`` in-flight records
-    or touches more than ``driver_tail_max_tiles`` tile pointer arrays
-    (~tile_px^2 * 8 bytes each); raise ``max_rounds`` (more distributed
-    routing) or the bounds to proceed.
+    the remainder exceeds ``DRIVER_TAIL_MAX_RECORDS`` in-flight records
+    or touches more than 1024 tile pointer arrays (~tile_px^2 * 8 bytes
+    each); raise ``MAX_ROUNDS`` (more distributed routing) or the
+    bounds to proceed.
 
     ``tile_px=None`` (the default) derives the tile edge from the
     tiles' own cell resolution, same as fill_depressions_tiles and
@@ -619,27 +626,28 @@ def accumulate_tiles(
     def _finish_on_driver(inflows, n_records):
         """Route the remaining records to completion on the driver and
         append the generated inflow events (raises rather than drop;
-        bounded by driver_tail_max_records/_tiles rather than OOM)."""
+        bounded by DRIVER_TAIL_MAX_RECORDS and 1024 tiles rather than
+        OOM)."""
         nonlocal all_inflows
-        if n_records > driver_tail_max_records:
+        if n_records > DRIVER_TAIL_MAX_RECORDS:
             raise RuntimeError(
                 f"flow-accumulation driver tail asked to collect "
                 f"{n_records} in-flight records, above the "
-                f"driver_tail_max_records={driver_tail_max_records} "
-                "driver-memory bound; raise max_rounds (more "
+                f"DRIVER_TAIL_MAX_RECORDS={DRIVER_TAIL_MAX_RECORDS} "
+                "driver-memory bound; raise MAX_ROUNDS (more "
                 "distributed routing) or the bound to proceed"
             )
         log.info(
             "flow-accumulation driver tail: collecting %d in-flight "
             "records (tile cache bound %d tiles)",
-            n_records, driver_tail_max_tiles,
+            n_records, 1024,
         )
         events = _driver_tail(
             spark, state,
             [(int(r.cell_id), int(r.px), int(r.qty))
              for r in inflows.collect()],
             tile_px=tile_px,
-            max_tiles=driver_tail_max_tiles,
+            max_tiles=1024,
         )
         if events:
             tail_df = spark.createDataFrame(
@@ -650,7 +658,7 @@ def accumulate_tiles(
             )
             all_inflows = all_inflows.unionByName(tail_df)
 
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         inflows = outflows.groupBy("cell_id", "px").agg(
             F.sum("qty").alias("qty")
         )
@@ -662,7 +670,7 @@ def accumulate_tiles(
             inflows if all_inflows is None
             else all_inflows.unionByName(inflows)
         )
-        if n_in <= tail_threshold:
+        if n_in <= TAIL_THRESHOLD:
             # LONG-TAIL FINISH: the remaining flow is a handful of
             # boundary records ping-ponging between a few tiles (a
             # stream zigzagging along a seam).  Distributed rounds
@@ -678,11 +686,11 @@ def accumulate_tiles(
         )
         outflows = routed.localCheckpoint(eager=True)
     else:
-        # max_rounds exhausted with flow still moving: the last routed
+        # MAX_ROUNDS exhausted with flow still moving: the last routed
         # outflows were never folded into all_inflows -- truncating
         # here would silently under-count every catchment whose flow
-        # crosses more than max_rounds tile hops.  Force the driver
-        # tail on the remainder regardless of tail_threshold.
+        # crosses more than MAX_ROUNDS tile hops.  Force the driver
+        # tail on the remainder regardless of TAIL_THRESHOLD.
         inflows = outflows.groupBy("cell_id", "px").agg(
             F.sum("qty").alias("qty")
         )

@@ -18,10 +18,8 @@ re-expression -- the reusable ``with_halo`` pattern:
 3. the stencil kernel runs on the padded array and crops the margin.
 
 Kernels ported bit-exactly:
-- ``smooth``      3x3 kernel correlate (fill/fill.py:41-51)
 - ``zevenbergen_thorne`` hillshade (hillshade.py:23-48)
-- ``minimum_filter`` / ``maximum_filter`` 3x3 (flow_fil.py:34-41,
-  shadow.py:126-127, line_up.py:150-165)
+- ``aspect_octant_kernel`` 8-way aspect from the same gradients
 """
 
 from __future__ import annotations
@@ -222,48 +220,6 @@ def halo_stencil(
 # stencil kernels (bit-exact ports)
 # ---------------------------------------------------------------------------
 
-def smooth_kernel(padded: np.ndarray) -> np.ndarray:
-    """3x3 restore-smoothing kernel (fill/fill.py:41-51)."""
-    from ..fillnodata import KERNEL
-
-    acc = np.zeros(padded.shape, dtype=np.float64)
-    p = np.pad(padded.astype(np.float64), 1, mode="symmetric")
-    for di in range(3):
-        for dj in range(3):
-            acc += KERNEL[di, dj] * p[
-                di : di + padded.shape[0], dj : dj + padded.shape[1]
-            ]
-    return np.clip(np.round(acc), 0, 255).astype(np.uint8)
-
-
-def minimum_filter3(padded: np.ndarray) -> np.ndarray:
-    """3x3 minimum filter (flow_fil.py:34-41 depression edge)."""
-    p = np.pad(padded, 1, mode="edge")
-    out = padded.copy()
-    for di in range(3):
-        for dj in range(3):
-            np.minimum(
-                out,
-                p[di : di + padded.shape[0], dj : dj + padded.shape[1]],
-                out=out,
-            )
-    return out
-
-
-def maximum_filter3(padded: np.ndarray) -> np.ndarray:
-    """3x3 maximum filter (shadow.py:126-127 widening)."""
-    p = np.pad(padded, 1, mode="edge")
-    out = padded.copy()
-    for di in range(3):
-        for dj in range(3):
-            np.maximum(
-                out,
-                p[di : di + padded.shape[0], dj : dj + padded.shape[1]],
-                out=out,
-            )
-    return out
-
-
 def _zt_gradients(dem: np.ndarray, xres: float, yres: float):
     """Zevenbergen-Thorne style gradient pair.
 
@@ -279,23 +235,17 @@ def _zt_gradients(dem: np.ndarray, xres: float, yres: float):
     return gx * (-2.0 / xres), gy * (2.0 / yres)
 
 
-def zevenbergen_thorne(
-    array: np.ndarray,
-    resolution=(0.5, 0.5),
-    altitude: float = 45.0,
-    azimuth: float = 315.0,
-    z_scale: float = 0.5,
-) -> np.ndarray:
+def zevenbergen_thorne(array: np.ndarray) -> np.ndarray:
     """Hillshade a la gdaldem's Zevenbergen-Thorne mode: shaded value
-    from the angle between the light vector and the slope/aspect
-    normal, scaled into 1..255 (0 reserved; published gdaldem
-    formulation)."""
+    from the angle between the light vector (altitude 45, azimuth 315)
+    and the slope/aspect normal of a 0.5 m DEM (z scale 0.5), scaled
+    into 1..255 (0 reserved; published gdaldem formulation)."""
     dem = array.astype(np.float64)
-    xres, yres = resolution
-    alt = math.radians(altitude)
-    az = math.radians(azimuth)
+    z_scale = 0.5
+    alt = math.radians(45.0)
+    az = math.radians(315.0)
 
-    x, y = _zt_gradients(dem, xres, yres)
+    x, y = _zt_gradients(dem, 0.5, 0.5)
     slope_sq = x * x + y * y
     aspect = np.arctan2(y, x)
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from typing import List
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,15 +58,12 @@ def knn_join(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 4,
-    res: int = 9,
     max_radius: int = 8,
-    query_cols=("qid", "cx", "cy"),
-    cand_cols=("cid", "cx", "cy"),
 ) -> DataFrame:
     """For each query point, the k nearest candidate points.
 
     ``queries``: (qid, cx, cy, cell) / ``candidates``: (cid, cx, cy,
-    cell) with ``cell`` the packed grid cell at ``res``.  Distance is
+    cell) with ``cell`` the packed grid cell at res 9.  Distance is
     Euclidean; self-matches (qid == cid) are NOT excluded -- filter
     upstream if undesired.
 
@@ -76,17 +72,17 @@ def knn_join(
     at least that far away, and the strict inequality protects the
     (dist, cid) tie-break against an unseen equidistant candidate.
     """
-    edge = cell_edge(res)
+    edge = cell_edge(9)
     q = queries.select(
-        F.col(query_cols[0]).alias("qid"),
-        F.col(query_cols[1]).alias("qx"),
-        F.col(query_cols[2]).alias("qy"),
+        "qid",
+        F.col("cx").alias("qx"),
+        F.col("cy").alias("qy"),
         F.col("cell").alias("qcell"),
     )
     c = candidates.select(
-        F.col(cand_cols[0]).alias("cid"),
-        F.col(cand_cols[1]).alias("nx"),
-        F.col(cand_cols[2]).alias("ny"),
+        "cid",
+        F.col("cx").alias("nx"),
+        F.col("cy").alias("ny"),
         F.col("cell").alias("ccell"),
     )
 
@@ -155,18 +151,3 @@ def knn_join(
         radius *= 2
     return results
 
-
-def knn_brute_force(
-    queries_pdf: pd.DataFrame, candidates_pdf: pd.DataFrame, k: int = 4
-) -> pd.DataFrame:
-    """Test oracle: exact kNN via full distance matrix (numpy)."""
-    qx = queries_pdf[["cx", "cy"]].to_numpy()
-    cx = candidates_pdf[["cx", "cy"]].to_numpy()
-    d = np.sqrt(((qx[:, None, :] - cx[None, :, :]) ** 2).sum(axis=2))
-    rows = []
-    cids = candidates_pdf["cid"].to_numpy()
-    for qi, qid in enumerate(queries_pdf["qid"].to_numpy()):
-        order = np.lexsort((cids, d[qi]))[:k]
-        for rn, ci in enumerate(order, 1):
-            rows.append((qid, cids[ci], float(d[qi, ci]), rn))
-    return pd.DataFrame(rows, columns=["qid", "cid", "dist", "rn"])

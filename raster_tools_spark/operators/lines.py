@@ -81,7 +81,6 @@ def line_profile(
     lines: DataFrame,
     tiles: DataFrame,
     step: float = CELL_SIZE,
-    res: int = RES_TILE,
 ) -> DataFrame:
     """Drape lines over the tile table: (line_id, seq, value).
 
@@ -89,7 +88,7 @@ def line_profile(
     falling on cells with no tile are dropped (outside coverage).
     """
     samples = sample_line_points(lines, step).withColumn(
-        "cell_id", cell_col(F.col("sx"), F.col("sy"), res)
+        "cell_id", cell_col(F.col("sx"), F.col("sy"), RES_TILE)
     )
     t = tiles.select("cell_id", "bytes", "fmt", "x0", "y_top")
     cand = samples.join(t, "cell_id").select(
@@ -156,14 +155,13 @@ CARPET_SCHEMA = (
 def sample_carpet_points(
     lines: DataFrame,
     step: float = CELL_SIZE,
-    distance: float = 1.0,
     carpet_step: float = CELL_SIZE,
 ) -> DataFrame:
     """Carpet sampling (line_up.py get_carpet semantics): every
     arc-length sample expands into a row of points offset along the
-    local segment NORMAL at ``carpet_step`` spacing up to ``distance``
-    each side.  (cx, cy) carries the on-line center of each row."""
-    n_off = int(np.floor(distance / carpet_step))
+    local segment NORMAL at ``carpet_step`` spacing up to 1 m each
+    side.  (cx, cy) carries the on-line center of each row."""
+    n_off = int(np.floor(1.0 / carpet_step))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -227,19 +225,16 @@ def line_carpet_profile(
     lines: DataFrame,
     tiles: DataFrame,
     step: float = CELL_SIZE,
-    distance: float = 1.0,
     carpet_step: float = CELL_SIZE,
-    res: int = RES_TILE,
-    nodata: int = 255,
 ) -> DataFrame:
     """Carpet drape (line_up.py --distance mode): per on-line sample,
-    the maximum of the raster over the perpendicular carpet row;
-    nodata carpet points are ignored, rows whose whole carpet is
+    the maximum of the raster over the perpendicular 1 m carpet row;
+    nodata (255) carpet points are ignored, rows whose whole carpet is
     nodata (or off-coverage) are dropped.  Returns
     (line_id, seq, cx, cy, value)."""
     samples = sample_carpet_points(
-        lines, step, distance, carpet_step
-    ).withColumn("cell_id", cell_col(F.col("sx"), F.col("sy"), res))
+        lines, step, carpet_step
+    ).withColumn("cell_id", cell_col(F.col("sx"), F.col("sy"), RES_TILE))
     t = tiles.select("cell_id", "bytes", "fmt", "x0", "y_top")
     cand = samples.join(t, "cell_id").select(
         "line_id", "seq", "off", "sx", "sy", "cx", "cy",
@@ -295,7 +290,7 @@ def line_carpet_profile(
         )
     )
     return (
-        vals.filter(F.col("value") != nodata)
+        vals.filter(F.col("value") != 255)
         .groupBy("line_id", "seq")
         .agg(
             F.min("cx").alias("cx"),

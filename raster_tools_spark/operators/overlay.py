@@ -11,7 +11,7 @@ actual remainder POLYGONS (mask_difference_polygons: marching squares
 over the per-feature window, the difference.py output shape).
 
 Distribution: candidate (cell, feature) pairs come from the standard
-covering-cells explode at ``join_res``; each grid cell's window is
+covering-cells explode at ``JOIN_RES``; each grid cell's window is
 rasterized independently (masks never leave the task -- the shuffle
 carries per-feature pixel counts only), then counts aggregate by
 feature.
@@ -28,7 +28,9 @@ from .. import geom
 from ..grid import GeoTransform, WORLD_TOP, cell_bounds, cell_edge
 from .pip import _cover_udf
 
-JOIN_RES_DEFAULT = 9
+JOIN_RES = 9
+# pixel edge (m) of the rasterized overlays
+PIXEL = 4.0
 
 
 def _cell_gt(cell_id: int, pixel: float):
@@ -39,19 +41,18 @@ def _cell_gt(cell_id: int, pixel: float):
 def mask_difference_area(
     layer1: DataFrame,
     layer2: DataFrame,
-    pixel: float = 4.0,
-    join_res: int = JOIN_RES_DEFAULT,
+    pixel: float = PIXEL,
 ) -> DataFrame:
     """Per layer-1 feature: pixels kept after subtracting the union of
     layer 2, on a ``pixel``-meter grid.  Returns (feat_id, total_px,
     kept_px, kept_area)."""
-    npx = int(round(cell_edge(join_res) / pixel))
+    npx = int(round(cell_edge(JOIN_RES) / pixel))
 
     c1 = layer1.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select(F.col("feat_id"), F.col("geom_wkb").alias("wkb1"), "cell")
     c2 = layer2.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select(F.col("geom_wkb").alias("wkb2"), "cell")
 
     # Pre-aggregate layer 2 to ONE list-row per cell before the join:
@@ -368,8 +369,8 @@ def _proper_crossings(A, B):
     return hits
 
 
-def _touches_boundary(pts, ring, eps: float = 1e-9) -> bool:
-    """True when any vertex of ``pts`` lies within ``eps`` of an edge
+def _touches_boundary(pts, ring) -> bool:
+    """True when any vertex of ``pts`` lies within 1e-9 of an edge
     of ``ring`` -- the shared-vertex / vertex-on-edge degeneracies the
     difference walk must not attempt."""
     n = len(ring)
@@ -385,7 +386,7 @@ def _touches_boundary(pts, ring, eps: float = 1e-9) -> bool:
             t = ((px - ax) * dx + (py - ay) * dy) / L2
             t = min(1.0, max(0.0, t))
             qx, qy = ax + t * dx, ay + t * dy
-            if (px - qx) ** 2 + (py - qy) ** 2 < eps * eps:
+            if (px - qx) ** 2 + (py - qy) ** 2 < 1e-9 * 1e-9:
                 return True
     return False
 
@@ -618,7 +619,7 @@ def _gh_union(A, B):
     return rings
 
 
-def _union_lattice_ok(A, B, rings, n=24) -> bool:
+def _union_lattice_ok(A, B, rings) -> bool:
     """Membership audit of a pairwise union: on an offset lattice over
     the joint envelope, a point is inside the output rings (even-odd)
     iff it is inside A or inside B."""
@@ -626,11 +627,11 @@ def _union_lattice_ok(A, B, rings, n=24) -> bool:
                      np.asarray(B, dtype=np.float64)])
     x1, y1 = pts.min(axis=0)
     x2, y2 = pts.max(axis=0)
-    for i in range(n):
-        for j in range(n):
+    for i in range(24):
+        for j in range(24):
             p = (
-                x1 + (x2 - x1) * (i + 0.382) / n,
-                y1 + (y2 - y1) * (j + 0.618) / n,
+                x1 + (x2 - x1) * (i + 0.382) / 24,
+                y1 + (y2 - y1) * (j + 0.618) / 24,
             )
             want = _pt_in_ring(p, A) or _pt_in_ring(p, B)
             got = False
@@ -881,8 +882,6 @@ def _ring_is_hole(ring, mask) -> bool:
 def mask_difference_polygons(
     layer1: DataFrame,
     layer2: DataFrame,
-    pixel: float = 4.0,
-    join_res: int = JOIN_RES_DEFAULT,
 ) -> DataFrame:
     """Geometry-out difference (difference.py:41-57 output shape): per
     layer-1 feature, the REMAINDER polygons after subtracting the
@@ -903,10 +902,10 @@ def mask_difference_polygons(
     from .. import wkb as _wkb
 
     c1 = layer1.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select(F.col("feat_id"), F.col("geom_wkb").alias("wkb1"), "cell")
     c2 = layer2.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select(F.col("geom_wkb").alias("wkb2"), "cell")
     # same per-cell pre-aggregation as mask_difference_area: one
     # list-row per cell, so the join emits |l1_cells| rows, not
@@ -990,19 +989,19 @@ def mask_difference_polygons(
             if rings is not None:
                 return _emit(rings)
         env = geom.envelope(wkb1)
-        j0 = _math.floor(env[0] / pixel)
-        j1 = _math.ceil(env[1] / pixel)
-        i0 = _math.floor((WORLD_TOP - env[3]) / pixel)
-        i1 = _math.ceil((WORLD_TOP - env[2]) / pixel)
+        j0 = _math.floor(env[0] / PIXEL)
+        j1 = _math.ceil(env[1] / PIXEL)
+        i0 = _math.floor((WORLD_TOP - env[3]) / PIXEL)
+        i1 = _math.ceil((WORLD_TOP - env[2]) / PIXEL)
         h, w = i1 - i0, j1 - j0
         if h <= 0 or w <= 0:
             return pd.DataFrame(
                 columns=["feat_id", "ring_id", "n_pts", "area",
                          "is_hole", "geom_wkb"]
             )
-        x0 = j0 * pixel
-        y_top = WORLD_TOP - i0 * pixel
-        gt = GeoTransform((x0, pixel, 0.0, y_top, 0.0, -pixel))
+        x0 = j0 * PIXEL
+        y_top = WORLD_TOP - i0 * PIXEL
+        gt = GeoTransform((x0, PIXEL, 0.0, y_top, 0.0, -PIXEL))
         m1 = geom.rasterize_mask(wkb1, gt, h, w)
         for key in cutter_bytes:
             m1 &= ~geom.rasterize_mask(key, gt, h, w)
@@ -1012,8 +1011,8 @@ def mask_difference_polygons(
             # must survive as an interior HOLE ring, not be filled back
             for rid, ring in enumerate(mask_contours(m1, fill=False)):
                 is_hole = _ring_is_hole(ring, m1)
-                xs = x0 + (ring[:, 1] + 0.5) * pixel
-                ys = y_top - (ring[:, 0] + 0.5) * pixel
+                xs = x0 + (ring[:, 1] + 0.5) * PIXEL
+                ys = y_top - (ring[:, 0] + 0.5) * PIXEL
                 coords = np.column_stack([xs, ys])
                 area = 0.5 * abs(
                     float(
@@ -1055,8 +1054,6 @@ def mask_difference_polygons(
 
 def union_area_exact(
     layer: DataFrame,
-    pixel: float = 4.0,
-    join_res: int = JOIN_RES_DEFAULT,
 ) -> DataFrame:
     """EXACT UnionCascaded area for axis-aligned-rectangle layers
     (overlaps counted once): every rectangle is clipped to its
@@ -1070,9 +1067,9 @@ def union_area_exact(
     mask_union_area: shuffle carries (cell, wkb) pairs only, the
     per-cell work is independent."""
     cells = layer.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select("geom_wkb", "cell")
-    npx = int(round(cell_edge(join_res) / pixel))
+    npx = int(round(cell_edge(JOIN_RES) / PIXEL))
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         cell_id = int(pdf["cell"].iloc[0])
@@ -1090,12 +1087,12 @@ def union_area_exact(
             if x1 < x2 and y1 < y2:
                 rects.append((x1, x2, y1, y2))
         if not exact:
-            gt = _cell_gt(cell_id, pixel)
+            gt = _cell_gt(cell_id, PIXEL)
             union = np.zeros((npx, npx), dtype=bool)
             for b in pdf["geom_wkb"]:
                 union |= geom.rasterize_mask(bytes(b), gt, npx, npx)
             return pd.DataFrame(
-                {"area": [float(union.sum()) * pixel * pixel],
+                {"area": [float(union.sum()) * PIXEL * PIXEL],
                  "inexact": [1]}
             )
         if not rects:
@@ -1127,20 +1124,18 @@ def union_area_exact(
 
 def mask_union_area(
     layer: DataFrame,
-    pixel: float = 4.0,
-    join_res: int = JOIN_RES_DEFAULT,
 ) -> DataFrame:
     """Total area covered by the layer (UnionCascaded semantics:
-    overlaps counted once), on a ``pixel``-meter grid.  Returns one row
+    overlaps counted once), on a ``PIXEL``-meter grid.  Returns one row
     (union_px, union_area)."""
-    npx = int(round(cell_edge(join_res) / pixel))
+    npx = int(round(cell_edge(JOIN_RES) / PIXEL))
     cells = layer.withColumn(
-        "cell", F.explode(_cover_udf(join_res, 0.0)("geom_wkb")["cells"])
+        "cell", F.explode(_cover_udf(JOIN_RES, 0.0)("geom_wkb")["cells"])
     ).select("geom_wkb", "cell")
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         cell_id = int(pdf["cell"].iloc[0])
-        gt = _cell_gt(cell_id, pixel)
+        gt = _cell_gt(cell_id, PIXEL)
         union = np.zeros((npx, npx), dtype=bool)
         for b in pdf["geom_wkb"]:
             union |= geom.rasterize_mask(bytes(b), gt, npx, npx)
@@ -1152,5 +1147,5 @@ def mask_union_area(
     )
     return per.agg(
         F.sum("px").alias("union_px"),
-        (F.sum("px") * float(pixel * pixel)).alias("union_area"),
+        (F.sum("px") * float(PIXEL * PIXEL)).alias("union_area"),
     )

@@ -37,6 +37,10 @@ from pyspark.sql import types as T
 from .. import geom
 from ..grid import covering_cells, n_covering, JOIN_RES
 
+# polygons covering more cells than this are hot: they skip the cell
+# explode and join through the broadcast bbox phase
+HOT_COVER = 64
+
 
 _COVER_SCHEMA = T.StructType([
     *(T.StructField(k, T.DoubleType())
@@ -134,12 +138,12 @@ def pip_join(
     images: DataFrame,
     polygons: DataFrame,
     join_res: int = JOIN_RES,
-    hot_cover: int = 64,
-    keep_cols=("image_id", "cx", "cy"),
     poly_cols=("feat_id", "category", "value"),
 ) -> DataFrame:
     """images (assign_cells output) x polygons(feat_id, geom_wkb, ...)
-    -> containment pairs."""
+    -> containment pairs (image_id, cx, cy, *poly_cols).  Polygons
+    covering more than HOT_COVER cells take the broadcast phase."""
+    keep_cols = ("image_id", "cx", "cy")
     cell_key = f"qk_r{join_res}"
     # the point side is the guide-8 lightweight proxy of the image scan
     # (id + center + cell key, ~50 bytes/row); materialize it lazily so
@@ -152,10 +156,10 @@ def pip_join(
     # both phases and by every broadcast build; checkpoint so the pandas
     # UDF runs once per query instead of once per consumer subtree
     polys = polygons.withColumn(
-        "_pm", _poly_meta_udf(join_res, hot_cover)(F.col("geom_wkb"))
+        "_pm", _poly_meta_udf(join_res, HOT_COVER)(F.col("geom_wkb"))
     ).localCheckpoint(eager=False)
-    hot = polys.filter(F.col("_pm.n_cover") > hot_cover)
-    normal = polys.filter(F.col("_pm.n_cover") <= hot_cover)
+    hot = polys.filter(F.col("_pm.n_cover") > HOT_COVER)
+    normal = polys.filter(F.col("_pm.n_cover") <= HOT_COVER)
     attrs = [c for c in poly_cols if c != "feat_id"]
 
     # the envelope rides along as 4 doubles so a JVM-side bbox predicate

@@ -26,12 +26,11 @@ _FIX_SCHEMA = (
 def fix_nodata(
     images: DataFrame,
     sentinel: float = -32767.0,
-    new_nodata: float = 0.0,
 ) -> DataFrame:
     """images(image_id, bytes, fmt, nodata) -> same payload with
-    sentinel pixels rewritten to ``new_nodata`` and the nodata value
-    remapped; clean rasters pass through byte-identical with
-    changed = 0 (fix_nodata.py:30-33 skip)."""
+    sentinel pixels rewritten to 0 and the nodata value remapped to 0;
+    clean rasters pass through byte-identical with changed = 0
+    (fix_nodata.py:30-33 skip)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -40,20 +39,20 @@ def fix_nodata(
                 px = codecs.decode(bytes(t.bytes), t.fmt)
                 hit = px == sentinel
                 n = int(hit.sum())
-                if n == 0 and float(t.nodata) == new_nodata:
+                if n == 0 and float(t.nodata) == 0.0:
                     rows.append(
                         (t.image_id, bytes(t.bytes), t.fmt,
                          float(t.nodata), 0, 0)
                     )
                     continue
                 out = px.copy()
-                out[hit] = new_nodata
+                out[hit] = 0.0
                 # dispatch on the row's own format so bytes and fmt
                 # stay consistent (a lossy source re-encodes lossy --
                 # the reference's SRTM inputs are lossless i2 tifs)
                 enc = codecs.encode(out, t.fmt)
                 rows.append(
-                    (t.image_id, enc, t.fmt, new_nodata, 1, n)
+                    (t.image_id, enc, t.fmt, 0.0, 1, n)
                 )
             if rows:
                 yield pd.DataFrame(

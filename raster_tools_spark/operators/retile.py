@@ -103,19 +103,15 @@ def _assemble(pdf: pd.DataFrame, tile_px: int, nodata: int) -> pd.DataFrame:
     )
 
 
-def retile(
-    images_cells: DataFrame,
-    res: int = RES_TILE,
-    nodata: int = NODATA_DEFAULT,
-) -> DataFrame:
+def retile(images_cells: DataFrame) -> DataFrame:
     """images (assign_cells output with bytes/fmt/x0/y_top/w/h) ->
-    one merged canonical tile per res-level cell."""
-    tile_px = int(cell_edge(res) / CELL_SIZE)
+    one merged canonical tile per RES_TILE cell."""
+    tile_px = int(cell_edge(RES_TILE) / CELL_SIZE)
     src = images_cells.withColumn(
         "cell_id",
         # explode_outer + null filter below: see zonal._image_cover_udf
         F.explode_outer(
-            _image_cover_udf(res)(
+            _image_cover_udf(RES_TILE)(
                 F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
             )
         ),
@@ -123,15 +119,15 @@ def retile(
         "cell_id", "image_id", "bytes", "fmt", "x0", "y_top", "w", "h"
     ).filter(F.col("cell_id").isNotNull())
     return src.groupBy("cell_id").applyInPandas(
-        lambda pdf: _assemble(pdf, tile_px, nodata), schema=RETILE_SCHEMA
+        lambda pdf: _assemble(pdf, tile_px, NODATA_DEFAULT),
+        schema=RETILE_SCHEMA,
     )
 
 
 AUDIT_SCHEMA = "cell_id long, nodata_px long, mask_bytes binary"
 
 
-def nodata_audit(tiles: DataFrame, nodata: int = NODATA_DEFAULT
-                 ) -> DataFrame:
+def nodata_audit(tiles: DataFrame) -> DataFrame:
     """No-data audit side output (SURVEY.md K4, rasterize.py:190-214):
     for every tile containing nodata pixels, a u1 mask tile marking
     them plus the count -- the inspection artifact the reference writes
@@ -144,7 +140,7 @@ def nodata_audit(tiles: DataFrame, nodata: int = NODATA_DEFAULT
             rows = []
             for t in pdf.itertuples():
                 px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = (px == nodata).astype(np.uint8)
+                mask = (px == NODATA_DEFAULT).astype(np.uint8)
                 n = int(mask.sum())
                 if n == 0:
                     continue  # reference only writes when any()
@@ -167,9 +163,6 @@ def retile_job(
     out_dir: str,
     manifest_dir: str,
     job_id: str = "retile",
-    res: int = RES_TILE,
-    work_res: int = 7,
-    nodata: int = NODATA_DEFAULT,
 ) -> DataFrame:
     """Resumable retile: work units are coarse r7 blocks (the
     reference's block-granularity Index, rextract.py:108-141); each
@@ -179,18 +172,14 @@ def retile_job(
     from .tile import parent_cell_col
 
     def process(pending: DataFrame) -> DataFrame:
-        tiles = retile(
-            pending.drop("unit"), res=res, nodata=nodata
-        )
-        # unit of an output tile = its res->work_res ancestor
+        tiles = retile(pending.drop("unit"))
+        # unit of an output tile = its RES_TILE->r7 ancestor
         unit = F.col("cell_id")
-        for _ in range(res - work_res):
+        for _ in range(RES_TILE - 7):
             unit = parent_cell_col(unit)
         return tiles.withColumn("unit", unit)
 
-    work = images_cells.withColumn(
-        "unit", F.col(f"qk_r{work_res}")
-    )
+    work = images_cells.withColumn("unit", F.col("qk_r7"))
     return mf.run_with_manifest(
         spark, work, "unit", process, out_dir, manifest_dir, job_id
     )

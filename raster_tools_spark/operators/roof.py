@@ -41,15 +41,15 @@ from ..functions.triangulate import griddata_linear_nearest
 NODATA_F4 = float(np.finfo("f4").min)  # reference roof.py:28
 
 
-def _knn_edges(pts: np.ndarray, links: int, limit: float, chunk: int = 512):
+def _knn_edges(pts: np.ndarray, links: int, limit: float):
     """Edges (start, stop) to each point's ``links`` nearest others
     within ``limit``, over ALL coordinate dims (the reference's kd-tree
     is 3-D, roof.py:139); ties by lowest index (stable argsort)."""
     n = len(pts)
     starts, stops = [], []
     lim2 = limit * limit
-    for s in range(0, n, chunk):
-        e = min(s + chunk, n)
+    for s in range(0, n, 512):
+        e = min(s + 512, n)
         d2 = np.zeros((e - s, n))
         for d in range(pts.shape[1]):
             dd = pts[s:e, d:d + 1] - pts[None, :, d]
@@ -85,16 +85,14 @@ def _knn_edges(pts: np.ndarray, links: int, limit: float, chunk: int = 512):
     return np.concatenate(starts), np.concatenate(stops)
 
 
-def classify_points(
-    pts: np.ndarray, links: int = 4, limit: float = 0.5,
-    min_points: int = 900,
-) -> np.ndarray:
-    """u1 keep-mask: 1 for the largest k-NN-graph component
-    (roof.py:127-158), everything for small clouds."""
+def classify_points(pts: np.ndarray) -> np.ndarray:
+    """u1 keep-mask: 1 for the largest 4-NN-graph component with links
+    up to 0.5 m (roof.py:127-158), everything for clouds of fewer than
+    900 points."""
     n = len(pts)
-    if n < min_points:
+    if n < 900:
         return np.ones(n, np.uint8)
-    start, stop = _knn_edges(pts, links, limit)
+    start, stop = _knn_edges(pts, 4, 0.5)
     parent = np.arange(n)
 
     def find(a: int) -> int:
@@ -123,10 +121,6 @@ def roof_rasterize(
     points: DataFrame,
     polygons: DataFrame,
     edge: float = 0.25,
-    links: int = 4,
-    limit: float = 0.5,
-    min_points: int = 900,
-    align: float = 4.0,
 ) -> DataFrame:
     """points(feat_id, x, y, z) x polygons(feat_id, geom_wkb) -> one f4
     raster row per footprint (rawz payload, nodata = f4 min)."""
@@ -147,9 +141,7 @@ def roof_rasterize(
         # (north rule: bit-identical output at any partitioning)
         pdf = pdf.sort_values(["x", "y", "z"], kind="mergesort")
         pts3 = pdf[["x", "y", "z"]].to_numpy(dtype=np.float64)
-        keep = classify_points(
-            pts3, links=links, limit=limit, min_points=min_points
-        )
+        keep = classify_points(pts3)
         kept = pts3[keep.astype(bool)]
         if len(kept) < 3:
             return pd.DataFrame(columns=[
@@ -158,10 +150,10 @@ def roof_rasterize(
             ])
         env = geom.envelope(wkb_b)
         # 4 m-aligned envelope snap (roof.py:63-66)
-        x1 = align * math.floor(env[0] / align)
-        y1 = align * math.floor(env[2] / align)
-        x2 = align * math.ceil(env[1] / align)
-        y2 = align * math.ceil(env[3] / align)
+        x1 = 4.0 * math.floor(env[0] / 4.0)
+        y1 = 4.0 * math.floor(env[2] / 4.0)
+        x2 = 4.0 * math.ceil(env[1] / 4.0)
+        y2 = 4.0 * math.ceil(env[3] / 4.0)
         w = int(round((x2 - x1) / edge))
         h = int(round((y2 - y1) / edge))
         gj, gi = np.meshgrid(np.arange(w), np.arange(h))

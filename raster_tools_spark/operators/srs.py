@@ -192,12 +192,12 @@ def webmerc_inverse(x, y):
     return lon, lat
 
 
-def tm_forward(lon, lat, lon0=3.0, k0=0.9996,
-               false_e=500000.0, false_n=0.0):
-    """Ellipsoidal transverse Mercator forward (UTM when ``lon0`` is a
-    zone's central meridian): degrees -> (easting, northing) meters.
-    Krueger alpha series, order 6 (sub-nanometer within a zone)."""
-    lam = np.radians(np.asarray(lon, dtype=np.float64) - lon0)
+def tm_forward(lon, lat):
+    """Ellipsoidal transverse Mercator forward in UTM zone 31 (central
+    meridian 3 E, scale 0.9996, false easting 500 km): degrees ->
+    (easting, northing) meters.  Krueger alpha series, order 6
+    (sub-nanometer within a zone)."""
+    lam = np.radians(np.asarray(lon, dtype=np.float64) - 3.0)
     phi = np.radians(np.asarray(lat, dtype=np.float64))
     n = WGS84_N
     e2n = 2.0 * np.sqrt(n) / (1.0 + n)
@@ -211,21 +211,20 @@ def tm_forward(lon, lat, lon0=3.0, k0=0.9996,
     for j, a_j in enumerate(ALPHA, start=1):
         xi = xi + a_j * np.sin(2 * j * xi_p) * _cosh(2 * j * eta_p)
         eta = eta + a_j * np.cos(2 * j * xi_p) * _sinh(2 * j * eta_p)
-    easting = false_e + k0 * WGS84_RECT_A * eta
-    northing = false_n + k0 * WGS84_RECT_A * xi
+    easting = 500000.0 + 0.9996 * WGS84_RECT_A * eta
+    northing = 0.0 + 0.9996 * WGS84_RECT_A * xi
     return easting, northing
 
 
-def tm_inverse(easting, northing, lon0=3.0, k0=0.9996,
-               false_e=500000.0, false_n=0.0):
-    """Ellipsoidal transverse Mercator inverse (Krueger beta series +
-    conformal-to-geodetic latitude series)."""
+def tm_inverse(easting, northing):
+    """Ellipsoidal transverse Mercator inverse in UTM zone 31 (Krueger
+    beta series + conformal-to-geodetic latitude series)."""
     n = WGS84_N
-    xi = (np.asarray(northing, dtype=np.float64) - false_n) / (
-        k0 * WGS84_RECT_A
+    xi = np.asarray(northing, dtype=np.float64) / (
+        0.9996 * WGS84_RECT_A
     )
-    eta = (np.asarray(easting, dtype=np.float64) - false_e) / (
-        k0 * WGS84_RECT_A
+    eta = (np.asarray(easting, dtype=np.float64) - 500000.0) / (
+        0.9996 * WGS84_RECT_A
     )
     xi_p = xi.copy()
     eta_p = eta.copy()
@@ -244,7 +243,7 @@ def tm_inverse(easting, northing, lon0=3.0, k0=0.9996,
         + (4279 * n ** 4 / 630) * np.sin(8 * chi)
     )
     lam = np.arctan2(_sinh(eta_p), np.cos(xi_p))
-    return np.degrees(lam) + lon0, np.degrees(phi)
+    return np.degrees(lam) + 3.0, np.degrees(phi)
 
 
 #: pointwise curvilinear maps by name (each: (x_arr, y_arr) -> (x, y))
@@ -256,11 +255,7 @@ CURVILINEAR = {
 }
 
 
-def transform_layer_curvilinear(
-    layer: DataFrame,
-    kind: str,
-    wkb_col: str = "geom_wkb",
-) -> DataFrame:
+def transform_layer_curvilinear(layer: DataFrame, kind: str) -> DataFrame:
     """Reproject a vector layer's WKB geometries through a pointwise
     curvilinear map (``kind`` from :data:`CURVILINEAR`).  Same
     shuffle-free shape as :func:`transform_layer`: one Arrow-batched
@@ -298,14 +293,13 @@ def transform_layer_curvilinear(
     def tf(col: pd.Series) -> pd.Series:
         return col.map(lambda b: tf_one(bytes(b)))
 
-    return layer.withColumn(wkb_col, tf(F.col(wkb_col)))
+    return layer.withColumn("geom_wkb", tf(F.col("geom_wkb")))
 
 
 def transform_layer(
     layer: DataFrame,
     src: Affine,
     dst: Affine = WORLD,
-    wkb_col: str = "geom_wkb",
 ) -> DataFrame:
     """Reproject a vector layer's WKB geometries from the ``src``
     planar frame into the ``dst`` frame (the _prepare_geometry step of
@@ -317,4 +311,4 @@ def transform_layer(
     def tf(col: pd.Series) -> pd.Series:
         return col.map(lambda b: transform_wkb(bytes(b), t))
 
-    return layer.withColumn(wkb_col, tf(F.col(wkb_col)))
+    return layer.withColumn("geom_wkb", tf(F.col("geom_wkb")))

@@ -99,7 +99,6 @@ def parent_cell_col(cell: Column) -> Column:
 def assign_cells(
     images: DataFrame,
     tiles_axis: int = 4096,
-    res_levels=(7, 8, 9, 10, 11),
 ) -> DataFrame:
     """images(+phash, w, h) -> + x0, y_top, cx, cy, qk_r7..qk_r11.
 
@@ -114,7 +113,7 @@ def assign_cells(
         .withColumn("cx", F.col("x0") + F.col("w").cast("double") * 0.25)
         .withColumn("cy", F.col("y_top") - F.col("h").cast("double") * 0.25)
     )
-    for res in res_levels:
+    for res in (7, 8, 9, 10, 11):
         df = df.withColumn(f"qk_r{res}", cell_col(F.col("cx"), F.col("cy"), res))
     return df
 

@@ -92,6 +92,9 @@ from ..grid import (CELL_SIZE, JOIN_RES, RES_TILE, WORLD_TOP,
 from .pip import _cover_udf
 from .tile import cell_col
 
+# radius = max(distance, MULTIPLIER * boundary distance)
+MULTIPLIER = 1.0
+
 DIRECTED_SCHEMA = (
     "line_id long, seq int, sx double, sy double, "
     "fdx double, fdy double, rdx double, rdy double"
@@ -222,7 +225,6 @@ def _pair_with_polygons(
     grow: float,
     distance: float,
     multiplier: float,
-    pair_res: int = JOIN_RES,
 ) -> DataFrame:
     """Broadcast coarse-cell equi-join samples x polygons, then a
     vectorized containment/buffer filter + per-sample radius.
@@ -233,10 +235,10 @@ def _pair_with_polygons(
     distance) (upstream.py:169-172).
     """
     pcells = polygons.withColumn(
-        "pcell", F.explode(_cover_udf(pair_res, grow)("geom_wkb")["cells"])
+        "pcell", F.explode(_cover_udf(JOIN_RES, grow)("geom_wkb")["cells"])
     ).select("feat_id", "geom_wkb", "pcell")
     s = samples.withColumn(
-        "scell", cell_col(F.col("sx"), F.col("sy"), pair_res)
+        "scell", cell_col(F.col("sx"), F.col("sy"), JOIN_RES)
     )
     cand = s.join(F.broadcast(pcells), s["scell"] == pcells["pcell"]).select(
         "line_id", "feat_id", "seq", "sx", "sy",
@@ -378,11 +380,7 @@ def upstream_levels(
     *,
     separation: float = 1.0,
     distance: float = 15.0,
-    multiplier: float = 1.0,
     grow: float = 0.5,
-    nodata: float = 255,
-    res: int = RES_TILE,
-    pair_res: int = JOIN_RES,
 ) -> DataFrame:
     """Lowest-upstream point levels (upstream.py:213-267).
 
@@ -398,14 +396,16 @@ def upstream_levels(
     """
     samples = sample_directed_points(lines, separation)
     pairs = _pair_with_polygons(
-        samples, polygons, grow, distance, multiplier, pair_res
+        samples, polygons, grow, distance, MULTIPLIER
     )
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def disc_cells(sx: pd.Series, sy: pd.Series, r: pd.Series) -> pd.Series:
         out = []
         for x, y, rr in zip(sx, sy, r):
-            out.append(covering_cells((x - rr, x + rr, y - rr, y + rr), res))
+            out.append(
+                covering_cells((x - rr, x + rr, y - rr, y + rr), RES_TILE)
+            )
         return pd.Series(out)
 
     # group samples per covering cell BEFORE the tile join: the join
@@ -467,7 +467,7 @@ def upstream_levels(
                     base = (
                         in_circle
                         & m[i0:i1, j0:j1]
-                        & (px[i0:i1, j0:j1] != nodata)
+                        & (px[i0:i1, j0:j1] != 255)
                     )
                     if not base.any():
                         continue

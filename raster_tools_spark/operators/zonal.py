@@ -455,19 +455,22 @@ _RGB_PARTIAL_SCHEMA = (
 )
 _RGB_FINAL_SCHEMA = "feat_id long, n_px long, result double"
 _RGB_FLUSH_ROWS = 1024
+# rgb_zonal skips polygons larger than this area (m^2)
+RGB_MAX_AREA = 1000.0
+# floor_level: buffer-ring width (m) and the widest geometry it reads
+FLOOR_DIST = 1.0
+FLOOR_MAX_EXTENT = 1000.0
 
 
 def rgb_zonal(
     images_cells: DataFrame,
     polygons: DataFrame,
     calculation: str,
-    join_res: int = JOIN_RES,
-    max_area: float = 1000.0,
 ) -> DataFrame:
     """Multi-band zonal calculation (SURVEY.md S2/A8,
     rgb_zonal.py:57-98): per polygon, evaluate an AST-whitelisted
     expression over the masked (r, g, b) int64 vectors of every
-    overlapping RGB tile.  Polygons with area > ``max_area`` are
+    overlapping RGB tile.  Polygons with area > ``RGB_MAX_AREA`` are
     skipped (rgb_zonal.py:74-76), as are polygons with no masked
     pixels.
 
@@ -482,8 +485,8 @@ def rgb_zonal(
 
     polys = polygons.withColumn(
         "_area", area_udf(F.col("geom_wkb"))
-    ).filter(F.col("_area") <= max_area).drop("_area")
-    cand = _candidates(images_cells, polys, join_res, 0.0)
+    ).filter(F.col("_area") <= RGB_MAX_AREA).drop("_area")
+    cand = _candidates(images_cells, polys, JOIN_RES, 0.0)
 
     def partials(batches):
         # px[mask] is (n, 3): its transpose lists the r, g, b vectors
@@ -520,27 +523,23 @@ def rgb_zonal(
     )
 
 
-def floor_level(
-    images_cells: DataFrame,
-    polygons: DataFrame,
-    dist: float = 1.0,
-    join_res: int = JOIN_RES,
-    nodata: int = NODATA_DEFAULT,
-    max_extent: float = 1000.0,
-) -> DataFrame:
+def floor_level(images_cells: DataFrame, polygons: DataFrame) -> DataFrame:
     """Buffer-ring floor level (SURVEY.md A6, bag2tif.py:83-127): per
     polygon, the 75th percentile of data pixels whose centers fall in
-    the ``dist``-meter buffer RING around the geometry.  Geometries
-    wider than ``max_extent`` are skipped (bag2tif.py:95-97), as are
-    polygons with no data pixel in the ring (reference returns None).
+    the ``FLOOR_DIST``-meter buffer RING around the geometry.
+    Geometries wider than ``FLOOR_MAX_EXTENT`` are skipped
+    (bag2tif.py:95-97), as are polygons with no data pixel in the ring
+    (reference returns None).
 
     zonal_stats' plan with a ring mask: the candidate join is padded by
-    ``dist``, the pair stream is folded into the same partials, and the
-    only shuffle carries 256-bin histograms.
+    the ring width, the pair stream is folded into the same partials,
+    and the only shuffle carries 256-bin histograms.
     """
+    dist = FLOOR_DIST
     cand = _candidates(
-        images_cells, polygons, join_res, dist, max_extent=max_extent
-    ).withColumn("nodata", F.lit(nodata))
+        images_cells, polygons, JOIN_RES, dist,
+        max_extent=FLOOR_MAX_EXTENT,
+    ).withColumn("nodata", F.lit(NODATA_DEFAULT))
     partials = cand.mapInPandas(
         lambda it: _partials_stream(
             it, functools.partial(geom.buffer_ring_mask, dist=dist)
@@ -559,7 +558,6 @@ def floor_level(
 def zonal_stats(
     images_cells: DataFrame,
     polygons: DataFrame,
-    join_res: int = JOIN_RES,
     nodata: int = NODATA_DEFAULT,
     expr: str | None = None,
     range_frac=None,
@@ -580,7 +578,7 @@ def zonal_stats(
     The image side is never shuffled or sorted (see _candidates); the
     only shuffle in the whole job is the tiny partial-stats groupBy.
     """
-    cand = _candidates(images_cells, polygons, join_res, 0.0).withColumn(
+    cand = _candidates(images_cells, polygons, JOIN_RES, 0.0).withColumn(
         "nodata", F.lit(nodata)
     )
     partials = cand.mapInPandas(

@@ -425,8 +425,7 @@ def _pip_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("image_id", F.col("event_id").cast("string"))
     rects = _rect_polygons(spark, sf_dir)
     pairs = op_pip.pip_join(
-        pts, rects, join_res=9, hot_cover=64,
-        keep_cols=("image_id", "cx", "cy"), poly_cols=("feat_id",),
+        pts, rects, join_res=9, poly_cols=("feat_id",),
     )
     return pairs.select(
         F.col("image_id").cast("long").alias("event_id"), "feat_id"
@@ -562,10 +561,9 @@ SHADOW_TOWERS = (
 
 
 
-def _skyline_front(per_key: DataFrame, x: str = "price",
-                   y: str = "qty") -> DataFrame:
-    """2-D Pareto frontier of (maximize x, maximize y) given one row
-    per distinct x with y = max y at that x: keep rows whose y
+def _skyline_front(per_key: DataFrame) -> DataFrame:
+    """2-D Pareto frontier of (maximize x = price, maximize y = qty)
+    given one row per distinct x with y = max y at that x: keep rows whose y
     strictly beats the running max of all higher-x rows.  Shared by
     the ``skyline`` query and its bruteforce-equivalence property
     test, so the two cannot drift apart.
@@ -583,15 +581,15 @@ def _skyline_front(per_key: DataFrame, x: str = "price",
     sc = per_key.sparkSession.sparkContext
     n_parts = max(2, sc.defaultParallelism)
     ranged = per_key.repartitionByRange(
-        n_parts, F.col(x).desc()
+        n_parts, F.col("price").desc()
     ).withColumn("_pid", F.spark_partition_id())
     wl = (
         Window.partitionBy("_pid")
-        .orderBy(F.col(x).desc())
+        .orderBy(F.col("price").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local = ranged.withColumn("_lprev", F.max(y).over(wl))
-    pmax = ranged.groupBy("_pid").agg(F.max(y).alias("_pmax"))
+    local = ranged.withColumn("_lprev", F.max("qty").over(wl))
+    pmax = ranged.groupBy("_pid").agg(F.max("qty").alias("_pmax"))
     wp = (
         Window.orderBy(F.col("_pid").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -608,9 +606,9 @@ def _skyline_front(per_key: DataFrame, x: str = "price",
             "_prevmax", F.greatest(F.col("_lprev"), F.col("_hprev"))
         )
         .filter(
-            F.col("_prevmax").isNull() | (F.col(y) > F.col("_prevmax"))
+            F.col("_prevmax").isNull() | (F.col("qty") > F.col("_prevmax"))
         )
-        .select(x, y)
+        .select("price", "qty")
     )
 
 
@@ -918,7 +916,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     def cosine_topk(spark, sf_dir):
         emb = _t(spark, sf_dir, "embeddings")
         return fsim.cosine_topk(
-            emb.filter(F.col("vec_id") < 8), emb, k=5
+            emb.filter(F.col("vec_id") < 8), emb
         )
 
     q["cosine_topk"] = cosine_topk
@@ -1008,8 +1006,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).withColumn("image_id", F.col("event_id").cast("string"))
         polys = _diamond_polygons(spark, sf_dir)
         pairs = op_pip.pip_join(
-            pts, polys, join_res=9, hot_cover=64,
-            keep_cols=("image_id", "cx", "cy"), poly_cols=("feat_id",),
+            pts, polys, join_res=9, poly_cols=("feat_id",),
         )
         return pairs.select(
             F.col("image_id").cast("long").alias("event_id"), "feat_id"
@@ -1023,7 +1020,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         images (synth.linear_images_df) x rectangle polygons; the
         DuckDB twin reconstructs the pixel table and re-derives every
         stat including the u8-histogram percentile interpolation."""
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         polys = _zrect_polygons(spark, sf_dir)
         out = op_zonal.zonal_stats(images, polys)
         return out.select(
@@ -1049,7 +1046,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "id as qid", "cx", "cy", "cell"
         )
         cdf = pts.selectExpr("id as cid", "cx", "cy", "cell")
-        return op_knn.knn_join(qdf, cdf, k=4, res=9)
+        return op_knn.knn_join(qdf, cdf, k=4)
 
     q["knn_grid"] = knn_grid
 
@@ -1060,7 +1057,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def lsh_ann(spark, sf_dir):
         emb = _t(spark, sf_dir, "embeddings")
-        return fsim.lsh_topk(emb, k=5)
+        return fsim.lsh_topk(emb)
 
     q["lsh_ann"] = lsh_ann
 
@@ -1070,7 +1067,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         orders than SQL, agreeing to ~1e-11)."""
         from .functions import multimodal
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         feats = multimodal.image_features(images)
         f4 = lambda c: (F.floor(F.col(c) * 10000.0) / 10000.0).alias(c)
         return feats.select(
@@ -1086,7 +1083,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the reconstructed pixel table."""
         from .operators import retile as op_retile
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         return op_retile.retile(images).select(
             "cell_id", "n_sources", "active_px"
         )
@@ -1108,9 +1105,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["hillshade_tiles"] = hillshade_tiles
 
-    def _valley_tiles(spark, nt=3, tile=64):
-        """Deterministic valley DEM mosaic (nt x nt tiles of
-        ``tile`` px): dem = 0.6*|gj - 96| + 0.4*(191 - gi)
+    def _valley_tiles(spark):
+        """Deterministic valley DEM mosaic (3 x 3 tiles of
+        64 px): dem = 0.6*|gj - 96| + 0.4*(191 - gi)
         + 0.0005*((gi*7919 + gj*104729) % 97), stored f4.
 
         The 0.6/0.4 trend strictly dominates the +/-0.048 hash noise
@@ -1130,9 +1127,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
                 rows = []
                 for t in pdf.itertuples():
                     k = int(t.id)
-                    ty, tx = divmod(k, nt)
-                    gi = ty * tile + np.arange(tile)[:, None]
-                    gj = tx * tile + np.arange(tile)[None, :]
+                    ty, tx = divmod(k, 3)
+                    gi = ty * 64 + np.arange(64)[:, None]
+                    gj = tx * 64 + np.arange(64)[None, :]
                     dem = (
                         0.6 * np.abs(gj - 96)
                         + 0.4 * (191 - gi)
@@ -1150,7 +1147,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
                         rows, columns=["cell_id", "bytes", "fmt"]
                     )
 
-        return spark.range(nt * nt).mapInPandas(
+        return spark.range(3 * 3).mapInPandas(
             gen, schema="cell_id long, bytes binary, fmt string"
         )
 
@@ -1314,9 +1311,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         """bag2tif floor level: p75 of data pixels in the 1 m buffer
         ring around each polygon; oracle re-derives the exact-Euclidean
         ring mask in SQL."""
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         polys = _zrect_polygons(spark, sf_dir)
-        return op_zonal.floor_level(images, polys, dist=1.0)
+        return op_zonal.floor_level(images, polys)
 
     q["floor_level"] = floor_level
 
@@ -1327,7 +1324,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         l1 = _zrect_polygons(spark, sf_dir)
         l2 = _drect_polygons(spark, sf_dir)
-        return overlay.mask_difference_area(l1, l2, pixel=4.0)
+        return overlay.mask_difference_area(l1, l2)
 
     q["mask_difference"] = mask_difference
 
@@ -1337,7 +1334,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators import overlay
 
         l2 = _drect_polygons(spark, sf_dir)
-        return overlay.mask_union_area(l2, pixel=4.0)
+        return overlay.mask_union_area(l2)
 
     q["union_area"] = union_area
 
@@ -1367,7 +1364,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         tile (rasterize.py:190-214); count oracle-checked."""
         from .operators import retile as op_retile
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         tiles = op_retile.retile(images)
         return op_retile.nodata_audit(tiles).select(
             "cell_id", "nodata_px"
@@ -1471,7 +1468,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         """S2/A8 multi-band zonal: whitelisted calculation over masked
         (r, g, b) vectors of real RGB PNG tiles; oracle recomputes from
         the reconstructed 3-band pixel table."""
-        images = synth.linear_rgb_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_rgb_images_df(spark, 150)
         polys = _srect_polygons(spark, sf_dir)
         return op_zonal.rgb_zonal(
             images, polys, "np.mean(3.0 * g - r - b)"
@@ -1483,7 +1480,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         """S2 f4 data plane: zonal statistics over float32 (rawz) DEM
         tiles whose relief exceeds the u8 range; exact mean/std/min/max
         oracle-checked (percentiles are u8-domain and NULL here)."""
-        images = synth.linear_f4_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 150)
         polys = _zrect_polygons(spark, sf_dir)
         out = op_zonal.zonal_stats(images, polys, nodata=-1.0)
         return out.select(
@@ -1503,7 +1500,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         applies the same published ZT/gdaldem shade formula."""
         from .operators import focal
 
-        images = synth.linear_f4_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 100)
         # full-size images only (the stencil canvas is fixed-size);
         # idx%15==0 -> rank t=idx/15 packs them onto cells (t%4, t//4)
         images = images.filter((F.col("w") == 64) & (F.col("h") == 64))
@@ -1535,10 +1532,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["embedding_near_dup"] = embedding_near_dup
 
     def sessionize(spark, sf_dir):
-        """Gap-based per-user sessionization -- the batch twin of the
-        applyInPandasWithState streaming operator
-        (streaming/sessions.py); stream==batch parity is
-        pytest-checked, the twin itself oracle-checked here."""
+        """Gap-based per-user sessionization via window functions
+        (streaming/sessions.py), oracle-checked here."""
         from .streaming import sessions as ss
 
         out = ss.sessionize_batch(_t(spark, sf_dir, "events"))
@@ -1559,7 +1554,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         lists -> nprobe equi-join -> exact cosine; the second scale
         path besides LSH buckets."""
         emb = _t(spark, sf_dir, "embeddings")
-        return fsim.ivf_topk(emb, k=5, n_centroids=32, nprobe=2)
+        return fsim.ivf_topk(emb, n_centroids=32)
 
     q["ivf_ann"] = ivf_ann
 
@@ -1603,14 +1598,14 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the max of the raster over a perpendicular +-1 m carpet row."""
         from .operators import lines as op_lines, retile as op_retile
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         tiles = op_retile.retile(images)
 
         lines_df = _nation_layer(
             spark, sf_dir, _drape_line_of
         ).withColumnRenamed("feat_id", "line_id")
         return op_lines.line_carpet_profile(
-            lines_df, tiles, step=2.0, distance=1.0, carpet_step=0.5
+            lines_df, tiles, step=2.0, carpet_step=0.5
         )
 
     q["line_carpet"] = line_carpet
@@ -1620,7 +1615,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         share of polygon pixels whose (r+b)/(2g) ratio falls in
         [0.8, 1.2], written multiplicatively (r+b within [1.6g, 2.4g],
         g > 0) so both engines avoid div-by-zero divergence."""
-        images = synth.linear_rgb_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_rgb_images_df(spark, 150)
         polys = _srect_polygons(spark, sf_dir)
         return op_zonal.rgb_zonal(
             images, polys,
@@ -1699,7 +1694,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "cell", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
         )
         grid = interp.grid_centers(
-            spark, 0.0, WORLD_TOP, 64, 64, 64.0, res=9
+            spark, 0.0, WORLD_TOP, 64, 64, 64.0
         )
         return grid, pts
 
@@ -1719,7 +1714,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .functions import interp
 
         grid, pts = _interp_inputs(spark, sf_dir)
-        return interp.idw_grid(grid, pts, k=4)
+        return interp.idw_grid(grid, pts)
 
     q["grid_idw"] = grid_idw
 
@@ -1739,7 +1734,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         l2 = _nation_layer(spark, sf_dir, _dpoly_cutter_a).unionByName(
             _nation_layer(spark, sf_dir, _dpoly_cutter_b)
         )
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole",
             (F.floor(F.col("area") * 100.0) / 100.0).alias("area"),
@@ -1771,7 +1766,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Band-expression zonal (A8) + in-range fraction (A9), now
         oracle-checked: expr-domain mean/std/mn/mx and raw-domain
         percentiles both re-derived in SQL."""
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         polys = _zrect_polygons(spark, sf_dir)
         return op_zonal.zonal_stats(
             images, polys, expr="clip(v * 2.0, 0, 400)",
@@ -1788,7 +1783,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         test_lines.py.)"""
         from .operators import lines as op_lines, retile as op_retile
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         tiles = op_retile.retile(images)
 
         lines_df = _nation_layer(
@@ -1808,7 +1803,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators import retile as op_retile
         from .operators import upstream as op_up
 
-        images = synth.linear_images_df(spark, 150, tiles_axis=16)
+        images = synth.linear_images_df(spark, 150)
         tiles = op_retile.retile(images)
         polys = _nation_layer(spark, sf_dir, _box_of(_urect_params))
         lines_df = _nation_layer(
@@ -1816,7 +1811,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).withColumnRenamed("feat_id", "line_id")
         return op_up.upstream_levels(
             lines_df, polys, tiles,
-            separation=4.25, distance=33.25, multiplier=1.0, grow=24.0,
+            separation=4.25, distance=33.25, grow=24.0,
         )
 
     q["upstream_levels"] = upstream_line_levels
@@ -1863,7 +1858,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         points = nat.mapInPandas(
             gen, "feat_id long, pid int, x double, y double, z double"
         )
-        return finterp.linear_grid_features(points, pad=1.0, edge=1.0)
+        return finterp.linear_grid_features(points)
 
     q["grid_linear"] = grid_linear
 
@@ -1929,7 +1924,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators import repair as op_repair
 
         images = synth.linear_f4_images_df(
-            spark, 150, tiles_axis=16
+            spark, 150
         ).withColumn(
             # even images are already on the target nodata (skip
             # candidates unless a sentinel pixel exists), odd are dirty
@@ -1959,11 +1954,9 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["fix_nodata"] = fix_nodata
 
     def streaming_dedup(spark, sf_dir):
-        """Ingestion-dedup batch twin, oracle-checked: events with a
-        replayed subset (event_id % 7 == 0 duplicated) deduped on the
-        key, folded to per-type counts + exact sums.  The stream ==
-        batch equality of dropDuplicatesWithinWatermark itself is
-        pytest-checked in test_streaming.py."""
+        """Ingestion dedup, oracle-checked: events with a replayed
+        subset (event_id % 7 == 0 duplicated) deduped on the key,
+        folded to per-type counts + exact sums."""
         from .streaming import windows as sw
 
         ev = _t(spark, sf_dir, "events")
@@ -2000,7 +1993,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "pid", "x", "y",
             "CAST(7.0 + 0.0625 * x - 0.125 * y AS DOUBLE) AS z",
         )
-        tiles = finterp.linear_grid_tiles(pts, res=10, halo=32.0)
+        tiles = finterp.linear_grid_tiles(pts)
         center = [int(pack_cell(10, tx, ty))
                   for tx in (1, 2) for ty in (1, 2)]
         picked = tiles.filter(F.col("cell_id").isin(center))
@@ -2076,7 +2069,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from . import flow as flow_mod
         from .operators import focal
 
-        images = synth.linear_f4_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 100)
         images = images.filter((F.col("w") == 64) & (F.col("h") == 64))
         # strip position by ascending seed ((t*555)%199 for t=idx/15):
         # t [0,4,3,2,6,1,5] -> seeds [0,31,73,115,146,157,188]
@@ -2114,7 +2107,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from . import flow as flow_mod
         from .operators import flow_op, focal
 
-        images = synth.linear_f4_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 100)
         images = images.filter((F.col("w") == 64) & (F.col("h") == 64))
         tiles = images.selectExpr(
             "(CAST(10 AS BIGINT) << 56) | (CAST("
@@ -2317,7 +2310,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         4x15-bit pigeonhole bands): the candidate join is an equi-join
         on (band, slice), exact popcount filter JVM-side."""
         return fdedup.simhash_near_dup(
-            _t(spark, sf_dir, "documents"), max_hamming=3
+            _t(spark, sf_dir, "documents")
         )
 
     q["simhash_near_dup"] = simhash_near_dup
@@ -2359,7 +2352,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = spark.range(0, 40, 1, 8).mapInPandas(
             gen, "image_id string, bytes binary, fmt string"
         )
-        return multimodal.image_near_dup(images, max_hamming=6)
+        return multimodal.image_near_dup(images)
 
     q["image_near_dup_phash"] = image_near_dup_phash
 
@@ -2687,7 +2680,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         l1 = _nation_layer(spark, sf_dir, _diff_l1)
         l2 = _nation_layer(spark, sf_dir, _diff_l2)
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -2741,7 +2734,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         l1 = _nation_layer(spark, sf_dir, _conv_l1)
         l2 = _nation_layer(spark, sf_dir, _conv_l2)
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -2913,7 +2906,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         l1 = _nation_layer(spark, sf_dir, _star_l1)
         l2 = _nation_layer(spark, sf_dir, _star_l2)
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -2956,7 +2949,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         l1 = _nation_layer(spark, sf_dir, _gen_l1)
         l2 = _nation_layer(spark, sf_dir, _gen_l2)
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -3033,7 +3026,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         l2 = _nation_layer(spark, sf_dir, _mgen_u1).unionByName(
             _nation_layer(spark, sf_dir, _mgen_u2)
         )
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -3089,7 +3082,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         l2 = _nation_layer(spark, sf_dir, _ogen_c1).unionByName(
             _nation_layer(spark, sf_dir, _ogen_c2)
         )
-        out = overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+        out = overlay.mask_difference_polygons(l1, l2)
         return out.select(
             "feat_id", "ring_id", "n_pts", "is_hole", "area"
         )
@@ -3143,7 +3136,6 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = temporal.asof_join_bucketed(
             ev.select("event_id", "grp", "ts"), dim,
             key_col="grp", ts_col="ts", value_cols=["rate"],
-            n_buckets=32,
         )
         return out.select("event_id", "grp", "rate")
 
@@ -3160,7 +3152,6 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return sketch.kmv_distinct(
             _t(spark, sf_dir, "events"), "event_type", "user_id",
-            k=64,
         )
 
     q["kmv_users"] = kmv_users
@@ -3179,12 +3170,12 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         toks = docs.select(
             F.explode(F.split(F.col("text"), " ")).alias("tok")
         )
-        sk = sketch.cm_sketch(toks, "tok", depth=4, width=512)
+        sk = sketch.cm_sketch(toks, "tok")
         cand = docs.filter(F.col("doc_id") % 83 == 0).select(
             F.explode(F.split(F.col("text"), " ")).alias("tok")
         )
         return sketch.cm_estimate(
-            sk, cand, "tok", depth=4, width=512
+            sk, cand, "tok"
         ).select(F.col("item"), F.col("estimate"))
 
     q["cm_heavy"] = cm_heavy
@@ -3295,7 +3286,6 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         reqs = remote.chunk_requests(feats, chunk_px=64)
         fetched = remote.fetch_chunks(
             reqs, remote.fake_raster_transport(fail_first_every=3),
-            max_retries=2,
         )
 
         @F.pandas_udf("struct<n_px: long, sum_v: long>")
@@ -3329,7 +3319,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the closed-form plane."""
         from .operators import flow_op
 
-        images = synth.linear_f4_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 100)
         images = images.filter((F.col("w") == 64) & (F.col("h") == 64))
         # res 12 cells ARE 64 px, so the fill rebuilds tiles at the
         # input size (fill derives tile_px from the cell res)
@@ -3353,10 +3343,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["fill_depressions_f4"] = fill_depressions_f4
 
     def streaming_parity(spark, sf_dir):
-        """Batch twin of the streaming windowed agg, oracle-checked
-        (window start formatted for engine-TZ independence); the
-        stream==batch equality itself is pytest-checked in
-        test_streaming.py."""
+        """Tumbling-window event aggregate, oracle-checked (window
+        start formatted for engine-TZ independence)."""
         from .streaming import windows as sw
 
         out = sw.windowed_agg_batch(_t(spark, sf_dir, "events"))
@@ -3371,7 +3359,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     def image_resize(spark, sf_dir):
         from .functions import multimodal
 
-        images = synth.linear_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_images_df(spark, 100)
         return multimodal.resize(images, factor=2).select(
             "image_id", "w", "h"
         )
@@ -3504,7 +3492,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         return sketch.kmv_set_ops(
             cust.filter(F.col("c_mktsegment") == "BUILDING"),
             cust.filter(F.col("c_acctbal") > 5000),
-            "c_custkey", k=64,
+            "c_custkey",
         )
 
     q["kmv_setops"] = kmv_setops
@@ -3623,7 +3611,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         self-joins unblocked.  Catches the small-edit dup class that
         shingle Jaccard (ngram_jaccard) and MinHash both blur."""
         return fdedup.levenshtein_near_dup(
-            _t(spark, sf_dir, "documents"), max_dist=6
+            _t(spark, sf_dir, "documents")
         )
 
     q["fuzzy_dedup"] = fuzzy_dedup
@@ -3636,7 +3624,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         closed-form pixel table."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 40, tiles_axis=16)
+        images = synth.linear_images_df(spark, 40)
         return image_enhance.image_moments(images)
 
     q["image_moments"] = image_moments
@@ -3652,7 +3640,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         tmpl = (
             3 + 7 * np.arange(4)[:, None] + 13 * np.arange(4)[None, :]
         ) % 251
-        images = synth.linear_images_df(spark, 6, tiles_axis=16)
+        images = synth.linear_images_df(spark, 6)
         return image_enhance.ssd_template_match(images, tmpl)
 
     q["ssd_match"] = ssd_match
@@ -3665,8 +3653,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         with a from-scratch recursive reachability closure."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 6, tiles_axis=16)
-        return image_enhance.blob_stats(images, threshold=255)
+        images = synth.linear_images_df(spark, 6)
+        return image_enhance.blob_stats(images)
 
     q["blob_label"] = blob_label
 
@@ -3764,8 +3752,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         recomputes every window with a bounded self-join."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 12, tiles_axis=16)
-        return image_enhance.box_blur_stats(images, radius=2)
+        images = synth.linear_images_df(spark, 12)
+        return image_enhance.box_blur_stats(images)
 
     q["box_blur"] = box_blur
 
@@ -3775,7 +3763,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the equalized plane."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 40, tiles_axis=16)
+        images = synth.linear_images_df(spark, 40)
         return image_enhance.equalize_stats(images)
 
     q["hist_equalize"] = hist_equalize
@@ -3787,7 +3775,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the foreground stats agree bit-for-bit."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 40, tiles_axis=16)
+        images = synth.linear_images_df(spark, 40)
         return image_enhance.otsu_stats(images)
 
     q["otsu_threshold"] = otsu_threshold
@@ -3797,7 +3785,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         of 40 PNG tiles; mirrors a SQL gaps-and-islands plan."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 40, tiles_axis=16)
+        images = synth.linear_images_df(spark, 40)
         return image_enhance.rle_stats(images)
 
     q["rle_stats"] = rle_stats
@@ -3808,8 +3796,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         signal).  Exact vs a 3x3 neighborhood self-join oracle."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 12, tiles_axis=16)
-        return image_enhance.sobel_stats(images, edge_thresh=200)
+        images = synth.linear_images_df(spark, 12)
+        return image_enhance.sobel_stats(images)
 
     q["sobel_edges"] = sobel_edges
 
@@ -3820,8 +3808,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         seven levels of grouped min/max in SQL."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 12, tiles_axis=16)
-        return image_enhance.quadtree_stats(images, threshold=128)
+        images = synth.linear_images_df(spark, 12)
+        return image_enhance.quadtree_stats(images)
 
     q["quadtree_compress"] = quadtree_compress
 
@@ -3831,8 +3819,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         exact vs a bounded neighborhood self-join."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 20, tiles_axis=16)
-        return image_enhance.morph_gradient_stats(images, radius=1)
+        images = synth.linear_images_df(spark, 20)
+        return image_enhance.morph_gradient_stats(images)
 
     q["morph_gradient"] = morph_gradient
 
@@ -3844,7 +3832,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         reference side)."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 12, tiles_axis=16)
+        images = synth.linear_images_df(spark, 12)
         refs = images.select(
             F.col("phash").alias("ref_of"),
             F.col("bytes").alias("ref_bytes"),
@@ -3866,7 +3854,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .functions import dedup as fdedup
 
         docs = _t(spark, sf_dir, "documents")
-        return fdedup.anchored_span_pairs(docs, k=32, p=4, max_df=50)
+        return fdedup.anchored_span_pairs(docs)
 
     q["span_dedup"] = span_dedup
 
@@ -3889,7 +3877,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             ((F.col("node") * 13 + 5) % n).alias("dst"),
         )
         return fgraph.pagerank_fixed(
-            nodes, e1.unionByName(e2), iterations=3
+            nodes, e1.unionByName(e2)
         )
 
     q["pagerank"] = pagerank
@@ -3913,7 +3901,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         the closed-form SQL twin classifies identically."""
         from .operators import focal
 
-        images = synth.linear_f4_images_df(spark, 100, tiles_axis=16)
+        images = synth.linear_f4_images_df(spark, 100)
         images = images.filter((F.col("w") == 64) & (F.col("h") == 64))
         tiles = images.selectExpr(
             "(CAST(10 AS BIGINT) << 56)"
@@ -3961,7 +3949,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         path = "/tmp/rts_stream_images_12"
         if not os.path.isdir(path):
-            synth.linear_images_df(spark, 12, tiles_axis=16).select(
+            synth.linear_images_df(spark, 12).select(
                 "image_id", "bytes", "w", "h", "fmt"
             ).repartition(6).write.mode("overwrite").parquet(path)
         return sim.run_image_stats_to_memory(
@@ -3983,7 +3971,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             us.alias("s"),
             (us + (F.col("event_id") % 7 + 1) * 120000000).alias("e"),
         )
-        return fint.interval_union(iv, "event_type", "s", "e")
+        return fint.interval_union(iv, "event_type")
 
     q["interval_union"] = interval_union
 
@@ -3994,8 +3982,8 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         floors).  Per-image aggregates + saturated-pixel count."""
         from .functions import image_enhance
 
-        images = synth.linear_images_df(spark, 40, tiles_axis=16)
-        return image_enhance.contrast_stretch_stats(images, 2, 98)
+        images = synth.linear_images_df(spark, 40)
+        return image_enhance.contrast_stretch_stats(images)
 
     q["contrast_stretch"] = contrast_stretch
 
@@ -4006,11 +3994,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         broadcast.  One summary row."""
         from .functions import temporal as ftemp
 
-        return ftemp.funnel_counts(
-            _t(spark, sf_dir, "events"),
-            stages=("view", "click", "purchase"),
-            budget_minutes=1440,
-        )
+        return ftemp.funnel_counts(_t(spark, sf_dir, "events"))
 
     q["funnel"] = funnel
 
@@ -4183,7 +4167,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> Dict[str, str]:
     o: Dict[str, str] = {}
     top = f"{WORLD_TOP:.1f}"
-    lpix150 = synth.linear_pixels_sql(150, 16)
+    lpix150 = synth.linear_pixels_sql(150)
     R9 = 9 << 56
     R10 = 10 << 56
     R8 = 8 << 56
@@ -6013,7 +5997,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["fix_nodata"] = f"""
-    WITH {synth.linear_f4_pixels_sql(150, 16)}
+    WITH {synth.linear_f4_pixels_sql(150)}
     SELECT image_id,
       CAST(CASE WHEN (idx % 2) != 0
                  OR SUM(CASE WHEN v = 300.0 THEN 1 ELSE 0 END) > 0
@@ -6181,7 +6165,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["green_factor"] = f"""
-    WITH {synth.linear_rgb_pixels_sql(150, 16)}, {_srects_sql()},
+    WITH {synth.linear_rgb_pixels_sql(150)}, {_srects_sql()},
     sel AS (
       SELECT s.feat_id, p.r, p.g, p.b
       FROM lrgb p JOIN srects s
@@ -6585,7 +6569,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["rgb_zonal"] = f"""
-    WITH {synth.linear_rgb_pixels_sql(150, 16)}, {_srects_sql()},
+    WITH {synth.linear_rgb_pixels_sql(150)}, {_srects_sql()},
     sel AS (
       SELECT s.feat_id, p.image_id, p.r, p.g, p.b
       FROM lrgb p JOIN srects s
@@ -6598,7 +6582,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["zonal_f4"] = f"""
-    WITH {synth.linear_f4_pixels_sql(150, 16)}, {_zrects_sql()},
+    WITH {synth.linear_f4_pixels_sql(150)}, {_zrects_sql()},
     data AS (
       SELECT r.feat_id, p.v
       FROM lf4 p JOIN zrects r
@@ -6939,7 +6923,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["image_moments"] = f"""
-    WITH {synth.linear_pixels_sql(40, 16)},
+    WITH {synth.linear_pixels_sql(40)},
     m AS (
       SELECT image_id,
              CAST(SUM(v) AS BIGINT) AS m00,
@@ -6958,7 +6942,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["ssd_match"] = f"""
-    WITH {synth.linear_pixels_sql(6, 16)},
+    WITH {synth.linear_pixels_sql(6)},
     tmpl AS (
       SELECT ga.a, gb.b, (3 + 7 * ga.a + 13 * gb.b) % 251 AS tv
       FROM (SELECT unnest(generate_series(0, 3)) AS a) ga,
@@ -6986,7 +6970,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["blob_label"] = f"""
-    WITH RECURSIVE {synth.linear_pixels_sql(6, 16)},
+    WITH RECURSIVE {synth.linear_pixels_sql(6)},
     cells AS (
       SELECT idx, image_id, i, j, i * 1024 + j AS cid
       FROM lpix WHERE v = 255
@@ -7239,7 +7223,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["box_blur"] = f"""
-    WITH {synth.linear_pixels_sql(12, 16)},
+    WITH {synth.linear_pixels_sql(12)},
     blur AS (
       SELECT a.idx, a.image_id, a.i, a.j,
              SUM(b.v) // COUNT(*) AS bv
@@ -7256,7 +7240,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["hist_equalize"] = f"""
-    WITH {synth.linear_pixels_sql(40, 16)},
+    WITH {synth.linear_pixels_sql(40)},
     hist AS (
       SELECT idx, image_id, v, COUNT(*)::BIGINT AS c
       FROM lpix GROUP BY idx, image_id, v
@@ -7287,7 +7271,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["otsu_threshold"] = f"""
-    WITH {synth.linear_pixels_sql(40, 16)},
+    WITH {synth.linear_pixels_sql(40)},
     hist AS (
       SELECT idx, image_id, v, COUNT(*)::BIGINT AS c,
              (COUNT(*) * v)::BIGINT AS s
@@ -7320,7 +7304,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["rle_stats"] = f"""
-    WITH {synth.linear_pixels_sql(40, 16)},
+    WITH {synth.linear_pixels_sql(40)},
     brk AS (
       SELECT idx, image_id, i, j,
              CASE WHEN lag(v) OVER (PARTITION BY idx, i ORDER BY j)
@@ -7344,7 +7328,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["sobel_edges"] = f"""
-    WITH {synth.linear_pixels_sql(12, 16)},
+    WITH {synth.linear_pixels_sql(12)},
     nb AS (
       SELECT a.idx, a.image_id, a.i, a.j,
              SUM(b.v
@@ -7398,7 +7382,7 @@ def oracle_sql() -> Dict[str, str]:
         for _l in range(7)
     )
     o["quadtree_compress"] = f"""
-    WITH {synth.linear_pixels_sql(12, 16)},
+    WITH {synth.linear_pixels_sql(12)},
     bpix AS (
       SELECT idx, i, j, CASE WHEN v >= 128 THEN 1 ELSE 0 END AS v
       FROM lpix
@@ -7419,7 +7403,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["morph_gradient"] = f"""
-    WITH {synth.linear_pixels_sql(20, 16)},
+    WITH {synth.linear_pixels_sql(20)},
     g AS (
       SELECT a.idx, a.image_id, a.i, a.j,
              MAX(b.v) - MIN(b.v) AS g
@@ -7436,7 +7420,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["hist_match"] = f"""
-    WITH {synth.linear_pixels_sql(12, 16)},
+    WITH {synth.linear_pixels_sql(12)},
     hist AS (
       SELECT idx, image_id, v, COUNT(*)::BIGINT AS c
       FROM lpix GROUP BY idx, image_id, v
@@ -7641,7 +7625,7 @@ def oracle_sql() -> Dict[str, str]:
     """
 
     o["contrast_stretch"] = f"""
-    WITH {synth.linear_pixels_sql(40, 16)},
+    WITH {synth.linear_pixels_sql(40)},
     cdf AS (
       SELECT idx, image_id, v, COUNT(*)::BIGINT AS c,
              SUM(COUNT(*)) OVER (PARTITION BY idx ORDER BY v) AS cum

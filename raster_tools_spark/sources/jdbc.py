@@ -14,9 +14,7 @@ pushdown verification) is identical for PostgreSQL/PostGIS: swap the
 url and driver class.
 
 At scale: a JDBC dim table is the SMALL side; read it through one
-partition (numPartitions=1) and let Spark broadcast the result into
-the big-side join.  Partitioned reads (partitionColumn/lowerBound/
-upperBound) only pay off when the remote table itself is large.
+partition and let Spark broadcast the result into the big-side join.
 """
 
 from __future__ import annotations
@@ -31,56 +29,26 @@ def derby_url(path: str) -> str:
     return f"jdbc:derby:{path};create=true"
 
 
-def write_table(df: DataFrame, url: str, table: str,
-                driver: str = DERBY_DRIVER) -> None:
+def write_table(df: DataFrame, url: str, table: str) -> None:
     """Publish a dimension table to the database (overwrite)."""
     (
         df.write.mode("overwrite")
         .format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("driver", driver)
+        .option("driver", DERBY_DRIVER)
         .save()
     )
 
 
-def read_table(spark: SparkSession, url: str, table: str,
-               driver: str = DERBY_DRIVER) -> DataFrame:
+def read_table(spark: SparkSession, url: str, table: str) -> DataFrame:
     """JDBC scan; apply .filter/.select on the result and Catalyst
     pushes them into the remote query (verify with pushed_filters)."""
     return (
         spark.read.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("driver", driver)
-        .load()
-    )
-
-
-def read_table_partitioned(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str,
-    lower: int,
-    upper: int,
-    num_partitions: int,
-    driver: str = DERBY_DRIVER,
-) -> DataFrame:
-    """Partitioned JDBC scan for LARGE remote tables: Spark issues
-    ``num_partitions`` range-predicated queries in parallel, one per
-    stride of [lower, upper] on ``partition_column`` (the standard
-    production shape when the remote table exceeds one task).  Filters
-    and pruning still push per-partition."""
-    return (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("driver", driver)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower))
-        .option("upperBound", str(upper))
-        .option("numPartitions", str(num_partitions))
+        .option("driver", DERBY_DRIVER)
         .load()
     )
 

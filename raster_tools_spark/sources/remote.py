@@ -98,23 +98,21 @@ def fake_raster_transport(fail_first_every: int = 0):
     return transport
 
 
-def chunk_requests(
-    features: DataFrame, chunk_px: int = 256, pixel: float = CELL_SIZE
-) -> DataFrame:
+def chunk_requests(features: DataFrame, chunk_px: int = 256) -> DataFrame:
     """features(feat_id, x1, y1, x2, y2) -> one request row per chunk
     of the pixel-snapped window (rextract Index semantics: the window
     is floor/ceil-snapped to the grid, then tiled row-major by
     ``chunk_px``; serials start at 1)."""
     f = features.selectExpr(
         "feat_id",
-        f"floor(x1 / {pixel!r}) * {pixel!r} AS wx1",
-        f"ceil(x2 / {pixel!r}) * {pixel!r} AS wx2",
-        f"floor(y1 / {pixel!r}) * {pixel!r} AS wy1",
-        f"ceil(y2 / {pixel!r}) * {pixel!r} AS wy2",
+        f"floor(x1 / {CELL_SIZE!r}) * {CELL_SIZE!r} AS wx1",
+        f"ceil(x2 / {CELL_SIZE!r}) * {CELL_SIZE!r} AS wx2",
+        f"floor(y1 / {CELL_SIZE!r}) * {CELL_SIZE!r} AS wy1",
+        f"ceil(y2 / {CELL_SIZE!r}) * {CELL_SIZE!r} AS wy2",
     ).selectExpr(
         "feat_id", "wx1", "wy1", "wy2",
-        f"CAST(round((wx2 - wx1) / {pixel!r}) AS INT) AS wpx",
-        f"CAST(round((wy2 - wy1) / {pixel!r}) AS INT) AS hpx",
+        f"CAST(round((wx2 - wx1) / {CELL_SIZE!r}) AS INT) AS wpx",
+        f"CAST(round((wy2 - wy1) / {CELL_SIZE!r}) AS INT) AS hpx",
     ).selectExpr(
         "feat_id", "wx1", "wy1", "wy2", "wpx", "hpx",
         f"CAST(ceil(wpx / CAST({chunk_px} AS DOUBLE)) AS INT) AS ncx",
@@ -129,12 +127,12 @@ def chunk_requests(
     return c.selectExpr(
         "feat_id",
         "CAST(k + 1 AS INT) AS serial",
-        f"wx1 + (k % ncx) * {chunk_px} * {pixel!r} AS x1",
+        f"wx1 + (k % ncx) * {chunk_px} * {CELL_SIZE!r} AS x1",
         f"greatest(wy2 - (CAST(k AS BIGINT) DIV ncx + 1)"
-        f" * {chunk_px} * {pixel!r}, wy1) AS y1",
-        f"least(wx1 + ((k % ncx) + 1) * {chunk_px} * {pixel!r},"
-        f" wx1 + wpx * {pixel!r}) AS x2",
-        f"wy2 - (CAST(k AS BIGINT) DIV ncx) * {chunk_px} * {pixel!r}"
+        f" * {chunk_px} * {CELL_SIZE!r}, wy1) AS y1",
+        f"least(wx1 + ((k % ncx) + 1) * {chunk_px} * {CELL_SIZE!r},"
+        f" wx1 + wpx * {CELL_SIZE!r}) AS x2",
+        f"wy2 - (CAST(k AS BIGINT) DIV ncx) * {chunk_px} * {CELL_SIZE!r}"
         " AS y2",
         f"CAST(least(wpx - (k % ncx) * {chunk_px}, {chunk_px}) AS INT)"
         " AS width",
@@ -146,12 +144,11 @@ def chunk_requests(
 def fetch_chunks(
     requests: DataFrame,
     transport: Callable = default_transport,
-    max_retries: int = 2,
 ) -> DataFrame:
     """Fetch every request through ``transport`` with the reference's
-    retry classes.  To resume, left-anti the completed (feat_id,
-    serial) rows from ``requests`` first (the indicator-file resume,
-    partition-parallel).
+    retry classes, at most 2 retries.  To resume, left-anti the
+    completed (feat_id, serial) rows from ``requests`` first (the
+    indicator-file resume, partition-parallel).
 
     Emits per chunk: status (last), attempts, and the payload on
     success -- failures surface as rows, not exceptions, so a resume
@@ -171,7 +168,7 @@ def fetch_chunks(
                 }
                 attempts = 0
                 status, payload = 0, b""
-                while attempts <= max_retries:
+                while attempts <= 2:
                     attempts += 1
                     status, payload = transport(params)
                     if status == 200 or status not in RETRY_STATUS:
@@ -200,16 +197,13 @@ def fetch_chunks(
     return requests.mapInPandas(run, schema=FETCH_SCHEMA)
 
 
-def upload_parts(
-    payloads: DataFrame,
-    transport: Callable = default_transport,
-    part_bytes: int = 65536,
-    max_retries: int = 2,
-) -> DataFrame:
+def upload_parts(payloads: DataFrame) -> DataFrame:
     """K5 upload sink: split each payload(object_id, bytes) into
-    ``part_bytes`` parts and push each through ``transport`` with the
-    same retry classes (upload.py's chunked POST loop); emits one
-    receipt row per part."""
+    64 KiB parts and push each through ``default_transport`` with the
+    same retry classes, at most 2 retries (upload.py's chunked POST
+    loop); emits one receipt row per part."""
+    transport = default_transport
+    part_bytes = 65536
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -223,7 +217,7 @@ def upload_parts(
                     part = data[p * part_bytes: (p + 1) * part_bytes]
                     attempts = 0
                     status = 0
-                    while attempts <= max_retries:
+                    while attempts <= 2:
                         attempts += 1
                         status = transport(
                             {
@@ -249,24 +243,3 @@ def upload_parts(
 
     return payloads.mapInPandas(run, schema=UPLOAD_SCHEMA)
 
-
-def fake_upload_transport(sink: dict, fail_first_every: int = 0):
-    """Collecting stand-in upload endpoint (tests reassemble from
-    ``sink`` to prove part integrity)."""
-    seen: set = set()
-
-    def transport(params: dict):
-        key = (params["object_id"], params["part"])
-        if (
-            fail_first_every
-            and params["part"] % fail_first_every == 0
-            and key not in seen
-        ):
-            seen.add(key)
-            return 503
-        sink.setdefault(params["object_id"], {})[params["part"]] = (
-            params["body"]
-        )
-        return 200
-
-    return transport

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def parse_xyz(lines: DataFrame, col: str = "value") -> DataFrame:
-    parts = F.split(F.trim(F.col(col)), r"\s+")
+def parse_xyz(lines: DataFrame) -> DataFrame:
+    parts = F.split(F.trim(F.col("value")), r"\s+")
     # try_cast: malformed lines become NULL and are filtered (ANSI-mode
     # cast would abort the whole scan on one bad line).  The casts are
     # packed into an exploded single-element struct so the null filter

@@ -22,32 +22,29 @@ IMAGE_FILE_SCHEMA = (
 )
 
 
-def read_image_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
+def read_image_stream(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.readStream.schema(IMAGE_FILE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
 
 
-def image_stats_stream(images: DataFrame, radius: int = 2) -> DataFrame:
-    """Stateless enhancement stats on a streaming DataFrame -- the
-    batch operator applies verbatim (mapInPandas is streaming-safe
-    for stateless transforms)."""
-    return image_enhance.box_blur_stats(images, radius)
+def image_stats_stream(images: DataFrame) -> DataFrame:
+    """Stateless enhancement stats (radius 2) on a streaming
+    DataFrame -- the batch operator applies verbatim (mapInPandas is
+    streaming-safe for stateless transforms)."""
+    return image_enhance.box_blur_stats(images)
 
 
 def run_image_stats_to_memory(
     spark: SparkSession,
     path: str,
     query_name: str = "image_stats_stream",
-    radius: int = 2,
 ) -> DataFrame:
     """Drive the image stream to completion synchronously (memory
     sink + processAllAvailable) and return the result table."""
-    stats = image_stats_stream(read_image_stream(spark, path), radius)
+    stats = image_stats_stream(read_image_stream(spark, path))
     q = (
         stats.writeStream.outputMode("append")
         .format("memory")

@@ -140,7 +140,6 @@ def images_pdf(
 def images_df(
     spark,
     n: int,
-    seed: int = DEFAULT_SEED,
     tiles_axis: int = DEFAULT_TILES_AXIS,
 ):
     """Distributed images table: spark.range -> mapInPandas generator.
@@ -159,7 +158,6 @@ def images_df(
             yield images_pdf(
                 int(ids.min()),
                 int(ids.max()) + 1,
-                seed=seed,
                 tiles_axis=tiles_axis,
             )
 
@@ -188,6 +186,8 @@ def images_df(
 # ---------------------------------------------------------------------------
 
 LINEAR_SIZE = 64
+# anchor window (tiles per axis) of the linear tables and their SQL
+LINEAR_TILES_AXIS = 16
 
 
 def linear_pixels(idx: int, h: int, w: int) -> np.ndarray:
@@ -212,10 +212,11 @@ def linear_size(idx: int):
     return LINEAR_SIZE - 2 * (idx % 3), LINEAR_SIZE - 2 * (idx % 5)
 
 
-def linear_images_df(spark, n: int, tiles_axis: int = 16):
+def linear_images_df(spark, n: int):
     """Distributed SQL-expressible images table with x0/y_top attached
     (ready for zonal/retile without assign_cells)."""
     parts = spark.sparkContext.defaultParallelism
+    tiles_axis = LINEAR_TILES_AXIS
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -253,7 +254,7 @@ def linear_images_df(spark, n: int, tiles_axis: int = 16):
     )
 
 
-def linear_pixels_sql(n: int, tiles_axis: int = 16) -> str:
+def linear_pixels_sql(n: int) -> str:
     """DuckDB CTE ``lpix`` reconstructing the exact pixel table of
     linear_images_df(n): (idx, image_id, i, j, v, px, py) with pixel
     CENTER world coordinates."""
@@ -263,8 +264,8 @@ def linear_pixels_sql(n: int, tiles_axis: int = 16) -> str:
              printf('img_%012d', g.idx) AS image_id,
              ({LINEAR_SIZE} - 2*(g.idx % 3)) AS w,
              ({LINEAR_SIZE} - 2*(g.idx % 5)) AS h,
-             ((g.idx*7) % {tiles_axis}) * {TILE_SIZE!r} AS x0,
-             {WORLD_TOP!r} - ((g.idx*13) % {tiles_axis}) * {TILE_SIZE!r}
+             ((g.idx*7) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r} AS x0,
+             {WORLD_TOP!r} - ((g.idx*13) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r}
                AS y_top,
              (g.idx*37) % 199 AS seed
       FROM (SELECT unnest(generate_series(0, {n - 1})) AS idx) g
@@ -295,9 +296,10 @@ def linear_rgb_pixels(idx: int, h: int, w: int) -> np.ndarray:
     return ((seed + 7 * ii + 13 * jj + 31 * bb) % 251).astype(np.uint8)
 
 
-def linear_rgb_images_df(spark, n: int, tiles_axis: int = 16):
+def linear_rgb_images_df(spark, n: int):
     """3-band (RGB PNG) variant of linear_images_df (S2 multi-band)."""
     parts = spark.sparkContext.defaultParallelism
+    tiles_axis = LINEAR_TILES_AXIS
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -342,9 +344,10 @@ def linear_f4_pixels(idx: int, h: int, w: int) -> np.ndarray:
     return (3.0 * seed + 0.5 * ii + 0.25 * jj).astype(np.float32)
 
 
-def linear_f4_images_df(spark, n: int, tiles_axis: int = 16):
+def linear_f4_images_df(spark, n: int):
     """f4 (rawz) variant of linear_images_df (S2 non-u8 dtypes)."""
     parts = spark.sparkContext.defaultParallelism
+    tiles_axis = LINEAR_TILES_AXIS
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -377,7 +380,7 @@ def linear_f4_images_df(spark, n: int, tiles_axis: int = 16):
     )
 
 
-def linear_rgb_pixels_sql(n: int, tiles_axis: int = 16) -> str:
+def linear_rgb_pixels_sql(n: int) -> str:
     """DuckDB CTE ``lrgb``: (idx, image_id, i, j, r, g, b, px, py)."""
     return f"""
     limg AS (
@@ -385,8 +388,8 @@ def linear_rgb_pixels_sql(n: int, tiles_axis: int = 16) -> str:
              printf('img_%012d', g.idx) AS image_id,
              ({LINEAR_SIZE} - 2*(g.idx % 3)) AS w,
              ({LINEAR_SIZE} - 2*(g.idx % 5)) AS h,
-             ((g.idx*7) % {tiles_axis}) * {TILE_SIZE!r} AS x0,
-             {WORLD_TOP!r} - ((g.idx*13) % {tiles_axis}) * {TILE_SIZE!r}
+             ((g.idx*7) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r} AS x0,
+             {WORLD_TOP!r} - ((g.idx*13) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r}
                AS y_top,
              (g.idx*37) % 199 AS seed
       FROM (SELECT unnest(generate_series(0, {n - 1})) AS idx) g
@@ -405,7 +408,7 @@ def linear_rgb_pixels_sql(n: int, tiles_axis: int = 16) -> str:
     """
 
 
-def linear_f4_pixels_sql(n: int, tiles_axis: int = 16) -> str:
+def linear_f4_pixels_sql(n: int) -> str:
     """DuckDB CTE ``lf4``: (idx, image_id, i, j, v, px, py) with v cast
     through REAL to match the engine's float32 payload exactly."""
     return f"""
@@ -414,8 +417,8 @@ def linear_f4_pixels_sql(n: int, tiles_axis: int = 16) -> str:
              printf('img_%012d', g.idx) AS image_id,
              ({LINEAR_SIZE} - 2*(g.idx % 3)) AS w,
              ({LINEAR_SIZE} - 2*(g.idx % 5)) AS h,
-             ((g.idx*7) % {tiles_axis}) * {TILE_SIZE!r} AS x0,
-             {WORLD_TOP!r} - ((g.idx*13) % {tiles_axis}) * {TILE_SIZE!r}
+             ((g.idx*7) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r} AS x0,
+             {WORLD_TOP!r} - ((g.idx*13) % {LINEAR_TILES_AXIS}) * {TILE_SIZE!r}
                AS y_top,
              (g.idx*37) % 199 AS seed
       FROM (SELECT unnest(generate_series(0, {n - 1})) AS idx) g
@@ -503,8 +506,6 @@ def polygons_pdf(
     )
 
 
-def polygons_df(spark, m: int, seed: int = DEFAULT_SEED,
-                tiles_axis: int = DEFAULT_TILES_AXIS, hot_every: int = 50):
-    pdf = polygons_pdf(m, seed=seed, tiles_axis=tiles_axis,
-                       hot_every=hot_every)
+def polygons_df(spark, m: int, tiles_axis: int = DEFAULT_TILES_AXIS):
+    pdf = polygons_pdf(m, tiles_axis=tiles_axis)
     return spark.createDataFrame(pdf, schema=POLYGONS_SCHEMA)

@@ -19,8 +19,9 @@ def corpus(spark):
     )
 
 
-def test_sketch_shape_and_mass(corpus):
-    sk = sketch.cm_sketch(corpus, "tok", depth=4, width=64).toPandas()
+def test_sketch_shape_and_mass(corpus, monkeypatch):
+    monkeypatch.setattr(sketch, "CM_WIDTH", 64)
+    sk = sketch.cm_sketch(corpus, "tok").toPandas()
     # at most depth x width cells, every count positive
     assert len(sk) <= 4 * 64
     assert (sk["cnt"] > 0).all()
@@ -30,7 +31,7 @@ def test_sketch_shape_and_mass(corpus):
     assert (mass == 275).all()
 
 
-def test_estimate_overcounts_never_under(spark, corpus):
+def test_estimate_overcounts_never_under(spark, corpus, monkeypatch):
     items = spark.createDataFrame(
         pd.DataFrame(
             [("alpha", 50), ("beta", 20), ("gamma", 5),
@@ -39,8 +40,9 @@ def test_estimate_overcounts_never_under(spark, corpus):
         ),
         schema="tok string, truth long",
     )
-    sk = sketch.cm_sketch(corpus, "tok", depth=4, width=64)
-    est = sketch.cm_estimate(sk, items, "tok", depth=4, width=64)
+    monkeypatch.setattr(sketch, "CM_WIDTH", 64)
+    sk = sketch.cm_sketch(corpus, "tok")
+    est = sketch.cm_estimate(sk, items, "tok")
     got = {
         r["item"]: r["estimate"]
         for r in est.collect()
@@ -50,26 +52,25 @@ def test_estimate_overcounts_never_under(spark, corpus):
     for k, t in truth.items():
         assert got[k] >= t, (k, got[k], t)
     # a wide sketch is collision-free for the heavy item
-    wide = sketch.cm_sketch(corpus, "tok", depth=4, width=4096)
-    est_w = sketch.cm_estimate(
-        wide, items, "tok", depth=4, width=4096
-    )
+    monkeypatch.setattr(sketch, "CM_WIDTH", 4096)
+    wide = sketch.cm_sketch(corpus, "tok")
+    est_w = sketch.cm_estimate(wide, items, "tok")
     got_w = {r["item"]: r["estimate"] for r in est_w.collect()}
     assert got_w["alpha"] == 50
     assert got_w["absent"] == 0
 
 
-def test_null_and_merge_invariance(spark):
+def test_null_and_merge_invariance(spark, monkeypatch):
     rows = pd.DataFrame(
         {"tok": ["x", None, "x", "y"]}
     )
     df = spark.createDataFrame(rows, schema="tok string")
-    sk = sketch.cm_sketch(df, "tok", depth=2, width=32).toPandas()
+    monkeypatch.setattr(sketch, "CM_DEPTH", 2)
+    monkeypatch.setattr(sketch, "CM_WIDTH", 32)
+    sk = sketch.cm_sketch(df, "tok").toPandas()
     assert sk.groupby("d")["cnt"].sum().eq(3).all()  # NULL dropped
     # repartitioning must not change a single cell (pure sums)
-    sk2 = sketch.cm_sketch(
-        df.repartition(7), "tok", depth=2, width=32
-    ).toPandas()
+    sk2 = sketch.cm_sketch(df.repartition(7), "tok").toPandas()
     a = sk.sort_values(["d", "cell"]).reset_index(drop=True)
     b = sk2.sort_values(["d", "cell"]).reset_index(drop=True)
     assert a.equals(b)

@@ -1,10 +1,11 @@
 """Dead-code guards over raster_tools_spark/, with no allowlist:
 
-- every top-level name must be referenced somewhere in the repo's
-  Python files outside its own definition;
-- every parameter defaulting to None, True or False must be set to
-  something else by a call outside tests/ (an option only tests select
-  is a second code path nothing ships);
+- every top-level name must be referenced by a Python file outside
+  tests/, outside its own definition (a name only tests reach is a
+  reference, harness or fake, and lives in tests/);
+- every defaulted parameter must be set to a different value by a call
+  outside tests/ (an option nothing ships sets is a constant, and one
+  only tests select is a second code path nothing ships);
 - every import must be referenced by its module or imported from it
   by another file;
 - every single-name local assignment must be read by its function.
@@ -56,16 +57,18 @@ def _top_level_defs(tree):
 
 def unreferenced_definitions(root=ROOT):
     """(path, line, name) of every top-level definition in the package
-    whose name appears as a whole word nowhere but inside that
-    definition's own source lines (a whole-word match is a maximal
-    ``\\w+`` run, so counting tokens once per file is exact)."""
+    whose name appears as a whole word in no file outside tests/ but
+    inside that definition's own source lines (a whole-word match is a
+    maximal ``\\w+`` run, so counting tokens once per file is exact)."""
     texts = {}
     for path in _py_files(root):
         with open(path, encoding="utf-8") as f:
             texts[path] = f.read()
+    tests = os.path.join(root, "tests") + os.sep
     words = Counter()
-    for text in texts.values():
-        words.update(WORD.findall(text))
+    for path, text in texts.items():
+        if not path.startswith(tests):
+            words.update(WORD.findall(text))
     pkg = os.path.join(root, "raster_tools_spark")
     out = []
     for path, text in sorted(texts.items()):
@@ -86,36 +89,34 @@ def test_no_unreferenced_top_level_definitions():
 
 
 def test_scan_flags_a_planted_dead_definition(tmp_path):
-    """The scan itself must see a definition nothing references."""
+    """The scan itself must see a definition nothing references and one
+    only a test references, and must not flag one a top-level script
+    references."""
     pkg = tmp_path / "raster_tools_spark"
     pkg.mkdir()
     (pkg / "mod.py").write_text(
         "def used():\n    return 1\n\n\n"
         "def dead_helper():\n    return dead_helper\n\n\n"
+        "def tests_only():\n    return 2\n\n\n"
+        "def scripted():\n    return 3\n\n\n"
         "LIMIT = used()\n"
     )
     (tmp_path / "user.py").write_text(
         "from raster_tools_spark.mod import LIMIT\n")
+    (tmp_path / "bench.py").write_text(
+        "from raster_tools_spark.mod import scripted\n")
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from raster_tools_spark.mod import tests_only\n")
+    mod = os.path.join("raster_tools_spark", "mod.py")
     assert unreferenced_definitions(str(tmp_path)) == [
-        (os.path.join("raster_tools_spark", "mod.py"), 5, "dead_helper")
-    ]
-
-
-_NOT_LITERAL = object()
-
-
-def _literal(node):
-    """The None/True/False that ``node`` spells, else a sentinel."""
-    if isinstance(node, ast.Constant) and (
-            node.value is None or isinstance(node.value, bool)):
-        return node.value
-    return _NOT_LITERAL
+        (mod, 5, "dead_helper"), (mod, 9, "tests_only")]
 
 
 def _options(tree):
     """(line, callee names, parameter, positional index or None,
-    default) of every None/True/False-defaulted parameter of every def
-    in ``tree``, methods and nested defs included.  A method is called
+    default expression) of every defaulted parameter of every def in
+    ``tree``, methods and nested defs included.  A method is called
     without its self/cls argument, and ``__init__`` under its class
     name."""
     out = []
@@ -142,9 +143,8 @@ def _options(tree):
             params += [(p, None, d)
                        for p, d in zip(a.kwonlyargs, a.kw_defaults)
                        if d is not None]
-            for p, i, d in params:
-                if _literal(d) is not _NOT_LITERAL:
-                    out.append((child.lineno, names, p.arg, i, d.value))
+            out.extend((child.lineno, names, p.arg, i, d)
+                       for p, i, d in params)
             visit(child, None)
 
     visit(tree, None)
@@ -152,25 +152,26 @@ def _options(tree):
 
 
 def _sets(call, param, index, default):
-    """Does ``call`` pass ``param`` (keyword, or position ``index``)
-    anything but ``default``?  ``*``/``**`` unpacking that could reach
-    the parameter counts as setting it."""
+    """Does ``call`` pass ``param`` (keyword, or position ``index``) an
+    expression other than ``default``, compared by ``ast.dump``?
+    ``*``/``**`` unpacking that could reach the parameter counts as
+    setting it."""
+    same = ast.dump(default)
     for k in call.keywords:
-        if k.arg is None or (
-                k.arg == param and _literal(k.value) is not default):
+        if k.arg is None or (k.arg == param and ast.dump(k.value) != same):
             return True
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
             return index is not None and i <= index
         if i == index:
-            return _literal(arg) is not default
+            return ast.dump(arg) != same
     return False
 
 
 def unset_options(root=ROOT):
-    """(path, line, function names, parameter) of every None/True/
-    False-defaulted parameter in the package that no call in a .py
-    file outside tests/ sets.  Callees match by bare or attribute name,
+    """(path, line, function names, parameter) of every defaulted
+    parameter in the package that no call in a .py file outside tests/
+    sets to a different value.  Callees match by bare or attribute name,
     so a forward such as ``f(x=x)`` sets ``f``'s ``x``."""
     trees = _parse_all(root)
     pkg = os.path.join(root, "raster_tools_spark") + os.sep
@@ -330,8 +331,11 @@ def test_every_local_is_read():
 def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
     """An unset option and a tests-only option are flagged; an option a
     non-test file sets (by position here) and one it reaches only
-    through a forward are not.  An import nothing references is
-    flagged; one another file imports from the module is not.  A local
+    through a forward are not.  Int, negative float, str, tuple and
+    module-constant defaults are flagged, and so is a float passed the
+    value it defaults to; one passed a different value is not.  An
+    import nothing references is flagged; one another file imports
+    from the module is not.  A local
     nothing reads is flagged, an augmented-only one at both writes; one
     read directly or by a lambda is not."""
     pkg = tmp_path / "raster_tools_spark"
@@ -350,12 +354,17 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
         "    closed = 3\n"
         "    total = 0\n"
         "    total += kept\n"
-        "    return lambda: closed\n"
+        "    return lambda: closed\n\n\n"
+        "LIMIT = 8\n\n\n"
+        "def sized(x, n=3, lo=-1.5, name='a', shape=(1, 2), cap=LIMIT,\n"
+        "          same=1000.0, other=1000.0):\n"
+        "    return x\n"
     )
     (tmp_path / "user.py").write_text(
-        "from raster_tools_spark.mod import forwarder, pi, run\n\n"
+        "from raster_tools_spark.mod import forwarder, pi, run, sized\n\n"
         "run(1, None, False, 'out')\n"
         "forwarder(pi, True)\n"
+        "sized(1, same=1000.0, other=999.5)\n"
     )
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_mod.py").write_text(
@@ -366,6 +375,12 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
     assert unset_options(str(tmp_path)) == [
         (mod, 5, "run", "unset"),
         (mod, 5, "run", "tests_only"),
+        (mod, 26, "sized", "n"),
+        (mod, 26, "sized", "lo"),
+        (mod, 26, "sized", "name"),
+        (mod, 26, "sized", "shape"),
+        (mod, 26, "sized", "cap"),
+        (mod, 26, "sized", "same"),
     ]
     assert unused_imports(str(tmp_path)) == [(mod, 1, "os")]
     assert unread_locals(str(tmp_path)) == [

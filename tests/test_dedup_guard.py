@@ -24,24 +24,24 @@ def test_stopword_shingles_pruned(spark):
     from raster_tools_spark.functions import dedup
 
     docs = _stopword_corpus(spark)
-    sh = dedup._doc_shingles(docs, "auto").toPandas()
+    sh = dedup._doc_shingles(docs).toPandas()
     # the shared prefix shingles appear in all 40 docs > max_df(40)=20
     assert "the quick brown" not in set(sh["shingle"])
     # unique-tail shingles survive
     assert (sh["shingle"].str.startswith("w0x")).any()
 
 
-def test_stopword_corpus_subquadratic(spark):
+def test_stopword_corpus_subquadratic(spark, monkeypatch):
     from raster_tools_spark.functions import dedup
 
     docs = _stopword_corpus(spark)
     # with the guard, no pair shares a shingle -> zero candidates
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.01).count()
     assert pairs == 0
-    # without the guard the stopword run pairs every doc with every doc
-    pairs_raw = dedup.ngram_jaccard_pairs(
-        docs, threshold=0.01, max_df=None
-    ).count()
+    # without the guard (a floor above the corpus size) the stopword
+    # run pairs every doc with every doc
+    monkeypatch.setattr(dedup, "MAX_DF_MIN", 40)
+    pairs_raw = dedup.ngram_jaccard_pairs(docs, threshold=0.01).count()
     assert pairs_raw == 40 * 39 // 2
 
 
@@ -80,7 +80,7 @@ def test_simhash_banding_has_full_recall(spark):
     }
     got = {
         (r.doc_a, r.doc_b)
-        for r in dedup.simhash_near_dup(docs, max_hamming=3).collect()
+        for r in dedup.simhash_near_dup(docs).collect()
     }
     assert got == want
     assert len(want) > 0  # the fixture must actually contain pairs

@@ -3,12 +3,15 @@ produce bit-identical tile assignments and PIP join rows
 (SURVEY.md section 5 item 4)."""
 
 import json
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 cpus = int(sys.argv[1])
 from raster_tools_spark.session import get_spark
 from raster_tools_spark import synth
@@ -48,7 +51,7 @@ packs = sorted(
 )
 near = sorted(
     (r.doc_a, r.doc_b, r.hamming)
-    for r in dedup.simhash_near_dup(docs, max_hamming=3).collect()
+    for r in dedup.simhash_near_dup(docs).collect()
 )
 contam = sorted(
     (r.doc_id, r.n_grams, r.n_hits)
@@ -83,7 +86,7 @@ l2 = spark.createDataFrame(
 ).repartition(cpus)
 diffs = sorted(
     (r.feat_id, r.ring_id, r.n_pts, round(r.area, 9), r.is_hole)
-    for r in overlay.mask_difference_polygons(l1, l2, pixel=4.0)
+    for r in overlay.mask_difference_polygons(l1, l2)
     .collect()
 )
 tf = sorted(
@@ -102,7 +105,7 @@ spark.stop()
 
 def _run(cpus: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, str(cpus)],
+        [sys.executable, "-c", CHILD, str(cpus), ROOT],
         capture_output=True,
         text=True,
         timeout=420,

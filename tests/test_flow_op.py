@@ -8,7 +8,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from raster_tools_spark import codecs, fill as fmod, flow, flow_vec
+from fill_reference import fill_depressions_staged
+
+from raster_tools_spark import codecs, flow, flow_vec
 from raster_tools_spark.grid import pack_cell, unpack_cell
 from raster_tools_spark.operators import flow_op
 
@@ -74,7 +76,7 @@ class TestStagedFill:
         tiles, nt = _tiles_df(spark, arr)
         out = flow_op.fill_depressions_tiles(tiles).collect()
         got = _stitch(out, nt)
-        expected = fmod.fill_depressions_staged(
+        expected = fill_depressions_staged(
             arr.astype(np.float64).copy()
         )
         assert np.array_equal(got, expected)
@@ -294,7 +296,7 @@ class TestVectorizeNon256Tiles:
 
 
 class TestSeamZigzag:
-    def test_stream_hugging_the_seam(self, spark):
+    def test_stream_hugging_the_seam(self, spark, monkeypatch):
         """Adversarial: a stream alternating between two tiles at every
         step (E at col 255, SW at col 256) -- one boundary crossing per
         row.  Exercises mutual-pair detection and the driver tail."""
@@ -327,7 +329,8 @@ class TestSeamZigzag:
             pd.DataFrame(rows, columns=["cell_id", "bytes", "fmt"]),
             schema="cell_id long, bytes binary, fmt string",
         )
-        out = flow_op.accumulate_tiles(tiles, max_rounds=8).collect()
+        monkeypatch.setattr(flow_op, "MAX_ROUNDS", 8)
+        out = flow_op.accumulate_tiles(tiles).collect()
         got = _stitch(out, 2, decode=False).astype(np.int64)
         expected = flow.accumulate(d).astype(np.int64)
         assert expected.max() > 300  # the zigzag accumulates deep
@@ -377,9 +380,9 @@ class TestSeamZigzag:
         assert expected.max() > t  # streams cross the seams
         assert np.array_equal(canvas, expected)
 
-    def test_driver_tail_record_bound_raises(self, spark):
+    def test_driver_tail_record_bound_raises(self, spark, monkeypatch):
         """The driver tail refuses to collect more in-flight records
-        than driver_tail_max_records (clear error, not an OOM)."""
+        than DRIVER_TAIL_MAX_RECORDS (clear error, not an OOM)."""
         import pytest
 
         size = 2 * TILE
@@ -402,15 +405,14 @@ class TestSeamZigzag:
             pd.DataFrame(rows, columns=["cell_id", "bytes", "fmt"]),
             schema="cell_id long, bytes binary, fmt string",
         )
-        with pytest.raises(RuntimeError, match="driver_tail_max_records"):
-            flow_op.accumulate_tiles(
-                tiles, tail_threshold=10**9,
-                driver_tail_max_records=3,
-            ).collect()
+        monkeypatch.setattr(flow_op, "TAIL_THRESHOLD", 10**9)
+        monkeypatch.setattr(flow_op, "DRIVER_TAIL_MAX_RECORDS", 3)
+        with pytest.raises(RuntimeError, match="DRIVER_TAIL_MAX_RECORDS"):
+            flow_op.accumulate_tiles(tiles).collect()
 
-    def test_round_cap_exhaustion_is_exact(self, spark):
+    def test_round_cap_exhaustion_is_exact(self, spark, monkeypatch):
         """A stream whose boundary flow needs more rounds than
-        max_rounds, with tail_threshold=0 so the in-loop driver tail
+        MAX_ROUNDS, with TAIL_THRESHOLD=0 so the in-loop driver tail
         never triggers: the exhaustion path must force the tail and
         return EXACT accumulation, never a silent truncation."""
         size = 2 * TILE
@@ -437,16 +439,16 @@ class TestSeamZigzag:
             pd.DataFrame(rows, columns=["cell_id", "bytes", "fmt"]),
             schema="cell_id long, bytes binary, fmt string",
         )
-        out = flow_op.accumulate_tiles(
-            tiles, max_rounds=2, tail_threshold=0
-        ).collect()
+        monkeypatch.setattr(flow_op, "MAX_ROUNDS", 2)
+        monkeypatch.setattr(flow_op, "TAIL_THRESHOLD", 0)
+        out = flow_op.accumulate_tiles(tiles).collect()
         got = _stitch(out, 2, decode=False).astype(np.int64)
         expected = flow.accumulate(d).astype(np.int64)
         assert np.array_equal(got, expected)
 
 
 class TestStagedFillGenericity:
-    def test_res12_f4_tiles(self, spark):
+    def test_res12_f4_tiles(self, spark, monkeypatch):
         """Review regressions: tile ids at res != 10 and non-u8 dtypes
         must survive the staged fill (ids keep their resolution, f4
         values keep their precision)."""
@@ -467,9 +469,9 @@ class TestStagedFillGenericity:
             pd.DataFrame(rows, columns=["cell_id", "bytes", "fmt"]),
             schema="cell_id long, bytes binary, fmt string",
         )
-        out = flow_op.fill_depressions_tiles(
-            tiles, step=40, offsets=(0, 13)
-        ).collect()
+        monkeypatch.setattr(flow_op, "FILL_STEP", 40)
+        monkeypatch.setattr(flow_op, "FILL_OFFSETS", (0, 13))
+        out = flow_op.fill_depressions_tiles(tiles).collect()
         assert len(out) == 4
         got_ids = {int(r.cell_id) for r in out}
         assert got_ids == set(arrs)  # ids preserved at res 12
@@ -480,9 +482,7 @@ class TestStagedFillGenericity:
             res, ix, iy = (int(v) for v in unpack_cell(cid))
             ty, tx = iy - 9, ix - 3
             glob[ty * t:(ty + 1) * t, tx * t:(tx + 1) * t] = a
-        from raster_tools_spark import fill as fmod2
-
-        expected = fmod2.fill_depressions_staged(
+        expected = fill_depressions_staged(
             glob.copy(), step=40, offsets=(0, 13)
         )
         for r in out:

@@ -1,6 +1,8 @@
 """Halo-exchange stencil tests: a 2x2 tile grid must produce the same
 result as running the kernel on the stitched global array (tile seams
-invisible -- the point of the halo join)."""
+invisible -- the point of the halo join).  Besides the shipped
+hillshade, the halo is driven with test kernels: 3x3 min/max filters
+and a margin-2 smoothing kernel."""
 
 import numpy as np
 import pandas as pd
@@ -50,13 +52,54 @@ def _reference(kernel, g, margin):
     return kernel(padded)[margin:-margin, margin:-margin]
 
 
+# The test kernels are closures built by factories: Spark ships a
+# closure to its Python workers by value, while a top-level function of
+# this module would be pickled by reference to a module the workers
+# cannot import.
+
+def _smooth_kernel():
+    """3x3 restore-smoothing kernel (fill/fill.py:41-51)."""
+    from raster_tools_spark.fillnodata import KERNEL
+
+    def kernel(padded):
+        acc = np.zeros(padded.shape, dtype=np.float64)
+        p = np.pad(padded.astype(np.float64), 1, mode="symmetric")
+        for di in range(3):
+            for dj in range(3):
+                acc += KERNEL[di, dj] * p[
+                    di : di + padded.shape[0], dj : dj + padded.shape[1]
+                ]
+        return np.clip(np.round(acc), 0, 255).astype(np.uint8)
+
+    return kernel
+
+
+def _extreme_filter3(reduce):
+    """3x3 minimum/maximum filter (flow_fil.py:34-41 depression edge,
+    shadow.py:126-127 widening)."""
+
+    def kernel(padded):
+        p = np.pad(padded, 1, mode="edge")
+        out = padded.copy()
+        for di in range(3):
+            for dj in range(3):
+                reduce(
+                    out,
+                    p[di : di + padded.shape[0], dj : dj + padded.shape[1]],
+                    out=out,
+                )
+        return out
+
+    return kernel
+
+
 @pytest.mark.parametrize(
     "kernel,margin",
     [
-        (focal.minimum_filter3, 1),
-        (focal.maximum_filter3, 1),
+        (_extreme_filter3(np.minimum), 1),
+        (_extreme_filter3(np.maximum), 1),
         (focal.hillshade_kernel, 1),
-        (focal.smooth_kernel, 2),
+        (_smooth_kernel(), 2),
     ],
     ids=["min3", "max3", "hillshade", "smooth"],
 )

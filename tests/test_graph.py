@@ -79,7 +79,7 @@ def test_dedup_clusters(spark):
     assert out[31] == (30, False)
 
 
-def test_distributed_path_equals_driver_path(spark):
+def test_distributed_path_equals_driver_path(spark, monkeypatch):
     """Both executions of the hybrid must label identically."""
     import numpy as np
     import pandas as pd
@@ -98,10 +98,9 @@ def test_distributed_path_equals_driver_path(spark):
         (r.node, r.comp)
         for r in graph.connected_components(edges).collect()
     }
+    monkeypatch.setattr(graph, "DRIVER_THRESHOLD", 0)
     dist = {
         (r.node, r.comp)
-        for r in graph.connected_components(
-            edges, driver_threshold=0
-        ).collect()
+        for r in graph.connected_components(edges).collect()
     }
     assert drv == dist and len(drv) > 0

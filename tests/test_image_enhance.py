@@ -93,7 +93,7 @@ def test_box_blur_stats_wide_rawz_payloads(spark):
             columns=["image_id", "bytes", "fmt"],
         )
     )
-    got = {r["image_id"]: r for r in box_blur_stats(images, 2).collect()}
+    got = {r["image_id"]: r for r in box_blur_stats(images).collect()}
     for code, p in planes.items():
         ref = _wide_box_mean(p, 2)
         assert got[code]["blur_sum"] == int(ref.sum()), code
@@ -257,7 +257,7 @@ def test_spark_operators_end_to_end(spark):
         assert qt[iid]["n_leaves"] == sum(per)
         assert qt[iid]["comp_x1000"] == 1000 * p.size // sum(per)
 
-    blur = {r["image_id"]: r for r in box_blur_stats(images, 2).collect()}
+    blur = {r["image_id"]: r for r in box_blur_stats(images).collect()}
     eq = {r["image_id"]: r for r in equalize_stats(images).collect()}
     ot = {r["image_id"]: r for r in otsu_stats(images).collect()}
     rle = {r["image_id"]: r for r in rle_stats(images).collect()}
@@ -283,7 +283,7 @@ def test_spark_operators_end_to_end(spark):
     from numpy.lib.stride_tricks import sliding_window_view
 
     mg = {r["image_id"]: r
-          for r in morph_gradient_stats(images, 1).collect()}
+          for r in morph_gradient_stats(images).collect()}
     for iid, p in planes.items():
         pp = p.astype(np.int64)
         pmax = np.pad(pp, 1, constant_values=-1)
@@ -311,7 +311,7 @@ def test_spark_operators_end_to_end(spark):
         assert hm[iid]["m_max"] == int(p.max())
 
     # payload-emitting blur round-trips through the PNG codec
-    out = {r["image_id"]: r for r in box_blur_images(images, 2).collect()}
+    out = {r["image_id"]: r for r in box_blur_images(images).collect()}
     for iid, p in planes.items():
         dec = codecs.png_decode(bytes(out[iid]["bytes"]))
         assert (dec == _box_blur_plane(p, 2).astype(np.uint8)).all()

@@ -41,7 +41,7 @@ def tiles(spark):
          for i, (x, y, v) in enumerate(zip(px, py, z))],
         "pid long, x double, y double, z double",
     )
-    out = finterp.linear_grid_tiles(pts, res=RES, halo=32.0)
+    out = finterp.linear_grid_tiles(pts)
     return {
         r.cell_id: (codecs.decode(bytes(r.bytes), r.fmt), r.x0, r.y_top)
         for r in out.collect()

@@ -19,7 +19,7 @@ def test_hand_checked_islands(spark):
         ("b", 0, 100), ("b", 10, 20),
     ]
     got = {r["key"]: r for r in interval_union(
-        _iv_df(spark, rows), "key", "s", "e").collect()}
+        _iv_df(spark, rows), "key").collect()}
     assert got["a"]["n_islands"] == 2
     assert got["a"]["covered"] == 20 + 5
     assert got["a"]["longest"] == 20
@@ -31,7 +31,7 @@ def test_hand_checked_islands(spark):
 
 def test_disjoint_intervals_identity(spark):
     rows = [("k", i * 10, i * 10 + 3) for i in range(5)]
-    got = interval_union(_iv_df(spark, rows), "key", "s", "e").collect()[0]
+    got = interval_union(_iv_df(spark, rows), "key").collect()[0]
     assert got["n_islands"] == 5
     assert got["covered"] == 15
     assert got["max_merged"] == 1
@@ -40,7 +40,7 @@ def test_disjoint_intervals_identity(spark):
 def test_covered_bounded_by_span_and_sum(spark):
     rows = [("k", (i * 37) % 100, (i * 37) % 100 + 1 + (i % 9))
             for i in range(40)]
-    got = interval_union(_iv_df(spark, rows), "key", "s", "e").collect()[0]
+    got = interval_union(_iv_df(spark, rows), "key").collect()[0]
     raw_sum = sum(e - s for _, s, e in rows)
     span = max(e for *_, e in rows) - min(s for _, s, _e in rows)
     assert got["covered"] <= min(raw_sum, span)
@@ -48,6 +48,6 @@ def test_covered_bounded_by_span_and_sum(spark):
 
 
 def test_plan_is_pure_jvm(spark):
-    df = interval_union(_iv_df(spark, [("k", 0, 1)]), "key", "s", "e")
+    df = interval_union(_iv_df(spark, [("k", 0, 1)]), "key")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "InPandas" not in plan

@@ -52,16 +52,3 @@ def test_overwrite_replaces(spark, lut_url):
     )
     jdbc_src.write_table(df2, lut_url, "size_lut")
     assert jdbc_src.read_table(spark, lut_url, "size_lut").count() == 1
-
-
-def test_partitioned_read(spark, lut_url):
-    """Partitioned JDBC scan: rows split across range-predicated
-    parallel queries, same content, filters still pushed."""
-    df = jdbc_src.read_table_partitioned(
-        spark, lut_url, "size_lut", "lo", 0, 60, 3
-    )
-    assert df.rdd.getNumPartitions() == 3
-    assert df.count() == 4
-    filt = df.filter(F.col("hi") <= 60)
-    assert "LessThanOrEqual(hi,60)" in jdbc_src.pushed_filters(filt)
-    assert filt.count() == 3

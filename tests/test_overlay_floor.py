@@ -125,9 +125,7 @@ class TestDifferencePolygons:
             ),
             schema="feat_id long, geom_wkb binary",
         )
-        rows = overlay.mask_difference_polygons(
-            l1, l2, pixel=4.0
-        ).collect()
+        rows = overlay.mask_difference_polygons(l1, l2).collect()
         assert len(rows) == 1
         r = rows[0]
         gtype, payload = wkb.parse(bytes(r.geom_wkb))
@@ -162,9 +160,7 @@ class TestDifferencePolygons:
             ),
             schema="feat_id long, geom_wkb binary",
         )
-        rows = overlay.mask_difference_polygons(
-            l1, l2, pixel=4.0
-        ).collect()
+        rows = overlay.mask_difference_polygons(l1, l2).collect()
         assert len(rows) == 1
         # whole 80 x 40 footprint kept (half-pixel contour band)
         assert abs(rows[0].area - 80.0 * 40.0) < 4.0 * (2 * (80 + 40))
@@ -194,9 +190,7 @@ class TestDifferencePolygons:
             ),
             schema="feat_id long, geom_wkb binary",
         )
-        rows = overlay.mask_difference_polygons(
-            l1, l2, pixel=4.0
-        ).collect()
+        rows = overlay.mask_difference_polygons(l1, l2).collect()
         assert len(rows) == 2
         outer = [r for r in rows if not r.is_hole]
         holes = [r for r in rows if r.is_hole]
@@ -268,9 +262,7 @@ class TestExactAlignedDifference:
             [(1, pent)],
             [(9, wkb.box_wkb(100.0, top - 140.0, 120.0, top - 120.0))],
         )
-        rows = overlay.mask_difference_polygons(
-            l1, l2, pixel=4.0
-        ).collect()
+        rows = overlay.mask_difference_polygons(l1, l2).collect()
         assert len(rows) >= 1
         # pentagon ~= 80*40 - 2*(40*10/2) = 2800; cut 20x20 = 400
         net = sum(r.area * (-1 if r.is_hole else 1) for r in rows)

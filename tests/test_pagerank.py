@@ -13,7 +13,7 @@ def test_ring_graph_stays_uniform(spark):
     edges = nodes.select(
         F.col("node").alias("src"), ((F.col("node") + 1) % n).alias("dst")
     )
-    out = pagerank_fixed(nodes, edges, iterations=3).collect()
+    out = pagerank_fixed(nodes, edges).collect()
     prs = {r["node"]: r["pr"] for r in out}
     assert all(v == pytest.approx(1.0 / n) for v in prs.values())
 
@@ -30,7 +30,7 @@ def test_ranks_sum_to_one_and_sink_heavy_node_wins(spark):
             ((F.col("node") + 1) % n).alias("dst"),
         )
     )
-    out = pagerank_fixed(nodes, edges, iterations=3).collect()
+    out = pagerank_fixed(nodes, edges).collect()
     prs = {r["node"]: r["pr"] for r in out}
     assert sum(prs.values()) == pytest.approx(1.0, abs=1e-9)
     assert prs[0] == max(prs.values())

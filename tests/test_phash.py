@@ -75,7 +75,7 @@ def test_banded_pairing_full_recall(spark):
     }
     got = {
         (r.id_a, r.id_b)
-        for r in multimodal.image_near_dup(df, max_hamming=6).collect()
+        for r in multimodal.image_near_dup(df).collect()
     }
     assert got == want
     assert len(want) >= 6  # each noisy twin pairs with its base

@@ -43,3 +43,21 @@ def test_head_window_is_oracle_backed_and_covering():
         (i for i, k in enumerate(q) if k not in hard), len(q)
     )
     assert all(k not in hard for k in q[first_rows_only:])
+
+
+def test_registry_contract_is_pinned():
+    """The oracle SQL text and the query names are the behaviour
+    contract: a refactor must leave both byte-for-byte unchanged.
+    Change these digests only together with a deliberate registry or
+    oracle change, and say why."""
+    import hashlib
+
+    sql = Q.oracle_sql()
+    names = sorted(Q.queries())
+    assert len(sql) == 143 and len(names) == 147
+    assert hashlib.md5(
+        json.dumps(sql, sort_keys=True).encode()
+    ).hexdigest() == "553a03c4d75150f3bab97cd8d602f9a6"
+    assert hashlib.md5(
+        "\n".join(names).encode()
+    ).hexdigest() == "0082d5210d5ea43cdc3942e152f84eaf"

@@ -114,7 +114,7 @@ def test_nearest_outside_hull(raster):
 def test_small_cloud_keeps_all():
     rng = np.random.default_rng(3)
     pts = rng.uniform(0, 50, (200, 3))
-    assert op_roof.classify_points(pts, min_points=900).all()
+    assert op_roof.classify_points(pts).all()
 
 
 def test_classify_drops_minor_component():

@@ -103,7 +103,7 @@ def test_levenshtein_near_dup_pairs_and_blocking(spark):
     )
     out = {
         (r["doc_a"], r["doc_b"]): r["dist"]
-        for r in dedup.levenshtein_near_dup(docs, max_dist=6).collect()
+        for r in dedup.levenshtein_near_dup(docs).collect()
     }
     assert out[(1, 2)] == 1
     assert out[(1, 4)] == 0  # lowercase normalization
@@ -114,7 +114,7 @@ def test_levenshtein_near_dup_pairs_and_blocking(spark):
     assert not any(3 in p for p in out)
 
 
-def test_levenshtein_length_band_prunes(spark):
+def test_levenshtein_length_band_prunes(spark, monkeypatch):
     # same 16-char prefix, length difference > band: pruned before
     # the distance kernel
     a = "common prefix 16" + "x" * 10
@@ -122,10 +122,8 @@ def test_levenshtein_length_band_prunes(spark):
     docs = spark.createDataFrame(
         [(1, a), (2, b)], "doc_id long, text string"
     )
-    assert (
-        dedup.levenshtein_near_dup(docs, max_dist=100, len_band=8)
-        .count() == 0
-    )
+    monkeypatch.setattr(dedup, "LEV_MAX_DIST", 100)
+    assert dedup.levenshtein_near_dup(docs).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -199,9 +197,7 @@ def test_blob_stats_8_connectivity(spark):
     px[1, 1] = 255                    # singleton
     px[3, 3] = px[4, 4] = px[5, 5] = 255   # diagonal chain: ONE blob
     px[9, 0:4] = 255                  # horizontal run of 4
-    r = image_enhance.blob_stats(
-        _one_image_df(spark, px), threshold=255
-    ).collect()[0]
+    r = image_enhance.blob_stats(_one_image_df(spark, px)).collect()[0]
     assert r["n_mask"] == 8
     assert r["n_blobs"] == 3
     assert r["max_blob"] == 4

@@ -225,19 +225,20 @@ def test_percentile_interpolation_is_dyadic_exact(spark):
 def test_kmv_set_ops_small_sets_exact(spark):
     a = spark.createDataFrame([(v,) for v in range(10)], "v long")
     b = spark.createDataFrame([(v,) for v in range(5, 20)], "v long")
-    r = sketch.kmv_set_ops(a, b, "v", k=64).collect()[0]
+    r = sketch.kmv_set_ops(a, b, "v").collect()[0]
     # union 20 < k -> both sketches complete -> exact everywhere
     assert r["union_est"] == 20.0
     assert r["inter_est"] == 5.0
     assert r["jaccard_est"] == 0.25
 
 
-def test_kmv_set_ops_estimates_track_truth(spark):
+def test_kmv_set_ops_estimates_track_truth(spark, monkeypatch):
     a = spark.createDataFrame([(v,) for v in range(1000)], "v long")
     b = spark.createDataFrame(
         [(v,) for v in range(500, 1500)], "v long"
     )
-    r = sketch.kmv_set_ops(a, b, "v", k=256).collect()[0]
+    monkeypatch.setattr(sketch, "KMV_K", 256)
+    r = sketch.kmv_set_ops(a, b, "v").collect()[0]
     # truth: union 1500, inter 500, J = 1/3; k=256 -> ~6% rel error
     assert abs(r["union_est"] - 1500) / 1500 < 0.25
     assert abs(r["inter_est"] - 500) / 500 < 0.40

@@ -63,7 +63,7 @@ def test_ivf_centroids_scale_as_sqrt():
             assert n / c <= 2 * (n ** 0.5) + 8
 
 
-def test_two_level_quantizer_recall_and_bounded_closure(spark):
+def test_two_level_quantizer_recall_and_bounded_closure(spark, monkeypatch):
     """Forcing n_centroids above the closure cap must switch to the
     two-level quantizer: results still rank by exact cosine with
     decent recall vs brute force, and the only collected centroid set
@@ -86,12 +86,12 @@ def test_two_level_quantizer_recall_and_bounded_closure(spark):
         }),
         schema="vec_id long, embedding array<double>",
     )
-    out = similarity.ivf_topk(
-        df, k=3, n_centroids=36, nprobe=4,
-        max_closure_centroids=16,      # force the two-level path
-    ).toPandas()
+    # force the two-level path; probe 4 lists so every query fills k
+    monkeypatch.setattr(similarity, "MAX_CLOSURE_CENTROIDS", 16)
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 4)
+    out = similarity.ivf_topk(df, n_centroids=36).toPandas()
     assert set(out.columns) == {"qid", "cid", "sim", "rn"}
-    assert len(out) == n * 3
+    assert len(out) == n * 5
     # recall vs brute-force top-1 (same-cluster neighbors dominate)
     sims = vecs @ vecs.T / (
         np.linalg.norm(vecs, axis=1)[:, None]
@@ -104,7 +104,7 @@ def test_two_level_quantizer_recall_and_bounded_closure(spark):
     assert recall >= 0.8, recall
 
 
-def test_two_level_matches_single_level_when_under_cap(spark):
+def test_two_level_matches_single_level_when_under_cap(spark, monkeypatch):
     """Below the cap the single-level path runs -- identical to the
     round-4 behavior (the cap only changes WHO computes assignments,
     never the k-NN contract)."""
@@ -123,11 +123,7 @@ def test_two_level_matches_single_level_when_under_cap(spark):
         }),
         schema="vec_id long, embedding array<double>",
     )
-    a = similarity.ivf_topk(df, k=2, n_centroids=9, nprobe=2)
-    b = similarity.ivf_topk(
-        df, k=2, n_centroids=9, nprobe=2,
-        max_closure_centroids=4096,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(
-        map(tuple, b.collect())
-    )
+    a = similarity.ivf_topk(df, n_centroids=9).collect()
+    monkeypatch.setattr(similarity, "MAX_CLOSURE_CENTROIDS", 9)
+    b = similarity.ivf_topk(df, n_centroids=9).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

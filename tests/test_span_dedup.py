@@ -4,6 +4,7 @@ import hashlib
 
 import pandas as pd
 
+from raster_tools_spark.functions import dedup
 from raster_tools_spark.functions.dedup import anchored_span_pairs
 
 
@@ -44,14 +45,15 @@ def test_disjoint_docs_produce_no_pairs(spark):
     assert anchored_span_pairs(_docs_df(spark, rows)).count() == 0
 
 
-def test_hot_gram_guard_suppresses_boilerplate(spark):
+def test_hot_gram_guard_suppresses_boilerplate(spark, monkeypatch):
     boiler = "standard license header text common to every file " * 3
     assert _has_anchor(boiler)
     rows = [(i, boiler + f" unique tail {i}") for i in range(8)]
     df = _docs_df(spark, rows)
-    # guard off: all 28 pairs appear; guard at 4 docs: none do
-    assert anchored_span_pairs(df, max_df=None).count() == 28
-    assert anchored_span_pairs(df, max_df=4).count() == 0
+    # guard at 50 docs: all 28 pairs appear; guard at 4 docs: none do
+    assert anchored_span_pairs(df).count() == 28
+    monkeypatch.setattr(dedup, "SPAN_MAX_DF", 4)
+    assert anchored_span_pairs(df).count() == 0
 
 
 def test_short_docs_are_skipped(spark):

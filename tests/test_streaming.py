@@ -1,161 +1,5 @@
-"""Streaming/batch parity: the windowed stream aggregation drained via
-the memory sink must equal the batch twin on the same rows."""
-
-import shutil
-
-import pytest
-from pyspark.sql import functions as F
-
-from raster_tools_spark.streaming import windows as sw
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def events_dir(tmp_path):
-    # stream sources need a directory of files
-    d = tmp_path / "events_stream"
-    d.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-def test_stream_equals_batch(spark, events_dir):
-    got = sw.run_stream_to_memory(spark, events_dir, "t_win").collect()
-    batch = sw.windowed_agg_batch(
-        spark.read.parquet(events_dir)
-    ).collect()
-    key = lambda r: (r.win_start, r.event_type)
-    got_m = {key(r): (r.cnt, r.sum_v) for r in got}
-    exp_m = {key(r): (r.cnt, r.sum_v) for r in batch}
-    assert got_m == exp_m
-    assert len(got_m) > 0
-
-
-def test_incremental_files_accumulate(spark, tmp_path):
-    import glob
-    import shutil as sh
-
-    d = tmp_path / "inc"
-    d.mkdir()
-    ev_df = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    total = ev_df.count()
-    half = total // 2
-    first = ev_df.orderBy("event_id").limit(half)
-    second = ev_df.orderBy("event_id").subtract(first)
-
-    def write_chunk(df, name):
-        tmp = str(tmp_path / f"chunk_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        sh.copy(part, d / f"{name}.parquet")
-
-    write_chunk(first, "a")
-
-    agg = sw.windowed_agg(sw.read_event_stream(spark, str(d)))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("t_inc")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n1 = spark.sql("SELECT sum(cnt) c FROM t_inc").collect()[0].c
-        write_chunk(second, "b")
-        q.processAllAvailable()
-        n2 = spark.sql("SELECT sum(cnt) c FROM t_inc").collect()[0].c
-    finally:
-        q.stop()
-    assert n1 == half
-    assert n2 == total
-
-
-def test_sessionize_stream_equals_batch(spark, events_dir):
-    """Stateful sessionization (applyInPandasWithState): drained
-    stream output must equal the batch twin for every session the
-    final watermark provably closed."""
-    from raster_tools_spark.streaming import sessions as ss
-
-    stream = ss.sessionize_stream(
-        sw.read_event_stream(spark, events_dir)
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_sessions")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT * FROM t_sessions").collect()
-
-    ev = spark.read.parquet(events_dir)
-    batch = ss.sessionize_batch(ev).collect()
-    max_ts = ev.agg(F.max("ts")).collect()[0][0].timestamp()
-    watermark = max_ts - 2 * 3600
-    gap = ss.GAP_SECONDS_DEFAULT
-    # sessions the watermark provably closed
-    expected = [
-        r for r in batch
-        if r.session_end.timestamp() + gap < watermark
-    ]
-    key = lambda r: (
-        r.user_id, r.session_start, r.session_end, r.n_events,
-        round(r.sum_v, 6),
-    )
-    got_k = sorted(key(r) for r in got)
-    exp_k = sorted(key(r) for r in expected)
-    assert len(exp_k) > 0
-    assert got_k == exp_k
-
-
-def test_dedup_stream_equals_batch(spark, tmp_path):
-    """dropDuplicatesWithinWatermark drains to exactly the batch dedup
-    when all duplicates arrive within the watermark horizon."""
-    import glob
-    import shutil as sh
-
-    d = tmp_path / "dedup_stream"
-    d.mkdir()
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    dupes = ev.filter(F.col("event_id") % 7 == 0)
-
-    def write_chunk(df, name):
-        tmp = str(tmp_path / f"dchunk_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        sh.copy(part, d / f"{name}.parquet")
-
-    write_chunk(ev, "a")
-    write_chunk(dupes, "b")
-
-    stream = sw.dedup_stream(sw.read_event_stream(spark, str(d)))
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_dedup")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT event_type, COUNT(*) cnt, "
-            "CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) sum_v "
-            "FROM t_dedup GROUP BY event_type"
-        ).collect()
-    finally:
-        q.stop()
-    batch = sw.dedup_batch_stats(
-        ev.unionByName(dupes)
-    ).collect()
-    key = lambda r: r.event_type
-    assert {key(r): (r.cnt, r.sum_v) for r in got} == {
-        key(r): (r.cnt, r.sum_v) for r in batch
-    }
-    assert sum(r.cnt for r in got) == ev.count()
+"""Streaming/batch parity: the image-stats stream drained via the memory
+sink must equal the batch operator on the same rows."""
 
 
 def test_streaming_image_stats_equals_batch(spark, tmp_path):
@@ -164,14 +8,14 @@ def test_streaming_image_stats_equals_batch(spark, tmp_path):
     from raster_tools_spark.streaming import image_stream as sim
 
     path = str(tmp_path / "imgs")
-    images = synth.linear_images_df(spark, 8, tiles_axis=16).select(
+    images = synth.linear_images_df(spark, 8).select(
         "image_id", "bytes", "w", "h", "fmt"
     )
     images.repartition(4).write.mode("overwrite").parquet(path)
 
     batch = {
         r["image_id"]: r
-        for r in image_enhance.box_blur_stats(images, 2).collect()
+        for r in image_enhance.box_blur_stats(images).collect()
     }
     streamed = {
         r["image_id"]: r

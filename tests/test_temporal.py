@@ -69,7 +69,7 @@ def test_kmv_sketch_accuracy_and_exact_branch(spark):
         pd.DataFrame(rows, columns=["k", "v"]),
         schema="k string, v string",
     )
-    out = {r.key: r for r in kmv_distinct(df, "k", "v", k=64).collect()}
+    out = {r.key: r for r in kmv_distinct(df, "k", "v").collect()}
     assert out["small"].n_kept == 20
     assert out["small"].estimate == 20.0             # exact branch
     assert out["big"].n_kept == 64
@@ -115,7 +115,7 @@ def test_asof_name_collision_raises(spark):
         )
 
 
-def test_kmv_null_values_dropped_both_engines(spark):
+def test_kmv_null_values_dropped_both_engines(spark, monkeypatch):
     """NULL values carry no identity: a key with only NULLs vanishes;
     NULLs on a mixed key do not shift n_kept."""
     from raster_tools_spark.functions.sketch import kmv_distinct
@@ -128,12 +128,15 @@ def test_kmv_null_values_dropped_both_engines(spark):
         ),
         schema="k string, v string",
     )
-    out = {r.key: r for r in kmv_distinct(df, "k", "v", k=8).collect()}
+    from raster_tools_spark.functions import sketch
+
+    monkeypatch.setattr(sketch, "KMV_K", 8)
+    out = {r.key: r for r in kmv_distinct(df, "k", "v").collect()}
     assert "only_null" not in out
     assert out["mix"].n_kept == 5
 
 
-def test_asof_bucketed_matches_single_window(spark):
+def test_asof_bucketed_matches_single_window(spark, monkeypatch):
     """Carried-state variant: identical results to asof_join on a
     low-cardinality hot-key fixture, with the one real shuffle
     partitioned by (key, bucket) -- >1 task per key."""
@@ -164,9 +167,8 @@ def test_asof_bucketed_matches_single_window(spark):
         schema="k string, ts double, rate double",
     )
     base = temporal.asof_join(left, right, "k", "ts", ["rate"])
-    bkt = asof_join_bucketed(
-        left, right, "k", "ts", ["rate"], n_buckets=16
-    )
+    monkeypatch.setattr(temporal, "ASOF_BUCKETS", 16)
+    bkt = asof_join_bucketed(left, right, "k", "ts", ["rate"])
     a = sorted(
         (r.id, None if r.rate is None else round(r.rate, 9))
         for r in base.collect()
@@ -180,15 +182,16 @@ def test_asof_bucketed_matches_single_window(spark):
     assert "_bkt" in plan and "hashpartitioning(k" in plan
 
 
-def test_asof_bucketed_inclusive_and_exclusive_edges(spark):
+def test_asof_bucketed_inclusive_and_exclusive_edges(spark, monkeypatch):
     """Both edges of the as-of window on the bucketed path: a right row
     at the left row's timestamp matches (inclusive), a right row after
     it never does (exclusive)."""
     from raster_tools_spark.functions.temporal import asof_join_bucketed
 
     left, right = _frames(spark)
+    monkeypatch.setattr(temporal, "ASOF_BUCKETS", 4)
     out = {r.id: r.rate for r in asof_join_bucketed(
-        left, right, "k", "ts", ["rate"], n_buckets=4
+        left, right, "k", "ts", ["rate"]
     ).collect()}
     assert out[2] == 100.0         # a@10 matches, the later a@12 not
     assert out[1] is None          # every 'a' rate is later

@@ -161,20 +161,35 @@ def reference_upstream(world):
 
 @pytest.fixture(scope="module")
 def result(spark):
-    images = synth.linear_images_df(spark, N_IMG, tiles_axis=AXIS)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(synth, "LINEAR_TILES_AXIS", AXIS)
+        mp.setattr(op_up, "MULTIPLIER", MULT)
+        return _levels(spark, 1, 1, 1)
+
+
+def _levels(spark, n_lines, n_polys, n_images):
+    """upstream_levels over the fixture, its three inputs repartitioned
+    as given; the caller sets LINEAR_TILES_AXIS and MULTIPLIER."""
+    images = synth.linear_images_df(spark, N_IMG)
+    if n_images > 1:
+        images = images.repartition(n_images)
     tiles = op_retile.retile(images)
     lines = spark.createDataFrame(
         [(k, wkb.linestring_wkb(v)) for k, v in LINES.items()],
         "line_id long, geom_wkb binary",
     )
+    if n_lines > 1:
+        lines = lines.repartition(n_lines)
     polys = spark.createDataFrame(
         [(k, wkb.box_wkb(r[0], r[2], r[1], r[3]))
          for k, r in RECTS.items()],
         "feat_id long, geom_wkb binary",
     )
+    if n_polys > 1:
+        polys = polys.repartition(n_polys)
     out = op_up.upstream_levels(
         lines, polys, tiles,
-        separation=SEP, distance=DIST, multiplier=MULT, grow=GROW,
+        separation=SEP, distance=DIST, grow=GROW,
     )
     return sorted(
         (r.line_id, r.feat_id, r.seq, r.height, r.reversed)
@@ -203,36 +218,18 @@ def test_some_reversal_logic_ran(result):
         assert len({g[4] for g in grp}) == 1
 
 
-def test_partitioning_invariance(spark, result):
+def test_partitioning_invariance(spark, result, monkeypatch):
     """North rule: the same upstream job at a different input
     partitioning produces identical rows (the two-smallest partial
     merge and the mean-halves decision are order-independent)."""
-    roofless = spark.createDataFrame(
-        [(k, wkb.linestring_wkb(v)) for k, v in LINES.items()],
-        "line_id long, geom_wkb binary",
-    ).repartition(7)
-    polys = spark.createDataFrame(
-        [(k, wkb.box_wkb(r[0], r[2], r[1], r[3]))
-         for k, r in RECTS.items()],
-        "feat_id long, geom_wkb binary",
-    ).repartition(5)
-    images = synth.linear_images_df(
-        spark, N_IMG, tiles_axis=AXIS
-    ).repartition(3)
-    tiles = op_retile.retile(images)
-    out = op_up.upstream_levels(
-        roofless, polys, tiles,
-        separation=SEP, distance=DIST, multiplier=MULT, grow=GROW,
-    )
-    again = sorted(
-        (r.line_id, r.feat_id, r.seq, r.height, r.reversed)
-        for r in out.collect()
-    )
-    assert again == result
+    monkeypatch.setattr(synth, "LINEAR_TILES_AXIS", AXIS)
+    monkeypatch.setattr(op_up, "MULTIPLIER", MULT)
+    assert _levels(spark, 7, 5, 3) == result
 
 
 class TestNearestPieceRefinement:
-    def test_disconnected_halfdisc_keeps_nearest_arm(self, spark):
+    def test_disconnected_halfdisc_keeps_nearest_arm(self, spark,
+                                                      monkeypatch):
         """Reference upstream.py:185-191: when polygon ∩ half-disc is a
         MULTIPOLYGON, only the piece nearest the sample contributes.
         A U-polygon whose connector lies outside the search radius
@@ -282,10 +279,10 @@ class TestNearestPieceRefinement:
                 "x0 double, y_top double"
             ),
         )
+        monkeypatch.setattr(op_up, "MULTIPLIER", 0.0)
         rows = op_up.upstream_levels(
             lines, polys, tiles,
-            separation=3.0, distance=8.0, multiplier=0.0,
-            nodata=255,
+            separation=3.0, distance=8.0,
         ).collect()
         assert len(rows) > 0
         # every level from the near arm (60/200 domain, never 5)

@@ -153,7 +153,7 @@ def layers(spark):
 
 
 @pytest.mark.parametrize("dist", [0.5, 1.0, 3.0, 7.25])
-def test_floor_level_matches_brute_force(layers, dist):
+def test_floor_level_matches_brute_force(layers, dist, monkeypatch):
     tiles, images, _, _, polys, polys_df = layers
     expect = _floor_reference(tiles, polys, dist, MAX_EXTENT)
     # the fixture must exercise what it guards: the extent filter drops
@@ -162,12 +162,11 @@ def test_floor_level_matches_brute_force(layers, dist):
     unfiltered = _floor_reference(tiles, polys, dist, np.inf)
     assert 0 < len(expect) < len(unfiltered)
     assert _unpadded_misses(tiles, polys, dist) > 0
+    monkeypatch.setattr(zonal, "FLOOR_DIST", dist)
+    monkeypatch.setattr(zonal, "FLOOR_MAX_EXTENT", MAX_EXTENT)
     got = {
         r.feat_id: (r.ring_px, r.floor_75)
-        for r in zonal.floor_level(
-            images, polys_df, dist=dist, nodata=NODATA,
-            max_extent=MAX_EXTENT,
-        ).collect()
+        for r in zonal.floor_level(images, polys_df).collect()
     }
     assert got.keys() == expect.keys()
     for fid, (n, p75) in expect.items():
@@ -175,15 +174,14 @@ def test_floor_level_matches_brute_force(layers, dist):
         assert got[fid][1] == pytest.approx(p75, rel=0, abs=1e-9)
 
 
-def test_rgb_zonal_matches_brute_force(layers):
+def test_rgb_zonal_matches_brute_force(layers, monkeypatch):
     _, _, tiles, images, polys, polys_df = layers
     expect = _rgb_reference(tiles, polys, MAX_AREA)
     assert 0 < len(expect) < len(_rgb_reference(tiles, polys, np.inf))
+    monkeypatch.setattr(zonal, "RGB_MAX_AREA", MAX_AREA)
     got = {
         r.feat_id: (r.n_px, r.result)
-        for r in zonal.rgb_zonal(
-            images, polys_df, CALC, max_area=MAX_AREA
-        ).collect()
+        for r in zonal.rgb_zonal(images, polys_df, CALC).collect()
     }
     assert got.keys() == expect.keys()
     for fid, (n, res) in expect.items():

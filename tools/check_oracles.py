@@ -9,12 +9,16 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the package of the checkout this file lives in
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -9,11 +9,15 @@ Usage: python tools/plan_audit.py
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+# import the package of the checkout this file lives in
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -122,7 +126,7 @@ def main():
     # 5b. floor_level: same broadcast shape as zonal -- the image side
     # is never shuffled; the only exchange carries histograms
     fl = op_zonal.floor_level(
-        synth.linear_images_df(spark, 40, tiles_axis=16),
+        synth.linear_images_df(spark, 40),
         qcat_polys_small(spark),
     )
     audit(
