@@ -1,4 +1,5 @@
-"""Deterministic image codecs (pure numpy + zlib; no PIL/GDAL here).
+"""Deterministic image codecs (pure numpy + zlib; no PIL/GDAL here)
+plus the one per-payload map every image operator runs through.
 
 The input table stores encoded pixels as opaque ``bytes`` with an ``fmt``
 tag (BASELINE.json input_hint).  Two codecs are provided:
@@ -19,6 +20,11 @@ tag (BASELINE.json input_hint).  Two codecs are provided:
 
 All functions operate on 2-D uint8 arrays (single-band tiles, mirroring
 the reference's one-band-at-a-time processing, e.g. groups.py:95-99).
+
+``map_payloads`` is the one place a row's ``bytes``/``fmt`` become
+pixels inside an Arrow-batched ``mapInPandas``: operators supply only a
+per-payload kernel and an output schema.  pandas is imported inside
+the task function, so importing this module stays numpy + zlib only.
 """
 
 from __future__ import annotations
@@ -263,3 +269,29 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
         return rawz_decode(data)
     raise ValueError(f"unknown fmt {fmt!r}")
 
+
+def map_payloads(df, kernel, schema: str):
+    """``df.mapInPandas`` that decodes each row's ``bytes``/``fmt`` once
+    and calls ``kernel(px, row)`` with ``row`` the ``itertuples()``
+    namedtuple (so a kernel can read any other column of ``df``).  The
+    kernel returns a list of output tuples in ``schema`` order; an
+    empty list emits nothing.  One pandas frame is yielded per Arrow
+    batch that produced rows."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches):
+        import pandas as pd
+
+        # a kernel frees all its temporaries when it returns; glibc then
+        # hands the freed heap top back to the OS and the next row
+        # page-faults it in again.  Freeing one 16 MiB block lifts
+        # glibc's mmap threshold to 16 MiB and its trim threshold to
+        # 32 MiB, so per-row temporaries below that stay mapped.
+        np.empty(16 << 20, np.uint8)
+        for pdf in batches:
+            rows = [out for t in pdf.itertuples()
+                    for out in kernel(decode(bytes(t.bytes), t.fmt), t)]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)

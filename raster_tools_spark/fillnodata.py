@@ -50,25 +50,6 @@ def binary_dilation(mask: np.ndarray) -> np.ndarray:
     return out
 
 
-def binary_erosion(mask: np.ndarray) -> np.ndarray:
-    """3x3 cross erosion with border treated as False (scipy default
-    border_value=0)."""
-    out = mask.copy()
-    out[0, :] = False
-    out[-1, :] = False
-    out[:, 0] = False
-    out[:, -1] = False
-    inner = (
-        mask[1:-1, 1:-1]
-        & mask[:-2, 1:-1]
-        & mask[2:, 1:-1]
-        & mask[1:-1, :-2]
-        & mask[1:-1, 2:]
-    )
-    out[1:-1, 1:-1] = inner
-    return out
-
-
 def label(
     mask: np.ndarray, connectivity: int = 4
 ) -> Tuple[np.ndarray, int]:

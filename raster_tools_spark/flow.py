@@ -7,8 +7,8 @@ Semantics ported from the reference's flow pipeline:
   (drop kernels, LUT for positive drops, outward edges, iterative
   flat-area resolution)
 - ``fill_simple_depressions``           <- flow/flow_fil.py:34-41
-- ``accumulate``                        <- flow/flow_acc.py:29-89
-  (pointer array B = flow[A], repeated advance + bincount)
+- ``flow_targets``                      <- flow/flow_acc.py:29-43
+  (the per-pixel downstream pointer the tiled accumulation chases)
 
 scipy stand-ins: ``ndimage.correlate(values, kernel)`` with a
 two-point kernel becomes an explicit shifted-difference on a
@@ -223,34 +223,3 @@ def flow_targets(direction: np.ndarray) -> np.ndarray:
     tj = np.arange(n) % w + _FIRST_DJ[d]
     off_grid = (ti < 0) | (ti >= h) | (tj < 0) | (tj >= w)
     return np.where((d == 0) | off_grid, n, ti * w + tj)
-
-
-def accumulate(direction: np.ndarray) -> np.ndarray:
-    """Upstream-cell count per pixel (flow accumulation).
-
-    Semantics of the reference's accumulator (flow_acc.py:45-89),
-    re-derived as pointer-chase rounds: every pixel holds a pointer to
-    its downstream neighbor (``flow_targets``); mutual 2-cycles (A->B
-    and B->A, opposing directions) are broken by sinking BOTH ends;
-    then each round advances every live walker one hop and adds one
-    count to the cell it lands on -- after k rounds a cell has been hit
-    once by every cell exactly k steps upstream, so the converged total
-    is the full upstream count.  Walkers that reach a sink drop out via
-    a boolean filter (the reference sorts + truncates; a filter selects
-    the identical multiset, so the bincounts are equal).
-    """
-    h, w = direction.shape
-    n = direction.size
-    ptr = np.append(flow_targets(direction), n)  # ptr[n] = n: absorb
-    walkers = np.arange(n)
-    mutual = ptr[ptr[walkers]] == walkers
-    ptr[:n][mutual] = n
-
-    acc = np.zeros(n, "u8")
-    while True:
-        walkers = ptr[walkers]
-        walkers = walkers[walkers < n]
-        if not walkers.size:
-            break
-        acc += np.bincount(walkers, minlength=n).astype("u8")
-    return acc.reshape(h, w)

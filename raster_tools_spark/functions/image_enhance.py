@@ -11,8 +11,9 @@ needs: blur for down-weighting high-frequency noise, equalization and
 Otsu for contrast/foreground heuristics, RLE for compressibility
 scoring (a cheap proxy for "is this image synthetic/flat?").
 
-Scale shape: every operator is a one-decode-per-row Arrow-batched
-``mapInPandas`` -- no shuffle at all; the per-image outputs are tiny
+Scale shape: every operator is a per-payload kernel run by
+``codecs.map_payloads`` (one decode per row, Arrow-batched
+``mapInPandas``) -- no shuffle at all; the per-image outputs are tiny
 fixed-width rows.  The box filter uses an integral image so cost is
 O(pixels), independent of the window radius (a naive window sum is
 O(pixels * (2r+1)^2) and would dominate at radius 5+).  All
@@ -22,10 +23,7 @@ prefix sums), so every operator has a bit-exact DuckDB mirror.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs
@@ -45,36 +43,16 @@ def box_blur_stats(images: DataFrame) -> DataFrame:
     average over their real, smaller window -- no padding bias).
     Integer floor keeps the result bit-exact against a SQL
     neighborhood self-join.  Per-image aggregates (sum/min/max of the
-    blurred plane) are returned; the blurred payload itself is the
-    same array re-encoded by :func:`box_blur_images`.
+    blurred plane) are returned.
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                blur = _box_blur_plane(px, 2)
-                rows.append(
-                    (
-                        t.image_id,
-                        int(blur.size),
-                        int(blur.sum(dtype=np.int64)),
-                        int(blur.min()),
-                        int(blur.max()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "n_px", "blur_sum", "blur_min",
-                        "blur_max",
-                    ],
-                )
+    def kernel(px, t):
+        blur = _box_blur_plane(px, 2)
+        return [(t.image_id, int(blur.size), int(blur.sum(dtype=np.int64)),
+                 int(blur.min()), int(blur.max()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=BOX_BLUR_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, BOX_BLUR_SCHEMA
     )
 
 
@@ -103,30 +81,6 @@ def _box_blur_plane(px: np.ndarray, radius: int) -> np.ndarray:
     return (s // cnt).astype(np.int64)
 
 
-def box_blur_images(images: DataFrame) -> DataFrame:
-    """Same filter, emitting the blurred PNG payload (production
-    shape: decode -> integral -> floor-mean -> re-encode)."""
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                blur = _box_blur_plane(px, 2).astype(np.uint8)
-                rows.append(
-                    (t.image_id, codecs.png_encode(blur),
-                     blur.shape[1], blur.shape[0], "png")
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-                )
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-
-
 EQUALIZE_SCHEMA = (
     "image_id string, eq_sum long, eq_min int, eq_max int, "
     "n_levels int"
@@ -145,32 +99,13 @@ def equalize_stats(images: DataFrame) -> DataFrame:
     quality signal).
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                eq = _equalize_plane(px)
-                rows.append(
-                    (
-                        t.image_id,
-                        int(eq.sum(dtype=np.int64)),
-                        int(eq.min()),
-                        int(eq.max()),
-                        int(np.unique(eq).size),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "eq_sum", "eq_min", "eq_max",
-                        "n_levels",
-                    ],
-                )
+    def kernel(px, t):
+        eq = _equalize_plane(px)
+        return [(t.image_id, int(eq.sum(dtype=np.int64)), int(eq.min()),
+                 int(eq.max()), int(np.unique(eq).size))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=EQUALIZE_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, EQUALIZE_SCHEMA
     )
 
 
@@ -207,24 +142,14 @@ def otsu_stats(images: DataFrame) -> DataFrame:
     above the threshold.
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                thr = _otsu_threshold(px)
-                fg = px.astype(np.int64)[px > thr]
-                rows.append(
-                    (t.image_id, int(thr), int(fg.size),
-                     int(fg.sum(dtype=np.int64)))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "otsu_t", "n_fg", "fg_sum"]
-                )
+    def kernel(px, t):
+        thr = _otsu_threshold(px)
+        fg = px.astype(np.int64)[px > thr]
+        return [(t.image_id, int(thr), int(fg.size),
+                 int(fg.sum(dtype=np.int64)))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=OTSU_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, OTSU_SCHEMA
     )
 
 
@@ -263,32 +188,20 @@ def rle_stats(images: DataFrame) -> DataFrame:
     gaps-and-islands formulation exactly (pure integers).
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                breaks = np.ones(px.shape, dtype=bool)
-                breaks[:, 1:] = px[:, 1:] != px[:, :-1]
-                n_runs = int(breaks.sum())
-                # run lengths: distance between consecutive break
-                # positions in the row-major flattened break index
-                # stream (rows always start a run, so runs never span
-                # scanlines)
-                pos = np.flatnonzero(breaks.ravel())
-                ends = np.append(pos[1:], px.size)
-                max_run = int((ends - pos).max()) if n_runs else 0
-                rows.append(
-                    (t.image_id, n_runs, max_run, 3 * n_runs)
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "n_runs", "max_run", "rle_bytes"],
-                )
+    def kernel(px, t):
+        breaks = np.ones(px.shape, dtype=bool)
+        breaks[:, 1:] = px[:, 1:] != px[:, :-1]
+        n_runs = int(breaks.sum())
+        # run lengths: distance between consecutive break positions in
+        # the row-major flattened break index stream (rows always start
+        # a run, so runs never span scanlines)
+        pos = np.flatnonzero(breaks.ravel())
+        ends = np.append(pos[1:], px.size)
+        max_run = int((ends - pos).max()) if n_runs else 0
+        return [(t.image_id, n_runs, max_run, 3 * n_runs)]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=RLE_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, RLE_SCHEMA
     )
 
 
@@ -305,34 +218,22 @@ def sobel_stats(images: DataFrame) -> DataFrame:
     the SQL mirror recomputes both kernels with a bounded 3x3
     neighborhood self-join."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                p = px.astype(np.int64)
-                gx = (
-                    p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:]
-                    - p[:-2, :-2] - 2 * p[1:-1, :-2] - p[2:, :-2]
-                )
-                gy = (
-                    p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:]
-                    - p[:-2, :-2] - 2 * p[:-2, 1:-1] - p[:-2, 2:]
-                )
-                mag = np.abs(gx) + np.abs(gy)
-                rows.append(
-                    (t.image_id, int(mag.sum()), int(mag.max()),
-                     int((mag > 200).sum()))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "edge_sum", "edge_max",
-                             "n_edge_px"],
-                )
+    def kernel(px, t):
+        p = px.astype(np.int64)
+        gx = (
+            p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:]
+            - p[:-2, :-2] - 2 * p[1:-1, :-2] - p[2:, :-2]
+        )
+        gy = (
+            p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:]
+            - p[:-2, :-2] - 2 * p[:-2, 1:-1] - p[:-2, 2:]
+        )
+        mag = np.abs(gx) + np.abs(gy)
+        return [(t.image_id, int(mag.sum()), int(mag.max()),
+                 int((mag > 200).sum()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=SOBEL_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, SOBEL_SCHEMA
     )
 
 
@@ -355,27 +256,15 @@ def quadtree_stats(images: DataFrame) -> DataFrame:
     the DuckDB mirror rebuilds all seven block levels with grouped
     min/max aggregations."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                b = (px >= 128).astype(np.int64)
-                per = _quadtree_leaf_counts(b)
-                n_leaves = sum(per)
-                rows.append(
-                    (t.image_id, n_leaves, per[-1],
-                     1000 * px.size // n_leaves)
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "n_leaves", "n_singles",
-                             "comp_x1000"],
-                )
+    def kernel(px, t):
+        b = (px >= 128).astype(np.int64)
+        per = _quadtree_leaf_counts(b)
+        n_leaves = sum(per)
+        return [(t.image_id, n_leaves, per[-1],
+                 1000 * px.size // n_leaves)]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=QUADTREE_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, QUADTREE_SCHEMA
     )
 
 
@@ -422,29 +311,18 @@ def morph_gradient_stats(images: DataFrame) -> DataFrame:
 
     win = 3
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
-                pmax = np.pad(px, 1, constant_values=-1)
-                pmin = np.pad(px, 1, constant_values=1 << 20)
-                dil = sliding_window_view(pmax, (win, win)).max((2, 3))
-                ero = sliding_window_view(pmin, (win, win)).min((2, 3))
-                grad = dil - ero
-                rows.append(
-                    (t.image_id, int(grad.sum()), int(grad.max()),
-                     int((grad == 0).sum()))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "grad_sum", "grad_max",
-                             "n_flat"],
-                )
+    def kernel(px, t):
+        px = px.astype(np.int64)
+        pmax = np.pad(px, 1, constant_values=-1)
+        pmin = np.pad(px, 1, constant_values=1 << 20)
+        dil = sliding_window_view(pmax, (win, win)).max((2, 3))
+        ero = sliding_window_view(pmin, (win, win)).min((2, 3))
+        grad = dil - ero
+        return [(t.image_id, int(grad.sum()), int(grad.max()),
+                 int((grad == 0).sum()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=MORPH_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, MORPH_SCHEMA
     )
 
 
@@ -464,36 +342,24 @@ def match_histograms(paired: DataFrame) -> DataFrame:
     is exact and monotone; per-image aggregates of the matched plane
     are returned."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                src = codecs.decode(bytes(t.bytes), t.fmt)
-                ref = codecs.decode(bytes(t.ref_bytes), t.ref_fmt)
-                cdf_s = np.cumsum(
-                    np.bincount(src.ravel(), minlength=256)
-                ).astype(np.int64)
-                cdf_r = np.cumsum(
-                    np.bincount(ref.ravel(), minlength=256)
-                ).astype(np.int64)
-                n_s, n_r = int(src.size), int(ref.size)
-                lut = np.searchsorted(
-                    cdf_r * n_s, cdf_s * n_r, side="left"
-                )
-                matched = lut[src.astype(np.int64)]
-                rows.append(
-                    (t.image_id, int(matched.sum()),
-                     int(matched.min()), int(matched.max()))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "m_sum", "m_min", "m_max"],
-                )
+    def kernel(src, t):
+        ref = codecs.decode(bytes(t.ref_bytes), t.ref_fmt)
+        cdf_s = np.cumsum(
+            np.bincount(src.ravel(), minlength=256)
+        ).astype(np.int64)
+        cdf_r = np.cumsum(
+            np.bincount(ref.ravel(), minlength=256)
+        ).astype(np.int64)
+        n_s, n_r = int(src.size), int(ref.size)
+        lut = np.searchsorted(cdf_r * n_s, cdf_s * n_r, side="left")
+        matched = lut[src.astype(np.int64)]
+        return [(t.image_id, int(matched.sum()), int(matched.min()),
+                 int(matched.max()))]
 
-    return paired.select(
-        "image_id", "bytes", "fmt", "ref_bytes", "ref_fmt"
-    ).mapInPandas(do, schema=MATCH_SCHEMA)
+    return codecs.map_payloads(
+        paired.select("image_id", "bytes", "fmt", "ref_bytes", "ref_fmt"),
+        kernel, MATCH_SCHEMA,
+    )
 
 
 STRETCH_SCHEMA = (
@@ -510,31 +376,19 @@ def contrast_stretch_stats(images: DataFrame) -> DataFrame:
     truncates toward zero while numpy floors -- avoided entirely).
     Returns per-image aggregates plus the saturated-pixel count."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
-                cdf = np.cumsum(np.bincount(px.ravel(), minlength=256))
-                n = px.size
-                p_lo = int(np.argmax(cdf * 100 >= 2 * n))
-                p_hi = int(np.argmax(cdf * 100 >= 98 * n))
-                den = max(p_hi - p_lo, 1)
-                st = (np.clip(px, p_lo, p_hi) - p_lo) * 255 // den
-                rows.append(
-                    (t.image_id, int(st.sum()), int(st.min()),
-                     int(st.max()),
-                     int(((st == 0) | (st == 255)).sum()))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "st_sum", "st_min", "st_max",
-                             "n_sat"],
-                )
+    def kernel(px, t):
+        px = px.astype(np.int64)
+        cdf = np.cumsum(np.bincount(px.ravel(), minlength=256))
+        n = px.size
+        p_lo = int(np.argmax(cdf * 100 >= 2 * n))
+        p_hi = int(np.argmax(cdf * 100 >= 98 * n))
+        den = max(p_hi - p_lo, 1)
+        st = (np.clip(px, p_lo, p_hi) - p_lo) * 255 // den
+        return [(t.image_id, int(st.sum()), int(st.min()), int(st.max()),
+                 int(((st == 0) | (st == 255)).sum()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=STRETCH_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, STRETCH_SCHEMA
     )
 
 
@@ -561,53 +415,39 @@ def image_moments(images: DataFrame) -> DataFrame:
     or compute float central moments mu_pq = m_pq-style directly).
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
-                h, w = px.shape
-                # worst-case |mu20n| <= (255 h w)(255 h^3 w / 3) and
-                # |mu02n| <= (255 h w)(255 w^3 h / 3): check BOTH axes
-                # (a 2 x 10000 payload passes the row-axis bound while
-                # the column-axis numerator overflows) and refuse
-                # payloads whose exact result cannot fit the declared
-                # int64 column instead of overflowing at the Arrow
-                # boundary
-                s = max(h, w)
-                if 255 * h * w * 255 * s * s * s * min(h, w) // 3 > 2**62:
-                    raise ValueError(
-                        f"image_moments: {h}x{w} payload can overflow "
-                        "the int64 central-moment numerators; "
-                        "downscale below ~300px or use float moments"
-                    )
-                ii = np.arange(h, dtype=np.int64)[:, None]
-                jj = np.arange(w, dtype=np.int64)[None, :]
-                m00 = int(px.sum())
-                m10 = int((px * ii).sum())
-                m01 = int((px * jj).sum())
-                m20 = int((px * ii * ii).sum())
-                m02 = int((px * jj * jj).sum())
-                m11 = int((px * ii * jj).sum())
-                rows.append(
-                    (
-                        t.image_id, m00, m10, m01, m20, m02, m11,
-                        m00 * m20 - m10 * m10,
-                        m00 * m02 - m01 * m01,
-                        m00 * m11 - m10 * m01,
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "m00", "m10", "m01", "m20", "m02",
-                        "m11", "mu20n", "mu02n", "mu11n",
-                    ],
-                )
+    def kernel(px, t):
+        px = px.astype(np.int64)
+        h, w = px.shape
+        # worst-case |mu20n| <= (255 h w)(255 h^3 w / 3) and
+        # |mu02n| <= (255 h w)(255 w^3 h / 3): check BOTH axes (a
+        # 2 x 10000 payload passes the row-axis bound while the
+        # column-axis numerator overflows) and refuse payloads whose
+        # exact result cannot fit the declared int64 column instead of
+        # overflowing at the Arrow boundary
+        s = max(h, w)
+        if 255 * h * w * 255 * s * s * s * min(h, w) // 3 > 2**62:
+            raise ValueError(
+                f"image_moments: {h}x{w} payload can overflow "
+                "the int64 central-moment numerators; "
+                "downscale below ~300px or use float moments"
+            )
+        ii = np.arange(h, dtype=np.int64)[:, None]
+        jj = np.arange(w, dtype=np.int64)[None, :]
+        m00 = int(px.sum())
+        m10 = int((px * ii).sum())
+        m01 = int((px * jj).sum())
+        m20 = int((px * ii * ii).sum())
+        m02 = int((px * jj * jj).sum())
+        m11 = int((px * ii * jj).sum())
+        return [(
+            t.image_id, m00, m10, m01, m20, m02, m11,
+            m00 * m20 - m10 * m10,
+            m00 * m02 - m01 * m01,
+            m00 * m11 - m10 * m01,
+        )]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=MOMENTS_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, MOMENTS_SCHEMA
     )
 
 
@@ -636,46 +476,30 @@ def ssd_template_match(
     th, tw = template.shape
     tmpl = template.astype(np.int64)
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.int64)
-                h, w = px.shape
-                oh, ow = h - th + 1, w - tw + 1
-                if oh <= 0 or ow <= 0:
-                    # image smaller than the template: no valid offset.
-                    # NOTE for SQL mirrors: a full-window HAVING
-                    # (count == |template|) drops such images entirely
-                    # -- UNION the null rows back when small payloads
-                    # can occur (the registry fixture images are all
-                    # >= 56 px, so its oracle omits that arm).
-                    rows.append((t.image_id, None, None, None, 0))
-                    continue
-                ssd = np.zeros((oh, ow), dtype=np.int64)
-                for a in range(th):
-                    for b in range(tw):
-                        d = px[a:a + oh, b:b + ow] - tmpl[a, b]
-                        ssd += d * d
-                flat = int(np.argmin(ssd))  # row-major: first minimum
-                bi, bj = divmod(flat, ow)
-                rows.append(
-                    (
-                        t.image_id, int(bi), int(bj),
-                        int(ssd[bi, bj]), int(oh) * int(ow),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "best_i", "best_j", "best_ssd",
-                        "n_offsets",
-                    ],
-                )
+    def kernel(px, t):
+        px = px.astype(np.int64)
+        h, w = px.shape
+        oh, ow = h - th + 1, w - tw + 1
+        if oh <= 0 or ow <= 0:
+            # image smaller than the template: no valid offset.
+            # NOTE for SQL mirrors: a full-window HAVING
+            # (count == |template|) drops such images entirely -- UNION
+            # the null rows back when small payloads can occur (the
+            # registry fixture images are all >= 56 px, so its oracle
+            # omits that arm).
+            return [(t.image_id, None, None, None, 0)]
+        ssd = np.zeros((oh, ow), dtype=np.int64)
+        for a in range(th):
+            for b in range(tw):
+                d = px[a:a + oh, b:b + ow] - tmpl[a, b]
+                ssd += d * d
+        flat = int(np.argmin(ssd))  # row-major: first minimum
+        bi, bj = divmod(flat, ow)
+        return [(t.image_id, int(bi), int(bj), int(ssd[bi, bj]),
+                 int(oh) * int(ow))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=SSD_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, SSD_SCHEMA
     )
 
 
@@ -707,32 +531,14 @@ def blob_stats(images: DataFrame) -> DataFrame:
     arm).
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = px >= 255
-                labels, _ = label(mask, 8)
-                sizes = np.bincount(labels.ravel())[1:]
-                rows.append(
-                    (
-                        t.image_id,
-                        int(mask.sum()),
-                        len(sizes),
-                        int(sizes.max()) if len(sizes) else 0,
-                        int((sizes * sizes).sum()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "n_mask", "n_blobs", "max_blob",
-                        "sum_blob_sq",
-                    ],
-                )
+    def kernel(px, t):
+        mask = px >= 255
+        labels, _ = label(mask, 8)
+        sizes = np.bincount(labels.ravel())[1:]
+        return [(t.image_id, int(mask.sum()), len(sizes),
+                 int(sizes.max()) if len(sizes) else 0,
+                 int((sizes * sizes).sum()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=BLOB_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, BLOB_SCHEMA
     )

@@ -7,6 +7,10 @@ The audio path is REAL for raw PCM (numpy FFT spectral features +
 dominant-band fingerprint; no codec needed).  COMPRESSED audio and
 video are not decoded: the codec libraries are not in this
 container.
+
+Scale shape: each image operator is a per-payload kernel run by
+``codecs.map_payloads`` (one decode per row, Arrow-batched
+``mapInPandas``, no shuffle).
 """
 
 from __future__ import annotations
@@ -30,40 +34,28 @@ def image_features(images: DataFrame) -> DataFrame:
     gradient energy, histogram entropy).  One decode per row, Arrow
     batches, all numpy."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt).astype(np.float64)
-                gx = np.abs(np.diff(px, axis=1)).mean()
-                gy = np.abs(np.diff(px, axis=0)).mean()
-                hist = np.bincount(
-                    px.astype(np.uint8).ravel(), minlength=256
-                ).astype(np.float64)
-                p = hist / hist.sum()
-                nz = p[p > 0]
-                rows.append(
-                    (
-                        t.image_id,
-                        float(px.mean()),
-                        float(px.std()),
-                        float(np.percentile(px, 10)),
-                        float(np.percentile(px, 90)),
-                        float(gx + gy),
-                        float(-(nz * np.log2(nz)).sum()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "mean", "std", "p10", "p90",
-                        "edge_energy", "entropy",
-                    ],
-                )
+    def kernel(px, t):
+        px = px.astype(np.float64)
+        gx = np.abs(np.diff(px, axis=1)).mean()
+        gy = np.abs(np.diff(px, axis=0)).mean()
+        hist = np.bincount(
+            px.astype(np.uint8).ravel(), minlength=256
+        ).astype(np.float64)
+        p = hist / hist.sum()
+        nz = p[p > 0]
+        return [(
+            t.image_id,
+            float(px.mean()),
+            float(px.std()),
+            float(np.percentile(px, 10)),
+            float(np.percentile(px, 90)),
+            float(gx + gy),
+            float(-(nz * np.log2(nz)).sum()),
+        )]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        extract, schema=IMAGE_FEATURES_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel,
+        IMAGE_FEATURES_SCHEMA,
     )
 
 
@@ -74,36 +66,21 @@ def resize(images: DataFrame, factor: int = 2) -> DataFrame:
     """Integer-factor box downsample (the reference's quad aggregation,
     utils.py:38-51, applied to image payloads); re-encodes PNG."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                h, w = px.shape
-                hh, ww = h - h % factor, w - w % factor
-                small = (
-                    px[:hh, :ww]
-                    .reshape(hh // factor, factor, ww // factor, factor)
-                    .mean(axis=(1, 3))
-                    .round()
-                    .astype(np.uint8)
-                )
-                rows.append(
-                    (
-                        t.image_id,
-                        codecs.png_encode(small),
-                        small.shape[1],
-                        small.shape[0],
-                        "png",
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-                )
+    def kernel(px, t):
+        h, w = px.shape
+        hh, ww = h - h % factor, w - w % factor
+        small = (
+            px[:hh, :ww]
+            .reshape(hh // factor, factor, ww // factor, factor)
+            .mean(axis=(1, 3))
+            .round()
+            .astype(np.uint8)
+        )
+        return [(t.image_id, codecs.png_encode(small), small.shape[1],
+                 small.shape[0], "png")]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        do, schema=RESIZE_SCHEMA
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel, RESIZE_SCHEMA
     )
 
 
@@ -127,52 +104,44 @@ def perceptual_hash(images: DataFrame) -> DataFrame:
     phash64).  Pure numpy per Arrow batch -- one decode per image."""
     dct = _dct2_matrix(32)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                if px.ndim == 3:  # RGB -> luma (ITU-R 601)
-                    px = (0.299 * px[..., 0] + 0.587 * px[..., 1]
-                          + 0.114 * px[..., 2])
-                px = px.astype(np.float64)
-                h, w = px.shape
-                # box-downsample via block means (pad to a multiple)
-                bh = max(h // 32, 1)
-                bw = max(w // 32, 1)
-                px = px[: bh * 32, : bw * 32]
-                if px.shape[0] < 32 or px.shape[1] < 32:
-                    # tiny image: nearest-neighbor upsample first
-                    yi = (np.arange(32) * px.shape[0]) // 32
-                    xi = (np.arange(32) * px.shape[1]) // 32
-                    small = px[np.ix_(yi, xi)]
-                else:
-                    small = px.reshape(
-                        32, bh, 32, bw
-                    ).mean(axis=(1, 3))
-                freq = dct @ small @ dct.T
-                low = freq[:8, :8].ravel()
-                med = np.median(low[1:])  # DC excluded
-                # 1e-9 tie guard: with an odd coefficient count the
-                # median IS one of the coefficients, and "that value
-                # > itself" sits on a float knife edge -- any engine
-                # recomputing the same coefficient with a different
-                # summation order lands an ulp away and flips the
-                # bit.  Real inter-coefficient margins are >= 1e-3;
-                # the guard only pins the self-tie deterministically.
-                bits = (low > med + 1e-9).astype(np.uint64)
-                val = np.uint64(0)
-                for i, b in enumerate(bits):
-                    val |= np.uint64(b) << np.uint64(i)
-                # full 64 bits as a signed long (bit 63 = sign); the
-                # arithmetic shiftright + band mask downstream handles
-                # negative longs exactly
-                rows.append((t.image_id, int(val.astype(np.int64))))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "phash64"])
+    def kernel(px, t):
+        if px.ndim == 3:  # RGB -> luma (ITU-R 601)
+            px = (0.299 * px[..., 0] + 0.587 * px[..., 1]
+                  + 0.114 * px[..., 2])
+        px = px.astype(np.float64)
+        h, w = px.shape
+        # box-downsample via block means (pad to a multiple)
+        bh = max(h // 32, 1)
+        bw = max(w // 32, 1)
+        px = px[: bh * 32, : bw * 32]
+        if px.shape[0] < 32 or px.shape[1] < 32:
+            # tiny image: nearest-neighbor upsample first
+            yi = (np.arange(32) * px.shape[0]) // 32
+            xi = (np.arange(32) * px.shape[1]) // 32
+            small = px[np.ix_(yi, xi)]
+        else:
+            small = px.reshape(32, bh, 32, bw).mean(axis=(1, 3))
+        freq = dct @ small @ dct.T
+        low = freq[:8, :8].ravel()
+        med = np.median(low[1:])  # DC excluded
+        # 1e-9 tie guard: with an odd coefficient count the median IS
+        # one of the coefficients, and "that value > itself" sits on a
+        # float knife edge -- any engine recomputing the same
+        # coefficient with a different summation order lands an ulp
+        # away and flips the bit.  Real inter-coefficient margins are
+        # >= 1e-3; the guard only pins the self-tie deterministically.
+        bits = (low > med + 1e-9).astype(np.uint64)
+        val = np.uint64(0)
+        for i, b in enumerate(bits):
+            val |= np.uint64(b) << np.uint64(i)
+        # full 64 bits as a signed long (bit 63 = sign); the arithmetic
+        # shiftright + band mask downstream handles negative longs
+        # exactly
+        return [(t.image_id, int(val.astype(np.int64)))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        extract, schema="image_id string, phash64 long"
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt"), kernel,
+        "image_id string, phash64 long",
     )
 
 

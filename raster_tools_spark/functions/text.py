@@ -76,17 +76,6 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprints(docs: DataFrame) -> DataFrame:
-    """Document fingerprints: full-text md5 plus a prefix fingerprint
-    (md5 of the first 64 chars) for bucketed near-dup candidate
-    generation."""
-    return docs.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("fp"),
-        F.md5(F.substring(F.col("text"), 1, 64)).alias("fp_prefix"),
-    )
-
-
 def bpe_ish_token_count(docs: DataFrame) -> DataFrame:
     """BPE-ish subword token counting via a dialect-portable regex:
     letter runs, digit runs, and single punctuation marks each count as

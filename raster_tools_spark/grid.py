@@ -45,13 +45,10 @@ TILE_PX = 256              # canonical tile edge, pixels
 TILE_SIZE = TILE_PX * CELL_SIZE   # 128.0 m per canonical tile
 WORLD_SIZE = 2 ** 19       # 524288 m  (4096 x 4096 canonical tiles)
 WORLD_TOP = float(WORLD_SIZE)     # y of the top edge (row 0)
-N_TILES_AXIS = int(WORLD_SIZE // TILE_SIZE)  # 4096
 
 # Quadtree resolutions: cell edge at resolution r is 2**(17-r) meters.
 #   r7 = 1024 m, r8 = 512 m, r9 = 256 m, r10 = 128 m (canonical tile),
-#   r11 = 64 m.  RES_MIN..RES_MAX bound the hierarchy.
-RES_MIN = 0
-RES_MAX = 14
+#   r11 = 64 m.
 RES_TILE = 10              # resolution whose cell == one canonical tile
 JOIN_RES = 9               # default PIP-join resolution (256 m cells)
 
@@ -249,22 +246,3 @@ def ring_cells(cell_id, k=1):
 # ---------------------------------------------------------------------------
 
 _ANCHOR_MULT = np.int64(2654435761)          # Knuth multiplicative hash
-_ANCHOR_MASK = np.int64(N_TILES_AXIS - 1)    # 4095
-
-
-def anchor_of_phash(phash):
-    """Deterministic ``phash -> (x0, y_top)`` world anchor on the
-    canonical tile grid.  Pure integer ops then exact dyadic float
-    math, so the result is bit-identical everywhere.
-
-    Mirrors the reference's re-anchoring role of
-    ``geo_transform.shifted(geometry)`` (retile.py:47 -> utils.py:82-92):
-    every image sits exactly on a canonical 128 m tile corner.
-    """
-    p = np.asarray(phash, dtype=np.int64)
-    mixed = (p * _ANCHOR_MULT) & np.int64((1 << 62) - 1)
-    tx = (mixed >> np.int64(20)) & _ANCHOR_MASK
-    ty = (mixed >> np.int64(2)) & _ANCHOR_MASK
-    x0 = tx.astype(np.float64) * TILE_SIZE
-    y_top = WORLD_TOP - ty.astype(np.float64) * TILE_SIZE
-    return x0, y_top

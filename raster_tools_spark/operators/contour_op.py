@@ -6,10 +6,7 @@ with overlay.mask_union_area if needed)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, wkb as _wkb
@@ -27,44 +24,28 @@ def contour_tiles(tiles: DataFrame) -> DataFrame:
     (cell_id, ring_id, n_pts, area, geom_wkb) with world-coordinate
     polygon WKB."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = px != 255
-                if not mask.any():
-                    continue
-                x1, _, _, y2 = cell_bounds(int(t.cell_id))
-                for rid, ring in enumerate(mask_contours(mask)):
-                    xs = float(x1) + (ring[:, 1] + 0.5) * CELL_SIZE
-                    ys = float(y2) - (ring[:, 0] + 0.5) * CELL_SIZE
-                    coords = np.column_stack([xs, ys])
-                    area = 0.5 * abs(
-                        float(
-                            np.sum(
-                                coords[:-1, 0] * coords[1:, 1]
-                                - coords[1:, 0] * coords[:-1, 1]
-                            )
-                        )
+    def kernel(px, t):
+        mask = px != 255
+        if not mask.any():
+            return []
+        x1, _, _, y2 = cell_bounds(int(t.cell_id))
+        rows = []
+        for rid, ring in enumerate(mask_contours(mask)):
+            xs = float(x1) + (ring[:, 1] + 0.5) * CELL_SIZE
+            ys = float(y2) - (ring[:, 0] + 0.5) * CELL_SIZE
+            coords = np.column_stack([xs, ys])
+            area = 0.5 * abs(
+                float(
+                    np.sum(
+                        coords[:-1, 0] * coords[1:, 1]
+                        - coords[1:, 0] * coords[:-1, 1]
                     )
-                    rows.append(
-                        (
-                            int(t.cell_id),
-                            rid,
-                            int(len(coords)),
-                            area,
-                            _wkb.polygon_wkb(coords),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "cell_id", "ring_id", "n_pts", "area", "geom_wkb",
-                    ],
                 )
+            )
+            rows.append((int(t.cell_id), rid, int(len(coords)), area,
+                         _wkb.polygon_wkb(coords)))
+        return rows
 
-    return tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        run, schema=CONTOUR_SCHEMA
+    return codecs.map_payloads(
+        tiles.select("cell_id", "bytes", "fmt"), kernel, CONTOUR_SCHEMA
     )

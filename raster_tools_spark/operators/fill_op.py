@@ -11,10 +11,7 @@ voids -> re-encode), with all pixel work map-side and zero shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs
@@ -30,37 +27,20 @@ def fill_voids_tiles(tiles: DataFrame) -> DataFrame:
     filled by the multi-resolution recursive kernel; ``filled_px``
     counts the pixels that were voids."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                void = px == 255
-                n_void = int(void.sum())
-                if n_void and not void.all():
-                    filled = fill_voids(
-                        px.astype(np.float64), 255.0
-                    )
-                    out = px.copy()
-                    out[void] = np.clip(
-                        np.round(filled[void]), 0, 255
-                    ).astype(np.uint8)
-                else:
-                    out = px
-                rows.append(
-                    (
-                        int(t.cell_id),
-                        codecs.png_encode(out),
-                        "png",
-                        n_void if not void.all() else 0,
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["cell_id", "bytes", "fmt", "filled_px"],
-                )
+    def kernel(px, t):
+        void = px == 255
+        n_void = int(void.sum())
+        if n_void and not void.all():
+            filled = fill_voids(px.astype(np.float64), 255.0)
+            out = px.copy()
+            out[void] = np.clip(
+                np.round(filled[void]), 0, 255
+            ).astype(np.uint8)
+        else:
+            out = px
+        return [(int(t.cell_id), codecs.png_encode(out), "png",
+                 n_void if not void.all() else 0)]
 
-    return tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        run, schema=FILLED_SCHEMA
+    return codecs.map_payloads(
+        tiles.select("cell_id", "bytes", "fmt"), kernel, FILLED_SCHEMA
     )

@@ -19,10 +19,10 @@ tiles:
   FIXPOINT.  Round 0 computes per-tile local accumulation and initial
   boundary outflows; each later round routes only the (tiny) boundary
   inflow records through static per-tile pointer state; the final pass
-  replays every inflow along its in-tile path.  Equal to running
-  flow.accumulate on the stitched array (catchments crossing k tiles
-  converge in k rounds); the shuffle after round 0 carries only
-  boundary records, never pixels.
+  replays every inflow along its in-tile path.  Equal to running the
+  single-array accumulation (tests/references.py) on the stitched
+  array (catchments crossing k tiles converge in k rounds); the
+  shuffle after round 0 carries only boundary records, never pixels.
 - ``vectorize_streams_tiles``: the reference's own distribution unit
   (flow_vec.py reads each index feature with a ONE-PIXEL margin), as a
   halo exchange of (direction, accumulation) strips + mapInPandas
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import logging
 import zlib
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -47,6 +47,7 @@ from ..flow import flow_targets
 from ..flow_vec import CLASSES, vectorize_streams
 from ..grid import (CELL_SIZE, cell_bounds, cell_edge, pack_cell,
                     unpack_cell)
+from .focal import _halo_parts
 
 TILE_PX = 256
 NODATA = 255
@@ -107,88 +108,56 @@ def _fill_pass(tiles: DataFrame, extent, step: int, offset: int,
     y0, x0, y1, x1 = extent
     TILE_PX_ = tile_px
 
-    def to_frags(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
-            rows: List[tuple] = []
-            passthrough: List[tuple] = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                res, ix, iy = (
-                    int(v) for v in unpack_cell(int(t.cell_id))
+    def to_frags(px, t):
+        res, ix, iy = (int(v) for v in unpack_cell(int(t.cell_id)))
+        gy, gx = iy * TILE_PX_, ix * TILE_PX_
+        covered = np.zeros(px.shape, dtype=bool)
+        rows: List[tuple] = []
+        # blocks overlapping this tile
+        by_first = (gy - y0 - offset) // step
+        bx_first = (gx - x0 - offset) // step
+        for by in range(by_first, by_first + TILE_PX_ // step + 2):
+            wy = y0 + offset + by * step
+            if wy + step > y1 or wy < y0:
+                continue
+            for bx in range(bx_first, bx_first + TILE_PX_ // step + 2):
+                wx = x0 + offset + bx * step
+                if wx + step > x1 or wx < x0:
+                    continue
+                # intersect block window with this tile
+                iy1_ = max(wy, gy)
+                iy2_ = min(wy + step, gy + TILE_PX_)
+                ix1_ = max(wx, gx)
+                ix2_ = min(wx + step, gx + TILE_PX_)
+                if iy1_ >= iy2_ or ix1_ >= ix2_:
+                    continue
+                sub = px[iy1_ - gy:iy2_ - gy, ix1_ - gx:ix2_ - gx]
+                covered[iy1_ - gy:iy2_ - gy, ix1_ - gx:ix2_ - gx] = True
+                rows.append(
+                    ((by << 28) | bx, iy1_ - wy, ix1_ - wx,
+                     _frag_encode(sub))
                 )
-                gy, gx = iy * TILE_PX_, ix * TILE_PX_
-                covered = np.zeros(px.shape, dtype=bool)
-                # blocks overlapping this tile
-                by_first = (gy - y0 - offset) // step
-                bx_first = (gx - x0 - offset) // step
-                for by in range(by_first, by_first + TILE_PX_ // step + 2):
-                    wy = y0 + offset + by * step
-                    if wy + step > y1 or wy < y0:
-                        continue
-                    for bx in range(
-                        bx_first, bx_first + TILE_PX_ // step + 2
-                    ):
-                        wx = x0 + offset + bx * step
-                        if wx + step > x1 or wx < x0:
-                            continue
-                        # intersect block window with this tile
-                        iy1_ = max(wy, gy)
-                        iy2_ = min(wy + step, gy + TILE_PX_)
-                        ix1_ = max(wx, gx)
-                        ix2_ = min(wx + step, gx + TILE_PX_)
-                        if iy1_ >= iy2_ or ix1_ >= ix2_:
-                            continue
-                        sub = px[iy1_ - gy:iy2_ - gy, ix1_ - gx:ix2_ - gx]
-                        covered[iy1_ - gy:iy2_ - gy,
-                                ix1_ - gx:ix2_ - gx] = True
-                        rows.append(
-                            (
-                                (by << 28) | bx,
-                                iy1_ - wy,
-                                ix1_ - wx,
-                                _frag_encode(sub),
-                            )
-                        )
-                # pass-through pixels (domain margins of this offset):
-                # emit one fragment per CONTIGUOUS uncovered run (a
-                # tile can have both a left and a right uncovered run)
-                if not covered.all():
-                    miss_rows = np.nonzero(~covered.all(axis=1))[0]
-                    for i in miss_rows:
-                        cols = np.nonzero(~covered[i])[0]
-                        breaks = np.nonzero(np.diff(cols) > 1)[0]
-                        starts = np.concatenate(
-                            [[0], breaks + 1]
-                        )
-                        stops = np.concatenate(
-                            [breaks, [len(cols) - 1]]
-                        )
-                        for s, e in zip(starts, stops):
-                            c0, c1 = int(cols[s]), int(cols[e])
-                            passthrough.append(
-                                (
-                                    int(t.cell_id),
-                                    int(i),
-                                    c0,
-                                    _frag_encode(
-                                        px[i:i + 1, c0:c1 + 1]
-                                    ),
-                                )
-                            )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["bkey", "fy", "fx", "payload"]
-                )
-            # stash pass-through via a sentinel bkey = -1 - packed rows
-            if passthrough:
-                out = pd.DataFrame(
-                    passthrough, columns=["bkey", "fy", "fx", "payload"]
-                )
-                out["bkey"] = -out["bkey"] - 1  # mark: direct tile key
-                yield out
+        # pass-through pixels (domain margins of this offset): emit one
+        # fragment per CONTIGUOUS uncovered run (a tile can have both a
+        # left and a right uncovered run), stashed under the sentinel
+        # bkey = -1 - cell_id (mark: direct tile key)
+        if not covered.all():
+            miss_rows = np.nonzero(~covered.all(axis=1))[0]
+            for i in miss_rows:
+                cols = np.nonzero(~covered[i])[0]
+                breaks = np.nonzero(np.diff(cols) > 1)[0]
+                starts = np.concatenate([[0], breaks + 1])
+                stops = np.concatenate([breaks, [len(cols) - 1]])
+                for s, e in zip(starts, stops):
+                    c0, c1 = int(cols[s]), int(cols[e])
+                    rows.append(
+                        (-int(t.cell_id) - 1, int(i), c0,
+                         _frag_encode(px[i:i + 1, c0:c1 + 1]))
+                    )
+        return rows
 
-    frags = tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        to_frags, schema=_FRAG_SCHEMA
+    frags = codecs.map_payloads(
+        tiles.select("cell_id", "bytes", "fmt"), to_frags, _FRAG_SCHEMA
     )
     # both downstream branches (blocks + pass-through) consume frags:
     # materialize once instead of re-decoding every tile twice
@@ -320,14 +289,6 @@ _FLOW_SCHEMA = "cell_id long, px int, qty long"
 _SINK = -1
 
 
-def _halo_dir_parts(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-    """1-px direction strips to the 8 neighbors + encoded center."""
-    from .focal import _emit_parts
-
-    return _emit_parts(batches, margin=1)
-
-
 def _build_state(pdf: pd.DataFrame, tile_px: int) -> pd.DataFrame:
     """Assemble the padded direction for one tile, derive the local
     pointer array (in-tile flat target, _SINK, or exit id >= size),
@@ -408,7 +369,8 @@ def _build_state(pdf: pd.DataFrame, tile_px: int) -> pd.DataFrame:
     local = np.where(ptr >= n, np.int64(_SINK), ptr)
     acc = np.zeros(n, np.int64)
     walkers = np.arange(n)
-    # break in-tile mutual pairs exactly like flow.accumulate
+    # break in-tile mutual pairs exactly like the single-array
+    # accumulation
     lp = np.where(local == _SINK, n, local)
     lp_ext = np.append(lp, n)
     mutual = lp_ext[lp_ext[walkers]] == walkers
@@ -556,7 +518,7 @@ def accumulate_tiles(
 ) -> DataFrame:
     """Global flow accumulation over direction tiles (cell_id, bytes,
     fmt).  Returns (cell_id, acc binary: zlib int64[65536]) -- equal to
-    flow.accumulate on the stitched array.
+    the single-array accumulation on the stitched array.
 
     The driver-tail finish (small remainders and round exhaustion) is
     bounded: it raises a clear error instead of OOMing the driver when
@@ -580,12 +542,8 @@ def accumulate_tiles(
                 [], schema="cell_id long, acc binary"
             )
         tile_px = int(round(cell_edge(int(head.r)) / CELL_SIZE))
-    parts = dir_tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        _halo_dir_parts, schema=(
-            "target long, src_dy int, src_dx int, payload binary, "
-            "ph int, pw int, fmt string"
-        )
-    )
+    # 1-px direction strips to the 8 neighbors + encoded center
+    parts = _halo_parts(dir_tiles, 1)
     state = parts.groupBy("target").applyInPandas(
         lambda pdf: _build_state(pdf, tile_px), schema=_STATE_SCHEMA
     )
@@ -771,68 +729,50 @@ def vectorize_streams_tiles(
         acc_tiles, "cell_id"
     )
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                d = codecs.decode(bytes(t.bytes), t.fmt)
-                res, ix, iy = (
-                    int(v) for v in unpack_cell(int(t.cell_id))
+    def emit(d, t):
+        res, ix, iy = (int(v) for v in unpack_cell(int(t.cell_id)))
+        # tile edge follows the cell resolution (res-12 cells are
+        # 64 px), like fill_depressions_tiles
+        tpx = int(round(cell_edge(res) / CELL_SIZE))
+        a = np.frombuffer(
+            zlib.decompress(bytes(t.acc)), dtype=np.int64
+        ).reshape(tpx, tpx)
+        rows = []
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
+                jx, jy = ix + dx, iy + dy
+                if jx < 0 or jy < 0:
+                    continue
+                if dy == 0 and dx == 0:
+                    dpay = bytes(t.bytes)
+                    apay = zlib.compress(a.tobytes(), 1)
+                    fmt = t.fmt
+                else:
+                    h, w = d.shape
+                    ys = (
+                        slice(h - 1, h) if dy == 1
+                        else slice(0, 1) if dy == -1
+                        else slice(0, h)
+                    )
+                    xs = (
+                        slice(w - 1, w) if dx == 1
+                        else slice(0, 1) if dx == -1
+                        else slice(0, w)
+                    )
+                    dpay = np.ascontiguousarray(d[ys, xs]).tobytes()
+                    apay = zlib.compress(
+                        np.ascontiguousarray(a[ys, xs]).tobytes(), 1
+                    )
+                    fmt = "raw"
+                rows.append(
+                    (int(pack_cell(res, jx, jy)), dy, dx, dpay, apay, fmt)
                 )
-                # tile edge follows the cell resolution (res-12 cells
-                # are 64 px), like fill_depressions_tiles
-                tpx = int(round(cell_edge(res) / CELL_SIZE))
-                a = np.frombuffer(
-                    zlib.decompress(bytes(t.acc)), dtype=np.int64
-                ).reshape(tpx, tpx)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        jx, jy = ix + dx, iy + dy
-                        if jx < 0 or jy < 0:
-                            continue
-                        if dy == 0 and dx == 0:
-                            dpay = bytes(t.bytes)
-                            apay = zlib.compress(a.tobytes(), 1)
-                            fmt = t.fmt
-                        else:
-                            h, w = d.shape
-                            ys = (
-                                slice(h - 1, h) if dy == 1
-                                else slice(0, 1) if dy == -1
-                                else slice(0, h)
-                            )
-                            xs = (
-                                slice(w - 1, w) if dx == 1
-                                else slice(0, 1) if dx == -1
-                                else slice(0, w)
-                            )
-                            dpay = np.ascontiguousarray(
-                                d[ys, xs]
-                            ).tobytes()
-                            apay = zlib.compress(
-                                np.ascontiguousarray(a[ys, xs]).tobytes(),
-                                1,
-                            )
-                            fmt = "raw"
-                        rows.append(
-                            (
-                                int(pack_cell(res, jx, jy)),
-                                dy, dx, dpay, apay, fmt,
-                            )
-                        )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["target", "src_dy", "src_dx", "dpay",
-                             "apay", "fmt"],
-                )
+        return rows
 
-    parts = joined.mapInPandas(
-        emit,
-        schema=(
-            "target long, src_dy int, src_dx int, dpay binary, "
-            "apay binary, fmt string"
-        ),
+    parts = codecs.map_payloads(
+        joined, emit,
+        "target long, src_dy int, src_dx int, dpay binary, "
+        "apay binary, fmt string",
     )
 
     def vectorize(pdf: pd.DataFrame) -> pd.DataFrame:

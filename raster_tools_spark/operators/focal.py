@@ -25,7 +25,7 @@ Kernels ported bit-exactly:
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -50,58 +50,46 @@ def _strip(px: np.ndarray, dy: int, dx: int, m: int) -> np.ndarray:
     return px[ys, xs]
 
 
-def _emit_parts(batches: Iterator[pd.DataFrame], margin: int
-                ) -> Iterator[pd.DataFrame]:
+def _halo_parts(tiles: DataFrame, margin: int) -> DataFrame:
     """Per tile: the ORIGINAL ENCODED bytes addressed to itself plus
     raw margin-wide strips addressed to the 8 neighbors.  The center
     must not be re-serialized raw (a 256px tile is 65,536 B raw vs
     ~30-50 KiB encoded; at 100x scale a raw center is a full-dataset
     uncompressed shuffle per stencil) -- it is decoded once here to cut
     the strips and decoded again by the receiving reducer."""
-    for pdf in batches:
+
+    def kernel(px, t):
+        res, ix, iy = (int(v) for v in unpack_cell(int(t.cell_id)))
         rows = []
-        for t in pdf.itertuples():
-            px = codecs.decode(bytes(t.bytes), t.fmt)
-            res, ix, iy = (int(v) for v in unpack_cell(int(t.cell_id)))
-            for dy in (-1, 0, 1):
-                for dx in (-1, 0, 1):
-                    jx, jy = ix + dx, iy + dy
-                    if jx < 0 or jy < 0:
-                        continue
-                    if dy == 0 and dx == 0:
-                        rows.append(
-                            (
-                                int(pack_cell(res, jx, jy)),
-                                0,
-                                0,
-                                bytes(t.bytes),
-                                px.shape[0],
-                                px.shape[1],
-                                t.fmt,
-                            )
-                        )
-                        continue
-                    part = _strip(px, dy, dx, margin)
-                    rows.append(
-                        (
-                            int(pack_cell(res, jx, jy)),
-                            dy,
-                            dx,
-                            np.ascontiguousarray(part).tobytes(),
-                            part.shape[0],
-                            part.shape[1],
-                            # strips are raw; tag the dtype so the
-                            # reducer can reassemble non-u8 tiles (f4
-                            # DEMs etc.)
-                            "raw:" + px.dtype.str.lstrip("<>|="),
-                        )
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
+                jx, jy = ix + dx, iy + dy
+                if jx < 0 or jy < 0:
+                    continue
+                if dy == 0 and dx == 0:
+                    rows.append((int(pack_cell(res, jx, jy)), 0, 0,
+                                 bytes(t.bytes), px.shape[0],
+                                 px.shape[1], t.fmt))
+                    continue
+                part = _strip(px, dy, dx, margin)
+                rows.append(
+                    (
+                        int(pack_cell(res, jx, jy)),
+                        dy,
+                        dx,
+                        np.ascontiguousarray(part).tobytes(),
+                        part.shape[0],
+                        part.shape[1],
+                        # strips are raw; tag the dtype so the reducer
+                        # can reassemble non-u8 tiles (f4 DEMs etc.)
+                        "raw:" + px.dtype.str.lstrip("<>|="),
                     )
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["target", "src_dy", "src_dx", "payload", "ph",
-                         "pw", "fmt"],
-            )
+                )
+        return rows
+
+    return codecs.map_payloads(
+        tiles.select("cell_id", "bytes", "fmt"), kernel, HALO_PART_SCHEMA
+    )
 
 
 def _assemble_padded(pdf: pd.DataFrame, tile_px: int, margin: int):
@@ -190,9 +178,7 @@ def halo_stencil(
     margin is cropped after.  One shuffle (strips), all pixel work
     map-side.
     """
-    parts = tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        lambda it: _emit_parts(it, margin), schema=HALO_PART_SCHEMA
-    )
+    parts = _halo_parts(tiles, margin)
 
     out_schema = "cell_id long, bytes binary, fmt string"
 
@@ -256,10 +242,6 @@ def zevenbergen_thorne(array: np.ndarray) -> np.ndarray:
     ) / np.sqrt(1 + z_scale * z_scale * slope_sq)
 
     return np.where(cang <= 0, 1, 1 + 254 * cang).astype("u1")
-
-
-def hillshade_kernel(padded: np.ndarray) -> np.ndarray:
-    return zevenbergen_thorne(padded)
 
 
 def aspect_octant_kernel(padded: np.ndarray) -> np.ndarray:

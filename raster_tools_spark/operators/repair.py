@@ -10,9 +10,6 @@ leaves clean files in place and only rewrites dirty ones)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs
@@ -32,37 +29,20 @@ def fix_nodata(
     clean rasters pass through byte-identical with changed = 0
     (fix_nodata.py:30-33 skip)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                hit = px == sentinel
-                n = int(hit.sum())
-                if n == 0 and float(t.nodata) == 0.0:
-                    rows.append(
-                        (t.image_id, bytes(t.bytes), t.fmt,
-                         float(t.nodata), 0, 0)
-                    )
-                    continue
-                out = px.copy()
-                out[hit] = 0.0
-                # dispatch on the row's own format so bytes and fmt
-                # stay consistent (a lossy source re-encodes lossy --
-                # the reference's SRTM inputs are lossless i2 tifs)
-                enc = codecs.encode(out, t.fmt)
-                rows.append(
-                    (t.image_id, enc, t.fmt, 0.0, 1, n)
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "bytes", "fmt", "nodata",
-                        "changed", "n_fixed",
-                    ],
-                )
+    def kernel(px, t):
+        hit = px == sentinel
+        n = int(hit.sum())
+        if n == 0 and float(t.nodata) == 0.0:
+            return [(t.image_id, bytes(t.bytes), t.fmt,
+                     float(t.nodata), 0, 0)]
+        out = px.copy()
+        out[hit] = 0.0
+        # dispatch on the row's own format so bytes and fmt stay
+        # consistent (a lossy source re-encodes lossy -- the
+        # reference's SRTM inputs are lossless i2 tifs)
+        return [(t.image_id, codecs.encode(out, t.fmt), t.fmt, 0.0, 1, n)]
 
-    return images.select(
-        "image_id", "bytes", "fmt", "nodata"
-    ).mapInPandas(run, schema=_FIX_SCHEMA)
+    return codecs.map_payloads(
+        images.select("image_id", "bytes", "fmt", "nodata"), kernel,
+        _FIX_SCHEMA,
+    )

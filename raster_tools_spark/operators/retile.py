@@ -132,28 +132,16 @@ def nodata_audit(tiles: DataFrame) -> DataFrame:
     for every tile containing nodata pixels, a u1 mask tile marking
     them plus the count -- the inspection artifact the reference writes
     to its no_data/ directory.  Pure map, no shuffle."""
-    import pandas as _pd
-    from typing import Iterator as _It
 
-    def audit(batches: "_It[_pd.DataFrame]"):
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                mask = (px == NODATA_DEFAULT).astype(np.uint8)
-                n = int(mask.sum())
-                if n == 0:
-                    continue  # reference only writes when any()
-                rows.append(
-                    (int(t.cell_id), n, codecs.png_encode(mask))
-                )
-            if rows:
-                yield _pd.DataFrame(
-                    rows, columns=["cell_id", "nodata_px", "mask_bytes"]
-                )
+    def kernel(px, t):
+        mask = (px == NODATA_DEFAULT).astype(np.uint8)
+        n = int(mask.sum())
+        if n == 0:
+            return []  # reference only writes when any()
+        return [(int(t.cell_id), n, codecs.png_encode(mask))]
 
-    return tiles.select("cell_id", "bytes", "fmt").mapInPandas(
-        audit, schema=AUDIT_SCHEMA
+    return codecs.map_payloads(
+        tiles.select("cell_id", "bytes", "fmt"), kernel, AUDIT_SCHEMA
     )
 
 

@@ -28,7 +28,7 @@ _M62 = (1 << 62) - 1
 
 def _anchor_cols(phash: Column, tiles_axis: int):
     """JVM-side ``phash -> (x0, y_top)`` anchor -- bit-exact mirror of
-    grid.anchor_of_phash / synth.anchor_of_phash_windowed.
+    synth.anchor_of_phash_windowed.
 
     numpy computes ``mixed = wrap64(p * C) & (2^62 - 1)``; ANSI-mode
     Spark throws on long overflow instead of wrapping, so the multiply

@@ -427,113 +427,103 @@ def upstream_levels(
         tiles.select("cell_id", "bytes", "fmt", "x0", "y_top"), "cell_id"
     )
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                px = codecs.decode(bytes(t.bytes), t.fmt)
-                H, W = px.shape
-                x0 = float(t.x0)
-                y_top = float(t.y_top)
-                mask_cache: dict = {}
-                for s in t.samples:
-                    fid = s["feat_id"]
-                    m = mask_cache.get(fid)
-                    if m is None:
-                        gt = (x0, CELL_SIZE, 0.0, y_top, 0.0, -CELL_SIZE)
-                        m = geom.rasterize_mask(
-                            bytes(s["geom_wkb"]), gt, H, W
-                        )
-                        mask_cache[fid] = m
-                    r = s["radius"]
-                    sx, sy = s["sx"], s["sy"]
-                    # generous window; the exact predicates decide
-                    j0 = max(int(math.floor((sx - r - x0) / CELL_SIZE)) - 1, 0)
-                    j1 = min(int(math.ceil((sx + r - x0) / CELL_SIZE)) + 2, W)
-                    i0 = max(int(math.floor((y_top - sy - r) / CELL_SIZE)) - 1, 0)
-                    i1 = min(int(math.ceil((y_top - sy + r) / CELL_SIZE)) + 2, H)
-                    if j0 >= j1 or i0 >= i1:
-                        continue
-                    # pixel-center deltas; expressions mirror the SQL
-                    # oracle op-for-op so both engines agree to the ulp
-                    cx = x0 + (np.arange(j0, j1) + 0.5) * CELL_SIZE
-                    cy = y_top - (np.arange(i0, i1) + 0.5) * CELL_SIZE
-                    dx = cx - sx
-                    dy = cy - sy
-                    in_circle = (
-                        dx[None, :] * dx[None, :]
-                        + dy[:, None] * dy[:, None]
-                    ) <= r * r
-                    base = (
-                        in_circle
-                        & m[i0:i1, j0:j1]
-                        & (px[i0:i1, j0:j1] != 255)
-                    )
-                    if not base.any():
-                        continue
-                    fwd = (
-                        dx[None, :] * s["fdx"] + dy[:, None] * s["fdy"]
-                    ) >= 0.0
-                    rev = (
-                        dx[None, :] * s["rdx"] + dy[:, None] * s["rdy"]
-                    ) >= 0.0
-
-                    def clip_piece(orient_mask, bits):
-                        # disconnected area: keep only the nearest
-                        # piece (bits computed globally at pair time,
-                        # so the cut is consistent across tiles)
-                        if bits is None:
-                            return orient_mask
-                        wj0, wi0 = int(s["wj0"]), int(s["wi0"])
-                        ww, wh = int(s["ww"]), int(s["wh"])
-                        piece = np.unpackbits(
-                            np.frombuffer(bytes(bits), dtype=np.uint8),
-                            count=wh * ww,
-                        ).reshape(wh, ww).astype(bool)
-                        gj = int(round(x0 / CELL_SIZE))
-                        gi = int(round((WORLD_TOP - y_top) / CELL_SIZE))
-                        out = np.zeros_like(orient_mask)
-                        # overlap of tile window rows/cols with the
-                        # sample's piece window, in global indices
-                        ri0 = max(gi + i0, wi0)
-                        ri1 = min(gi + i1, wi0 + wh)
-                        rj0 = max(gj + j0, wj0)
-                        rj1 = min(gj + j1, wj0 + ww)
-                        if ri0 >= ri1 or rj0 >= rj1:
-                            return out
-                        out[ri0 - gi - i0:ri1 - gi - i0,
-                            rj0 - gj - j0:rj1 - gj - j0] = piece[
-                            ri0 - wi0:ri1 - wi0, rj0 - wj0:rj1 - wj0
-                        ]
-                        return orient_mask & out
-
-                    fwd = clip_piece(fwd, s["fbits"])
-                    rev = clip_piece(rev, s["rbits"])
-                    win = px[i0:i1, j0:j1]
-                    f0, f1, fc = _two_smallest(
-                        win[base & fwd].astype(np.float64)
-                    )
-                    r0, r1, rc = _two_smallest(
-                        win[base & rev].astype(np.float64)
-                    )
-                    if fc == 0 and rc == 0:
-                        continue
-                    rows.append(
-                        (
-                            s["line_id"], fid, s["seq"], sx, sy,
-                            f0, f1, fc, r0, r1, rc,
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "line_id", "feat_id", "seq", "sx", "sy",
-                        "f0", "f1", "fc", "r0", "r1", "rc",
-                    ],
+    def partials(px, t):
+        H, W = px.shape
+        x0 = float(t.x0)
+        y_top = float(t.y_top)
+        mask_cache: dict = {}
+        rows = []
+        for s in t.samples:
+            fid = s["feat_id"]
+            m = mask_cache.get(fid)
+            if m is None:
+                gt = (x0, CELL_SIZE, 0.0, y_top, 0.0, -CELL_SIZE)
+                m = geom.rasterize_mask(
+                    bytes(s["geom_wkb"]), gt, H, W
                 )
+                mask_cache[fid] = m
+            r = s["radius"]
+            sx, sy = s["sx"], s["sy"]
+            # generous window; the exact predicates decide
+            j0 = max(int(math.floor((sx - r - x0) / CELL_SIZE)) - 1, 0)
+            j1 = min(int(math.ceil((sx + r - x0) / CELL_SIZE)) + 2, W)
+            i0 = max(int(math.floor((y_top - sy - r) / CELL_SIZE)) - 1, 0)
+            i1 = min(int(math.ceil((y_top - sy + r) / CELL_SIZE)) + 2, H)
+            if j0 >= j1 or i0 >= i1:
+                continue
+            # pixel-center deltas; expressions mirror the SQL
+            # oracle op-for-op so both engines agree to the ulp
+            cx = x0 + (np.arange(j0, j1) + 0.5) * CELL_SIZE
+            cy = y_top - (np.arange(i0, i1) + 0.5) * CELL_SIZE
+            dx = cx - sx
+            dy = cy - sy
+            in_circle = (
+                dx[None, :] * dx[None, :]
+                + dy[:, None] * dy[:, None]
+            ) <= r * r
+            base = (
+                in_circle
+                & m[i0:i1, j0:j1]
+                & (px[i0:i1, j0:j1] != 255)
+            )
+            if not base.any():
+                continue
+            fwd = (
+                dx[None, :] * s["fdx"] + dy[:, None] * s["fdy"]
+            ) >= 0.0
+            rev = (
+                dx[None, :] * s["rdx"] + dy[:, None] * s["rdy"]
+            ) >= 0.0
 
-    parts = cand.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
+            def clip_piece(orient_mask, bits):
+                # disconnected area: keep only the nearest
+                # piece (bits computed globally at pair time,
+                # so the cut is consistent across tiles)
+                if bits is None:
+                    return orient_mask
+                wj0, wi0 = int(s["wj0"]), int(s["wi0"])
+                ww, wh = int(s["ww"]), int(s["wh"])
+                piece = np.unpackbits(
+                    np.frombuffer(bytes(bits), dtype=np.uint8),
+                    count=wh * ww,
+                ).reshape(wh, ww).astype(bool)
+                gj = int(round(x0 / CELL_SIZE))
+                gi = int(round((WORLD_TOP - y_top) / CELL_SIZE))
+                out = np.zeros_like(orient_mask)
+                # overlap of tile window rows/cols with the
+                # sample's piece window, in global indices
+                ri0 = max(gi + i0, wi0)
+                ri1 = min(gi + i1, wi0 + wh)
+                rj0 = max(gj + j0, wj0)
+                rj1 = min(gj + j1, wj0 + ww)
+                if ri0 >= ri1 or rj0 >= rj1:
+                    return out
+                out[ri0 - gi - i0:ri1 - gi - i0,
+                    rj0 - gj - j0:rj1 - gj - j0] = piece[
+                    ri0 - wi0:ri1 - wi0, rj0 - wj0:rj1 - wj0
+                ]
+                return orient_mask & out
+
+            fwd = clip_piece(fwd, s["fbits"])
+            rev = clip_piece(rev, s["rbits"])
+            win = px[i0:i1, j0:j1]
+            f0, f1, fc = _two_smallest(
+                win[base & fwd].astype(np.float64)
+            )
+            r0, r1, rc = _two_smallest(
+                win[base & rev].astype(np.float64)
+            )
+            if fc == 0 and rc == 0:
+                continue
+            rows.append(
+                (
+                    s["line_id"], fid, s["seq"], sx, sy,
+                    f0, f1, fc, r0, r1, rc,
+                )
+            )
+        return rows
+
+    parts = codecs.map_payloads(cand, partials, _PARTIAL_SCHEMA)
 
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
         def merged_level(sub: pd.DataFrame, v0: str, v1: str, vc: str):

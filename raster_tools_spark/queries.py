@@ -1100,7 +1100,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = synth.images_df(spark, 150, tiles_axis=8)
         cells = op_tile.assign_cells(images, tiles_axis=8)
         tiles = op_retile.retile(cells).select("cell_id", "bytes", "fmt")
-        out = focal.halo_stencil(tiles, focal.hillshade_kernel, margin=1)
+        out = focal.halo_stencil(tiles, focal.zevenbergen_thorne, margin=1)
         return out.select("cell_id", F.md5(F.col("bytes")).alias("tile_md5"))
 
     q["hillshade_tiles"] = hillshade_tiles
@@ -1511,7 +1511,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "bytes", "fmt",
         )
         out = focal.halo_stencil(
-            tiles, focal.hillshade_kernel, margin=1, tile_px=64
+            tiles, focal.zevenbergen_thorne, margin=1, tile_px=64
         )
         return _per_pixel_rows(
             out, "ix int, iy int, i int, j int, shade int", "shade",
@@ -1933,23 +1933,12 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.lit(-1.0)),
         )
         fixed = op_repair.fix_nodata(images, sentinel=300.0)
-        pix = fixed.select(
-            "image_id", "changed", "n_fixed",
-            F.pandas_udf("double")(
-                lambda b, f: pd.Series(
-                    [
-                        float(
-                            np.sum(
-                                codecs_mod.decode(bytes(x), y)
-                                .astype(np.float64)
-                            )
-                        )
-                        for x, y in zip(b, f)
-                    ]
-                )
-            )(F.col("bytes"), F.col("fmt")).alias("sum_v"),
+        return codecs_mod.map_payloads(
+            fixed.select("image_id", "changed", "n_fixed", "bytes", "fmt"),
+            lambda px, t: [(t.image_id, t.changed, t.n_fixed,
+                            float(np.sum(px.astype(np.float64))))],
+            "image_id string, changed int, n_fixed long, sum_v double",
         )
-        return pix
 
     q["fix_nodata"] = fix_nodata
 
@@ -1998,23 +1987,16 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
                   for tx in (1, 2) for ty in (1, 2)]
         picked = tiles.filter(F.col("cell_id").isin(center))
 
-        @F.pandas_udf("struct<n_px: long, sum_v: double, "
-                      "min_v: double, max_v: double>")
-        def agg_px(b: pd.Series, f: pd.Series) -> pd.DataFrame:
-            rows = []
-            for x, y in zip(b, f):
-                px = codecs_mod.decode(bytes(x), y).astype(np.float64)
-                rows.append(
-                    (int(px.size), float(px.sum()),
-                     float(px.min()), float(px.max()))
-                )
-            return pd.DataFrame(
-                rows, columns=["n_px", "sum_v", "min_v", "max_v"]
-            )
+        def agg_px(px, t):
+            px = px.astype(np.float64)
+            return [(t.cell_id, int(px.size), float(px.sum()),
+                     float(px.min()), float(px.max()))]
 
-        return picked.select(
-            "cell_id", agg_px(F.col("bytes"), F.col("fmt")).alias("s")
-        ).select("cell_id", "s.n_px", "s.sum_v", "s.min_v", "s.max_v")
+        return codecs_mod.map_payloads(
+            picked.select("cell_id", "bytes", "fmt"), agg_px,
+            "cell_id long, n_px long, sum_v double, min_v double, "
+            "max_v double",
+        )
 
     q["grid_linear_tiles"] = grid_linear_tiles
 
@@ -3913,25 +3895,13 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             tiles, focal.aspect_octant_kernel, margin=1, tile_px=64
         )
 
-        def counts(batches):
-            for pdf in batches:
-                rows = []
-                for t in pdf.itertuples():
-                    px = codecs_mod.decode(bytes(t.bytes), t.fmt)
-                    bc = np.bincount(px.ravel(), minlength=9)
-                    for c in range(9):
-                        if bc[c]:
-                            rows.append(
-                                (_cell_hi(t.cell_id),
-                                 _cell_lo(t.cell_id), c, int(bc[c]))
-                            )
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["ix", "iy", "cls", "n"]
-                    )
+        def counts(px, t):
+            bc = np.bincount(px.ravel(), minlength=9)
+            return [(_cell_hi(t.cell_id), _cell_lo(t.cell_id), c,
+                     int(bc[c])) for c in range(9) if bc[c]]
 
-        return out.mapInPandas(
-            counts, schema="ix int, iy int, cls int, n long"
+        return codecs_mod.map_payloads(
+            out, counts, "ix int, iy int, cls int, n long"
         )
 
     q["aspect_class"] = aspect_class

@@ -43,7 +43,8 @@ def write_table(df: DataFrame, url: str, table: str) -> None:
 
 def read_table(spark: SparkSession, url: str, table: str) -> DataFrame:
     """JDBC scan; apply .filter/.select on the result and Catalyst
-    pushes them into the remote query (verify with pushed_filters)."""
+    pushes them into the remote query (the scan node's PushedFilters
+    clause shows what reached it)."""
     return (
         spark.read.format("jdbc")
         .option("url", url)
@@ -51,13 +52,3 @@ def read_table(spark: SparkSession, url: str, table: str) -> DataFrame:
         .option("driver", DERBY_DRIVER)
         .load()
     )
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The PushedFilters/ReadSchema clause of the JDBC scan node --
-    empty string when nothing was pushed (the plan-audit hook)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
-        if "PushedFilters" in line:
-            return line.strip()
-    return ""

@@ -1,13 +1,13 @@
-"""Remote raster extraction + upload (SURVEY.md S7/K5; reference
-rextract.py:108-430 and upload.py:21-90).
+"""Remote raster extraction (SURVEY.md S7; reference
+rextract.py:108-430).  The reference's chunked upload (K5,
+upload.py:21-90) has no operator here.
 
 The reference streams GeoTIFF chunks from an HTTP raster service with
 bounded concurrency, status-code-based retry (503 sleeps then retries,
 504 retries immediately), abort-on-error that REMEMBERS the last
 completed serial (the ``.pro`` indicator file), and resumes by
-fetching only the remaining serials; uploads push a file in parts and
-commit.  This module re-expresses that shape Spark-first with a
-PLUGGABLE TRANSPORT:
+fetching only the remaining serials.  This module re-expresses that
+shape Spark-first with a PLUGGABLE TRANSPORT:
 
 - ``chunk_requests``: the Index.get_chunks analog
   (rextract.py:108-183) -- one row per (feat_id, serial) chunk of the
@@ -18,10 +18,7 @@ PLUGGABLE TRANSPORT:
   driver-side bookkeeping is queryable instead of a progress file;
 - resume is a left-anti of the completed (feat_id, serial) set from
   the request table before ``fetch_chunks`` (as manifest.pending_units
-  does for units): the indicator-file semantics, partition-parallel;
-- ``upload_parts`` (K5): split a payload into fixed-size parts, push
-  each through ``transport`` with the same retry classes, emit part
-  receipts (upload.py's chunked POST loop).
+  does for units): the indicator-file semantics, partition-parallel.
 
 NO REAL NETWORK CALLS exist in this container, so the default
 transport raises NotImplementedError (disclosed stub, like the
@@ -51,9 +48,6 @@ RETRY_STATUS = {503: 10.0, 504: 0.0}
 FETCH_SCHEMA = (
     "feat_id long, serial int, status int, attempts int, "
     "width int, height int, x1 double, y2 double, bytes binary"
-)
-UPLOAD_SCHEMA = (
-    "object_id string, part int, status int, attempts int, n_bytes long"
 )
 
 
@@ -195,51 +189,3 @@ def fetch_chunks(
                 )
 
     return requests.mapInPandas(run, schema=FETCH_SCHEMA)
-
-
-def upload_parts(payloads: DataFrame) -> DataFrame:
-    """K5 upload sink: split each payload(object_id, bytes) into
-    64 KiB parts and push each through ``default_transport`` with the
-    same retry classes, at most 2 retries (upload.py's chunked POST
-    loop); emits one receipt row per part."""
-    transport = default_transport
-    part_bytes = 65536
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples():
-                data = bytes(t.bytes)
-                n_parts = max(
-                    (len(data) + part_bytes - 1) // part_bytes, 1
-                )
-                for p in range(n_parts):
-                    part = data[p * part_bytes: (p + 1) * part_bytes]
-                    attempts = 0
-                    status = 0
-                    while attempts <= 2:
-                        attempts += 1
-                        status = transport(
-                            {
-                                "object_id": t.object_id,
-                                "part": p,
-                                "body": part,
-                            }
-                        )
-                        if status == 200 or status not in RETRY_STATUS:
-                            break
-                    rows.append(
-                        (str(t.object_id), p, int(status), attempts,
-                         len(part))
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "object_id", "part", "status", "attempts",
-                        "n_bytes",
-                    ],
-                )
-
-    return payloads.mapInPandas(run, schema=UPLOAD_SCHEMA)
-

@@ -30,13 +30,6 @@ def read_image_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def image_stats_stream(images: DataFrame) -> DataFrame:
-    """Stateless enhancement stats (radius 2) on a streaming
-    DataFrame -- the batch operator applies verbatim (mapInPandas is
-    streaming-safe for stateless transforms)."""
-    return image_enhance.box_blur_stats(images)
-
-
 def run_image_stats_to_memory(
     spark: SparkSession,
     path: str,
@@ -44,7 +37,9 @@ def run_image_stats_to_memory(
 ) -> DataFrame:
     """Drive the image stream to completion synchronously (memory
     sink + processAllAvailable) and return the result table."""
-    stats = image_stats_stream(read_image_stream(spark, path))
+    # the batch operator applies verbatim: mapInPandas is
+    # streaming-safe for stateless transforms
+    stats = image_enhance.box_blur_stats(read_image_stream(spark, path))
     q = (
         stats.writeStream.outputMode("append")
         .format("memory")

@@ -58,9 +58,10 @@ def phash_of_index(idx: np.ndarray, seed: int = DEFAULT_SEED) -> np.ndarray:
 def anchor_of_phash_windowed(phash: np.ndarray, tiles_axis: int):
     """phash -> (x0, y_top) anchor confined to a tiles_axis window.
 
-    Same mixing as grid.anchor_of_phash (retile re-anchoring analog,
-    raster_tools/retile.py:47 -> utils.py:82-92) with the tile index
-    masked into the window.  tiles_axis must be a power of two.
+    Knuth multiplicative mixing of phash into a canonical tile corner
+    (retile re-anchoring analog, raster_tools/retile.py:47 ->
+    utils.py:82-92) with the tile index masked into the window.
+    tiles_axis must be a power of two.
     """
     p = np.asarray(phash, dtype=np.int64)
     mask = np.int64(tiles_axis - 1)

@@ -1,8 +1,9 @@
 """Dead-code guards over raster_tools_spark/, with no allowlist:
 
-- every top-level name must be referenced by a Python file outside
-  tests/, outside its own definition (a name only tests reach is a
-  reference, harness or fake, and lives in tests/);
+- every top-level name must be referenced by code in a Python file
+  outside tests/, outside its own definition (a name only tests reach
+  is a reference, harness or fake, and lives in tests/; a name only
+  docstrings or comments mention is dead);
 - every defaulted parameter must be set to a different value by a call
   outside tests/ (an option nothing ships sets is a constant, and one
   only tests select is a second code path nothing ships);
@@ -17,11 +18,9 @@ from __future__ import annotations
 
 import ast
 import os
-import re
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORD = re.compile(r"\w+")
 
 
 def _py_files(root):
@@ -55,31 +54,43 @@ def _top_level_defs(tree):
             yield node.target.id, node
 
 
+def _code_names(node):
+    """Every identifier code under ``node`` uses: ``Name`` ids (f-string
+    interpolations included), ``Attribute`` attrs, imported names and
+    their aliases, and keyword-argument names.  Docstrings and comments
+    contribute nothing."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield from n.name.split(".")
+            if n.asname:
+                yield n.asname
+        elif isinstance(n, ast.keyword) and n.arg:
+            yield n.arg
+
+
 def unreferenced_definitions(root=ROOT):
     """(path, line, name) of every top-level definition in the package
-    whose name appears as a whole word in no file outside tests/ but
-    inside that definition's own source lines (a whole-word match is a
-    maximal ``\\w+`` run, so counting tokens once per file is exact)."""
-    texts = {}
-    for path in _py_files(root):
-        with open(path, encoding="utf-8") as f:
-            texts[path] = f.read()
+    whose name code in no file outside tests/ uses, beyond the uses
+    inside that definition itself (decorators included)."""
+    trees = _parse_all(root)
     tests = os.path.join(root, "tests") + os.sep
-    words = Counter()
-    for path, text in texts.items():
+    used = Counter()
+    for path, tree in trees.items():
         if not path.startswith(tests):
-            words.update(WORD.findall(text))
-    pkg = os.path.join(root, "raster_tools_spark")
+            used.update(_code_names(tree))
+    pkg = os.path.join(root, "raster_tools_spark") + os.sep
     out = []
-    for path, text in sorted(texts.items()):
-        if not path.startswith(pkg + os.sep):
+    for path, tree in sorted(trees.items()):
+        if not path.startswith(pkg):
             continue
-        lines = text.splitlines()
-        for name, node in _top_level_defs(ast.parse(text)):
+        for name, node in _top_level_defs(tree):
             start = min([node.lineno] + [
                 d.lineno for d in getattr(node, "decorator_list", [])])
-            own = "\n".join(lines[start - 1: node.end_lineno])
-            if words[name] <= WORD.findall(own).count(name):
+            if used[name] <= Counter(_code_names(node))[name]:
                 out.append((os.path.relpath(path, root), start, name))
     return out
 
@@ -89,9 +100,10 @@ def test_no_unreferenced_top_level_definitions():
 
 
 def test_scan_flags_a_planted_dead_definition(tmp_path):
-    """The scan itself must see a definition nothing references and one
-    only a test references, and must not flag one a top-level script
-    references."""
+    """The scan itself must see a definition nothing references, one
+    only a test references and one only another module's docstring and
+    comments name, and must not flag one a top-level script references
+    or one only an f-string interpolates."""
     pkg = tmp_path / "raster_tools_spark"
     pkg.mkdir()
     (pkg / "mod.py").write_text(
@@ -99,10 +111,15 @@ def test_scan_flags_a_planted_dead_definition(tmp_path):
         "def dead_helper():\n    return dead_helper\n\n\n"
         "def tests_only():\n    return 2\n\n\n"
         "def scripted():\n    return 3\n\n\n"
-        "LIMIT = used()\n"
+        "LIMIT = used()\n\n\n"
+        "def prose_only():\n    return 4\n\n\n"
+        "_PX = 'px'\n"
     )
     (tmp_path / "user.py").write_text(
-        "from raster_tools_spark.mod import LIMIT\n")
+        '"""Uses prose_only, in words only."""\n'
+        "from raster_tools_spark.mod import LIMIT\n\n"
+        "# prose_only again\n"
+        "SQL = f'SELECT {_PX} FROM t'\n")
     (tmp_path / "bench.py").write_text(
         "from raster_tools_spark.mod import scripted\n")
     (tmp_path / "tests").mkdir()
@@ -110,7 +127,8 @@ def test_scan_flags_a_planted_dead_definition(tmp_path):
         "from raster_tools_spark.mod import tests_only\n")
     mod = os.path.join("raster_tools_spark", "mod.py")
     assert unreferenced_definitions(str(tmp_path)) == [
-        (mod, 5, "dead_helper"), (mod, 9, "tests_only")]
+        (mod, 5, "dead_helper"), (mod, 9, "tests_only"),
+        (mod, 20, "prose_only")]
 
 
 def _options(tree):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fill_reference import fill_depressions_staged
+from references import accumulate
 
 from raster_tools_spark import codecs, flow, flow_vec
 from raster_tools_spark.grid import pack_cell, unpack_cell
@@ -120,7 +121,7 @@ class TestGlobalAccumulation:
         dir_tiles, d_global, nt = self._dir_tiles(spark, arr)
         out = flow_op.accumulate_tiles(dir_tiles).collect()
         got = _stitch(out, nt, decode=False).astype(np.int64)
-        expected = flow.accumulate(d_global).astype(np.int64)
+        expected = accumulate(d_global).astype(np.int64)
         # catchments MUST cross tile seams for this to mean anything
         assert expected.max() > TILE
         assert np.array_equal(got, expected)
@@ -130,7 +131,7 @@ class TestGlobalAccumulation:
         dir_tiles, d_global, nt = self._dir_tiles(spark, arr)
         out = flow_op.accumulate_tiles(dir_tiles).collect()
         got = _stitch(out, nt, decode=False).astype(np.int64)
-        expected = flow.accumulate(d_global).astype(np.int64)
+        expected = accumulate(d_global).astype(np.int64)
         assert np.array_equal(got, expected)
 
 
@@ -140,7 +141,7 @@ class TestVectorizeTiles:
         dem = arr.astype(np.float64).copy()
         flow.fill_simple_depressions(dem)
         d_global = flow.calculate_flow_direction(dem)
-        acc_global = flow.accumulate(d_global).astype(np.float64)
+        acc_global = accumulate(d_global).astype(np.float64)
         # log-like classing so several classes are populated
         a_cls = np.log10(1 + acc_global) * 3
         d_rows = []
@@ -332,7 +333,7 @@ class TestSeamZigzag:
         monkeypatch.setattr(flow_op, "MAX_ROUNDS", 8)
         out = flow_op.accumulate_tiles(tiles).collect()
         got = _stitch(out, 2, decode=False).astype(np.int64)
-        expected = flow.accumulate(d).astype(np.int64)
+        expected = accumulate(d).astype(np.int64)
         assert expected.max() > 300  # the zigzag accumulates deep
         assert np.array_equal(got, expected)
 
@@ -376,7 +377,7 @@ class TestSeamZigzag:
                 zlib.decompress(bytes(r.acc)), dtype=np.int64
             ).reshape(t, t)
             canvas[ty * t:(ty + 1) * t, tx * t:(tx + 1) * t] = px
-        expected = flow.accumulate(d).astype(np.int64)
+        expected = accumulate(d).astype(np.int64)
         assert expected.max() > t  # streams cross the seams
         assert np.array_equal(canvas, expected)
 
@@ -443,7 +444,7 @@ class TestSeamZigzag:
         monkeypatch.setattr(flow_op, "TAIL_THRESHOLD", 0)
         out = flow_op.accumulate_tiles(tiles).collect()
         got = _stitch(out, 2, decode=False).astype(np.int64)
-        expected = flow.accumulate(d).astype(np.int64)
+        expected = accumulate(d).astype(np.int64)
         assert np.array_equal(got, expected)
 
 

@@ -10,12 +10,13 @@ has a PROVEN closed form.  These tests pin that proof on the exact
 fixture: the trend margins beat the noise at every drop comparison
 (no flats, no ties), depression fill is the identity, the kernel's
 direction field equals the closed form, and the pointer-replay
-accumulation equals flow.accumulate -- so the DuckDB recursive-CTE
-oracle replays the same pointers the engine follows.
+accumulation equals the single-array reference -- so the DuckDB
+recursive-CTE oracle replays the same pointers the engine follows.
 """
 import numpy as np
 
 from raster_tools_spark import flow
+from references import accumulate
 
 H = W = 192
 JC = 96
@@ -83,7 +84,7 @@ def test_unique_strict_argmax_everywhere():
 
 def test_pointer_replay_equals_accumulate():
     cf = _closed_form()
-    acc = flow.accumulate(cf)
+    acc = accumulate(cf)
     DI = {16: 1, 32: 0, 4: 1, 2: 0, 8: 1}
     DJ = {16: -1, 32: -1, 4: 1, 2: 1, 8: 0}
     acc2 = np.zeros((H, W), np.int64)

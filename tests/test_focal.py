@@ -98,7 +98,7 @@ def _extreme_filter3(reduce):
     [
         (_extreme_filter3(np.minimum), 1),
         (_extreme_filter3(np.maximum), 1),
-        (focal.hillshade_kernel, 1),
+        (focal.zevenbergen_thorne, 1),
         (_smooth_kernel(), 2),
     ],
     ids=["min3", "max3", "hillshade", "smooth"],

@@ -11,7 +11,6 @@ from raster_tools_spark.functions.image_enhance import (
     _box_blur_plane,
     _equalize_plane,
     _otsu_threshold,
-    box_blur_images,
     box_blur_stats,
     equalize_stats,
     otsu_stats,
@@ -310,8 +309,44 @@ def test_spark_operators_end_to_end(spark):
         assert hm[iid]["m_min"] == int(p.min())
         assert hm[iid]["m_max"] == int(p.max())
 
-    # payload-emitting blur round-trips through the PNG codec
-    out = {r["image_id"]: r for r in box_blur_images(images).collect()}
-    for iid, p in planes.items():
-        dec = codecs.png_decode(bytes(out[iid]["bytes"]))
-        assert (dec == _box_blur_plane(p, 2).astype(np.uint8)).all()
+
+def test_map_payloads_edges(spark):
+    """codecs.map_payloads over empty partitions, a kernel that emits
+    nothing, one that emits a row per scanline, and kernels that read
+    row fields beyond bytes/fmt."""
+    planes = {f"img{k}": _plane(k, h=5 + k) for k in range(3)}
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [(iid, codecs.png_encode(p), "png", float(k),
+              codecs.png_encode(p[::-1]))
+             for k, (iid, p) in enumerate(planes.items())],
+            columns=["image_id", "bytes", "fmt", "nodata", "ref_bytes"],
+        )
+    )
+    # three rows over eight partitions: at least five are empty
+    spread = df.repartition(8)
+    assert spread.rdd.glom().map(len).collect().count(0) >= 5
+
+    none = codecs.map_payloads(
+        spread, lambda px, t: [], "image_id string, n long"
+    )
+    assert none.collect() == []
+    assert none.schema.simpleString() == "struct<image_id:string,n:bigint>"
+
+    def per_row(px, t):
+        ref = codecs.decode(bytes(t.ref_bytes), t.fmt)
+        return [
+            (t.image_id, i, int(px[i].sum()) + int(t.nodata),
+             int(ref[i].sum()))
+            for i in range(px.shape[0])
+        ]
+
+    got = codecs.map_payloads(
+        spread, per_row, "image_id string, i int, s long, s_ref long"
+    ).collect()
+    want = sorted(
+        (iid, i, int(p[i].sum()) + k, int(p[::-1][i].sum()))
+        for k, (iid, p) in enumerate(planes.items())
+        for i in range(p.shape[0])
+    )
+    assert sorted(tuple(r) for r in got) == want

@@ -60,7 +60,7 @@ class TestF4Halo:
             schema="cell_id long, bytes binary, fmt string",
         )
         out = focal.halo_stencil(
-            tiles, focal.hillshade_kernel, margin=1, tile_px=t
+            tiles, focal.zevenbergen_thorne, margin=1, tile_px=t
         ).collect()
         expected = focal.zevenbergen_thorne(
             np.pad(dem, 1, mode="edge").astype(np.float64)

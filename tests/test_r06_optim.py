@@ -12,6 +12,7 @@ import pytest
 from raster_tools_spark import codecs, wkb
 from raster_tools_spark.operators.roof import _knn_edges
 from raster_tools_spark.grid import CELL_SIZE, WORLD_TOP
+from references import anchor_of_phash
 
 
 def _knn_edges_reference(pts, links, limit, chunk=512):
@@ -510,7 +511,6 @@ def test_anchor_cols_matches_numpy(spark):
     negatives, and the extremes -- at windowed and full tile axes."""
     import pyspark.sql.functions as F
 
-    from raster_tools_spark.grid import anchor_of_phash
     from raster_tools_spark.operators.tile import _anchor_cols
     from raster_tools_spark.synth import anchor_of_phash_windowed
 

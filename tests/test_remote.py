@@ -94,65 +94,6 @@ def test_chunk_assembly_matches_service(spark):
     assert np.array_equal(canvas, expect)
 
 
-def fake_upload_transport(sink: dict, fail_first_every: int = 0):
-    """Collecting stand-in upload endpoint (tests reassemble from
-    ``sink`` to prove part integrity)."""
-    seen: set = set()
-
-    def transport(params: dict):
-        key = (params["object_id"], params["part"])
-        if (
-            fail_first_every
-            and params["part"] % fail_first_every == 0
-            and key not in seen
-        ):
-            seen.add(key)
-            return 503
-        sink.setdefault(params["object_id"], {})[params["part"]] = (
-            params["body"]
-        )
-        return 200
-
-    return transport
-
-
-def test_upload_receipts(spark, monkeypatch):
-    data = bytes(bytearray(range(256)) * 600)  # 153,600 B -> 3 parts
-    df = spark.createDataFrame(
-        [("obj1", data)], "object_id string, bytes binary"
-    )
-    sink: dict = {}
-    monkeypatch.setattr(
-        remote, "default_transport",
-        fake_upload_transport(sink, fail_first_every=2),
-    )
-    out = remote.upload_parts(df).collect()
-    got = {r.part: r for r in out}
-    assert sorted(got) == [0, 1, 2]
-    assert [got[p].n_bytes for p in (0, 1, 2)] == [65536, 65536, 22528]
-    assert all(r.status == 200 for r in out)
-    # parts 0 and 2 hit the injected 503 once
-    assert got[0].attempts == 2 and got[2].attempts == 2
-    assert got[1].attempts == 1
-
-
-def test_upload_reassembly_in_process():
-    """The collecting transport reassembles byte-identically (run in
-    process: executor-side sink dicts are not visible to the driver)."""
-    sink: dict = {}
-    tr = fake_upload_transport(sink)
-    data = b"abcdefgh" * 5000
-    part_bytes = 16384
-    n = (len(data) + part_bytes - 1) // part_bytes
-    for p in range(n):
-        assert tr({
-            "object_id": "o", "part": p,
-            "body": data[p * part_bytes:(p + 1) * part_bytes],
-        }) == 200
-    joined = b"".join(sink["o"][p] for p in range(n))
-    assert joined == data
-
-
 def test_default_transport_is_disclosed_stub(spark):
     reqs = remote.chunk_requests(_feats(spark), chunk_px=64)
     with pytest.raises(Exception):

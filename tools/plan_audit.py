@@ -519,27 +519,30 @@ def main():
 
     # 5z. image-enhance family: one Arrow stage over the image scan,
     # ZERO exchanges -- per-payload operators must never shuffle
-    audit(
-        "box_blur_no_shuffle",
-        qcat["box_blur"](spark, SF),
-        [
-            ("no exchange at all", lambda p: "Exchange" not in p),
-            ("single Arrow mapInPandas stage",
-             lambda p: p.count("FlatMapGroupsInPandas") == 0
-             and "MapInPandas" in p),
-            ("no sort", lambda p: "Sort" not in p),
-        ],
-    )
-
-    audit(
-        "otsu_no_shuffle",
-        qcat["otsu_threshold"](spark, SF),
-        [
-            ("no exchange at all", lambda p: "Exchange" not in p),
-            ("single Arrow mapInPandas stage",
-             lambda p: "MapInPandas" in p),
-        ],
-    )
+    for section, query in (
+        ("box_blur_no_shuffle", "box_blur"),
+        ("otsu_no_shuffle", "otsu_threshold"),
+        ("hist_equalize_no_shuffle", "hist_equalize"),
+        ("rle_stats_no_shuffle", "rle_stats"),
+        ("sobel_edges_no_shuffle", "sobel_edges"),
+        ("quadtree_compress_no_shuffle", "quadtree_compress"),
+        ("morph_gradient_no_shuffle", "morph_gradient"),
+        ("contrast_stretch_no_shuffle", "contrast_stretch"),
+        ("image_moments_no_shuffle", "image_moments"),
+        ("ssd_match_no_shuffle", "ssd_match"),
+        ("blob_label_no_shuffle", "blob_label"),
+    ):
+        audit(
+            section,
+            qcat[query](spark, SF),
+            [
+                ("no exchange at all", lambda p: "Exchange" not in p),
+                ("single Arrow mapInPandas stage",
+                 lambda p: "FlatMapGroupsInPandas" not in p
+                 and "MapInPandas" in p),
+                ("no sort", lambda p: "Sort" not in p),
+            ],
+        )
 
     # 5z2. vertex-table geometry: pure JVM (no Python at all), exactly
     # one hash shuffle on the feature key
