@@ -7,16 +7,18 @@ Reference semantics re-expressed:
   fill/fill.py:201-203 ...) -> ``left_anti`` join of the work list
   against the manifest of completed units;
 - resume serials (.pro files, rextract.py:92-105,355-362; resume.txt,
-  extract.py:545-558) -> manifest rows appended per completed unit;
-- lockfiles (rextract.py:579-618) -> append-only parquet commits (an
-  Iceberg snapshot per commit on a real cluster; plain parquet append
-  in this sandbox -- the anti-join makes replays idempotent even if a
-  unit is recorded twice).
+  extract.py:545-558) -> one manifest row per completed unit, committed
+  only after that unit's output;
+- lockfiles (rextract.py:579-618) -> one parquet file per manifest
+  commit (an Iceberg snapshot per commit on a real cluster; plain
+  parquet append in this sandbox -- the anti-join makes replays
+  idempotent even if a unit is recorded twice).
 
 A work unit here is a coarse grid cell (default r7 = 1024 m block,
 matching the reference's block-granularity Index, rextract.py:108-141).
-Each completed unit records metrics: rows, bytes decoded, seconds,
-skew ratio inputs (rows per unit).
+Each completed unit records the output rows and the payload bytes
+(``octet_length(bytes)``) written under it, and the seconds the
+output write of its commit took.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import os
 import time
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,13 +38,14 @@ MANIFEST_SCHEMA = (
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """Completed units; empty frame if no manifest yet."""
-    if not os.path.isdir(manifest_dir):
+    """Completed units.  A directory holding no committed data file
+    (none yet, or only ``_temporary/`` from a crashed first commit) is
+    an empty manifest; any other read error raises."""
+    if not os.path.isdir(manifest_dir) or all(
+        f.startswith(("_", ".")) for f in os.listdir(manifest_dir)
+    ):
         return spark.createDataFrame([], schema=MANIFEST_SCHEMA)
-    try:
-        return spark.read.parquet(manifest_dir)
-    except Exception:
-        return spark.createDataFrame([], schema=MANIFEST_SCHEMA)
+    return spark.read.parquet(manifest_dir)
 
 
 def pending_units(
@@ -69,25 +73,30 @@ def run_with_manifest(
 ) -> DataFrame:
     """Resume-aware job runner.
 
-    1. anti-join ``work_df`` against the manifest -> pending units;
-    2. run ``process`` on the pending slice, write outputs partitioned
-       by unit to ``out_dir`` (append mode -- each unit's files land
-       under its own partition directory, so replays of incomplete
-       units overwrite-by-partition rather than duplicate);
-    3. append one manifest row per completed unit with metrics.
+    1. anti-join ``work_df`` against the manifest and collect the
+       pending unit ids to the driver once;
+    2. run ``process`` on the pending slice and overwrite its units'
+       partitions of ``out_dir`` (dynamic overwrite, one file per unit:
+       a replay of an incomplete unit replaces its output instead of
+       duplicating it);
+    3. read back rows and payload bytes of the pending partitions only,
+       and commit one manifest row per pending unit as one file.  A
+       crash before this commit leaves the units pending; the replay
+       rewrites them identically.
 
     Returns the manifest increment that was committed.
     """
     pending = pending_units(work_df, spark, manifest_dir, job_id, unit_col)
-    if pending.isEmpty():
+    units = sorted(r[0] for r in pending.select(unit_col).distinct().collect())
+    if not units:
         return read_manifest(spark, manifest_dir).filter(
             F.col("job_id") == job_id
         )
 
     t0 = time.time()
-    out = process(pending)
+    out = process(pending).withColumn("_unit", F.col(unit_col))
     (
-        out.withColumn("_unit", F.col(unit_col))
+        out.repartition("_unit")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_unit")
@@ -95,30 +104,21 @@ def run_with_manifest(
     )
     secs = time.time() - t0
 
-    # metrics per unit from the written output (cheap scan of the
-    # committed files -- what was durably written is what is recorded).
-    # Every PENDING unit gets a manifest row -- a unit whose process()
-    # output is empty (e.g. all tiles skip-empty) records rows=0, so
-    # resume converges instead of re-processing empties forever.
-    written = spark.read.parquet(out_dir)
+    # record what was durably written, one row per pending unit (rows=0
+    # when its output is empty, e.g. all tiles skip-empty, so resume
+    # converges); the schema is given as an all-empty commit has no file.
+    written = spark.read.schema(out.schema).parquet(out_dir)
+    written = written.filter(F.col("_unit").isin(units))
     bytes_col = (
         F.sum(F.octet_length("bytes")) if "bytes" in written.columns
         else F.lit(0)
     )
-    stats = written.groupBy(F.col("_unit").alias("unit")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        bytes_col.alias("bytes"),
-    )
-    inc = (
-        pending.select(F.col(unit_col).alias("unit")).distinct()
-        .join(stats, "unit", "left")
-        .withColumn("rows", F.coalesce(F.col("rows"), F.lit(0)))
-        .withColumn("bytes", F.coalesce(F.col("bytes"), F.lit(0)))
-        .withColumn("job_id", F.lit(job_id))
-        .withColumn("secs", F.lit(float(secs)))
-        .withColumn("committed_at", F.lit(time.time()))
-        .select("job_id", "unit", "rows", "bytes", "secs", "committed_at")
-    )
-    inc.write.mode("append").parquet(manifest_dir)
+    got = {r[0]: (r[1], r[2] or 0) for r in written.groupBy("_unit").agg(
+        F.count(F.lit(1)), bytes_col).collect()}
+    now = time.time()
+    inc = spark.createDataFrame(pd.DataFrame(
+        [(job_id, u, *got.get(u, (0, 0)), secs, now) for u in units],
+        columns=["job_id", "unit", "rows", "bytes", "secs", "committed_at"],
+    ), schema=MANIFEST_SCHEMA)
+    inc.coalesce(1).write.mode("append").parquet(manifest_dir)
     return inc
-

@@ -3,6 +3,7 @@ still gets a manifest row (rows=0), so replays skip it instead of
 re-processing it forever (ADVICE round-1, manifest.py)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from raster_tools_spark import manifest
@@ -35,6 +36,41 @@ def test_empty_unit_gets_manifest_row(spark, tmp_path):
         spark, work, "unit", process, out_dir, man_dir, "job"
     )
     assert calls == [3]
+
+    # a first commit whose units all yield nothing writes no data file
+    inc = manifest.run_with_manifest(
+        spark, work, "unit", lambda p: p.filter(F.lit(False)),
+        str(tmp_path / "out_empty"), str(tmp_path / "man_empty"), "job",
+    )
+    assert sorted((r.unit, r.rows) for r in inc.collect()) == [
+        (1, 0), (2, 0), (3, 0)
+    ]
+
+
+def test_read_manifest_empty_only_without_committed_data(spark, tmp_path):
+    """Only a manifest directory with no committed data file -- here
+    just the ``_temporary/`` a crashed first commit leaves -- reads as
+    empty.  A corrupt manifest raises instead of silently re-running
+    and overwriting every unit."""
+    crashed = tmp_path / "crashed"
+    (crashed / "_temporary" / "0").mkdir(parents=True)
+    (crashed / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"x")
+    assert manifest.read_manifest(spark, str(crashed)).count() == 0
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        manifest.read_manifest(spark, str(corrupt)).count()
+
+    calls = []
+    work = spark.createDataFrame([(1, 10)], schema="unit long, v long")
+    with pytest.raises(Exception):
+        manifest.run_with_manifest(
+            spark, work, "unit", lambda p: calls.append(1) or p,
+            str(tmp_path / "out"), str(corrupt), "job",
+        )
+    assert calls == []
 
 
 def _nodes(plan):

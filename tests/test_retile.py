@@ -1,6 +1,9 @@
 """Retile assembly tests: window placement via the reference's grid
 math, last-wins merge, skip-empty, manifest resume."""
 
+import os
+import shutil
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -103,6 +106,8 @@ class TestRetile:
         # idempotent replay: no new units, output unchanged
         inc2 = op_retile.retile_job(spark, cells, out_dir, man_dir)
         assert spark.read.parquet(out_dir).count() == total1
+        assert inc2.count() == n_units
+        assert len(_parquet_files(man_dir)) == 1  # the replay commits nothing
 
         # every output tile decodes and carries active pixels
         sample = spark.read.parquet(out_dir).limit(5).collect()
@@ -110,3 +115,55 @@ class TestRetile:
             px = codecs.png_decode(bytes(r.bytes))
             assert px.shape == (256, 256)
             assert (px != 255).sum() == r.active_px
+
+    def test_retile_job_crash_replay(self, spark, tmp_path):
+        """A crash between the output write and the manifest commit
+        (simulated by deleting the manifest): the replay rewrites every
+        unit in place and re-commits identical (unit, rows, bytes).  A
+        unit whose tiles are all skip-empty still records rows=0.  Each
+        unit's output is one parquet file and each commit one manifest
+        file (every file created costs a local-filesystem chmod)."""
+        tx = 40  # r7 unit outside the 16x16-tile synth extent
+        blank_unit = int(cell_of_xy(tx * TILE_SIZE + 1.0,
+                                    WORLD_TOP - tx * TILE_SIZE - 1.0, 7))
+        cells = op_tile.assign_cells(
+            synth.images_df(spark, 60, tiles_axis=16), tiles_axis=16
+        )
+        blank = _mk_images(spark, [("img_blank", tx, tx, 64, 64, 255)])
+        cells = cells.unionByName(
+            blank.withColumn("qk_r7", F.lit(blank_unit)),
+            allowMissingColumns=True,
+        )
+        units = {r[0] for r in cells.select("qk_r7").distinct().collect()}
+        out_dir = str(tmp_path / "tiles")
+        man_dir = str(tmp_path / "manifest")
+
+        def state():
+            out = spark.read.parquet(out_dir)
+            ids = [r[0] for r in out.select("cell_id").collect()]
+            assert len(ids) == len(set(ids))  # no duplicate tiles
+            shas = sorted(r[0] for r in out.select(F.sha2("bytes", 256))
+                          .collect())
+            man = sorted(tuple(r) for r in spark.read.parquet(man_dir)
+                         .select("unit", "rows", "bytes").collect())
+            unit_dirs = [d for d in os.listdir(out_dir)
+                         if d.startswith("_unit=")]
+            assert unit_dirs and all(
+                len(_parquet_files(os.path.join(out_dir, d))) == 1
+                for d in unit_dirs
+            ), {d: os.listdir(os.path.join(out_dir, d)) for d in unit_dirs}
+            assert len(_parquet_files(man_dir)) == 1
+            return len(ids), shas, man
+
+        op_retile.retile_job(spark, cells, out_dir, man_dir)
+        first = state()
+        assert {u for u, _, _ in first[2]} == units
+        assert (blank_unit, 0, 0) in first[2]
+
+        shutil.rmtree(man_dir)
+        op_retile.retile_job(spark, cells, out_dir, man_dir)
+        assert state() == first
+
+
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
