@@ -81,7 +81,7 @@ def png_decode(data: bytes) -> np.ndarray:
     off = 8
     w = h = None
     ctype = 0
-    idat = b""
+    idat = []
     while off < len(data):
         (length,) = struct.unpack_from(">I", data, off)
         tag = data[off + 4 : off + 8]
@@ -94,11 +94,13 @@ def png_decode(data: bytes) -> np.ndarray:
                     "only 8-bit grayscale/RGB PNG supported"
                 )
         elif tag == b"IDAT":
-            idat += payload
+            idat.append(payload)
         elif tag == b"IEND":
             break
     nch = 3 if ctype == 2 else 1
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(
+    raw = np.frombuffer(
+        zlib.decompress(b"".join(idat)), dtype=np.uint8
+    ).reshape(
         h, w * nch + 1
     )
     filters = raw[:, 0]

@@ -155,13 +155,12 @@ CARPET_SCHEMA = (
 def sample_carpet_points(
     lines: DataFrame,
     step: float = CELL_SIZE,
-    carpet_step: float = CELL_SIZE,
 ) -> DataFrame:
     """Carpet sampling (line_up.py get_carpet semantics): every
     arc-length sample expands into a row of points offset along the
-    local segment NORMAL at ``carpet_step`` spacing up to 1 m each
+    local segment NORMAL at ``CELL_SIZE`` spacing up to 1 m each
     side.  (cx, cy) carries the on-line center of each row."""
-    n_off = int(np.floor(1.0 / carpet_step))
+    n_off = int(np.floor(1.0 / CELL_SIZE))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -200,7 +199,7 @@ def sample_carpet_points(
                 for k in range(len(pts)):
                     cx0, cy0 = float(pts[k, 0]), float(pts[k, 1])
                     for o in range(-n_off, n_off + 1):
-                        d = o * carpet_step
+                        d = o * CELL_SIZE
                         rows.append(
                             (
                                 t.line_id, k, o,
@@ -225,16 +224,15 @@ def line_carpet_profile(
     lines: DataFrame,
     tiles: DataFrame,
     step: float = CELL_SIZE,
-    carpet_step: float = CELL_SIZE,
 ) -> DataFrame:
     """Carpet drape (line_up.py --distance mode): per on-line sample,
     the maximum of the raster over the perpendicular 1 m carpet row;
     nodata (255) carpet points are ignored, rows whose whole carpet is
     nodata (or off-coverage) are dropped.  Returns
     (line_id, seq, cx, cy, value)."""
-    samples = sample_carpet_points(
-        lines, step, carpet_step
-    ).withColumn("cell_id", cell_col(F.col("sx"), F.col("sy"), RES_TILE))
+    samples = sample_carpet_points(lines, step).withColumn(
+        "cell_id", cell_col(F.col("sx"), F.col("sy"), RES_TILE)
+    )
     t = tiles.select("cell_id", "bytes", "fmt", "x0", "y_top")
     cand = samples.join(t, "cell_id").select(
         "line_id", "seq", "off", "sx", "sy", "cx", "cy",

@@ -14,7 +14,7 @@ datasources.py:28-33).  Spark-first re-expression:
   drivers).  They are broadcast and bbox-prejoined with a JVM-side
   predicate.
 - phase N (normal/shuffle): remaining polygons explode their covering
-  cells at ``join_res`` and equi-join images on the cell key -- the
+  cells at ``JOIN_RES`` and equi-join images on the cell key -- the
   canonical shuffle join on grid keys (AQE skew join handles hot
   cells).
 - exact refinement: the even-odd ray cast of geom.points_in_rings as a
@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from .. import geom
 from ..grid import covering_cells, n_covering, JOIN_RES
+from .tile import sql_of
 
 # polygons covering more cells than this are hot: they skip the cell
 # explode and join through the broadcast bbox phase
@@ -121,30 +122,26 @@ def _inside(cx, cy, edges):
     (y2 - y1)`` operation order, the same strict ``<``).  The division
     is evaluated only under the straddle test, where ``y1 != y2``:
     ANSI mode raises on a zero divisor."""
-    cx = cx.cast("double")
-    cy = cy.cast("double")
-
-    def step(n, e):
-        straddle = (e["y1"] > cy) != (e["y2"] > cy)
-        xint = e["x1"] + (cy - e["y1"]) * (e["x2"] - e["x1"]) / (
-            e["y2"] - e["y1"]
-        )
-        return n + F.when(straddle, (cx < xint).cast("int")).otherwise(0)
-
-    return F.aggregate(edges, F.lit(0), step) % 2 == 1
+    x = f"CAST({sql_of(cx)} AS DOUBLE)"
+    y = f"CAST({sql_of(cy)} AS DOUBLE)"
+    return F.expr(
+        f"aggregate({sql_of(edges)}, 0, (_n, _e) -> _n + CASE"
+        f" WHEN (_e.y1 > {y}) != (_e.y2 > {y})"
+        f" THEN CAST({x} < _e.x1 + ({y} - _e.y1) * (_e.x2 - _e.x1)"
+        f" / (_e.y2 - _e.y1) AS INT) ELSE 0 END) % 2 = 1"
+    )
 
 
 def pip_join(
     images: DataFrame,
     polygons: DataFrame,
-    join_res: int = JOIN_RES,
     poly_cols=("feat_id", "category", "value"),
 ) -> DataFrame:
     """images (assign_cells output) x polygons(feat_id, geom_wkb, ...)
     -> containment pairs (image_id, cx, cy, *poly_cols).  Polygons
     covering more than HOT_COVER cells take the broadcast phase."""
     keep_cols = ("image_id", "cx", "cy")
-    cell_key = f"qk_r{join_res}"
+    cell_key = f"qk_r{JOIN_RES}"
     # the point side is the guide-8 lightweight proxy of the image scan
     # (id + center + cell key, ~50 bytes/row); materialize it lazily so
     # the two join phases consume ONE scan + anchor pass instead of each
@@ -156,11 +153,12 @@ def pip_join(
     # both phases and by every broadcast build; checkpoint so the pandas
     # UDF runs once per query instead of once per consumer subtree
     polys = polygons.withColumn(
-        "_pm", _poly_meta_udf(join_res, HOT_COVER)(F.col("geom_wkb"))
+        "_pm", _poly_meta_udf(JOIN_RES, HOT_COVER)("geom_wkb")
     ).localCheckpoint(eager=False)
-    hot = polys.filter(F.col("_pm.n_cover") > HOT_COVER)
-    normal = polys.filter(F.col("_pm.n_cover") <= HOT_COVER)
+    hot = polys.filter(f"_pm.n_cover > {HOT_COVER}")
+    normal = polys.filter(f"_pm.n_cover <= {HOT_COVER}")
     attrs = [c for c in poly_cols if c != "feat_id"]
+    quoted = [f"`{c}`" for c in attrs]
 
     # the envelope rides along as 4 doubles so a JVM-side bbox predicate
     # drops candidates before the ray cast: boundary cells -- especially
@@ -169,34 +167,27 @@ def pip_join(
     # pairs that fail trivially.  Closed comparisons keep it a
     # conservative SUPERSET of containment (the even-odd ray cast's
     # boundary behavior varies by edge)
-    meta = [
-        F.col("_pm.edges").alias("_edges"),
-        F.col("_pm.ex1").alias("_ex1"), F.col("_pm.ex2").alias("_ex2"),
-        F.col("_pm.ey1").alias("_ey1"), F.col("_pm.ey2").alias("_ey2"),
-    ]
-    bbox = (
-        (F.col("cx") >= F.col("_ex1"))
-        & (F.col("cx") < F.col("_ex2"))
-        & (F.col("cy") >= F.col("_ey1"))
-        & (F.col("cy") <= F.col("_ey2"))
-    )
+    meta = ["_pm.edges AS _edges", "_pm.ex1 AS _ex1", "_pm.ex2 AS _ex2",
+            "_pm.ey1 AS _ey1", "_pm.ey2 AS _ey2"]
+    bbox = "cx >= _ex1 AND cx < _ex2 AND cy >= _ey1 AND cy <= _ey2"
 
     # ---- phase N: shuffle equi-join on covering cells -------------------
-    ncells = normal.select(
-        "feat_id", F.explode("_pm.cells").alias("cover_cell"), *meta,
-        *attrs,
+    ncells = normal.selectExpr(
+        "feat_id", "explode(_pm.cells) AS cover_cell", *meta, *quoted,
     )
-    cand_n = pts.join(ncells, (pts[cell_key] == ncells["cover_cell"]) & bbox)
+    cand_n = pts.join(
+        ncells, F.expr(f"{cell_key} = cover_cell AND ({bbox})")
+    )
 
     # ---- phase H: broadcast bbox prejoin ---------------------------------
     cand_h = pts.join(
-        F.broadcast(hot.select("feat_id", *meta, *attrs)), bbox
+        F.broadcast(hot.selectExpr("feat_id", *meta, *quoted)), F.expr(bbox)
     )
 
     # the phases partition the polygon set, so their union carries each
     # candidate pair once; the exact ray cast filters it JVM-side
     cols = [*keep_cols, "feat_id", "_edges", *attrs]
     cand = cand_n.select(*cols).unionByName(cand_h.select(*cols))
-    return cand.filter(
-        _inside(F.col("cx"), F.col("cy"), F.col("_edges"))
-    ).select(*keep_cols, *poly_cols)
+    return cand.filter(_inside("cx", "cy", "_edges")).select(
+        *keep_cols, *poly_cols
+    )

@@ -110,14 +110,10 @@ def retile(images_cells: DataFrame) -> DataFrame:
     src = images_cells.withColumn(
         "cell_id",
         # explode_outer + null filter below: see zonal._image_cover_udf
-        F.explode_outer(
-            _image_cover_udf(RES_TILE)(
-                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
-            )
-        ),
+        F.explode_outer(_image_cover_udf(RES_TILE)("x0", "y_top", "w", "h")),
     ).select(
         "cell_id", "image_id", "bytes", "fmt", "x0", "y_top", "w", "h"
-    ).filter(F.col("cell_id").isNotNull())
+    ).filter("cell_id IS NOT NULL")
     return src.groupBy("cell_id").applyInPandas(
         lambda pdf: _assemble(pdf, tile_px, NODATA_DEFAULT),
         schema=RETILE_SCHEMA,
@@ -161,8 +157,9 @@ def retile_job(
 
     def process(pending: DataFrame) -> DataFrame:
         tiles = retile(pending.drop("unit"))
-        # unit of an output tile = its RES_TILE->r7 ancestor
-        unit = F.col("cell_id")
+        # unit of an output tile = its RES_TILE->r7 ancestor, one
+        # expression: each rollup splices the previous one's SQL text
+        unit = "cell_id"
         for _ in range(RES_TILE - 7):
             unit = parent_cell_col(unit)
         return tiles.withColumn("unit", unit)

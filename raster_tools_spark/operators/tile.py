@@ -26,7 +26,23 @@ _M31 = (1 << 31) - 1
 _M62 = (1 << 62) - 1
 
 
-def _anchor_cols(phash: Column, tiles_axis: int):
+def sql_of(c: Column | str) -> str:
+    """SQL text of ``c``, parenthesized so it splices into any operator
+    context: a column name or SQL text as is, an ``F.col(name)`` as its
+    name, an ``F.expr`` Column (every builder here returns one) as its
+    text.  The fixed-shape builders splice their arguments into one
+    ``F.expr``, because a tree built Column by Column costs a py4j
+    round trip per node."""
+    return f"({c if isinstance(c, str) else c._jc.toString()})"
+
+
+def _d(x: float) -> str:
+    """A double literal in SQL text (an unsuffixed ``0.25`` would parse
+    as a DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def _anchor_cols(phash: Column | str, tiles_axis: int):
     """JVM-side ``phash -> (x0, y_top)`` anchor -- bit-exact mirror of
     synth.anchor_of_phash_windowed.
 
@@ -52,47 +68,41 @@ def _anchor_cols(phash: Column, tiles_axis: int):
     kept the optimizer from cloning it) are gone.
     """
     mask = (tiles_axis if tiles_axis < 4096 else 4096) - 1
-    c = F.lit(int(_ANCHOR_MULT))
-    p = phash.cast("long")
-    t = (F.shiftright(p, 31).bitwiseAND(F.lit(_M31)) * c).bitwiseAND(
-        F.lit(_M31)
-    )
-    u = (p.bitwiseAND(F.lit(_M31)) * c).bitwiseAND(F.lit(_M62))
-    mixed = (u + F.shiftleft(t, 31)).bitwiseAND(F.lit(_M62))
-    tx = F.shiftright(mixed, 20).bitwiseAND(F.lit(mask))
-    ty = F.shiftright(mixed, 2).bitwiseAND(F.lit(mask))
-    x0 = tx.cast("double") * F.lit(float(TILE_SIZE))
-    y_top = F.lit(float(WORLD_TOP)) - ty.cast("double") * F.lit(
-        float(TILE_SIZE)
-    )
-    return x0, y_top
+    c = int(_ANCHOR_MULT)
+    p = f"CAST({sql_of(phash)} AS BIGINT)"
+    t = f"(((shiftright({p}, 31) & {_M31}) * {c}) & {_M31})"
+    u = f"((({p} & {_M31}) * {c}) & {_M62})"
+    mixed = f"(({u} + shiftleft({t}, 31)) & {_M62})"
+    tile = _d(TILE_SIZE)
+    x0 = f"CAST(shiftright({mixed}, 20) & {mask} AS DOUBLE) * {tile}"
+    y_top = (f"{_d(WORLD_TOP)} - "
+             f"CAST(shiftright({mixed}, 2) & {mask} AS DOUBLE) * {tile}")
+    return F.expr(x0), F.expr(y_top)
 
 
-def cell_col(x: Column, y: Column, res: int) -> Column:
+def cell_col(x: Column | str, y: Column | str, res: int) -> Column:
     """Packed quadtree cell id as a JVM-side expression (codegen'd).
 
     Mirrors grid.cell_of_xy bit-for-bit: floor into the res grid, pack
     (res << 56) | (ix << 28) | iy.
     """
-    edge = float(cell_edge(res))
-    ix = F.floor(x / F.lit(edge)).cast("long")
-    iy = F.floor((F.lit(WORLD_TOP) - y) / F.lit(edge)).cast("long")
-    return (
-        F.shiftleft(F.lit(res).cast("long"), 56)
-        .bitwiseOR(F.shiftleft(ix, 28))
-        .bitwiseOR(iy)
+    edge = _d(cell_edge(res))
+    return F.expr(
+        f"shiftleft(CAST({res} AS BIGINT), 56)"
+        f" | shiftleft(CAST(FLOOR({sql_of(x)} / {edge}) AS BIGINT), 28)"
+        f" | CAST(FLOOR(({_d(WORLD_TOP)} - {sql_of(y)}) / {edge})"
+        f" AS BIGINT)"
     )
 
 
-def parent_cell_col(cell: Column) -> Column:
+def parent_cell_col(cell: Column | str) -> Column:
     """JVM-side quadtree rollup res r -> r-1 (utils.py:38-51 quad fold)."""
-    res = F.shiftright(cell, 56)
-    ix = F.shiftright(cell, 28).bitwiseAND(F.lit((1 << 28) - 1))
-    iy = cell.bitwiseAND(F.lit((1 << 28) - 1))
-    return (
-        F.shiftleft(res - 1, 56)
-        .bitwiseOR(F.shiftleft(F.shiftright(ix, 1), 28))
-        .bitwiseOR(F.shiftright(iy, 1))
+    c = sql_of(cell)
+    m = (1 << 28) - 1
+    return F.expr(
+        f"shiftleft(shiftright({c}, 56) - 1, 56)"
+        f" | shiftleft(shiftright(shiftright({c}, 28) & {m}, 1), 28)"
+        f" | shiftright({c} & {m}, 1)"
     )
 
 
@@ -106,16 +116,13 @@ def assign_cells(
     the center's cell at each resolution.  Assignment is a pure function
     of the row -> bit-identical at any parallelism (north rule).
     """
-    x0c, ytc = _anchor_cols(F.col("phash"), tiles_axis)
-    df = (
-        images.withColumn("x0", x0c)
-        .withColumn("y_top", ytc)
-        .withColumn("cx", F.col("x0") + F.col("w").cast("double") * 0.25)
-        .withColumn("cy", F.col("y_top") - F.col("h").cast("double") * 0.25)
-    )
-    for res in (7, 8, 9, 10, 11):
-        df = df.withColumn(f"qk_r{res}", cell_col(F.col("cx"), F.col("cy"), res))
-    return df
+    x0, y_top = _anchor_cols("phash", tiles_axis)
+    return images.withColumns({"x0": x0, "y_top": y_top}).withColumns({
+        "cx": F.expr("x0 + CAST(w AS DOUBLE) * 0.25D"),
+        "cy": F.expr("y_top - CAST(h AS DOUBLE) * 0.25D"),
+    }).withColumns({
+        f"qk_r{res}": cell_col("cx", "cy", res) for res in (7, 8, 9, 10, 11)
+    })
 
 
 def quad_rollup(

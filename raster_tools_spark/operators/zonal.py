@@ -48,14 +48,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import codecs, geom
-from ..grid import CELL_SIZE, JOIN_RES, GeoTransform
+from ..grid import CELL_SIZE, JOIN_RES, WORLD_TOP, GeoTransform, cell_edge
 from .pip import _cover_udf
+from .tile import _d, sql_of
 
 NODATA_DEFAULT = 255  # dtype-max convention (extract.py:94-99, merge.py:59)
 
 
-def _hist_sum(hist):
-    return F.aggregate(hist, F.lit(0).cast("long"), lambda a, x: a + x)
+def _hist_sum_sql(hist) -> str:
+    return f"aggregate({sql_of(hist)}, CAST(0 AS BIGINT), (_a, _x) -> _a + _x)"
 
 
 def percentile_from_hist(hist, q: float):
@@ -70,35 +71,29 @@ def percentile_from_hist(hist, q: float):
     constant rides in the zero struct, which is evaluated once: a
     lambda body referencing ``n`` would re-sum the histogram for every
     bin, because higher-order functions run interpreted."""
-    n = _hist_sum(hist)
-    pos = F.lit(q) / F.lit(100.0) * (n - 1).cast("double")
-    lo = F.floor(pos)
-    zero = F.struct(
-        (lo + 1).alias("k_lo"), (F.ceil(pos) + 1).alias("k_hi"),
-        (pos - lo.cast("double")).alias("frac"),
-        F.lit(0).cast("long").alias("c"), F.lit(0).alias("i"),
-        F.lit(-1).alias("v_lo"), F.lit(-1).alias("v_hi"),
+    n = _hist_sum_sql(hist)
+    pos = f"({_d(q)} / 100.0D * CAST({n} - 1 AS DOUBLE))"
+    lo = f"FLOOR({pos})"
+    zero = (
+        f"struct({lo} + 1 AS k_lo, CEIL({pos}) + 1 AS k_hi,"
+        f" {pos} - CAST({lo} AS DOUBLE) AS frac, CAST(0 AS BIGINT) AS c,"
+        f" 0 AS i, -1 AS v_lo, -1 AS v_hi)"
     )
-
-    def step(acc, x):
-        c = acc["c"] + x
-        return F.struct(
-            acc["k_lo"].alias("k_lo"), acc["k_hi"].alias("k_hi"),
-            acc["frac"].alias("frac"), c.alias("c"),
-            (acc["i"] + 1).alias("i"),
-            F.when((acc["v_lo"] < 0) & (c >= acc["k_lo"]), acc["i"])
-            .otherwise(acc["v_lo"]).alias("v_lo"),
-            F.when((acc["v_hi"] < 0) & (c >= acc["k_hi"]), acc["i"])
-            .otherwise(acc["v_hi"]).alias("v_hi"),
-        )
-
-    def finish(acc):
-        v_lo = acc["v_lo"].cast("double")
-        v_hi = acc["v_hi"].cast("double")
-        return v_lo + (v_hi - v_lo) * acc["frac"]
-
-    return F.when(n > 0, F.aggregate(hist, zero, step, finish)).otherwise(
-        F.lit(float("nan"))
+    step = (
+        "(_s, _x) -> struct(_s.k_lo AS k_lo, _s.k_hi AS k_hi,"
+        " _s.frac AS frac, _s.c + _x AS c, _s.i + 1 AS i,"
+        " CASE WHEN _s.v_lo < 0 AND _s.c + _x >= _s.k_lo"
+        " THEN _s.i ELSE _s.v_lo END AS v_lo,"
+        " CASE WHEN _s.v_hi < 0 AND _s.c + _x >= _s.k_hi"
+        " THEN _s.i ELSE _s.v_hi END AS v_hi)"
+    )
+    finish = (
+        "_s -> CAST(_s.v_lo AS DOUBLE)"
+        " + (CAST(_s.v_hi AS DOUBLE) - CAST(_s.v_lo AS DOUBLE)) * _s.frac"
+    )
+    return F.expr(
+        f"CASE WHEN {n} > 0 THEN aggregate({sql_of(hist)}, {zero}, {step},"
+        f" {finish}) ELSE CAST('NaN' AS DOUBLE) END"
     )
 
 
@@ -114,45 +109,36 @@ def _image_cover_udf(res: int):
     2.9 s of flagship zonal's 5.8 s in the pre-decode candidate
     stage).  Returns a builder so call sites keep the
     ``_image_cover_udf(res)(x0, y_top, w, h)`` shape."""
-    from ..grid import WORLD_TOP, cell_edge
-
-    edge = float(cell_edge(res))
-    n_axis = 1 << (res + 2)
+    edge = _d(cell_edge(res))
+    top = _d(WORLD_TOP)
+    px = _d(CELL_SIZE)
+    n_axis = f"CAST({1 << (res + 2)} AS BIGINT)"
 
     def cover(x0, y_top, w, h):
-        jx1 = F.floor(x0 / F.lit(edge)).cast("long")
-        jx2 = F.ceil((x0 + w * F.lit(CELL_SIZE)) / F.lit(edge)).cast(
-            "long"
-        )
-        jy1 = F.floor((F.lit(WORLD_TOP) - y_top) / F.lit(edge)).cast(
-            "long"
-        )
-        jy2 = F.ceil(
-            (F.lit(WORLD_TOP) - (y_top - h * F.lit(CELL_SIZE)))
-            / F.lit(edge)
-        ).cast("long")
-        jx2 = F.greatest(jx2, jx1 + 1)
-        jy2 = F.greatest(jy2, jy1 + 1)
-        jx1 = F.greatest(jx1, F.lit(0).cast("long"))
-        jx2 = F.least(jx2, F.lit(n_axis).cast("long"))
-        jy1 = F.greatest(jy1, F.lit(0).cast("long"))
-        jy2 = F.least(jy2, F.lit(n_axis).cast("long"))
-        packed = F.flatten(
-            F.transform(
-                F.sequence(jy1, jy2 - 1),
-                lambda iy: F.transform(
-                    F.sequence(jx1, jx2 - 1),
-                    lambda ix: F.shiftleft(F.lit(res).cast("long"), 56)
-                    .bitwiseOR(F.shiftleft(ix, 28))
-                    .bitwiseOR(iy),
-                ),
-            )
+        x0, y_top, w, h = map(sql_of, (x0, y_top, w, h))
+        jx1 = f"CAST(FLOOR({x0} / {edge}) AS BIGINT)"
+        jx2 = f"CAST(CEIL(({x0} + {w} * {px}) / {edge}) AS BIGINT)"
+        jy1 = f"CAST(FLOOR(({top} - {y_top}) / {edge}) AS BIGINT)"
+        jy2 = (f"CAST(CEIL(({top} - ({y_top} - {h} * {px})) / {edge})"
+               f" AS BIGINT)")
+        jx2 = f"greatest({jx2}, {jx1} + 1)"
+        jy2 = f"greatest({jy2}, {jy1} + 1)"
+        jx1 = f"greatest({jx1}, CAST(0 AS BIGINT))"
+        jx2 = f"least({jx2}, {n_axis})"
+        jy1 = f"greatest({jy1}, CAST(0 AS BIGINT))"
+        jy2 = f"least({jy2}, {n_axis})"
+        packed = (
+            f"flatten(transform(sequence({jy1}, {jy2} - 1), _iy ->"
+            f" transform(sequence({jx1}, {jx2} - 1), _ix ->"
+            f" shiftleft(CAST({res} AS BIGINT), 56)"
+            f" | shiftleft(_ix, 28) | _iy)))"
         )
         # fully out-of-world tiles clamp to an empty range; sequence()
         # would count DOWN there, so guard with an empty array
-        return F.when(
-            (jx2 > jx1) & (jy2 > jy1), packed
-        ).otherwise(F.array().cast("array<bigint>"))
+        return F.expr(
+            f"CASE WHEN {jx2} > {jx1} AND {jy2} > {jy1} THEN {packed}"
+            f" ELSE CAST(array() AS ARRAY<BIGINT>) END"
+        )
 
     return cover
 
@@ -182,34 +168,28 @@ def _candidates(
         # size()/isnotnull generate filter that would re-evaluate the
         # whole cover expression per conjunct in the scan stage
         F.explode_outer(
-            _image_cover_udf(join_res)(
-                F.col("x0"), F.col("y_top"), F.col("w"), F.col("h")
-            )
+            _image_cover_udf(join_res)("x0", "y_top", "w", "h")
         ),
     ).select(
         "image_id", "bytes", "fmt", "x0", "y_top", "w", "h", "icell"
-    ).filter(F.col("icell").isNotNull())
+    ).filter("icell IS NOT NULL")
 
     # checkpoint the cover BEFORE field extraction: the broadcast build
     # and every extracted field otherwise re-run the pandas UDF (same
     # fix as pip_join's polygon meta)
     polys = polygons.withColumn(
-        "_pc", _cover_udf(join_res, pad)(F.col("geom_wkb"))
+        "_pc", _cover_udf(join_res, pad)("geom_wkb")
     ).localCheckpoint(eager=False)
     if max_extent is not None:
         polys = polys.filter(
-            F.greatest(
-                F.col("_pc.ex2") - F.col("_pc.ex1"),
-                F.col("_pc.ey2") - F.col("_pc.ey1"),
-            ) <= max_extent
+            "greatest(_pc.ex2 - _pc.ex1, _pc.ey2 - _pc.ey1)"
+            f" <= {_d(max_extent)}"
         )
-    pcells = polys.select(
-        "feat_id", "geom_wkb",
-        F.explode("_pc.cells").alias("pcell"),
-        (F.col("_pc.ex1") - pad).alias("_ex1"),
-        (F.col("_pc.ex2") + pad).alias("_ex2"),
-        (F.col("_pc.ey1") - pad).alias("_ey1"),
-        (F.col("_pc.ey2") + pad).alias("_ey2"),
+    grow = _d(pad)
+    pcells = polys.selectExpr(
+        "feat_id", "geom_wkb", "explode(_pc.cells) AS pcell",
+        f"_pc.ex1 - {grow} AS _ex1", f"_pc.ex2 + {grow} AS _ex2",
+        f"_pc.ey1 - {grow} AS _ey1", f"_pc.ey2 + {grow} AS _ey2",
     )
 
     # The JVM-side predicate drops pairs BEFORE they pay a decode +
@@ -220,16 +200,14 @@ def _candidates(
     # contribute a pixel and is dropped exactly, while any tile with a
     # center inside the box passes (closed comparisons keep
     # boundary-center ties).
-    half = CELL_SIZE * 0.5
+    half, px = _d(CELL_SIZE * 0.5), _d(CELL_SIZE)
     overlap = (
-        (F.col("x0") + half <= F.col("_ex2"))
-        & (F.col("x0") + F.col("w") * CELL_SIZE - half >= F.col("_ex1"))
-        & (F.col("y_top") - F.col("h") * CELL_SIZE + half
-           <= F.col("_ey2"))
-        & (F.col("y_top") - half >= F.col("_ey1"))
+        f"x0 + {half} <= _ex2 AND x0 + w * {px} - {half} >= _ex1"
+        f" AND y_top - h * {px} + {half} <= _ey2"
+        f" AND y_top - {half} >= _ey1"
     )
     return img.join(
-        F.broadcast(pcells), (img["icell"] == pcells["pcell"]) & overlap
+        F.broadcast(pcells), F.expr(f"icell = pcell AND ({overlap})")
     ).select(
         "image_id", "bytes", "fmt", "x0", "y_top", "feat_id", "geom_wkb",
     )
@@ -384,10 +362,10 @@ def _merge_hists(hist):
     """Element-wise sum of the group's 256-bin histograms: a
     collect_list folded with zip_with, so the merge rides the same
     partial/final aggregate (and exchange) as the scalar sums."""
-    return F.aggregate(
-        F.collect_list(hist),
-        F.array_repeat(F.lit(0).cast("long"), 256),
-        lambda acc, h: F.zip_with(acc, h, lambda x, y: x + y),
+    return F.expr(
+        f"aggregate(collect_list({sql_of(hist)}),"
+        " array_repeat(CAST(0 AS BIGINT), 256),"
+        " (_s, _h) -> zip_with(_s, _h, (_x, _y) -> _x + _y))"
     )
 
 
@@ -404,32 +382,26 @@ def _finalize_stats(partials: DataFrame, range_frac=None) -> DataFrame:
         F.min("mn").alias("mn"), F.max("mx").alias("mx"),
         _merge_hists("hist").alias("hist"),
     )
-    cnt = F.col("cnt")
-    hist = F.col("hist")
-    has = cnt > 0
     # non-u8 band: the histogram is empty, so no exact percentiles
-    u8 = has & (_hist_sum(hist) == cnt)
-    mean = F.col("s") / cnt
-    # population std (np.std default, matching getattr(np, 'std'))
-    var = F.greatest(F.col("ss") / cnt - mean * mean, F.lit(0.0))
+    u8 = f"cnt > 0 AND {_hist_sum_sql('hist')} = cnt"
     if range_frac is not None:
         lo, hi = range_frac
         # green-factor style in-range fraction, exact from the u8
         # histogram (green_factor.py:176-193 semantics)
-        frac = F.when(
-            u8, _hist_sum(F.slice(hist, lo + 1, hi - lo + 1))
-            .cast("double") / cnt,
-        )
+        in_range = _hist_sum_sql(f"slice(hist, {lo + 1}, {hi - lo + 1})")
+        frac = f"CASE WHEN {u8} THEN CAST({in_range} AS DOUBLE) / cnt END"
     else:
-        frac = F.lit(None).cast("double")
+        frac = "CAST(NULL AS DOUBLE)"
     return m.select(
         "feat_id", "size", "cnt",
-        F.when(has, mean).alias("mean"),
-        F.when(has, F.sqrt(var)).alias("std"),
+        F.expr("CASE WHEN cnt > 0 THEN s / cnt END AS mean"),
+        # population std (np.std default, matching getattr(np, 'std'))
+        F.expr("CASE WHEN cnt > 0 THEN SQRT(greatest("
+               "ss / cnt - (s / cnt) * (s / cnt), 0.0D)) END AS std"),
         "mn", "mx",
-        F.when(u8, percentile_from_hist(hist, 50.0)).alias("median"),
-        F.when(u8, percentile_from_hist(hist, 75.0)).alias("p75"),
-        frac.alias("frac_in_range"),
+        *(F.when(F.expr(u8), percentile_from_hist("hist", q)).alias(name)
+          for name, q in (("median", 50.0), ("p75", 75.0))),
+        F.expr(f"{frac} AS frac_in_range"),
     )
 
 
@@ -484,8 +456,8 @@ def rgb_zonal(
         return wkb_s.map(lambda bb: geom.area(bytes(bb)))
 
     polys = polygons.withColumn(
-        "_area", area_udf(F.col("geom_wkb"))
-    ).filter(F.col("_area") <= RGB_MAX_AREA).drop("_area")
+        "_area", area_udf("geom_wkb")
+    ).filter(f"_area <= {_d(RGB_MAX_AREA)}").drop("_area")
     cand = _candidates(images_cells, polys, JOIN_RES, 0.0)
 
     def partials(batches):
@@ -546,12 +518,11 @@ def floor_level(images_cells: DataFrame, polygons: DataFrame) -> DataFrame:
         ),
         schema=_PARTIAL_SCHEMA,
     )
-    hist = F.col("hist")
     return partials.groupBy("feat_id").agg(
         F.sum("cnt").alias("cnt"), _merge_hists("hist").alias("hist")
-    ).filter(F.col("cnt") > 0).select(
-        "feat_id", _hist_sum(hist).alias("ring_px"),
-        percentile_from_hist(hist, 75.0).alias("floor_75"),
+    ).filter("cnt > 0").select(
+        "feat_id", F.expr(f"{_hist_sum_sql('hist')} AS ring_px"),
+        percentile_from_hist("hist", 75.0).alias("floor_75"),
     )
 
 

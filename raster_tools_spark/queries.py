@@ -424,9 +424,7 @@ def _pip_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qk_r9", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
     ).withColumn("image_id", F.col("event_id").cast("string"))
     rects = _rect_polygons(spark, sf_dir)
-    pairs = op_pip.pip_join(
-        pts, rects, join_res=9, poly_cols=("feat_id",),
-    )
+    pairs = op_pip.pip_join(pts, rects, poly_cols=("feat_id",))
     return pairs.select(
         F.col("image_id").cast("long").alias("event_id"), "feat_id"
     )
@@ -1005,9 +1003,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "qk_r9", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
         ).withColumn("image_id", F.col("event_id").cast("string"))
         polys = _diamond_polygons(spark, sf_dir)
-        pairs = op_pip.pip_join(
-            pts, polys, join_res=9, poly_cols=("feat_id",),
-        )
+        pairs = op_pip.pip_join(pts, polys, poly_cols=("feat_id",))
         return pairs.select(
             F.col("image_id").cast("long").alias("event_id"), "feat_id"
         )
@@ -1604,9 +1600,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         lines_df = _nation_layer(
             spark, sf_dir, _drape_line_of
         ).withColumnRenamed("feat_id", "line_id")
-        return op_lines.line_carpet_profile(
-            lines_df, tiles, step=2.0, carpet_step=0.5
-        )
+        return op_lines.line_carpet_profile(lines_df, tiles, step=2.0)
 
     q["line_carpet"] = line_carpet
 

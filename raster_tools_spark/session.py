@@ -20,6 +20,12 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The engine's session.  It turns off PySpark's DataFrame call-site
+    capture (``spark.python.sql.dataFrameDebugging.enabled``), which
+    wraps every Column and DataFrame call in about five py4j round
+    trips and was most of the driver's cost of building a query; the
+    price is that analysis errors no longer carry the Python
+    file:line of the call that built the failing expression."""
     # one BLAS thread per Python worker: N workers each spawning
     # ncpu-sized BLAS pools oversubscribes the box quadratically
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
@@ -53,6 +59,7 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # image tables are CPU-heavy per byte (decode in Python UDFs):
         # default 128 MB scan splits starve the cores (an 800 MB table

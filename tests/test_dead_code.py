@@ -169,20 +169,53 @@ def _options(tree):
     return out
 
 
-def _sets(call, param, index, default):
-    """Does ``call`` pass ``param`` (keyword, or position ``index``) an
-    expression other than ``default``, compared by ``ast.dump``?
-    ``*``/``**`` unpacking that could reach the parameter counts as
-    setting it."""
-    same = ast.dump(default)
+def _constants(trees):
+    """Name -> value of every module-level ``NAME = <literal>`` in
+    ``trees`` (the package's modules); a name bound to different
+    literals in two modules is left out.  A caller's own constant
+    outside the package stays an expression: it is that caller's
+    choice, free to move away from the package default."""
+    seen = {}
+    for tree in trees.values():
+        for node in tree.body:
+            if not (isinstance(node, ast.Assign) and len(node.targets) == 1
+                    and isinstance(node.targets[0], ast.Name)):
+                continue
+            try:
+                value = ast.literal_eval(node.value)
+            except ValueError:
+                continue
+            seen.setdefault(node.targets[0].id, set()).add(repr(value))
+    return {k: v.pop() for k, v in seen.items() if len(v) == 1}
+
+
+def _value(expr, consts):
+    """What ``expr`` passes: a literal's or a module-level literal
+    constant's value, else the expression's ``ast.dump``."""
+    if isinstance(expr, ast.Name) and expr.id in consts:
+        return consts[expr.id]
+    try:
+        return repr(ast.literal_eval(expr))
+    except ValueError:
+        return ast.dump(expr)
+
+
+def _sets(call, param, index, default, consts):
+    """Does ``call`` pass ``param`` (keyword, or position ``index``) a
+    value other than ``default``?  Literals and names of module-level
+    literal constants compare by value, other expressions by
+    ``ast.dump``.  ``*``/``**`` unpacking that could reach the
+    parameter counts as setting it."""
+    same = _value(default, consts)
     for k in call.keywords:
-        if k.arg is None or (k.arg == param and ast.dump(k.value) != same):
+        if k.arg is None or (k.arg == param
+                             and _value(k.value, consts) != same):
             return True
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
             return index is not None and i <= index
         if i == index:
-            return ast.dump(arg) != same
+            return _value(arg, consts) != same
     return False
 
 
@@ -194,6 +227,8 @@ def unset_options(root=ROOT):
     trees = _parse_all(root)
     pkg = os.path.join(root, "raster_tools_spark") + os.sep
     tests = os.path.join(root, "tests") + os.sep
+    consts = _constants({p: t for p, t in trees.items()
+                         if p.startswith(pkg)})
     calls = {}
     for path, tree in trees.items():
         if path.startswith(tests):
@@ -208,7 +243,7 @@ def unset_options(root=ROOT):
         if not path.startswith(pkg):
             continue
         for line, names, param, index, default in _options(tree):
-            if not any(_sets(c, param, index, default)
+            if not any(_sets(c, param, index, default, consts)
                        for n in names for c in calls.get(n, [])):
                 out.append((os.path.relpath(path, root), line,
                             min(names), param))
@@ -351,7 +386,11 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
     non-test file sets (by position here) and one it reaches only
     through a forward are not.  Int, negative float, str, tuple and
     module-constant defaults are flagged, and so is a float passed the
-    value it defaults to; one passed a different value is not.  An
+    value it defaults to; one passed a different value is not.  A
+    package constant compares by its value: a literal passed against a
+    constant default of the same value, or the constant passed against
+    that literal default, is flagged; one passed a different value, or
+    a caller's own constant, is not.  An
     import nothing references is flagged; one another file imports
     from the module is not.  A local
     nothing reads is flagged, an augmented-only one at both writes; one
@@ -376,13 +415,18 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
         "LIMIT = 8\n\n\n"
         "def sized(x, n=3, lo=-1.5, name='a', shape=(1, 2), cap=LIMIT,\n"
         "          same=1000.0, other=1000.0):\n"
+        "    return x\n\n\n"
+        "def resolved(x, res=LIMIT, k=8, other=LIMIT, mine=LIMIT):\n"
         "    return x\n"
     )
     (tmp_path / "user.py").write_text(
-        "from raster_tools_spark.mod import forwarder, pi, run, sized\n\n"
+        "from raster_tools_spark.mod import LIMIT, forwarder, pi, run\n"
+        "from raster_tools_spark.mod import resolved, sized\n\n"
         "run(1, None, False, 'out')\n"
         "forwarder(pi, True)\n"
         "sized(1, same=1000.0, other=999.5)\n"
+        "MINE = 8\n"
+        "resolved(1, res=8, k=LIMIT, other=9, mine=MINE)\n"
     )
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_mod.py").write_text(
@@ -399,6 +443,8 @@ def test_scans_flag_planted_unset_options_and_unused_import(tmp_path):
         (mod, 26, "sized", "shape"),
         (mod, 26, "sized", "cap"),
         (mod, 26, "sized", "same"),
+        (mod, 31, "resolved", "res"),
+        (mod, 31, "resolved", "k"),
     ]
     assert unused_imports(str(tmp_path)) == [(mod, 1, "os")]
     assert unread_locals(str(tmp_path)) == [

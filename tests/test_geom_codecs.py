@@ -182,3 +182,27 @@ def test_png_foreign_sub_filter_vectorized():
         got = codecs.png_decode(data)
         want = img.reshape(5, 17) if nch == 1 else img
         assert np.array_equal(got, want)
+
+
+def test_png_many_idat_chunks_decode_identically():
+    """Foreign encoders may split the zlib stream over many IDAT chunks
+    (one per few KiB, or smaller); the decoder joins them in order, so
+    every split decodes to the same pixels as the one-chunk file."""
+    import struct as _struct
+    import zlib as _zlib
+
+    rng = np.random.default_rng(11)
+    for shape in ((64, 48), (33, 20, 3)):
+        img = rng.integers(0, 256, size=shape, dtype=np.uint8)
+        one = codecs.png_encode(img)
+        (ihdr_len,) = _struct.unpack_from(">I", one, 8)
+        ihdr = one[16:16 + ihdr_len]
+        (idat_len,) = _struct.unpack_from(">I", one, 20 + ihdr_len)
+        idat = one[28 + ihdr_len:28 + ihdr_len + idat_len]
+        assert _zlib.decompress(idat)  # the slicing found the stream
+        for size in (1, 7, 1000):
+            parts = [idat[i:i + size] for i in range(0, len(idat), size)]
+            data = (b"\x89PNG\r\n\x1a\n" + codecs._chunk(b"IHDR", ihdr)
+                    + b"".join(codecs._chunk(b"IDAT", p) for p in parts)
+                    + codecs._chunk(b"IEND", b""))
+            assert np.array_equal(codecs.png_decode(data), img)

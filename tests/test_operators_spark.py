@@ -66,18 +66,16 @@ class TestPIPJoin:
         )
         assert got == self._brute_force(cells, polys)
 
-    def test_join_res_invariance(self, spark, cells, polys):
-        r9 = set(
-            (r.image_id, r.feat_id)
-            for r in pip.pip_join(cells, polys, join_res=9)
-            .select("image_id", "feat_id").collect()
-        )
-        r8 = set(
-            (r.image_id, r.feat_id)
-            for r in pip.pip_join(cells, polys, join_res=8)
-            .select("image_id", "feat_id").collect()
-        )
-        assert r9 == r8
+    def test_join_res_invariance(self, spark, cells, polys, monkeypatch):
+        def pairs(res):
+            monkeypatch.setattr(pip, "JOIN_RES", res)
+            return set(
+                (r.image_id, r.feat_id)
+                for r in pip.pip_join(cells, polys)
+                .select("image_id", "feat_id").collect()
+            )
+
+        assert pairs(9) == pairs(8)
 
 
 class TestZonal:
