@@ -50,6 +50,33 @@ def binary_dilation(mask: np.ndarray) -> np.ndarray:
     return out
 
 
+def union_min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Union-find over nodes ``0..n-1`` and edges ``(a[i], b[i])``:
+    the root of every node, where each union keeps the smaller root,
+    so a root is the minimum node of its component."""
+    parent = list(range(n))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(np.asarray(a).tolist(), np.asarray(b).tolist()):
+        rx, ry = find(x), find(y)
+        if rx < ry:
+            parent[ry] = rx
+        elif ry < rx:
+            parent[rx] = ry
+    # path-compress every node to its final root, vectorized doubling
+    roots = np.asarray(parent, dtype=np.int64)
+    while True:
+        rr = roots[roots]
+        if np.array_equal(rr, roots):
+            return roots
+        roots = rr
+
+
 def label(
     mask: np.ndarray, connectivity: int = 4
 ) -> Tuple[np.ndarray, int]:
@@ -85,14 +112,6 @@ def label(
     rid = (np.cumsum(is_start) - 1).reshape(h, w + 1)
     n_runs = int(is_start.sum())
 
-    parent = np.arange(n_runs, dtype=np.int64)
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
     # (row i columns, row i+1 columns) of each alignment whose pixels
     # unite their runs: straight down, then down-left and down-right
     aligns = [(slice(0, w), slice(0, w))]
@@ -105,24 +124,10 @@ def label(
         if both.any():
             keys.append(rid[:-1, cu][both] * np.int64(n_runs)
                         + rid[1:, cd][both])
-    # dedup pairs first so the Python loop is O(runs)
-    if keys:
-        for pair in np.unique(np.concatenate(keys)).tolist():
-            a, b = divmod(pair, n_runs)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by smaller root so the root's run stays the
-                # component minimum (run ids ascend with flat pos)
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-    # path-compress every run to its final root, vectorized doubling
-    while True:
-        pp = parent[parent]
-        if np.array_equal(pp, parent):
-            break
-        parent = pp
+    # dedup pairs first so the Python loop is O(runs); a root run is
+    # its component's smallest run id (run ids ascend with flat pos)
+    pairs = np.unique(np.concatenate(keys)) if keys else np.empty(0, np.int64)
+    parent = union_min_roots(n_runs, pairs // n_runs, pairs % n_runs)
     roots = np.unique(parent)
     # scan-order numbering: roots ascend with their first run's start
     # (the root IS the component's smallest run id by the union rule)

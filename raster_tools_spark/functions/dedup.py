@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import fan_out, reuse
+
 N_SHINGLE = 3
 MINHASH_K = 8
 LSH_BAND_ROWS = 2
@@ -44,21 +46,6 @@ LEV_MAX_DIST = 6
 
 def default_max_df(n_docs: int) -> int:
     return max(MAX_DF_MIN, int(n_docs * MAX_DF_FRACTION))
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Ensure at least 2x-cores partitions before a row-multiplying
-    pass (explode / per-position gram scan): a compressed text corpus
-    often scans as FEWER splits than cores (one 16 MB split at the
-    fixture scale), and the multiplication happens AFTER the split
-    decision, so a single task ends up holding millions of derived
-    rows.  Scale-adaptive: when the scan already has enough splits
-    (any real corpus), this is a no-op -- no shuffle is added."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * 2
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, F.col(id_col))
 
 
 def shingles_of_words(words: Column) -> Column:
@@ -92,7 +79,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
-    sh = _spread(docs, "doc_id").select(
+    sh = fan_out(docs, "doc_id").select(
         "doc_id", F.split(F.col("text"), " ").alias("_w")
     ).select(
         # explode_OUTER + null filter rather than explode: the inferred
@@ -107,11 +94,10 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
     # footer-metadata read, not a scan
     max_df = default_max_df(docs.count())
     # the document-frequency guard and the anti-join left side are
-    # two consumers of the shingle pipeline; checkpoint the
-    # exploded (doc_id, shingle) rows lazily so the split/
-    # transform/explode runs once (the hot-set job materializes
-    # it, the anti-join reuses the blocks)
-    sh = sh.localCheckpoint(eager=False)
+    # two consumers of the shingle pipeline; reuse the exploded
+    # (doc_id, shingle) rows so the split/transform/explode runs once
+    # (the hot-set job materializes them, the anti-join reads them)
+    sh = reuse(sh)
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -218,7 +204,7 @@ def simhash(docs: DataFrame) -> DataFrame:
     arithmetic), and md5 gives the DuckDB oracle an identical hash, so
     the fingerprint is a HARD cross-engine check (xxhash64 previously
     forced a rows-only check)."""
-    toks = _spread(docs, "doc_id").select(
+    toks = fan_out(docs, "doc_id").select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     ).withColumn(
         "h",
@@ -257,7 +243,7 @@ def contamination(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """
     def sh_of(docs):
         return (
-            _spread(docs, "doc_id")
+            fan_out(docs, "doc_id")
             .select(
                 "doc_id", F.split(F.col("text"), " ").alias("_w")
             )
@@ -395,7 +381,7 @@ def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
     applied at sub-document granularity, the standard first stage of
     an LLM training-data pipeline.
     """
-    base = _spread(docs, "doc_id").select(
+    base = fan_out(docs, "doc_id").select(
         "doc_id", F.split(F.col("text"), "\n").alias("_ls"),
     )
     # decision pass on HASHES only (guide section-8 shape: decide with
@@ -406,7 +392,7 @@ def line_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
     # posexplode_OUTER + null-pos filter == posexplode, but without
     # the InferFiltersFromGenerate size()/isnotnull predicate, which
     # Catalyst would substitute through the projection and push below
-    # the spread exchange -- re-evaluating the caller's (possibly
+    # the fan-out exchange -- re-evaluating the caller's (possibly
     # expensive) text expression several times per row inside the
     # narrow scan stage (measured: the whole line_dedup fixture ran
     # single-task because of exactly that)
@@ -523,7 +509,7 @@ def anchored_span_pairs(docs: DataFrame) -> DataFrame:
     # only ever a grouping/join key here (never output), and the
     # distinct + hot-guard + self-join exchanges all carry it -- half
     # the key bytes per row (guide: narrower types on the shuffle)
-    anchored = _spread(
+    anchored = fan_out(
         docs.select(F.col("doc_id"), F.col("text")), "doc_id"
     ).mapInPandas(gen, schema=f"doc_id {id_type}, h binary")
     # the per-document set above already collapses within-document

@@ -19,32 +19,25 @@ representative per component.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..fillnodata import union_min_roots
+from ..materialize import reuse
 
 # edge sets up to this size are labeled by one driver-side union-find
 DRIVER_THRESHOLD = 200_000
 
 
 def _driver_components(pairs) -> list:
-    """Union-find on the driver for small edge sets."""
-    parent: dict = {}
-
-    def find(a):
-        r = a
-        while parent[r] != r:
-            r = parent[r]
-        while parent[a] != r:
-            parent[a], a = r, parent[a]
-        return r
-
-    for a, b in pairs:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return [(n, find(n)) for n in parent]
+    """Union-find on the driver for small edge sets: (node, component
+    minimum) per node.  ``np.unique`` numbers the ids in ascending
+    order, so the minimum index of a component is its minimum id."""
+    ids, idx = np.unique(np.asarray(pairs, np.int64), return_inverse=True)
+    idx = idx.reshape(-1, 2)
+    roots = union_min_roots(len(ids), idx[:, 0], idx[:, 1])
+    return list(zip(ids.tolist(), ids[roots].tolist()))
 
 
 def connected_components(
@@ -130,7 +123,7 @@ def connected_components(
                 ).alias("comp"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = reuse(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
@@ -241,13 +234,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     undirected edge may appear in either or both directions.
     Returns ONE row: (n_triangles long, n_edges long, n_wedges long).
 
-    The deduped edge set and its orientation are persist()-ed: three
-    downstream references (both wedge sides + the closure probe) plus
-    the edge count would otherwise re-run the dedup shuffle up to
-    five times; persisting materializes each once and Spark's
-    ContextCleaner drops the blocks when the result goes out of
-    scope.  Triangles and wedges come from ONE aggregation over the
-    closure left-join, not separate passes.
+    The deduped edge set and its orientation each feed three or more
+    consumers (both wedge sides, the closure probe, the degree and
+    edge counts) inside this one plan, where Spark reuses their
+    identical shuffle exchanges, so neither is materialized: a lazy
+    checkpoint would run those shuffles while the frame is built.
+    Triangles and wedges come from ONE aggregation over the closure
+    left-join, not separate passes.
     """
     e = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -256,7 +249,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
         .distinct()
-        .persist()
     )
     deg = (
         e.select(F.col("u").alias("n"))
@@ -281,7 +273,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             .alias("o")
         )
         .select("o.s", "o.t")
-        .persist()
     )
     wedges = (
         oriented.alias("x")

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import fan_out
 from ..operators import knn as op_knn
 from ..operators.tile import cell_col
 
@@ -151,8 +152,7 @@ def linear_grid_features(points: DataFrame) -> DataFrame:
             }
         )
 
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
-    return points.repartition(n_parts, "feat_id").groupBy(
+    return fan_out(points, "feat_id").groupBy(
         "feat_id"
     ).applyInPandas(run, schema=_LINEAR_GRID_SCHEMA)
 
@@ -238,7 +238,6 @@ def linear_grid_tiles(points: DataFrame) -> DataFrame:
             }
         )
 
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
-    return exploded.repartition(n_parts, "cell_id").groupBy(
+    return fan_out(exploded, "cell_id").groupBy(
         "cell_id"
     ).applyInPandas(build, schema=_TILE_GRID_SCHEMA)

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import fan_out, reuse
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -95,15 +97,10 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame) -> DataFrame:
     Returns (qid, cid, sim, rn) with sim rounded to 6 dp and
     deterministic tie-break on cid.
     """
-    from .dedup import _spread
-
     q = queries.select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
-    # the candidate corpus usually scans as fewer splits than cores
-    # (single-row-group fixture parquet); spread it so the broadcast
-    # nested-loop scoring runs at full width (no-op on real corpora)
-    c = _spread(candidates, "vec_id").select(
+    c = fan_out(candidates, "vec_id").select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
     pairs = q.crossJoin(c).filter(F.col("qid") != F.col("cid"))
@@ -126,27 +123,6 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= 5)
         .select("qid", "cid", "sim", "rn")
     )
-
-
-def _ensure_sized(vectors: DataFrame):
-    """Sizing count without a second source scan: materialize the
-    input once via an eager localCheckpoint so the count and the
-    downstream pipeline share one materialization (otherwise a 100-TB
-    corpus is scanned twice -- once by the eager count hidden in plan
-    construction, once at execution).  localCheckpoint rather than
-    persist: the blocks are released by the ContextCleaner when the
-    DataFrame goes out of scope, instead of pinning executor storage
-    for the application lifetime.
-
-    Reliability trade-off: localCheckpoint stores NON-replicated
-    blocks and truncates lineage, so losing any executor after the
-    checkpoint fails the job unrecoverably; persist()+unpersist()
-    would keep the lineage recomputable at the cost of a second scan
-    on block loss.  The eager trigger also runs the upstream plan at
-    query-CONSTRUCTION time, which surprises callers building plans
-    lazily."""
-    vectors = vectors.localCheckpoint(eager=True)
-    return vectors, vectors.count()
 
 
 TARGET_BUCKET_ROWS = 1024
@@ -220,7 +196,8 @@ def lsh_topk(vectors: DataFrame) -> DataFrame:
     larger plane count.  The join is an equi-join on (band, signature)
     -- the shape that scales (shuffle by bucket, no cross join).
     """
-    vectors, n = _ensure_sized(vectors)
+    vectors = reuse(vectors)
+    n = vectors.count()
     n_planes = derive_n_planes(n)
     sigs = lsh_band_sigs_udf(n_planes, 64, 2)
     v = vectors.select(
@@ -422,7 +399,8 @@ def ivf_topk(vectors: DataFrame, n_centroids: int | None = None) -> DataFrame:
     centroids into every task at 10^9+ vectors."""
     nprobe = IVF_NPROBE
     if n_centroids is None:
-        vectors, n = _ensure_sized(vectors)
+        vectors = reuse(vectors)
+        n = vectors.count()
         n_centroids = derive_n_centroids(n)
 
     v = vectors.select(
@@ -511,7 +489,8 @@ def embedding_near_dup(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH buckets
     (corpus-scaled plane count, same shape as lsh_topk)."""
-    vectors, n = _ensure_sized(vectors)
+    vectors = reuse(vectors)
+    n = vectors.count()
     n_planes = derive_n_planes(n)
     sigs = lsh_band_sigs_udf(n_planes, 64, 2)
     v = vectors.select(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import fan_out
+
 # k of the bottom-k (KMV) sketches
 KMV_K = 64
 # count-min sketch shape: hash rows x cells per row
@@ -48,9 +50,7 @@ def kmv_distinct(
     # engines agree by construction (Spark's collect_list silently
     # drops NULL hashes; a DISTINCT-based oracle would keep a NULL
     # row that shifts n_kept) -- a key with only NULLs vanishes
-    from .dedup import _spread
-
-    hashed = _spread(
+    hashed = fan_out(
         df.filter(F.col(val_col).isNotNull()), val_col
     ).select(F.col(key_col).alias("key"), h.alias("h"))
     # two-stage bottom-k merge (the sketch's own merge property):

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import fan_out, reuse
+
 STOPWORDS_EN = ("the", "a", "of", "and", "to")
 
 
@@ -140,10 +142,8 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     floor-scaled to 6 dp so the DuckDB oracle is exact; only
     documents with >= 3 words qualify.  Returns (doc_id,
     top_bigram_frac, dup_trigram_frac)."""
-    from .dedup import _spread
-
     words = F.split(F.col("text"), " ")
-    d = _spread(docs, "doc_id").select(
+    d = fan_out(docs, "doc_id").select(
         "doc_id", words.alias("w")
     ).filter(F.size("w") >= 3)
 
@@ -325,12 +325,8 @@ def pack_sequences(docs, budget: int):
     recursive CTE with the shard formula mirrored in SQL."""
     from pyspark.sql import functions as F
 
-    # eager localCheckpoint before the sizing count: the corpus is
-    # materialized once, not scanned twice (count + pack), and the
-    # blocks are ContextCleaner-released when the DataFrame is
-    # garbage-collected (persist would pin them for the application
-    # lifetime)
-    docs = docs.localCheckpoint(eager=True)
+    # the sizing count materializes the corpus once for the pack too
+    docs = reuse(docs)
     n_shards = derive_n_shards(docs.count())
 
     d = docs.select(
@@ -390,10 +386,8 @@ def bm25_scores(docs: DataFrame, terms) -> DataFrame:
     grouped SUM), so the floating-point association is deterministic
     and an external SQL engine reproduces the score bit-for-bit.
     """
-    from .dedup import _spread
-
     terms = list(terms)
-    d = _spread(docs, "doc_id").select(
+    d = fan_out(docs, "doc_id").select(
         "doc_id", F.split(F.col("text"), " ").alias("_w"),
     ).select(
         "doc_id",
@@ -409,10 +403,10 @@ def bm25_scores(docs: DataFrame, terms) -> DataFrame:
         ],
     )
     # the stats pass and the scoring pass would otherwise each
-    # re-tokenize the corpus; checkpoint the tiny (doc_id, dl, tf*)
+    # re-tokenize the corpus; reuse the tiny (doc_id, dl, tf*)
     # projection so tokenization runs once (the broadcast stats job
     # materializes it, scoring reuses the blocks)
-    d = d.localCheckpoint(eager=False)
+    d = reuse(d)
     stats = d.agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum("dl").alias("_sumdl"),

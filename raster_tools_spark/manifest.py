@@ -40,12 +40,13 @@ MANIFEST_SCHEMA = (
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Completed units.  A directory holding no committed data file
     (none yet, or only ``_temporary/`` from a crashed first commit) is
-    an empty manifest; any other read error raises."""
+    an empty manifest; any other read error raises.  The declared
+    schema spares the read a schema-inference job."""
     if not os.path.isdir(manifest_dir) or all(
         f.startswith(("_", ".")) for f in os.listdir(manifest_dir)
     ):
         return spark.createDataFrame([], schema=MANIFEST_SCHEMA)
-    return spark.read.parquet(manifest_dir)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
 
 
 def pending_units(

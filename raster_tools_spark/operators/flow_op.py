@@ -47,6 +47,7 @@ from ..flow import flow_targets
 from ..flow_vec import CLASSES, vectorize_streams
 from ..grid import (CELL_SIZE, cell_bounds, cell_edge, pack_cell,
                     unpack_cell)
+from ..materialize import reuse
 from .focal import _halo_parts
 
 TILE_PX = 256
@@ -161,7 +162,7 @@ def _fill_pass(tiles: DataFrame, extent, step: int, offset: int,
     )
     # both downstream branches (blocks + pass-through) consume frags:
     # materialize once instead of re-decoding every tile twice
-    frags = frags.localCheckpoint(eager=False)
+    frags = reuse(frags)
     block_frags = frags.filter(F.col("bkey") >= 0)
     pass_frags = frags.filter(F.col("bkey") < 0).select(
         (-F.col("bkey") - 1).alias("cell_id"),
@@ -272,7 +273,7 @@ def fill_depressions_tiles(tiles: DataFrame) -> DataFrame:
     out = tiles
     for offset in FILL_OFFSETS:
         out = _fill_pass(out, extent, FILL_STEP, offset, res, tile_px)
-        out = out.localCheckpoint(eager=False)
+        out = reuse(out)
     return out
 
 
@@ -547,7 +548,7 @@ def accumulate_tiles(
     state = parts.groupBy("target").applyInPandas(
         lambda pdf: _build_state(pdf, tile_px), schema=_STATE_SCHEMA
     )
-    state = state.localCheckpoint(eager=True)
+    state = reuse(state)
 
     # round 0 outflows: one record per exit pixel, qty = 1 + local acc
     def initial_outflows(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -577,7 +578,7 @@ def accumulate_tiles(
     outflows = state.groupBy("cell_id").applyInPandas(
         initial_outflows, schema=_FLOW_SCHEMA
     )
-    outflows = outflows.localCheckpoint(eager=True)
+    outflows = reuse(outflows)
 
     all_inflows = None
 
@@ -620,7 +621,7 @@ def accumulate_tiles(
         inflows = outflows.groupBy("cell_id", "px").agg(
             F.sum("qty").alias("qty")
         )
-        inflows = inflows.localCheckpoint(eager=True)
+        inflows = reuse(inflows)
         n_in = inflows.count()
         if n_in == 0:
             break
@@ -642,7 +643,7 @@ def accumulate_tiles(
         routed = inflows.join(state, "cell_id").groupBy("cell_id").applyInPandas(
             lambda pdf: _route(pdf, tile_px=tile_px), schema=_FLOW_SCHEMA
         )
-        outflows = routed.localCheckpoint(eager=True)
+        outflows = reuse(routed)
     else:
         # MAX_ROUNDS exhausted with flow still moving: the last routed
         # outflows were never folded into all_inflows -- truncating
@@ -652,7 +653,7 @@ def accumulate_tiles(
         inflows = outflows.groupBy("cell_id", "px").agg(
             F.sum("qty").alias("qty")
         )
-        inflows = inflows.localCheckpoint(eager=True)
+        inflows = reuse(inflows)
         n_left = inflows.count()
         if n_left > 0:
             all_inflows = (

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..grid import cell_edge, ring_cells
+from ..materialize import reuse
 
 
 def _ring_range_udf(lo: int, hi: int):
@@ -120,7 +121,8 @@ def knn_join(
             .select("qid", "qx", "qy", "qcell", "cid", "dist")
         )
         cand = fresh if pool is None else fresh.unionByName(pool)
-        topk = (
+        # topk feeds per_q, the result batch and the next pool
+        topk = reuse(
             cand.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
             .select("qid", "qx", "qy", "qcell", "cid", "dist", "rn")
@@ -137,13 +139,11 @@ def knn_join(
         if radius >= max_radius:
             # last round: accept whatever was found (bounded search)
             done_q = per_q.select("qid")
-        topk = topk.localCheckpoint(eager=True)
         batch = topk.join(done_q, "qid", "left_semi").select(
             "qid", "cid", "dist", "rn"
         )
         results = batch if results is None else results.unionByName(batch)
-        unresolved = unresolved.join(done_q, "qid", "left_anti")
-        unresolved = unresolved.localCheckpoint(eager=True)
+        unresolved = reuse(unresolved.join(done_q, "qid", "left_anti"))
         pool = topk.join(done_q, "qid", "left_anti").drop("rn")
         if unresolved.isEmpty():
             break

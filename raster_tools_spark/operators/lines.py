@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import codecs, wkb as _wkb
 from ..grid import CELL_SIZE, RES_TILE
+from ..materialize import fan_out
 from .tile import cell_col
 
 SAMPLES_SCHEMA = "line_id long, seq int, sx double, sy double"
@@ -138,9 +139,8 @@ def line_profile(
                 yield pd.concat(outs, ignore_index=True)
 
     # co-locate samples of a tile so each tile decodes once per task
-    n_parts = lines.sparkSession.sparkContext.defaultParallelism
     return (
-        cand.repartition(n_parts, "cell_id")
+        fan_out(cand, "cell_id")
         .sortWithinPartitions("cell_id")
         .mapInPandas(lookup, schema=_PROFILE_SCHEMA)
     )
@@ -276,9 +276,8 @@ def line_carpet_profile(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    n_parts = lines.sparkSession.sparkContext.defaultParallelism
     vals = (
-        cand.repartition(n_parts, "cell_id")
+        fan_out(cand, "cell_id")
         .sortWithinPartitions("cell_id")
         .mapInPandas(
             lookup,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .. import geom
 from ..grid import GeoTransform, WORLD_TOP, cell_bounds, cell_edge
+from ..materialize import fan_out
 from .pip import _cover_udf
 
 JOIN_RES = 9
@@ -90,12 +91,7 @@ def mask_difference_area(
             rows, columns=["feat_id", "total_px", "kept_px"]
         )
 
-    # pin the partition count: the shuffle payload (per-cell WKB
-    # lists) is tiny, so AQE would coalesce the exchange to 1-2
-    # partitions and serialize the CPU-heavy rasterization; an
-    # explicit numPartitions repartition is exempt from coalescing
-    n_parts = layer1.sparkSession.sparkContext.defaultParallelism
-    per = paired.repartition(n_parts, "cell").groupBy("cell").applyInPandas(
+    per = fan_out(paired, "cell").groupBy("cell").applyInPandas(
         per_cell, schema="feat_id long, total_px long, kept_px long"
     )
     return per.groupBy("feat_id").agg(
@@ -1038,10 +1034,7 @@ def mask_difference_polygons(
                      "geom_wkb"],
         )
 
-    # explicit numPartitions: AQE must not coalesce the tiny shuffle
-    # under the CPU-heavy per-feature tracing (see mask_difference_area)
-    n_parts = layer1.sparkSession.sparkContext.defaultParallelism
-    return paired.repartition(n_parts, "feat_id").groupBy(
+    return fan_out(paired, "feat_id").groupBy(
         "feat_id"
     ).applyInPandas(
         per_feat,
@@ -1109,8 +1102,7 @@ def union_area_exact(
         area = float((occ * np.outer(dy, dx)).sum())
         return pd.DataFrame({"area": [area], "inexact": [0]})
 
-    n_parts = layer.sparkSession.sparkContext.defaultParallelism
-    per = cells.repartition(n_parts, "cell").groupBy("cell").applyInPandas(
+    per = fan_out(cells, "cell").groupBy("cell").applyInPandas(
         per_cell, schema="area double, inexact int"
     )
     # coalesce: sum() over an empty layer is NULL, but an empty union
@@ -1141,8 +1133,7 @@ def mask_union_area(
             union |= geom.rasterize_mask(bytes(b), gt, npx, npx)
         return pd.DataFrame({"px": [int(union.sum())]})
 
-    n_parts = layer.sparkSession.sparkContext.defaultParallelism
-    per = cells.repartition(n_parts, "cell").groupBy("cell").applyInPandas(
+    per = fan_out(cells, "cell").groupBy("cell").applyInPandas(
         per_cell, schema="px long"
     )
     return per.agg(

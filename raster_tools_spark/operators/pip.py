@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from .. import geom
 from ..grid import covering_cells, n_covering, JOIN_RES
+from ..materialize import reuse
 from .tile import sql_of
 
 # polygons covering more cells than this are hot: they skip the cell
@@ -145,16 +146,15 @@ def pip_join(
     # the point side is the guide-8 lightweight proxy of the image scan
     # (id + center + cell key, ~50 bytes/row); materialize it lazily so
     # the two join phases consume ONE scan + anchor pass instead of each
-    # re-reading the wide image table (measured 2.1x on the flagship).
-    # The checkpoint lives inside this query's DAG and dies with it.
-    pts = images.select(*keep_cols, cell_key).localCheckpoint(eager=False)
+    # re-reading the wide image table (measured 2.1x on the flagship)
+    pts = reuse(images.select(*keep_cols, cell_key))
 
     # polygon meta (cover count, envelope, cells, edges) is consumed by
-    # both phases and by every broadcast build; checkpoint so the pandas
+    # both phases and by every broadcast build; reuse it so the pandas
     # UDF runs once per query instead of once per consumer subtree
-    polys = polygons.withColumn(
+    polys = reuse(polygons.withColumn(
         "_pm", _poly_meta_udf(JOIN_RES, HOT_COVER)("geom_wkb")
-    ).localCheckpoint(eager=False)
+    ))
     hot = polys.filter(f"_pm.n_cover > {HOT_COVER}")
     normal = polys.filter(f"_pm.n_cover <= {HOT_COVER}")
     attrs = [c for c in poly_cols if c != "feat_id"]

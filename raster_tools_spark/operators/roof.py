@@ -36,7 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, geom
+from ..fillnodata import union_min_roots
 from ..functions.triangulate import griddata_linear_nearest
+from ..materialize import fan_out
 
 NODATA_F4 = float(np.finfo("f4").min)  # reference roof.py:28
 
@@ -92,20 +94,7 @@ def classify_points(pts: np.ndarray) -> np.ndarray:
     n = len(pts)
     if n < 900:
         return np.ones(n, np.uint8)
-    start, stop = _knn_edges(pts, 4, 0.5)
-    parent = np.arange(n)
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for a, b in zip(start.tolist(), stop.tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    labels = np.fromiter((find(i) for i in range(n)), np.int64, n)
+    labels = union_min_roots(n, *_knn_edges(pts, 4, 0.5))
     counts = np.bincount(labels, minlength=n)
     keep_root = int(np.argmax(counts))  # ties -> lowest root
     return (labels == keep_root).astype(np.uint8)
@@ -125,12 +114,7 @@ def roof_rasterize(
     """points(feat_id, x, y, z) x polygons(feat_id, geom_wkb) -> one f4
     raster row per footprint (rawz payload, nodata = f4 min)."""
     paired = points.join(polygons.select("feat_id", "geom_wkb"), "feat_id")
-    # CPU-heavy, data-tiny groups: pin the group partitioning so AQE's
-    # size-based coalescing can't serialize 25 triangulations onto one
-    # task; the explicit hash partitioning satisfies the groupBy's
-    # clustering requirement, so no extra exchange is added
-    n_parts = points.sparkSession.sparkContext.defaultParallelism
-    paired = paired.repartition(n_parts, "feat_id")
+    paired = fan_out(paired, "feat_id")
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         feat_id = int(pdf["feat_id"].iloc[0])

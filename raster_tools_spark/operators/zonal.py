@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from .. import codecs, geom
 from ..grid import CELL_SIZE, JOIN_RES, WORLD_TOP, GeoTransform, cell_edge
+from ..materialize import reuse
 from .pip import _cover_udf
 from .tile import _d, sql_of
 
@@ -174,12 +175,12 @@ def _candidates(
         "image_id", "bytes", "fmt", "x0", "y_top", "w", "h", "icell"
     ).filter("icell IS NOT NULL")
 
-    # checkpoint the cover BEFORE field extraction: the broadcast build
+    # reuse the cover BEFORE field extraction: the broadcast build
     # and every extracted field otherwise re-run the pandas UDF (same
     # fix as pip_join's polygon meta)
-    polys = polygons.withColumn(
+    polys = reuse(polygons.withColumn(
         "_pc", _cover_udf(join_res, pad)("geom_wkb")
-    ).localCheckpoint(eager=False)
+    ))
     if max_extent is not None:
         polys = polys.filter(
             "greatest(_pc.ex2 - _pc.ex1, _pc.ey2 - _pc.ey1)"

@@ -1339,18 +1339,18 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         splits/casts, grid-binned with per-bin min/max dedup
         (txt2tif.py semantics).  Lines are synthesized from events so
         the oracle can rebuild the identical text."""
-        from .functions.dedup import _spread
+        from .materialize import fan_out, reuse
         from .sources import xyz as src_xyz
 
-        lines = _spread(_t(spark, sf_dir, "events"), "event_id").selectExpr(
+        lines = fan_out(_t(spark, sf_dir, "events"), "event_id").selectExpr(
             f"concat(cast({_PX} as string), ' ', "
             f"cast({_PY} as string), ' ', cast(value as string)) as value"
         )
         # the envelope aggregate and the binning pass would otherwise
-        # each re-run the double->string->double round trip; checkpoint
-        # the parsed points lazily so the text is parsed ONCE (the
-        # broadcast envelope job materializes it, binning reuses it)
-        pts = src_xyz.parse_xyz(lines).localCheckpoint(eager=False)
+        # each re-run the double->string->double round trip; reuse the
+        # parsed points so the text is parsed ONCE (the broadcast
+        # envelope job materializes them, binning reads them)
+        pts = reuse(src_xyz.parse_xyz(lines))
         return src_xyz.bin_stats(pts, width=4096.0, height=4096.0)
 
     q["xyz_bin"] = xyz_bin
@@ -2518,14 +2518,13 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         mixed = ftext.stratified_sample(
             clean, quotas={"en": 40, "zh": 60, "es": 80}
-        ).localCheckpoint(eager=True)
-        # checkpoint: the shard-count derivation inside pack_sequences
-        # counts `mixed`, and the final lang join reads it again --
-        # without the materialization the 5-stage chain would run
-        # three times (GC-released, unlike a pinned persist)
+        )
+        # pack_sequences materializes `mixed` once for its sizing count
+        # and the pack; lang comes from the documents table itself, so
+        # the 5-stage chain is not run again for the join
         packed = ftext.pack_sequences(mixed, budget=128)
         return packed.join(
-            mixed.select("doc_id", "lang"), "doc_id"
+            docs.select("doc_id", "lang"), "doc_id"
         ).select("doc_id", "lang", "shard", "n_tokens", "pack_id")
 
     q["curation_pipeline"] = curation_pipeline

@@ -27,7 +27,7 @@ def test_registry_build_round_trips(spark, name, bound):
     from raster_tools_spark.queries import queries
 
     build = queries()[name]
-    _, calls = build_cost(spark, lambda: build(spark, SF), 1)
+    _, calls, _ = build_cost(spark, lambda: build(spark, SF), 1)
     assert calls <= bound, (name, calls)
 
 
@@ -44,7 +44,7 @@ def test_zonal_stats_build_round_trips(spark, layers):
     from raster_tools_spark.operators import tile, zonal
 
     images, polys = layers
-    _, calls = build_cost(spark, lambda: zonal.zonal_stats(
+    _, calls, _ = build_cost(spark, lambda: zonal.zonal_stats(
         tile.assign_cells(images, tiles_axis=16), polys), 1)
     assert calls <= 2634, calls
 
@@ -53,7 +53,7 @@ def test_pip_join_build_round_trips(spark, layers):
     from raster_tools_spark.operators import pip, tile
 
     images, polys = layers
-    _, calls = build_cost(spark, lambda: pip.pip_join(
+    _, calls, _ = build_cost(spark, lambda: pip.pip_join(
         tile.assign_cells(images, tiles_axis=16), polys
     ).groupBy("feat_id").count(), 1)
     assert calls <= 1003, calls

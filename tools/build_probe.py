@@ -1,14 +1,16 @@
 """Driver-side build cost of registry queries: for each query, the
 median warm time of calling its registry function (building the
-DataFrame, no action) and the number of py4j round trips one warm build
-makes, then the registry-wide sums with the host's cpus and loadavg.
+DataFrame, no action), the number of py4j round trips one warm build
+makes and the number of Spark jobs it launches, then the registry-wide
+sums with the host's cpus and loadavg.
 
 Usage: python tools/build_probe.py [--sf DIR] [--reps N] [QUERY ...]
 
 With no QUERY it probes the whole registry.  Every query is built once
-cold (not reported), then ``--reps`` times warm.  Some builds run eager
-jobs (checkpoints, driver-side collects); those count as build time, as
-they do for any caller.
+cold (not reported), then ``--reps`` times warm.  Some builds run
+jobs (sizing counts, driver-side collects); those count as build time,
+as they do for any caller, and the ``jobs`` column counts them by job
+group.
 """
 
 from __future__ import annotations
@@ -48,16 +50,21 @@ def py4j_calls(spark):
 
 
 def build_cost(spark, build, reps: int):
-    """(median warm ms, py4j calls of the last warm build) of
-    ``build()``, after one cold build."""
+    """(median warm ms, py4j calls, Spark jobs) of ``build()``, the
+    counts of the last warm build, after one cold build."""
     build()
+    sc = spark.sparkContext
     times = []
-    for _ in range(reps):
+    for i in range(reps):
+        group = f"build_probe-{time.monotonic_ns()}-{i}"
+        sc.setJobGroup(group, "build_probe")
         with py4j_calls(spark) as n:
             t0 = time.perf_counter()
             build()
             times.append((time.perf_counter() - t0) * 1e3)
-    return statistics.median(times), n[0]
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return statistics.median(times), n[0], jobs
 
 
 def main():
@@ -74,17 +81,18 @@ def main():
     spark = get_spark(app_name="build_probe")
     qs = queries()
     names = args.query or list(qs)
-    total_ms = total_calls = 0
-    print(f"{'query':32s} {'build_ms':>9s} {'py4j':>6s}")
+    total_ms = total_calls = total_jobs = 0
+    print(f"{'query':32s} {'build_ms':>9s} {'py4j':>6s} {'jobs':>5s}")
     for name in names:
-        ms, calls = build_cost(
+        ms, calls, jobs = build_cost(
             spark, lambda: qs[name](spark, args.sf), args.reps
         )
         total_ms += ms
         total_calls += calls
-        print(f"{name:32s} {ms:9.1f} {calls:6d}", flush=True)
+        total_jobs += jobs
+        print(f"{name:32s} {ms:9.1f} {calls:6d} {jobs:5d}", flush=True)
     print(f"{'SUM (' + str(len(names)) + ' queries)':32s} "
-          f"{total_ms:9.1f} {total_calls:6d}")
+          f"{total_ms:9.1f} {total_calls:6d} {total_jobs:5d}")
     print(f"cpus={os.cpu_count()} sf={args.sf} "
           f"loadavg={' '.join(f'{x:.2f}' for x in os.getloadavg())}")
     spark.stop()
