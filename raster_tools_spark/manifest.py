@@ -18,17 +18,21 @@ A work unit here is a coarse grid cell (default r7 = 1024 m block,
 matching the reference's block-granularity Index, rextract.py:108-141).
 Each completed unit records the output rows and the payload bytes
 (``octet_length(bytes)``) written under it, and the seconds the
-output write of its commit took.
+output write of its commit took.  Rows and bytes are observed on the
+write job itself (``DataFrame.observe``), so no job reads the output
+back.  The write adds no shuffle: ``process`` returns each unit's rows
+in one partition, which makes each unit one output file.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
@@ -41,11 +45,17 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Completed units.  A directory holding no committed data file
     (none yet, or only ``_temporary/`` from a crashed first commit) is
     an empty manifest; any other read error raises.  The declared
-    schema spares the read a schema-inference job."""
+    schema spares the read a schema-inference job.  The empty manifest
+    is a ``WHERE false`` relation, which the optimizer folds: the
+    anti-join against it disappears from the plan, where an empty
+    ``createDataFrame`` would run a Python job to broadcast no rows."""
     if not os.path.isdir(manifest_dir) or all(
         f.startswith(("_", ".")) for f in os.listdir(manifest_dir)
     ):
-        return spark.createDataFrame([], schema=MANIFEST_SCHEMA)
+        return spark.sql("SELECT " + ", ".join(
+            f"CAST(NULL AS {t}) AS {n}"
+            for n, t in (c.split() for c in MANIFEST_SCHEMA.split(","))
+        ) + " WHERE false")
     return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
 
 
@@ -77,12 +87,16 @@ def run_with_manifest(
     1. anti-join ``work_df`` against the manifest and collect the
        pending unit ids to the driver once;
     2. run ``process`` on the pending slice and overwrite its units'
-       partitions of ``out_dir`` (dynamic overwrite, one file per unit:
-       a replay of an incomplete unit replaces its output instead of
-       duplicating it);
-    3. read back rows and payload bytes of the pending partitions only,
-       and commit one manifest row per pending unit as one file.  A
-       crash before this commit leaves the units pending; the replay
+       partitions of ``out_dir`` (dynamic overwrite: a replay of an
+       incomplete unit replaces its output instead of duplicating it).
+       ``process`` must return each unit's rows in one partition (a
+       key-only hash ``repartition`` on the unit, never a rebalance or
+       range partitioning that may split one); the write then adds no
+       shuffle and each unit is one file;
+    3. take rows and payload bytes per unit from the write job itself
+       (an observation of ``(_unit, octet_length(bytes))`` per output
+       row), and commit one manifest row per pending unit as one file.
+       A crash before this commit leaves the units pending; the replay
        rewrites them identically.
 
     Returns the manifest increment that was committed.
@@ -96,8 +110,11 @@ def run_with_manifest(
 
     t0 = time.time()
     out = process(pending).withColumn("_unit", F.col(unit_col))
+    size = F.octet_length("bytes") if "bytes" in out.columns else F.lit(0)
+    written = Observation("written")
     (
-        out.repartition("_unit")
+        out.observe(written,
+                    F.collect_list(F.struct("_unit", size)).alias("rows"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_unit")
@@ -105,20 +122,15 @@ def run_with_manifest(
     )
     secs = time.time() - t0
 
-    # record what was durably written, one row per pending unit (rows=0
-    # when its output is empty, e.g. all tiles skip-empty, so resume
-    # converges); the schema is given as an all-empty commit has no file.
-    written = spark.read.schema(out.schema).parquet(out_dir)
-    written = written.filter(F.col("_unit").isin(units))
-    bytes_col = (
-        F.sum(F.octet_length("bytes")) if "bytes" in written.columns
-        else F.lit(0)
-    )
-    got = {r[0]: (r[1], r[2] or 0) for r in written.groupBy("_unit").agg(
-        F.count(F.lit(1)), bytes_col).collect()}
+    # one manifest row per pending unit (rows=0 when its output is
+    # empty, e.g. all tiles skip-empty, so resume converges)
+    rows, nbytes = Counter(), Counter()
+    for u, n in written.get["rows"]:
+        rows[u] += 1
+        nbytes[u] += n or 0
     now = time.time()
     inc = spark.createDataFrame(pd.DataFrame(
-        [(job_id, u, *got.get(u, (0, 0)), secs, now) for u in units],
+        [(job_id, u, rows[u], nbytes[u], secs, now) for u in units],
         columns=["job_id", "unit", "rows", "bytes", "secs", "committed_at"],
     ), schema=MANIFEST_SCHEMA)
     inc.coalesce(1).write.mode("append").parquet(manifest_dir)

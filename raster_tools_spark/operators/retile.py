@@ -19,6 +19,10 @@ Reference semantics re-expressed per step:
 Spark shape: one groupBy(cell) -> applyInPandas assemble; the shuffle
 moves each source image to exactly one reducer (aligned tiles) or up
 to 4 (straddling tiles), then all pixel work is map-side numpy.
+``retile_job`` keys that one shuffle on the output tile's r7 unit and
+groups by (unit, cell): the hash partitioning on the unit satisfies the
+grouping, so every unit's tiles leave one task and are written as one
+file with no second exchange.
 """
 
 from __future__ import annotations
@@ -103,21 +107,31 @@ def _assemble(pdf: pd.DataFrame, tile_px: int, nodata: int) -> pd.DataFrame:
     )
 
 
-def retile(images_cells: DataFrame) -> DataFrame:
-    """images (assign_cells output with bytes/fmt/x0/y_top/w/h) ->
-    one merged canonical tile per RES_TILE cell."""
-    tile_px = int(cell_edge(RES_TILE) / CELL_SIZE)
-    src = images_cells.withColumn(
+def _sources(images_cells: DataFrame) -> DataFrame:
+    """One row per (source image, RES_TILE cell it overlaps)."""
+    return images_cells.withColumn(
         "cell_id",
         # explode_outer + null filter below: see zonal._image_cover_udf
         F.explode_outer(_image_cover_udf(RES_TILE)("x0", "y_top", "w", "h")),
     ).select(
         "cell_id", "image_id", "bytes", "fmt", "x0", "y_top", "w", "h"
     ).filter("cell_id IS NOT NULL")
-    return src.groupBy("cell_id").applyInPandas(
+
+
+def _assembled(sources: DataFrame, *keys: str) -> DataFrame:
+    """Group ``sources`` by ``keys`` (``cell_id`` among them) and
+    assemble one output tile per group."""
+    tile_px = int(cell_edge(RES_TILE) / CELL_SIZE)
+    return sources.groupBy(*keys).applyInPandas(
         lambda pdf: _assemble(pdf, tile_px, NODATA_DEFAULT),
         schema=RETILE_SCHEMA,
     )
+
+
+def retile(images_cells: DataFrame) -> DataFrame:
+    """images (assign_cells output with bytes/fmt/x0/y_top/w/h) ->
+    one merged canonical tile per RES_TILE cell."""
+    return _assembled(_sources(images_cells), "cell_id")
 
 
 AUDIT_SCHEMA = "cell_id long, nodata_px long, mask_bytes binary"
@@ -155,13 +169,18 @@ def retile_job(
     from .. import manifest as mf
     from .tile import parent_cell_col
 
+    # unit of an output tile = its RES_TILE->r7 ancestor, one
+    # expression: each rollup splices the previous one's SQL text.  Not
+    # the image's qk_r7: a straddling image feeds cells of another unit
+    unit = "cell_id"
+    for _ in range(RES_TILE - 7):
+        unit = parent_cell_col(unit)
+
     def process(pending: DataFrame) -> DataFrame:
-        tiles = retile(pending.drop("unit"))
-        # unit of an output tile = its RES_TILE->r7 ancestor, one
-        # expression: each rollup splices the previous one's SQL text
-        unit = "cell_id"
-        for _ in range(RES_TILE - 7):
-            unit = parent_cell_col(unit)
+        # the one shuffle: a key-only hash repartition on the unit (no
+        # rebalance or range split, which could put a unit in two files)
+        src = _sources(pending.drop("unit")).withColumn("unit", unit)
+        tiles = _assembled(src.repartition("unit"), "unit", "cell_id")
         return tiles.withColumn("unit", unit)
 
     work = images_cells.withColumn("unit", F.col("qk_r7"))

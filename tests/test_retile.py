@@ -164,6 +164,64 @@ class TestRetile:
         op_retile.retile_job(spark, cells, out_dir, man_dir)
         assert state() == first
 
+    def test_retile_job_spark_jobs(self, spark, tmp_path):
+        """A fresh retile_job runs 5 Spark jobs: the pending-unit collect
+        (its distinct shuffles unit ids: 2), the one payload shuffle and
+        the write (2), and the manifest commit (1).  Its no-op replay
+        runs 3: the manifest broadcast and the unit collect.  A new
+        gate: never raise these bounds."""
+        cells = op_tile.assign_cells(
+            synth.images_df(spark, 60, tiles_axis=16), tiles_axis=16
+        )
+        out_dir = str(tmp_path / "tiles")
+        man_dir = str(tmp_path / "manifest")
+        sc = spark.sparkContext
+
+        def jobs(tag):
+            group = f"{tag}-{tmp_path.name}"
+            sc.setJobGroup(group, tag)
+            try:
+                op_retile.retile_job(spark, cells, out_dir, man_dir)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert jobs("fresh") <= 5
+        assert jobs("replay") <= 3
+
+    def test_retile_job_manifest_matches_output(self, spark, tmp_path):
+        """The manifest's (unit, rows, bytes), taken from the write job,
+        equal a read-back of the output, after a fresh run and after a
+        replay with the manifest deleted.  The all-skip-empty unit has
+        no output partition and records (unit, 0, 0)."""
+        tx = 40  # r7 unit outside the 16x16-tile synth extent
+        blank_unit = int(cell_of_xy(tx * TILE_SIZE + 1.0,
+                                    WORLD_TOP - tx * TILE_SIZE - 1.0, 7))
+        blank = _mk_images(spark, [("img_blank", tx, tx, 64, 64, 255)])
+        cells = op_tile.assign_cells(
+            synth.images_df(spark, 60, tiles_axis=16), tiles_axis=16
+        ).unionByName(blank.withColumn("qk_r7", F.lit(blank_unit)),
+                      allowMissingColumns=True)
+        out_dir = str(tmp_path / "tiles")
+        man_dir = str(tmp_path / "manifest")
+
+        def check():
+            man = {r.unit: (r.rows, r.bytes) for r in spark.read.parquet(
+                man_dir).collect()}
+            oracle = {r[0]: (r[1], r[2]) for r in spark.read.parquet(
+                out_dir).groupBy("_unit").agg(
+                    F.count(F.lit(1)), F.sum(F.octet_length("bytes"))
+                ).collect()}
+            assert man[blank_unit] == (0, 0)
+            assert man == {u: oracle.get(u, (0, 0)) for u in man}
+            return man
+
+        op_retile.retile_job(spark, cells, out_dir, man_dir)
+        first = check()
+        shutil.rmtree(man_dir)
+        op_retile.retile_job(spark, cells, out_dir, man_dir)
+        assert check() == first
+
 
 def _parquet_files(path):
     return [f for f in os.listdir(path) if f.endswith(".parquet")]

@@ -54,7 +54,7 @@ def main():
     failures = []
 
     def audit(name, df, checks):
-        plan = plan_of(df)
+        plan = df if isinstance(df, str) else plan_of(df)
         results = []
         for desc, pred in checks:
             ok = pred(plan)
@@ -189,11 +189,10 @@ def main():
     # reducer); the image scan is never shuffled twice
     from raster_tools_spark.operators import retile as op_retile
 
-    rt = op_retile.retile(
-        op_tile.assign_cells(
-            synth.images_df(spark, 30, tiles_axis=8), tiles_axis=8
-        )
+    rt_cells = op_tile.assign_cells(
+        synth.images_df(spark, 30, tiles_axis=8), tiles_axis=8
     )
+    rt = op_retile.retile(rt_cells)
     audit(
         "retile_single_shuffle",
         rt,
@@ -852,6 +851,44 @@ def main():
              "after the duplicate-eval fix, two before it)",
              lambda p: len(re.findall(r"\(\d+\) ArrowEvalPython", p))
              == 0 and "BatchEvalPython" not in p),
+        ],
+    )
+
+    # 5e-bis. retile_job: the write plan, as executed (a fresh job into
+    # a scratch directory; the plan is read back from the SQL status
+    # store).  The payload crosses one exchange, keyed on the output
+    # unit; no exchange on _unit sits above the pandas assemble.  It
+    # runs last: its jobs would shift the plan and RDD ids printed in
+    # every later section
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as d:
+        op_retile.retile_job(spark, rt_cells, f"{d}/out", f"{d}/man")
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    write_plan = next(
+        p for p in (execs.apply(i).physicalPlanDescription()
+                    for i in reversed(range(execs.size())))
+        if "InsertIntoHadoopFsRelationCommand" in p
+        and "FlatMapGroupsInPandas" in p
+    )
+    # AQE prints the final plan, then the initial one; check the final
+    def final(p):
+        return p.split("== Initial Plan ==")[0]
+
+    audit(
+        "retile_job_write_single_shuffle",
+        write_plan,
+        [
+            (
+                "single exchange in the executed write plan",
+                lambda p: len(re.findall(r"[+:]- Exchange ", final(p))) == 1,
+            ),
+            (
+                "no exchange above the pandas assemble, none keyed on _unit",
+                lambda p: "Exchange" not in final(p).split(
+                    "FlatMapGroupsInPandas")[0]
+                and not re.search(r"hashpartitioning\(_unit", p),
+            ),
         ],
     )
 
